@@ -471,7 +471,7 @@ object Sampling {
 
   /** Cluster-balanced subsample over an embedding table: assign every
     * vector to its nearest deterministic coarse centroid
-    * ([[Similarity.ivfIndexDeterministic]]), then keep at most
+    * ([[Similarity.ivfAssign]]), then keep at most
     * `maxPerCluster` vectors per cluster, chosen in content-hash order.
     * This is the embedding-space form of topic rebalancing: a web corpus
     * is dominated by a few dense modes (boilerplate, SEO spam, one
@@ -491,7 +491,7 @@ object Sampling {
   def clusterBalancedSample(embeddings: DataFrame, nlist: Int,
       maxPerCluster: Int): DataFrame = {
     require(maxPerCluster > 0, s"maxPerCluster=$maxPerCluster must be positive")
-    val (_, assigned) = Similarity.ivfIndexDeterministic(embeddings, nlist)
+    val assigned = Similarity.ivfAssign(embeddings, nlist)
     val w = Window.partitionBy("cid")
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
     assigned.select(col("vec_id"), col("cid"))

@@ -6,10 +6,14 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an `embedding: array<float>` column.
   *
-  * Two tiers: [[cosineTopK]] is the exact brute-force baseline (queries ×
-  * candidates, one broadcast); [[lshBuckets]]/[[lshTopK]] is the scale path
-  * — deterministic random-hyperplane signatures bucket the corpus so the
-  * quadratic scoring runs only within buckets. All arithmetic is
+  * [[cosineTopK]] is the exact brute-force top-k (queries × candidates,
+  * one broadcast) that every approximate tier is tested against.
+  * [[lshBuckets]]/[[lshTopK]] bucket the corpus by deterministic
+  * random-hyperplane signatures so scoring runs only within buckets. The
+  * IVF/PQ family is one [[VectorIndex]] value (an optional coarse
+  * quantizer, an optional product-quantizer code table), built by
+  * [[ivfIndex]], [[pqIndex]], [[ivfPqIndex]] or [[ivfPqResidualIndex]] and
+  * queried by the one [[search]]. All arithmetic is
   * cast-to-double-then-sum in array order, which is bit-identical across
   * engines (the DuckDB oracle replays it exactly).
   */
@@ -33,7 +37,7 @@ object Similarity {
 
   /** Int8 scalar quantization (SQ8) of the embedding column — the third
     * member of the quantization family next to [[pqIndex]] (PQ) and
-    * [[ivfPqTopK]] (IVF-PQ), mirroring FAISS's `ScalarQuantizer`: each
+    * [[ivfPqIndex]] (IVF-PQ), mirroring FAISS's `ScalarQuantizer`: each
     * DIMENSION gets an affine [lo, hi] range mapped onto 256 levels, so
     * a d-dim float32 vector stores as d bytes (4× smaller) with a known
     * reconstruction error — the standard storage tier for trillion-scale
@@ -96,10 +100,23 @@ object Similarity {
     val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (dot(col("qv"), col("embedding")) / (col("qn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    nearest(scored, k, "cos")
   }
+
+  /** The top-k tail: each `by` group's first `k` rows in `order`,
+    * numbered `rk` from 1 (`row_number`, so ties never exceed k).
+    */
+  private def keepTop(df: DataFrame, k: Int, by: Seq[String],
+      order: Column*): DataFrame =
+    df.withColumn("rk", row_number().over(
+      Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .where(col("rk") <= k)
+
+  /** Each query's `k` best `(query_id, neighbor_id)` rows by `score`
+    * descending, ties to the lowest neighbor_id.
+    */
+  private def nearest(scored: DataFrame, k: Int, score: String): DataFrame =
+    keepTop(scored, k, Seq("query_id"), col(score).desc, col("neighbor_id").asc)
 
   /** Deterministic pseudo-random hyperplane component for (plane p, dim i):
     * a value in [-1, 1] derived from one md5 hex digit — portable to any
@@ -155,9 +172,7 @@ object Similarity {
       col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qv"), col("embedding")).as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    nearest(scored, k, "cos")
   }
 
   /** Multi-probe hyperplane LSH (Lv et al. 2007): each query probes its
@@ -188,146 +203,130 @@ object Similarity {
       col("bucket") === col("probe") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qv"), col("embedding")).as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    nearest(scored, k, "cos")
   }
 
-  /** IVF (inverted-file) index: a k-means coarse quantizer over the
-    * embeddings; each vector belongs to its nearest centroid's list.
-    * Returns (centroids as (cid, centroid: array<float>), assignments as
-    * corpus + cid). The third similarity tier next to brute force and
-    * hyperplane LSH: recall is tunable via `nprobe` at query time, and the
-    * quadratic scoring is confined to the probed lists.
+  /** How an index stage picks its centroids. */
+  sealed trait Init
+  object Init {
+    /** The smallest vec_ids' vectors, zero Lloyd iterations: no RNG and no
+      * partitioning dependence, so a SQL oracle replays the index exactly,
+      * and sparse or offset vec_ids still yield `min(n, corpus size)`
+      * centroids.
+      */
+    case object DataPoints extends Init
+    /** MLlib k-means with `seed`: the recall-quality tier, whose recall
+      * floors against brute force OpsSpec pins.
+      */
+    final case class KMeans(seed: Long = 42L) extends Init
+  }
+
+  /** IVF coarse quantizer: `centroids` as `(cid, centroid)` and
+    * `assigned`, the corpus with each vector's nearest list `cid`.
     */
-  def ivfIndex(corpus: DataFrame, nlist: Int, seed: Long = 42L)
-      : (DataFrame, DataFrame) = {
-    val s2 = corpus.sparkSession; import s2.implicits._
-    val featured = corpus.withColumn("features",
-      org.apache.spark.ml.functions.array_to_vector(col("embedding")))
-    val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(nlist).setSeed(seed).setFeaturesCol("features")
-      .fit(featured)
-    val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray.map(_.toFloat))
-    }.toSeq.toDF("cid", "centroid")
-    // copy drops the trainingSummary (which pins the SparkSession) before
-    // the model rides the assignment closure — a session whose
-    // ObservationManager is initialized is not java-serializable (see
-    // Classify.crossValPredictions)
-    val assigned = model.copy(org.apache.spark.ml.param.ParamMap.empty)
-      .transform(featured)
-      .withColumnRenamed("prediction", "cid")
-      .drop("features")
-    (centroids, assigned)
-  }
+  final case class Coarse(centroids: DataFrame, assigned: DataFrame)
 
-  /** Deterministic IVF quantizer: centroid `j` is the embedding of the
-    * (j+1)-th smallest vec_id — data-point init (as FAISS samples
-    * training points) with zero Lloyd iterations, assignments by nearest
-    * centroid (cosine, ties to the lowest cid). Fully engine-independent
-    * (no RNG, no partitioning dependence — a SQL oracle replays the index
-    * exactly) and id-layout-independent: sparse, offset, or non-dense
-    * vec_ids all yield exactly `min(nlist, corpus size)` centroids.
-    * [[ivfIndex]] (KMeans) remains the recall-quality path; both obey the
-    * same nprobe==nlist ≡ brute-force law.
+  /** Product quantizer: `dims` split into `m` contiguous subspaces of
+    * `sub` dims, each with `ksub` centroids in `codebook` `(c, j,
+    * centroid)`; `codes` `(vec_id, j, c)` is every vector's nearest
+    * centroid per subspace, m small ints per vector instead of 4·dims
+    * bytes (32× smaller at dims=64/m=8). `residual` is present when the
+    * codes encode `v − centroid(v)` rather than `v`: it then holds the
+    * per-coarse-list scoring terms `(cid, crs, coarse2)` (see
+    * [[ivfPqResidualIndex]]).
     */
-  def ivfIndexDeterministic(corpus: DataFrame, nlist: Int,
-      checkpointCentroids: Boolean = false): (DataFrame, DataFrame) = {
-    // the global-order window runs AFTER limit(nlist): single-partition
-    // but bounded to nlist rows, so it is not the usual scale hazard
-    val centroids0 = corpus.select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").limit(nlist)
-      .withColumn("cid", (row_number().over(
-        Window.orderBy("vec_id")) - 1).cast("int"))
-      .select(col("cid"), col("embedding").as("centroid"))
-    // opt-in for multi-consumer compositions (probe gate + assignment +
-    // residual LUTs each broadcast the centroid table, and every lazy
-    // broadcast re-runs the corpus TakeOrdered): materialize the
-    // nlist-row relation once. Index-sized at any SF; single-consumer
-    // callers (semanticDedup, clusterTopics, …) stay lazy.
-    val centroids =
-      if (checkpointCentroids) centroids0.localCheckpoint(true)
-      else centroids0
-    val scored = corpus.select(col("vec_id"), col("embedding"))
-      .withColumn("cn", norm(col("embedding")))
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos", dot(col("embedding"), col("centroid")) /
-        (col("cn") * norm(col("centroid"))))
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cid").asc)
-    val assigned = scored.withColumn("ark", row_number().over(w))
-      .where(col("ark") === 1)
-      .select(col("vec_id"), col("embedding"), col("cid"))
-    (centroids, assigned)
-  }
+  final case class Pq(codebook: DataFrame, codes: DataFrame, m: Int,
+      sub: Int, ksub: Int, residual: Option[DataFrame])
 
-  /** Approximate top-k through an IVF index: each query probes its
-    * `nprobe` nearest centroid lists (by exact cosine to the centroids,
-    * computed against the broadcast centroid table), then ranks exact
-    * cosine within the probed lists. `nprobe == nlist` degenerates to the
-    * exact brute-force ranking.
+  /** A vector index for [[search]]: an optional IVF coarse quantizer
+    * (each query scans only its `nprobe` nearest lists) and an optional
+    * PQ code table (candidates score by asymmetric distance against
+    * their codes instead of exact cosine against raw vectors). Built only
+    * through [[ivfIndex]], [[pqIndex]], [[ivfPqIndex]] and
+    * [[ivfPqResidualIndex]], so at least one part is present.
     */
-  private def ivfProbeAndRank(centroids: DataFrame, assigned: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("ccos",
-        dot(col("qv"), col("centroid")) / (col("qn") * norm(col("centroid"))))
-      .withColumn("crk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("ccos").desc, col("cid").asc)))
-      .where(col("crk") <= nprobe)
-      // alias the probe-side list id: both sides' `cid` descend from the
-      // same centroid relation, and a bare cand("cid") === probes("cid")
-      // resolves to the same attribute (Spark warns "trivially true") —
-      // the rename keeps the probed-list confinement unambiguous
-      .select(col("query_id"), col("qv"), col("qn"), col("cid").as("pcid"))
-    val cand = assigned.withColumn("cn", norm(col("embedding")))
-    val scored = cand.join(broadcast(probes),
-      col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qv"), col("embedding")) / (col("qn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-  }
+  final class VectorIndex private[Similarity] (val coarse: Option[Coarse],
+      val pq: Option[Pq])
 
-  /** IVF top-k over the KMeans index ([[ivfIndex]]). */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int, nprobe: Int, seed: Long = 42L): DataFrame = {
-    val (centroids, assigned) = ivfIndex(corpus, nlist, seed)
-    ivfProbeAndRank(centroids, assigned, queries, k, nprobe)
-  }
+  private def requirePositive(name: String, v: Int): Unit =
+    require(v >= 1, s"$name=$v must be >= 1 (a zero bound would silently " +
+      "make the search return zero rows)")
 
-  /** IVF top-k over the deterministic index
-    * ([[ivfIndexDeterministic]]) — oracle-replayable in SQL.
-    */
-  def ivfTopKDeterministic(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int, nprobe: Int): DataFrame = {
-    val (centroids, assigned) =
-      ivfIndexDeterministic(corpus, nlist, checkpointCentroids = true)
-    ivfProbeAndRank(centroids, assigned, queries, k, nprobe)
-  }
-
-  /** Deterministic product quantizer — the memory-compression ANN tier
-    * next to brute force / hyperplane LSH / IVF: `dims` split into `m`
-    * contiguous subspaces of dims/m; subspace `j`'s codebook is the j-th
-    * sub-vector of the `ksub` smallest-vec_id embeddings (data-point
-    * init, zero Lloyd iterations — [[ivfIndexDeterministic]]'s
-    * convention, so a SQL oracle replays the index exactly). Returns
-    * (codebook (j, c, centroid), codes (vec_id, j, c)); codes are m small
-    * ints per vector vs 4·dims bytes raw — 32× smaller at dims=64/m=8,
-    * which is what lets a 100 TB corpus' search structure stay in
-    * executor memory. Encoding is one broadcast join + one (vec_id, j)
-    * window; sub-distance sums run in array order (exact replay).
-    */
   private def requirePq(m: Int, ksub: Int, dims: Int): Unit = {
     require(m > 0 && dims % m == 0, s"dims=$dims must divide into m=$m")
     require(ksub >= 1, s"ksub=$ksub must be >= 1 (empty codebook would " +
       "silently make every PQ search return zero rows)")
   }
+
+  /** `(id, seed)`: the `n` vectors of `vecCol` that follow the `skip`
+    * smallest vec_ids, numbered from 0 in vec_id order. The global window
+    * runs after the limit, so it is bounded to `skip + n` rows.
+    */
+  private def dataPoints(vectors: DataFrame, vecCol: String, skip: Int,
+      n: Int): DataFrame = {
+    val numbered = vectors.select(col("vec_id"), col(vecCol).as("seed"))
+      .orderBy("vec_id").limit(skip + n)
+      .withColumn("rn", row_number().over(Window.orderBy("vec_id")))
+    (if (skip > 0) numbered.where(col("rn") > skip) else numbered)
+      .select((col("rn") - (skip + 1)).cast("int").as("id"), col("seed"))
+  }
+
+  /** Each corpus vector `(vec_id, embedding, cid)` in the list of its
+    * nearest centroid by cosine, ties to the lowest cid.
+    */
+  private def assignTo(corpus: DataFrame, centroids: DataFrame): DataFrame = {
+    val scored = corpus.select(col("vec_id"), col("embedding"))
+      .withColumn("cn", norm(col("embedding")))
+      .crossJoin(broadcast(centroids))
+      .withColumn("ccos", dot(col("embedding"), col("centroid")) /
+        (col("cn") * norm(col("centroid"))))
+    keepTop(scored, 1, Seq("vec_id"), col("ccos").desc, col("cid").asc)
+      .select(col("vec_id"), col("embedding"), col("cid"))
+  }
+
+  private def dataPointCentroids(corpus: DataFrame, nlist: Int): DataFrame = {
+    requirePositive("nlist", nlist)
+    dataPoints(corpus, "embedding", 0, nlist).toDF("cid", "centroid")
+  }
+
+  /** Data-point IVF list assignment alone, `(vec_id, embedding, cid)`:
+    * the same lists as `ivfIndex(corpus, nlist)`, left lazy for callers
+    * that consume the assignment once.
+    */
+  def ivfAssign(corpus: DataFrame, nlist: Int): DataFrame =
+    assignTo(corpus, dataPointCentroids(corpus, nlist))
+
+  /** IVF coarse quantizer. Data-point centroids are materialized before
+    * the assignment: the assignment and the probe gate (and, residual,
+    * the per-list tables) each broadcast them, and a lazy broadcast
+    * re-runs the corpus sort. The relation is nlist rows at any scale.
+    */
+  private def coarse(corpus: DataFrame, nlist: Int, init: Init): Coarse =
+    init match {
+      case Init.DataPoints =>
+        val centroids = dataPointCentroids(corpus, nlist).localCheckpoint(true)
+        Coarse(centroids, assignTo(corpus, centroids))
+      case Init.KMeans(seed) =>
+        requirePositive("nlist", nlist)
+        val s2 = corpus.sparkSession; import s2.implicits._
+        val featured = corpus.withColumn("features",
+          org.apache.spark.ml.functions.array_to_vector(col("embedding")))
+        val model = new org.apache.spark.ml.clustering.KMeans()
+          .setK(nlist).setSeed(seed).setFeaturesCol("features")
+          .fit(featured)
+        val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
+          (i, c.toArray.map(_.toFloat))
+        }.toSeq.toDF("cid", "centroid")
+        // copy drops the trainingSummary (which pins the SparkSession) before
+        // the model rides the assignment closure — a session whose
+        // ObservationManager is initialized is not java-serializable (see
+        // Classify.crossValPredictions)
+        val assigned = model.copy(org.apache.spark.ml.param.ParamMap.empty)
+          .transform(featured)
+          .withColumnRenamed("prediction", "cid")
+          .drop("features")
+        Coarse(centroids, assigned)
+    }
 
   /** `m` contiguous sub-vectors of the vector column `vecCol` as one
     * array column (subspace j = elements [j·sub, (j+1)·sub)).
@@ -335,12 +334,21 @@ object Similarity {
   private def slicesOf(vecCol: String, m: Int, sub: Int): Column = expr(
     s"transform(sequence(0, ${m - 1}), j -> slice($vecCol, j * $sub + 1, $sub))")
 
-  private def subSlices(m: Int, sub: Int): Column = slicesOf("embedding", m, sub)
+  /** A data-point codebook over `vecCol`: centroid `c` of subspace `j` is
+    * the j-th slice of the c-th vector after the `skip` smallest vec_ids.
+    * Materialized: it feeds both the encoding and the ADC lookup-table
+    * broadcasts, and is m·ksub rows at any scale.
+    */
+  private def dataPointCodebook(vectors: DataFrame, vecCol: String,
+      skip: Int, m: Int, sub: Int, ksub: Int): DataFrame =
+    dataPoints(vectors, vecCol, skip, ksub)
+      .select(col("id"), posexplode(slicesOf("seed", m, sub)))
+      .toDF("c", "j", "centroid")
+      .localCheckpoint(true)
 
   /** Nearest-centroid code per (vector, subspace) against a `(c, j,
     * centroid)` codebook: one broadcast join + one (vec_id, j) window,
-    * ties to the lowest centroid id — shared by every PQ codebook
-    * variant.
+    * ties to the lowest centroid id.
     */
   private def encodeAgainst(corpus: DataFrame, codebook: DataFrame,
       m: Int, sub: Int, vecCol: String = "embedding"): DataFrame = {
@@ -351,75 +359,120 @@ object Similarity {
       .withColumn("d2", expr(
         s"aggregate(zip_with(subv, centroid, (x, y) -> $sq * $sq), " +
           "0D, (a, v) -> a + v)"))
-    val w = Window.partitionBy("vec_id", "j")
-      .orderBy(col("d2").asc, col("c").asc)
-    d2.withColumn("rk", row_number().over(w))
-      .where(col("rk") === 1)
+    keepTop(d2, 1, Seq("vec_id", "j"), col("d2").asc, col("c").asc)
       .select("vec_id", "j", "c")
   }
 
-  def pqIndex(corpus: DataFrame, m: Int, ksub: Int, dims: Int,
-      checkpointCodebook: Boolean = false): (DataFrame, DataFrame) = {
+  private def productQuantizer(corpus: DataFrame, m: Int, ksub: Int,
+      dims: Int, init: Init): Pq = {
     requirePq(m, ksub, dims)
     val sub = dims / m
-    val codebook0 = corpus.select(col("vec_id"), col("embedding"))
-      .orderBy("vec_id").limit(ksub)
-      // bounded global window: runs AFTER limit(ksub), never corpus-wide
-      .withColumn("c",
-        (row_number().over(Window.orderBy("vec_id")) - 1).cast("int"))
-      .select(col("c"), posexplode(subSlices(m, sub)))
-      .toDF("c", "j", "centroid")
-    // opt-in for the search compositions: the m·ksub-row codebook feeds
-    // BOTH the code-encoding broadcast and the ADC LUT broadcast, and
-    // each lazy broadcast re-runs the corpus TakeOrdered. Index-sized
-    // at any SF.
-    val codebook =
-      if (checkpointCodebook) codebook0.localCheckpoint(true)
-      else codebook0
-    (codebook, encodeAgainst(corpus, codebook, m, sub))
+    val codebook = init match {
+      case Init.DataPoints =>
+        dataPointCodebook(corpus, "embedding", 0, m, sub, ksub)
+      case Init.KMeans(seed) =>
+        // subspace j's centroids are a k-means fit over the corpus' j-th
+        // sub-vectors (seed + j keeps the fits independent but the index
+        // reproducible). Persisted across the m fits: without the cache
+        // each fit would re-scan and re-explode the corpus per iteration.
+        val s2 = corpus.sparkSession; import s2.implicits._
+        val sliced = corpus.select(posexplode(slicesOf("embedding", m, sub)))
+          .toDF("j", "subv")
+          .withColumn("features",
+            org.apache.spark.ml.functions.array_to_vector(col("subv")))
+          .persist()
+        try {
+          (0 until m).flatMap { j =>
+            val model = new org.apache.spark.ml.clustering.KMeans()
+              .setK(ksub).setSeed(seed + j).setFeaturesCol("features")
+              .fit(sliced.where(col("j") === j))
+            model.clusterCenters.zipWithIndex.map { case (cent, c) =>
+              (c, j, cent.toArray.map(_.toFloat))
+            }
+          }.toDF("c", "j", "centroid")
+        } finally sliced.unpersist()
+    }
+    Pq(codebook, encodeAgainst(corpus, codebook, m, sub), m, sub, ksub, None)
   }
 
-  /** KMeans-TRAINED product quantizer — the recall-quality sibling of
-    * [[pqIndex]]'s data-point init, exactly as [[ivfIndex]] is to
-    * [[ivfIndexDeterministic]]: subspace j's `ksub` centroids are a
-    * k-means fit over the corpus' j-th sub-vectors (seed offset by j
-    * keeps the subspaces' initializations independent but the whole
-    * index reproducible). Same `(codebook, codes)` contract, so all ADC
-    * scoring ([[pqTopK]]'s LUT path) composes unchanged. Training cost:
-    * m small KMeans fits over narrow (sub-dim) projections — a one-off
-    * index-build step, not a query-path cost.
+  /** IVF index: `nlist` coarse lists, searched by exact cosine within
+    * each query's `nprobe` nearest lists. `nprobe == nlist` is exact
+    * brute force under either init (spec-pinned).
     */
-  def pqIndexTrained(corpus: DataFrame, m: Int, ksub: Int, dims: Int,
-      seed: Long = 42L): (DataFrame, DataFrame) = {
+  def ivfIndex(corpus: DataFrame, nlist: Int,
+      init: Init = Init.DataPoints): VectorIndex =
+    new VectorIndex(Some(coarse(corpus, nlist, init)), None)
+
+  /** PQ index over `dims`-dim vectors: every corpus vector is scored by
+    * ADC against its codes. `m = 1` with `ksub >= |corpus|` data-point
+    * centroids is exact brute force (spec-pinned).
+    */
+  def pqIndex(corpus: DataFrame, m: Int, ksub: Int, dims: Int,
+      init: Init = Init.DataPoints): VectorIndex =
+    new VectorIndex(None, Some(productQuantizer(corpus, m, ksub, dims, init)))
+
+  /** IVF-PQ: the coarse lists gate which codes a query ADC-scores, so the
+    * scan drops to the probed share of the 32×-compressed code table.
+    * `nprobe == nlist` returns exactly the PQ index's ranking
+    * (spec-pinned). `init` trains both stages the same way.
+    */
+  def ivfPqIndex(corpus: DataFrame, nlist: Int, m: Int, ksub: Int,
+      dims: Int, init: Init = Init.DataPoints): VectorIndex =
+    new VectorIndex(Some(coarse(corpus, nlist, init)),
+      Some(productQuantizer(corpus, m, ksub, dims, init)))
+
+  /** Residual IVF-PQ, the FAISS `IndexIVFPQ` design (Jégou, Douze &
+    * Schmid 2011): PQ encodes `v − centroid(v)` per coarse list instead
+    * of the raw vector, so the codebook's `ksub` entries span the much
+    * smaller residual range — when the coarse quantizer captures real
+    * cluster structure. Spec-pinned: on a matched-cluster fixture
+    * (nCenters == nlist) residual reaches 0.335 recall@10 vs raw 0.178;
+    * on the uniform-random sf0.01 fixture residuals are larger than the
+    * raw vectors and raw wins 0.200 vs 0.168, so [[ivfPqIndex]] is the
+    * default for structureless corpora.
+    *
+    * ADC scores against the reconstruction `v̂ = c + r̂`:
+    * `dot(q, v̂) = dot(q, c) + Σⱼ pds[code_j]` and `‖v̂‖² = ‖c‖² +
+    * 2·Σⱼ crs[code_j] + Σⱼ c2s[code_j]`, where the per-list table holds
+    * `crs[j*ksub + c] = dot(c_j, r̂_{j,c})` and `coarse2 = ‖c‖²`. All
+    * data-point init (the codebook seeds skip the `nlist` coarse seeds,
+    * whose residuals are zero), so a SQL oracle replays the index.
+    */
+  def ivfPqResidualIndex(corpus: DataFrame, nlist: Int, m: Int, ksub: Int,
+      dims: Int): VectorIndex = {
     requirePq(m, ksub, dims)
-    val s2 = corpus.sparkSession; import s2.implicits._
     val sub = dims / m
-    // persisted across the m fits: KMeans iterates, and without the cache
-    // each of the m fits would re-scan and re-explode the whole corpus per
-    // iteration (build cost m × iterations corpus passes instead of one)
-    val sliced = corpus.select(posexplode(subSlices(m, sub)))
-      .toDF("j", "subv")
-      .withColumn("features",
-        org.apache.spark.ml.functions.array_to_vector(col("subv")))
-      .persist()
-    val codebook =
-      try {
-        (0 until m).flatMap { j =>
-          val model = new org.apache.spark.ml.clustering.KMeans()
-            .setK(ksub).setSeed(seed + j).setFeaturesCol("features")
-            .fit(sliced.where(col("j") === j))
-          model.clusterCenters.zipWithIndex.map { case (cent, c) =>
-            (c, j, cent.toArray.map(_.toFloat))
-          }
-        }.toDF("c", "j", "centroid")
-      } finally sliced.unpersist()
-    (codebook, encodeAgainst(corpus, codebook, m, sub))
+    val c = coarse(corpus, nlist, Init.DataPoints)
+    val resid = c.assigned.join(broadcast(c.centroids), "cid")
+      .select(col("vec_id"), col("cid"),
+        zip_with(col("embedding"), col("centroid"),
+          (x, y) => x.cast("double") - y.cast("double")).as("residual"))
+    val codebook = dataPointCodebook(resid, "residual", nlist, m, sub, ksub)
+    val crosses = c.centroids
+      .select(col("cid"), posexplode(slicesOf("centroid", m, sub)))
+      .toDF("cid", "j", "csub")
+      .join(broadcast(codebook.withColumnRenamed("centroid", "rcent")), "j")
+      .select(col("cid"), (col("j") * ksub + col("c")).as("idx"),
+        expr("aggregate(zip_with(csub, rcent, " +
+          "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
+          "0D, (a, v) -> a + v)").as("cr"))
+      .groupBy("cid")
+      .agg(expr("transform(array_sort(collect_list(struct(idx, cr))), s -> s.cr)")
+        .as("crs"))
+    // nlist rows, broadcast to every gated pair: materialized like the
+    // codebook so it is derived once
+    val lists = crosses.join(
+      c.centroids.select(col("cid"), expr("aggregate(centroid, 0D, " +
+        "(a, y) -> a + CAST(y AS DOUBLE) * CAST(y AS DOUBLE))").as("coarse2")),
+      "cid")
+      .localCheckpoint(true)
+    new VectorIndex(Some(c), Some(Pq(codebook,
+      encodeAgainst(resid, codebook, m, sub, "residual"), m, sub, ksub,
+      Some(lists))))
   }
 
   /** Per-vector compact code word: `(vec_id, code: array<int>)` with
-    * `code[j]` = the subspace-j centroid id — the actual PQ memory
-    * layout (m small ints per vector), built once from [[pqIndex]]'s
-    * code rows.
+    * `code[j]` = the subspace-j centroid id.
     */
   private def compactCodes(codes: DataFrame): DataFrame =
     codes.groupBy("vec_id").agg(expr(
@@ -432,17 +485,12 @@ object Similarity {
     * broadcast-sized, and a vector scores with m array lookups instead
     * of m joined rows.
     */
-  private def adcLut(queries: DataFrame, codebook: DataFrame,
-      m: Int, sub: Int, ksub: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val qsliced = q.select(col("query_id"), col("qn"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), j -> slice(qv, j * $sub + 1, $sub))")))
+  private def adcLut(q: DataFrame, pq: Pq): DataFrame =
+    q.select(col("query_id"), col("qn"), posexplode(slicesOf("qv", pq.m, pq.sub)))
       .toDF("query_id", "qn", "j", "qsub")
-    qsliced.join(broadcast(codebook), "j")
+      .join(broadcast(pq.codebook), "j")
       .select(col("query_id"), col("qn"),
-        (col("j") * ksub + col("c")).as("idx"),
+        (col("j") * pq.ksub + col("c")).as("idx"),
         expr("aggregate(zip_with(qsub, centroid, " +
           "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
           "0D, (a, v) -> a + v)").as("pd"),
@@ -454,230 +502,83 @@ object Similarity {
           .as("pds"),
         expr("transform(array_sort(collect_list(struct(idx, c2))), s -> s.c2)")
           .as("c2s"))
-  }
 
-  /** Rank (query × vector-code) pairs by approximate cosine: the ADC dot
-    * sums `pds[j*ksub + code[j]]` over j ASCENDING as m UNROLLED
-    * `element_at` terms — explicit left-to-right order, so the sum (and
-    * therefore the ranking) is bit-identical on any IEEE engine, and
-    * every term stays inside whole-stage codegen (a higher-order
-    * `aggregate` fold would drop the 8M-row hot loop to interpreted
-    * evaluation — measured 2× slower at sf1).
+  /** The probe gate: each query's `nprobe` nearest coarse lists by cosine
+    * to the broadcast centroids, ties to the lowest cid, as `(query_id,
+    * qv, qn, pcid, qdotc)` — `qdotc = dot(query, centroid)` is the
+    * residual score's coarse term. The list id is renamed `pcid`: both
+    * sides of the gate join descend from the same centroid relation, and
+    * a bare `cid === cid` would resolve to one attribute (trivially true).
     */
-  private def adcRank(pairs: DataFrame, m: Int, ksub: Int,
-      k: Int): DataFrame = {
-    def fold(arr: String) = (0 until m).map(j =>
-      element_at(col(arr),
-        element_at(col("code"), j + 1) + lit(j * ksub) + 1))
-      .reduce(_ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("acos").desc, col("neighbor_id").asc)
-    pairs.where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (fold("pds") / (col("qn") * sqrt(fold("c2s")))).as("acos"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
-  }
-
-  /** Asymmetric-distance (ADC) top-k through the PQ index: each query
-    * builds a flat m×ksub lookup table ([[adcLut]]), every vector scores
-    * with m array lookups against its compact code word, and ranking
-    * collapses per query ([[adcRank]]). The scan is |corpus|·|queries|
-    * rows over the broadcast LUT — m-byte codes, not raw vectors; at
-    * 100 TB compose with IVF list gating ([[ivfPqTopK]] — scan only
-    * probed lists' codes).
-    */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int, ksub: Int, dims: Int): DataFrame = {
-    val (codebook, codes) =
-      pqIndex(corpus, m, ksub, dims, checkpointCodebook = true)
-    val lut = adcLut(queries, codebook, m, dims / m, ksub)
-    adcRank(compactCodes(codes).crossJoin(broadcast(lut)), m, ksub, k)
-  }
-
-  /** ADC top-k over the KMeans-trained quantizer ([[pqIndexTrained]]) —
-    * the recall-quality tier; [[pqTopK]] (data-point init) remains the
-    * oracle-replayable tier.
-    */
-  def pqTopKTrained(corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int, ksub: Int, dims: Int, seed: Long = 42L): DataFrame = {
-    val (codebook, codes) = pqIndexTrained(corpus, m, ksub, dims, seed)
-    val lut = adcLut(queries, codebook, m, dims / m, ksub)
-    adcRank(compactCodes(codes).crossJoin(broadcast(lut)), m, ksub, k)
-  }
-
-  /** IVF-PQ: the composed 100 TB search path — the deterministic IVF
-    * quantizer confines each query to its `nprobe` nearest lists, and PQ
-    * codes (not raw vectors) are ADC-scored inside them. The ADC scan
-    * drops from |corpus|·m·|queries| to (probed share)·m·|queries|, and
-    * what it scans is the 32×-compressed code table. Degenerate law
-    * (spec-pinned): `nprobe == nlist` makes the gate total, so the result
-    * IS [[pqTopK]]'s.
-    */
-  /** The IVF-PQ gate + ADC ranking shared by every index flavor: probe
-    * the `nprobe` nearest coarse lists per query (broadcast centroid
-    * table, `qdotc` = dot(query, centroid) rides along for residual
-    * scoring), gate the compact CODE table by the probed (query, list)
-    * pairs, and ADC-rank only the surviving (query, vector) pairs.
-    */
-  private def ivfPqGateAndRank(centroids: DataFrame, assigned: DataFrame,
-      codebook: DataFrame, codes: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int, m: Int, sub: Int, ksub: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val probes = q.crossJoin(broadcast(centroids))
+  private def probeGate(q: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame = {
+    val scored = q.crossJoin(broadcast(centroids))
       .withColumn("qdotc", dot(col("qv"), col("centroid")))
       .withColumn("ccos", col("qdotc") / (col("qn") * norm(col("centroid"))))
-      .withColumn("crk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("ccos").desc, col("cid").asc)))
-      .where(col("crk") <= nprobe)
-      .select(col("query_id").as("pq_query"), col("cid").as("pcid"),
+    keepTop(scored, nprobe, Seq("query_id"), col("ccos").desc, col("cid").asc)
+      .select(col("query_id"), col("qv"), col("qn"), col("cid").as("pcid"),
         col("qdotc"))
-    val gated = compactCodes(codes)
-      .join(assigned.select(col("vec_id"), col("cid")), "vec_id")
-      .join(broadcast(probes), col("cid") === col("pcid"))
-    val lut = adcLut(queries, codebook, m, sub, ksub)
-    adcRank(gated.join(broadcast(lut), col("pq_query") === col("query_id")),
-      m, ksub, k)
   }
 
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int, nprobe: Int, m: Int, ksub: Int, dims: Int): DataFrame = {
-    val (centroids, assigned) =
-      ivfIndexDeterministic(corpus, nlist, checkpointCentroids = true)
-    val (codebook, codes) =
-      pqIndex(corpus, m, ksub, dims, checkpointCodebook = true)
-    ivfPqGateAndRank(centroids, assigned, codebook, codes, queries, k,
-      nprobe, m, dims / m, ksub)
-  }
-
-  /** IVF-PQ over the KMeans coarse quantizer ([[ivfIndex]]) and the
-    * KMeans-trained codebooks ([[pqIndexTrained]]) — the
-    * production-quality composition (both index stages trained, gating
-    * and ADC scoring identical to [[ivfPqTopK]]). Recall floor pinned by
-    * spec; the deterministic [[ivfPqTopK]] remains the oracle-replayable
-    * tier.
-    */
-  def ivfPqTopKTrained(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int, nprobe: Int, m: Int, ksub: Int, dims: Int,
-      seed: Long = 42L): DataFrame = {
-    val (centroids, assigned) = ivfIndex(corpus, nlist, seed)
-    val (codebook, codes) = pqIndexTrained(corpus, m, ksub, dims, seed)
-    ivfPqGateAndRank(centroids, assigned, codebook, codes, queries, k,
-      nprobe, m, dims / m, ksub)
-  }
-
-  /** RESIDUAL-encoded IVF-PQ — the FAISS `IndexIVFPQ` design (Jégou,
-    * Douze & Schmid 2011): PQ encodes `v − centroid(v)` per coarse list
-    * instead of the raw vector, so the codebook's `ksub` entries span the
-    * much smaller residual range and the same m/ksub memory buys a finer
-    * quantization — WHEN the coarse quantizer captures real cluster
-    * structure. Spec-pinned measurements: on a matched-cluster fixture
-    * (nCenters == nlist) residual hits 0.335 recall@10 vs raw 0.178; on
-    * the UNIFORM-RANDOM sf0.01 fixture residuals are LARGER than raw
-    * vectors (‖v − c‖² ≈ ‖v‖² + ‖c‖² without structure) and raw wins
-    * 0.200 vs 0.168 — so [[ivfPqTopK]] remains the default composition
-    * for structureless corpora.
+  /** Approximate top-k through `index` for each query (self excluded).
+    * With a coarse quantizer, each query scans only its `nprobe` nearest
+    * lists (`nprobe` is unused without one). Without a PQ table the
+    * scanned vectors rank by exact cosine, `(query_id, neighbor_id, cos,
+    * rk)`; with one they rank by the ADC cosine against their codes,
+    * `(query_id, neighbor_id, acos, rk)`.
     *
-    * ADC then scores against the reconstruction `v̂ = c + r̂`:
-    * `dot(q, v̂) = dot(q, c) + Σⱼ pds[code_j]` (the query–centroid term
-    * rides on the probe rows; `pds` is the query's LUT against the
-    * RESIDUAL codebook), and `‖v̂‖² = ‖c‖² + 2·Σⱼ cross[cid][code_j] +
-    * Σⱼ r2[code_j]` where the per-list cross table (nlist × m·ksub
-    * doubles, broadcast) holds `dot(c_j, r̂_{j,k})`. Everything stays m
-    * `element_at` lookups inside codegen; residuals are double arrays
-    * computed in one broadcast join, so the whole index remains
-    * deterministic and SQL-replayable (hash-checked battery entry).
+    * ADC sums `pds[j*ksub + code[j]]` over j ascending as m unrolled
+    * `element_at` terms: an explicit left-to-right order, so the sum and
+    * the ranking are bit-identical on any IEEE engine, and every term
+    * stays inside whole-stage codegen (a higher-order `aggregate` fold
+    * drops the hot loop to interpreted evaluation — measured 2× slower
+    * at sf1). The query set and every index-sized relation (centroids,
+    * probe set, lookup tables) arrive by broadcast; the corpus side never
+    * shuffles through a join.
     */
-  def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int, nprobe: Int, m: Int, ksub: Int, dims: Int): DataFrame = {
-    requirePq(m, ksub, dims)
-    val sub = dims / m
-    // the three TINY index relations (centroids: nlist rows, codebook:
-    // m·ksub rows, per-list LUT: nlist rows) each feed several broadcast
-    // consumers across the DAG; left lazy every consumer re-derived them
-    // from the corpus scan (38 parquet scans in the sf0.1 plan).
-    // localCheckpoint caps that at one derivation each — what
-    // materializes is index-sized, never corpus-sized, at any SF.
-    // checkpointCentroids also covers the assignment's INTERNAL
-    // broadcast of the centroid table (the old caller-level checkpoint
-    // left that one lazily re-deriving the corpus TakeOrdered)
-    val (centroids, assigned) =
-      ivfIndexDeterministic(corpus, nlist, checkpointCentroids = true)
-    // residuals in DOUBLE (one broadcast join, narrow projection)
-    val resid = assigned.join(broadcast(centroids), "cid")
-      .select(col("vec_id"), col("cid"),
-        zip_with(col("embedding"), col("centroid"),
-          (x, y) => x.cast("double") - y.cast("double")).as("residual"))
-    // data-point init over RESIDUALS, OFFSET past the coarse seeds: the
-    // nlist smallest vec_ids ARE the coarse centroids, so their residuals
-    // are identically zero — seeding the codebook from them would collapse
-    // every code to r̂ = 0. The next ksub rows' residuals span the actual
-    // residual range (still deterministic: bounded sort, zero Lloyd
-    // iterations, an OFFSET/LIMIT any SQL engine replays exactly).
-    val codebook = resid.select(col("vec_id"), col("residual"))
-      .orderBy("vec_id").limit(nlist + ksub)
-      // bounded global window: runs AFTER limit(nlist+ksub), never corpus-wide
-      .withColumn("rn", row_number().over(Window.orderBy("vec_id")))
-      .where(col("rn") > nlist)
-      .withColumn("c", (col("rn") - nlist - 1).cast("int"))
-      .select(col("c"), posexplode(slicesOf("residual", m, sub)))
-      .toDF("c", "j", "centroid")
-      .localCheckpoint(true)
-    val codes = encodeAgainst(resid, codebook, m, sub, "residual")
-    // per-list scoring constants (nlist rows, broadcast): ‖c‖² and the
-    // flat cross table dot(c_j, r̂_{j,k}) at [j*ksub + k]
-    val crosses = centroids
-      .select(col("cid"), posexplode(slicesOf("centroid", m, sub)))
-      .toDF("cid", "j", "csub")
-      .join(broadcast(codebook.withColumnRenamed("centroid", "rcent")), "j")
-      .select(col("cid"), (col("j") * ksub + col("c")).as("idx"),
-        expr("aggregate(zip_with(csub, rcent, " +
-          "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-          "0D, (a, v) -> a + v)").as("cr"))
-      .groupBy("cid")
-      .agg(expr("transform(array_sort(collect_list(struct(idx, cr))), s -> s.cr)")
-        .as("crs"))
-    val cidLut = crosses.join(
-      centroids.select(col("cid"), expr("aggregate(centroid, 0D, " +
-        "(a, y) -> a + CAST(y AS DOUBLE) * CAST(y AS DOUBLE))").as("coarse2")),
-      "cid")
-      .localCheckpoint(true)
-    // probe gate (identical to the raw-vector composition), with qdotc
+  def search(index: VectorIndex, queries: DataFrame, k: Int,
+      nprobe: Int): DataFrame = {
+    requirePositive("k", k)
+    requirePositive("nprobe", nprobe)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qv"))
       .withColumn("qn", norm(col("qv")))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("qdotc", dot(col("qv"), col("centroid")))
-      .withColumn("ccos", col("qdotc") / (col("qn") * norm(col("centroid"))))
-      .withColumn("crk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("ccos").desc, col("cid").asc)))
-      .where(col("crk") <= nprobe)
-      .select(col("query_id").as("pq_query"), col("cid").as("pcid"),
-        col("qdotc"))
-    val lut = adcLut(queries, codebook, m, sub, ksub)
-    val pairs = compactCodes(codes)
-      .join(assigned.select(col("vec_id"), col("cid")), "vec_id")
-      .join(broadcast(probes), col("cid") === col("pcid"))
-      .join(broadcast(cidLut), "cid")
-      .join(broadcast(lut), col("pq_query") === col("query_id"))
-    // residual ADC: numerator dot(q,c) + Σ pds; denominator reconstructs
-    // ‖v̂‖² = ‖c‖² + 2·Σ cross + Σ r2 — all j-ascending unrolled
-    // element_at terms (bit-identical on any IEEE engine, codegen-friendly)
-    def fold(arr: String) = (0 until m).map(j =>
-      element_at(col(arr),
-        element_at(col("code"), j + 1) + lit(j * ksub) + 1))
-      .reduce(_ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("acos").desc, col("neighbor_id").asc)
-    pairs.where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        ((col("qdotc") + fold("pds")) /
-          (col("qn") * sqrt(col("coarse2") + lit(2.0) * fold("crs") +
-            fold("c2s")))).as("acos"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+    val probes = index.coarse.map(c => probeGate(q, c.centroids, nprobe))
+    index.pq match {
+      case None =>
+        val scored = index.coarse.get.assigned
+          .withColumn("cn", norm(col("embedding")))
+          .join(broadcast(probes.get),
+            col("cid") === col("pcid") && col("vec_id") =!= col("query_id"))
+          .select(col("query_id"), col("vec_id").as("neighbor_id"),
+            (dot(col("qv"), col("embedding")) / (col("qn") * col("cn")))
+              .as("cos"))
+        nearest(scored, k, "cos")
+      case Some(pq) =>
+        val codes = compactCodes(pq.codes)
+        val lut = broadcast(adcLut(q, pq))
+        val pairs = index.coarse.fold(codes.crossJoin(lut)) { c =>
+          val gated = codes.join(c.assigned.select(col("vec_id"), col("cid")),
+              "vec_id")
+            .join(broadcast(probes.get.select(col("query_id").as("pq_query"),
+              col("pcid"), col("qdotc"))), col("cid") === col("pcid"))
+          pq.residual.fold(gated)(lists => gated.join(broadcast(lists), "cid"))
+            .join(lut, col("pq_query") === col("query_id"))
+        }
+        def fold(arr: String) = (0 until pq.m).map(j =>
+          element_at(col(arr),
+            element_at(col("code"), j + 1) + lit(j * pq.ksub) + 1))
+          .reduce(_ + _)
+        val acos = pq.residual match {
+          case None => fold("pds") / (col("qn") * sqrt(fold("c2s")))
+          case Some(_) => (col("qdotc") + fold("pds")) /
+            (col("qn") * sqrt(col("coarse2") + lit(2.0) * fold("crs") +
+              fold("c2s")))
+        }
+        nearest(pairs.where(col("vec_id") =!= col("query_id"))
+          .select(col("query_id"), col("vec_id").as("neighbor_id"),
+            acos.as("acos")), k, "acos")
+    }
   }
 
   /** All corpus pairs with cosine >= `minCos` (embedding near-dup sweep;
@@ -862,7 +763,7 @@ object Similarity {
     * vector, the bounded query set broadcast, the corpus never shuffled;
     * the label-inequality predicate rides the same broadcast
     * nested-loop join that scores the pairs. For unbounded query sets,
-    * gate through [[lshBuckets]] / [[ivfTopK]] candidates first and
+    * gate through [[lshBuckets]] / [[search]] candidates first and
     * re-rank the candidates with this.
     */
   def hardNegatives(corpus: DataFrame, queries: DataFrame,
@@ -876,9 +777,7 @@ object Similarity {
         col("label").as("neg_label"),
         (dot(col("qv"), col("embedding")) / (col("qn") * col("cn")))
           .as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    nearest(scored, k, "cos")
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -893,7 +792,7 @@ object Similarity {
     * with their cluster id.
     *
     * Shape at 100 TB: cluster assignment is a narrow broadcast-centroid
-    * projection ([[ivfIndexDeterministic]]); the quadratic cosine scoring
+    * projection ([[ivfAssign]]); the quadratic cosine scoring
     * is CONFINED to same-cluster pairs — the whole point of clustering
     * first (the paper's key observation: cross-cluster pairs are never
     * semantic duplicates at sensible thresholds), with `nlist` sized so
@@ -904,7 +803,7 @@ object Similarity {
     */
   def semanticDedup(corpus: DataFrame, nlist: Int,
       threshold: Double): DataFrame = {
-    val (_, assigned) = ivfIndexDeterministic(corpus, nlist)
+    val assigned = ivfAssign(corpus, nlist)
     val a = assigned.select(col("cid"), col("vec_id").as("id_a"),
       col("embedding").as("va")).withColumn("na", norm(col("va")))
     val b = assigned.select(col("cid"), col("vec_id").as("id_b"),
@@ -921,7 +820,7 @@ object Similarity {
 
   /** Approximate k-NN graph over the embedding table: each vector's top-k
     * cosine neighbors WITHIN its coarse cluster
-    * ([[ivfIndexDeterministic]] assignment) — the substrate for
+    * ([[ivfAssign]]) — the substrate for
     * graph-based curation (SemDeDup's ε-groups, k-NN clustering,
     * density/outlier scoring, graph-propagated quality labels). The
     * cluster confinement is the standard ANN trade: recall loss only for
@@ -945,20 +844,16 @@ object Similarity {
     */
   def knnGraph(corpus: DataFrame, nlist: Int, k: Int): DataFrame = {
     require(k > 0, s"k=$k must be positive")
-    val (_, assigned) =
-      ivfIndexDeterministic(corpus.where(norm(col("embedding")) > 0), nlist)
+    val assigned = ivfAssign(corpus.where(norm(col("embedding")) > 0), nlist)
     val a = assigned.select(col("cid"), col("vec_id"),
       col("embedding").as("va")).withColumn("na", norm(col("va")))
     val b = assigned.select(col("cid"), col("vec_id").as("neighbor_id"),
       col("embedding").as("vb")).withColumn("nb", norm(col("vb")))
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    a.join(b, Seq("cid"))
+    keepTop(a.join(b, Seq("cid"))
       .where(col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id"), col("neighbor_id"), col("cid"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos")),
+      k, Seq("vec_id"), col("cos").desc, col("neighbor_id").asc)
   }
 
   /** Cluster topic terms (BERTopic-style c-TF-IDF): cluster the corpus
@@ -982,20 +877,16 @@ object Similarity {
   def clusterTopics(emb: DataFrame, docs: DataFrame, nlist: Int,
       topK: Int): DataFrame = {
     require(topK >= 1, s"topK=$topK must be >= 1")
-    val assigned = ivfIndexDeterministic(emb, nlist)._2
-      .select(col("vec_id"), col("cid"))
+    val assigned = ivfAssign(emb, nlist).select(col("vec_id"), col("cid"))
     val toks = docs.join(assigned, col("doc_id") === col("vec_id"))
       .select(col("cid"), explode(split(col("text"), " ")).as("term"))
     val tfc = toks.groupBy("cid", "term").agg(count(lit(1)).as("tf"))
     val fT = tfc.groupBy("term").agg(sum("tf").as("f"))
     val stats = tfc.agg(
       (sum("tf").cast("double") / countDistinct("cid")).as("a"))
-    val w = Window.partitionBy("cid")
-      .orderBy(col("score").desc, col("term").asc)
-    tfc.join(fT, "term").crossJoin(broadcast(stats))
-      .withColumn("score", col("tf") * log(lit(1.0) + col("a") / col("f")))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= topK)
+    keepTop(tfc.join(fT, "term").crossJoin(broadcast(stats))
+      .withColumn("score", col("tf") * log(lit(1.0) + col("a") / col("f"))),
+      topK, Seq("cid"), col("score").desc, col("term").asc)
       .select("cid", "rk", "term", "tf", "score")
   }
 
@@ -1021,8 +912,8 @@ object Similarity {
     * (k sequential Spark jobs — greedy farthest-point is inherently
     * sequential: pick i+1 depends on pick i), so k=1000 means 1000
     * corpus scans. For large coresets, run this over a deterministic
-    * content-hash sample, or use [[ivfIndexDeterministic]]'s cluster
-    * heads as the diverse seed set instead.
+    * content-hash sample, or use [[ivfIndex]]'s data-point centroids
+    * as the diverse seed set instead.
     */
   def kCenters(corpus: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
@@ -1212,10 +1103,7 @@ object Similarity {
       .select(col("i"), col("j"),
         (col("na") + col("nb") - lit(2.0) * dot(col("va"), col("vb")))
           .as("d2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("i").orderBy(col("d2").asc, col("j").asc)
-    val top2 = pairs.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= 2)
+    val top2 = keepTop(pairs, 2, Seq("i"), col("d2").asc, col("j").asc)
       .groupBy("i")
       .agg(min(when(col("rk") === 1, col("d2"))).as("r1"),
         min(when(col("rk") === 2, col("d2"))).as("r2"))

@@ -253,8 +253,8 @@ object TrainingOps {
     QueryDef("q66_sim_ivf",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        Similarity.ivfTopKDeterministic(emb,
-            emb.where(col("vec_id") % 50 === 0), 5, nlist = 8, nprobe = 3)
+        Similarity.search(Similarity.ivfIndex(emb, nlist = 8),
+            emb.where(col("vec_id") % 50 === 0), k = 5, nprobe = 3)
           .select(col("query_id"), col("rk"), col("neighbor_id"),
             round(col("cos"), 5).as("cos"))
           .orderBy("query_id", "rk")
@@ -713,8 +713,8 @@ object TrainingOps {
     QueryDef("q106_sim_pq",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        Similarity.pqTopK(emb, emb.where(col("vec_id") % 50 === 0),
-            k = 5, m = 8, ksub = 16, dims = 64)
+        Similarity.search(Similarity.pqIndex(emb, m = 8, ksub = 16, dims = 64),
+            emb.where(col("vec_id") % 50 === 0), k = 5, nprobe = 1)
           .select(col("query_id"), col("rk"), col("neighbor_id"),
             round(col("acos"), 5).as("acos"))
           .orderBy("query_id", "rk")
@@ -793,8 +793,9 @@ object TrainingOps {
     QueryDef("q107_sim_ivfpq",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        Similarity.ivfPqTopK(emb, emb.where(col("vec_id") % 50 === 0),
-            k = 5, nlist = 16, nprobe = 4, m = 8, ksub = 16, dims = 64)
+        Similarity.search(Similarity.ivfPqIndex(emb, nlist = 16,
+            m = 8, ksub = 16, dims = 64),
+            emb.where(col("vec_id") % 50 === 0), k = 5, nprobe = 4)
           .select(col("query_id"), col("rk"), col("neighbor_id"),
             round(col("acos"), 5).as("acos"))
           .orderBy("query_id", "rk")
@@ -902,8 +903,9 @@ object TrainingOps {
     QueryDef("q112_sim_ivfpq_residual",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        Similarity.ivfPqResidualTopK(emb, emb.where(col("vec_id") % 50 === 0),
-            k = 5, nlist = 16, nprobe = 4, m = 8, ksub = 16, dims = 64)
+        Similarity.search(Similarity.ivfPqResidualIndex(emb, nlist = 16,
+            m = 8, ksub = 16, dims = 64),
+            emb.where(col("vec_id") % 50 === 0), k = 5, nprobe = 4)
           .select(col("query_id"), col("rk"), col("neighbor_id"),
             round(col("acos"), 5).as("acos"))
           .orderBy("query_id", "rk")

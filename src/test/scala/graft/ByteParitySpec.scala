@@ -20,8 +20,8 @@ import graft.pipeline._
   */
 class ByteParitySpec extends AnyFunSuite with SparkTestBase {
 
-  private val corpus = "/root/reference/small-sample.txt"
-  private val goldFile = "/root/reference/test_gold_standard.txt"
+  private def corpus = ReferenceFixtures.corpus
+  private def goldFile = ReferenceFixtures.gold
 
   private def golden(name: String): Seq[String] = {
     val in = getClass.getResourceAsStream(s"/golden/$name")

@@ -183,8 +183,7 @@ class ClassifySpec extends AnyFunSuite with SparkTestBase {
 
   test("end-to-end on the reference fixtures (smoke: tiny gold standard)") {
     val vecs = SemanticPipeline.vectors(spark,
-      "/root/reference/small-sample.txt",
-      "/root/reference/test_gold_standard.txt")
+      ReferenceFixtures.corpus, ReferenceFixtures.gold)
     val report = Classify.run(vecs, folds = 2)
     assert(report.nInstances == 4)
     assert(report.tp + report.fn == 1) // one related pair (about, us)

@@ -144,8 +144,8 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
   test("deterministic IVF handles sparse and offset vec_ids") {
     val shifted = emb.withColumn("vec_id", col("vec_id") * 2 + 1001)
     val q = shifted.where(col("vec_id") % 50 === 1)
-    val res = Similarity.ivfTopKDeterministic(shifted, q, 3,
-      nlist = 4, nprobe = 4)
+    val res = Similarity.search(Similarity.ivfIndex(shifted, nlist = 4), q, 3,
+      nprobe = 4)
     assert(res.count() > 0)
     // nprobe == nlist law still holds on the weird id layout
     val exact = Similarity.cosineTopK(shifted, q, 3)
@@ -367,25 +367,42 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     val exact = Similarity.cosineTopK(emb, queries, 5)
       .select("query_id", "rk", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val ivfFull = Similarity.ivfTopK(emb, queries, 5, nlist = 4, nprobe = 4)
+    val kmeans = Similarity.ivfIndex(emb, nlist = 4, Similarity.Init.KMeans())
+    val ivfFull = Similarity.search(kmeans, queries, 5, nprobe = 4)
       .select("query_id", "rk", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(ivfFull == exact)
     // the deterministic quantizer obeys the same law: probing every list
     // degenerates to the exact brute-force ranking regardless of centroids
     val detFull = Similarity
-      .ivfTopKDeterministic(emb, queries, 5, nlist = 4, nprobe = 4)
+      .search(Similarity.ivfIndex(emb, nlist = 4), queries, 5, nprobe = 4)
       .select("query_id", "rk", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(detFull == exact)
     // restricted probing returns a subset ranking drawn from probed lists
-    val ivf1 = Similarity.ivfTopK(emb, queries, 5, nlist = 4, nprobe = 2)
+    val ivf1 = Similarity.search(kmeans, queries, 5, nprobe = 2)
     assert(ivf1.count() > 0)
     val recall = ivf1.select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .count(p2 => exact.exists { case ((q, _), n) => q == p2._1 && n == p2._2 })
       .toDouble / exact.size
     assert(recall >= 0.3, s"ivf nprobe=2/4 recall $recall")
+  }
+
+  test("KMeans IVF index builds with an initialized ObservationManager") {
+    // an Observation (the spill certificate) initializes the session's
+    // ObservationManager, which is not java-serializable; the KMeans model
+    // must not drag the session into the assignment closure
+    val s2 = spark; import s2.implicits._
+    val tiny = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
+    graft.ops.Dedup.spillCertificate(tiny, 3).collect()
+    val vecs = (1L to 40L).map(i =>
+      (i, Array.tabulate(4)(d => ((i * (d + 1)) % 7).toFloat)))
+      .toDF("vec_id", "embedding")
+    val Similarity.Coarse(cents, assigned) = Similarity.ivfIndex(vecs, 3,
+      Similarity.Init.KMeans(seed = 7L)).coarse.get
+    assert(cents.count() == 3L)
+    assert(assigned.count() == 40L)
   }
 
   test("stubbed multimodal decode is deterministic and shape-correct") {
@@ -1041,22 +1058,24 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
 
   test("PQ with a full codebook and one subspace IS brute force") {
     // m=1, ksub >= |corpus|: every vector's sole code is itself (d2 = 0),
-    // so the ADC dot is the exact dot and pqTopK must equal cosineTopK —
-    // the degenerate-equivalence law pinning the whole index/LUT chain
-    // (ivfIndexDeterministic's nprobe==nlist law, PQ edition)
+    // so the ADC dot is the exact dot and the PQ search must equal
+    // cosineTopK — the degenerate-equivalence law pinning the whole
+    // index/LUT chain (the IVF nprobe==nlist law, PQ edition)
     val n = emb.count().toInt
     val queries = emb.where(col("vec_id") % 50 === 0)
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "rk", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(1 + 1))).toSet
-    val pq = Similarity.pqTopK(emb, queries, 5, m = 1, ksub = n, dims = 64)
+    val pq = Similarity.search(
+      Similarity.pqIndex(emb, m = 1, ksub = n, dims = 64), queries, 5, nprobe = 1)
     val exact = Similarity.cosineTopK(emb, queries, 5)
     assert(key(pq) == key(exact))
     // real compression (m=8, ksub=16) on the fixture's RANDOM embeddings —
     // PQ's adversarial case (no cluster structure for the codebook to
     // exploit) — must still land an order of magnitude above chance
     // (5/199 ≈ 0.025): observed ~0.22
-    val approx = Similarity.pqTopK(emb, queries, 5, m = 8, ksub = 16, dims = 64)
+    val pq8 = Similarity.pqIndex(emb, m = 8, ksub = 16, dims = 64)
+    val approx = Similarity.search(pq8, queries, 5, nprobe = 1)
     val hits = key(approx).map { case (q, _, nb) => (q, nb) }
       .intersect(key(exact).map { case (q, _, nb) => (q, nb) })
     val recall = hits.size.toDouble / key(exact).size
@@ -1066,6 +1085,20 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       Similarity.pqIndex(emb, m = 8, ksub = 0, dims = 64)
     }
     assert(e.getMessage.contains("ksub"))
+    // a zero top-k, probe or list count likewise fails fast
+    val ek = intercept[IllegalArgumentException] {
+      Similarity.search(pq8, queries, 0, nprobe = 1)
+    }
+    assert(ek.getMessage.contains("k=0"))
+    val ep = intercept[IllegalArgumentException] {
+      Similarity.search(Similarity.ivfIndex(emb, nlist = 4), queries, 5,
+        nprobe = 0)
+    }
+    assert(ep.getMessage.contains("nprobe=0"))
+    val el = intercept[IllegalArgumentException] {
+      Similarity.ivfIndex(emb, nlist = 0)
+    }
+    assert(el.getMessage.contains("nlist=0"))
   }
 
   test("trained PQ quantizer holds a recall@10 floor on the sf0.01 vectors") {
@@ -1080,12 +1113,14 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.cosineTopK(emb01, queries, 10))
-    val trained = pairs(Similarity.pqTopKTrained(emb01, queries, 10,
-      m = 8, ksub = 16, dims = 64))
+    val index = Similarity.pqIndex(emb01, m = 8, ksub = 16, dims = 64,
+      Similarity.Init.KMeans())
+    val trained = pairs(Similarity.search(index, queries, 10, nprobe = 1))
     val recall = (trained & exact).size.toDouble / exact.size
     assert(recall >= 0.2, s"trained recall@10 = $recall")
     // codebook shape contract matches the data-point variant: m*ksub rows
-    val (cb, codes) = Similarity.pqIndexTrained(emb01, 8, 16, 64)
+    val cb = index.pq.get.codebook
+    val codes = index.pq.get.codes
     assert(cb.count() == 8 * 16)
     assert(codes.groupBy("vec_id").count().where(col("count") =!= 8).count() == 0)
   }
@@ -1098,7 +1133,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     // Lloyd iterations in both quantizers): measured residual 0.335 vs
     // raw 0.178 recall@10.
     //
-    // Recorded counter-measurement (why ivfPqTopK stays the default
+    // Recorded counter-measurement (why ivfPqIndex stays the default
     // composition): on the sf0.01 UNIFORM-RANDOM embeddings there is no
     // structure for the coarse quantizer to remove, ‖v − c‖² ≈
     // ‖v‖² + ‖c‖², and the residual range EXCEEDS the raw range —
@@ -1118,12 +1153,12 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.cosineTopK(clustered, queries, 10))
-    val raw = (pairs(Similarity.ivfPqTopK(clustered, queries, 10,
-      nlist = 16, nprobe = 4, m = 8, ksub = 16, dims = dims)) & exact).size
-      .toDouble / exact.size
-    val res = (pairs(Similarity.ivfPqResidualTopK(clustered, queries, 10,
-      nlist = 16, nprobe = 4, m = 8, ksub = 16, dims = dims)) & exact).size
-      .toDouble / exact.size
+    val raw = (pairs(Similarity.search(Similarity.ivfPqIndex(clustered,
+      nlist = 16, m = 8, ksub = 16, dims = dims), queries, 10, nprobe = 4)) &
+      exact).size.toDouble / exact.size
+    val res = (pairs(Similarity.search(Similarity.ivfPqResidualIndex(clustered,
+      nlist = 16, m = 8, ksub = 16, dims = dims), queries, 10, nprobe = 4)) &
+      exact).size.toDouble / exact.size
     assert(res >= 0.3, s"residual recall@10 = $res")
     assert(res > raw, s"residual ($res) must beat raw ($raw) in its regime")
   }
@@ -1140,28 +1175,31 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.cosineTopK(emb01, queries, 10))
-    val trained = pairs(Similarity.ivfPqTopKTrained(emb01, queries, 10,
-      nlist = 16, nprobe = 4, m = 8, ksub = 16, dims = 64))
+    val trained = pairs(Similarity.search(Similarity.ivfPqIndex(emb01,
+      nlist = 16, m = 8, ksub = 16, dims = 64, Similarity.Init.KMeans()),
+      queries, 10, nprobe = 4))
     val recall = (trained & exact).size.toDouble / exact.size
     assert(recall >= 0.2, s"trained IVF-PQ recall@10 = $recall")
   }
 
   test("IVF-PQ with a total probe gate IS plain PQ") {
     // nprobe == nlist: every list is probed, the gate passes everything,
-    // and the composed path must return exactly pqTopK's ranking — the
+    // and the composed path must return exactly the PQ index's ranking — the
     // law pinning that IVF gating changes WHAT is scanned, never HOW
     // candidates are scored
     val queries = emb.where(col("vec_id") % 50 === 0)
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "rk", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val full = Similarity.ivfPqTopK(emb, queries, 5,
-      nlist = 8, nprobe = 8, m = 8, ksub = 16, dims = 64)
-    val pq = Similarity.pqTopK(emb, queries, 5, m = 8, ksub = 16, dims = 64)
+    val ivfPq = Similarity.ivfPqIndex(emb, nlist = 8, m = 8, ksub = 16,
+      dims = 64)
+    val full = Similarity.search(ivfPq, queries, 5, nprobe = 8)
+    val pq = Similarity.search(
+      Similarity.pqIndex(emb, m = 8, ksub = 16, dims = 64), queries, 5,
+      nprobe = 1)
     assert(key(full) == key(pq))
     // a partial gate returns at most k per query from probed lists only
-    val probed = Similarity.ivfPqTopK(emb, queries, 5,
-      nlist = 8, nprobe = 2, m = 8, ksub = 16, dims = 64)
+    val probed = Similarity.search(ivfPq, queries, 5, nprobe = 2)
     val perQuery = probed.groupBy("query_id").count()
       .collect().map(_.getLong(1))
     assert(perQuery.forall(_ <= 5) && perQuery.nonEmpty)
@@ -2084,7 +2122,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       }, s"cosines not monotone for $v")
     }
     // agreement with a brute-force in-cluster top-k on the same index
-    val (_, assigned) = Similarity.ivfIndexDeterministic(emb, 4)
+    val assigned = Similarity.ivfAssign(emb, 4)
     val rows = assigned.select("vec_id", "cid", "embedding").collect()
       .map(r => (r.getLong(0), r.getInt(1),
         r.getSeq[Float](2).toArray))

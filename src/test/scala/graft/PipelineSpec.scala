@@ -12,8 +12,8 @@ import graft.pipeline._
   */
 class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
-  private val corpusPath = "/root/reference/small-sample.txt"
-  private val goldPath = "/root/reference/test_gold_standard.txt"
+  private def corpusPath = ReferenceFixtures.corpus
+  private def goldPath = ReferenceFixtures.gold
 
   // Decode with UTF-8 replacement (not strict) to see exactly the
   // characters Spark's text source produces for invalid byte sequences —

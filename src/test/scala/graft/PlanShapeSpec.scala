@@ -154,25 +154,32 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   test("IVF-PQ broadcasts its small sides; the code table never shuffles " +
       "through a join") {
     val queries = emb.where(col("vec_id") % 50 === 0)
-    val p = plan(Similarity.ivfPqTopK(emb, queries, 5,
-      nlist = 4, nprobe = 2, m = 8, ksub = 16, dims = 64))
+    val p = plan(Similarity.search(Similarity.ivfPqIndex(emb, nlist = 4,
+      m = 8, ksub = 16, dims = 64), queries, 5, nprobe = 2))
     // centroids (assignment + probing), the probe set, and the ADC LUT
     // each arrive by broadcast; a SortMergeJoin here would mean the
     // 32×-compressed code table is being shuffled against a tiny side
     assert("BroadcastExchange".r.findAllIn(p).size >= 3, p)
     assert(!p.contains("SortMergeJoin"), p)
+    // the centroids and the codebook are materialized once: the corpus is
+    // read for the codes, the assignment and the two query sides only —
+    // a lazy index relation would re-derive from the corpus at every
+    // broadcast that consumes it
+    assert("embeddings.parquet".r.findAllIn(p).size == 4, p)
   }
 
   test("residual IVF-PQ keeps its extra LUTs broadcast too") {
     val queries = emb.where(col("vec_id") % 50 === 0)
-    val p = plan(Similarity.ivfPqResidualTopK(emb, queries, 5,
-      nlist = 4, nprobe = 2, m = 8, ksub = 16, dims = 64))
-    // on top of ivfPqTopK's sides, the residual design adds the per-list
+    val p = plan(Similarity.search(Similarity.ivfPqResidualIndex(emb,
+      nlist = 4, m = 8, ksub = 16, dims = 64), queries, 5, nprobe = 2))
+    // on top of plain IVF-PQ's sides, the residual design adds the per-list
     // cross/‖c‖² table — nlist rows, which must ALSO arrive by broadcast;
     // a SortMergeJoin would mean the compressed code table is shuffling
     // against one of these tiny relations
     assert("BroadcastExchange".r.findAllIn(p).size >= 4, p)
     assert(!p.contains("SortMergeJoin"), p)
+    // the centroids, residual codebook and per-list table each derive once
+    assert("embeddings.parquet".r.findAllIn(p).size == 4, p)
   }
 
   test("bloom decontamination keeps the corpus side join-free") {

@@ -13,8 +13,8 @@ import graft.pipeline.{Associate, Biarcs, Counts, PairVectors}
   */
 class VectorSourceSpec extends AnyFunSuite with SparkTestBase {
 
-  private val corpus = "/root/reference/small-sample.txt"
-  private val goldFile = "/root/reference/test_gold_standard.txt"
+  private def corpus = ReferenceFixtures.corpus
+  private def goldFile = ReferenceFixtures.gold
 
   private def goldenStep4 = {
     val url = getClass.getResource("/golden/step4.txt")
