@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark entry: runs the full query battery against
   * `SPARK_GRAFT_SF_DIR` (default sf0.1) and prints ONE JSON line
@@ -34,7 +35,7 @@ object Bench {
   private def loadavg: String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
       .split(" ").take(3).mkString(",")
-    catch { case _: Throwable => "" }
+    catch { case NonFatal(_) => "" }
 
   private def gcSec: Double = {
     import scala.jdk.CollectionConverters._
@@ -58,7 +59,7 @@ object Bench {
     // JVM/codegen warm-up on a cheap query so per-query timings measure the
     // plan, not first-call JIT + classloading.
     try SparkEntry.queries("q03_distinct")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // MLlib warm-up: the first forest fit in a JVM pays several seconds of
     // one-time class-loading + JIT that would otherwise land entirely on
     // whichever battery entry first touches spark.ml (q60). A 64-row
@@ -72,7 +73,7 @@ object Bench {
       graft.ml.Classify.crossValPredictions(toy, folds = 2, seed = 1L,
         numTrees = 1).unpersist()
       ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     // round-5 postmortem entries: their artifact minima inflated 2–5× on a
     // contended host with UNTOUCHED code; always take 3 samples so the
@@ -111,7 +112,7 @@ object Bench {
             else Seq(t1, t2)
           }
         (q.name, samples.min, samples.size, true)
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
         spark.catalog.clearCache()
         (q.name, -1.0, 1, false)
@@ -135,12 +136,12 @@ object Bench {
       "bench/latest.json")
     try java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(artifact).toAbsolutePath.getParent)
-    catch { case scala.util.control.NonFatal(_) => () }
+    catch { case NonFatal(_) => () }
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","samples":$samples,"loadavg_start":"$loadStart","loadavg_end":"$loadavg","gc_sec":$gcSec%.1f,"materialize":"noop-sink (round 10+: full-row materialization; count()-timed rounds <= 9 under-state narrow map-shaped entries)","artifact":"$artifact"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (line + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(e) =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}") }
     println(line)
     spark.stop()

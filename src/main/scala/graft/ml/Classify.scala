@@ -1,7 +1,9 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.RandomForestClassifier
+import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -106,66 +108,63 @@ object Classify {
       .setNumTrees(numTrees).setMaxDepth(30)
       .setFeatureSubsetStrategy("sqrt").setSeed(seed)
       .setLabelCol("label").setFeaturesCol("features")
-    def fitFold(k: Int): DataFrame = {
-      val train = assembler.transform(labeled.where(col("fold") =!= k))
-      val test = assembler.transform(labeled.where(col("fold") === k))
-      if (train.isEmpty || test.isEmpty)
-        test.select(col("label"), col("label").as("prediction"),
-          col("label").as("p_similar")).limit(0)
-      else {
-        // a fold trained on a single class yields a 1-element probability
-        // vector; recover P(similar) from the lone class's probability
-        val arr = org.apache.spark.ml.functions.vector_to_array(col("probability"))
-        // the MODEL copy drops the trainingSummary before the model rides
-        // the prediction closure: the summary pins the SparkSession, and
-        // a session whose ObservationManager has been initialized (ANY
-        // Observation user in the process, e.g. Dedup.spillCertificate —
-        // since round 11 the AQE observation path initializes it too)
-        // is no longer java-serializable — the fit would then fail task
-        // serialization through no fault of its own (ClassifySpec pins
-        // the interaction). The ESTIMATOR copy before it keeps parallel
-        // fold fits from sharing one mutable estimator.
-        rf.copy(org.apache.spark.ml.param.ParamMap.empty).fit(train)
-          .copy(org.apache.spark.ml.param.ParamMap.empty)
-          .transform(test)
-          .select(col("label"), col("prediction"),
-            when(size(arr) === 2, element_at(arr, 2))
-              .otherwise(when(col("prediction") === 1.0, element_at(arr, 1))
-                .otherwise(lit(1.0) - element_at(arr, 1))).as("p_similar"))
-      }
-    }
-    // Folds are independent: on large inputs, submit their fits
-    // concurrently (the CrossValidator.parallelism pattern — each fit is
-    // dozens of jobs, so fold wall-clock is partly scheduling latency and
-    // overlapping folds reclaims it; each thread fits its own estimator
-    // copy). On SMALL inputs every fold job is pure scheduler round-trip:
-    // a thread pool multiplies the concurrent job count 4× for zero data
-    // parallelism, which under a loaded host degrades ~4× while the rest
-    // of the battery degrades ~1.3× (driver-measured 26.9 s vs 7.0 s idle
-    // for the same 8-row smoke). Sequential fits keep the cost flat.
-    val poolSize = if (n < 10000L) 1 else math.max(1, math.min(folds, 4))
-    val preds =
-      if (poolSize == 1) (0 until folds).map(fitFold)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            (0 until folds).map(k => scala.concurrent.Future(fitFold(k)))),
-          scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
-      }
+    // One job sizes the folds; a fold is live when it has rows to test
+    // and rows to train on. Live folds fit concurrently (each fit is
+    // dozens of small jobs, so overlapping folds reclaims scheduling
+    // latency), each on its own estimator copy. The model copy drops the
+    // trainingSummary, which pins the SparkSession: a session whose
+    // ObservationManager is initialized is not java-serializable, so the
+    // broadcast below would fail (ClassifySpec pins the interaction).
+    val sizes = labeled.groupBy("fold").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val live = (0 until folds).filter(k => sizes.get(k).exists(_ < n))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(live.size, 4)))
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val models = try scala.concurrent.Await.result(
+      scala.concurrent.Future.sequence(live.map(k => scala.concurrent.Future(
+        k -> rf.copy(ParamMap.empty)
+          .fit(assembler.transform(labeled.where(col("fold") =!= k)))
+          .copy(ParamMap.empty)))),
+      scala.concurrent.duration.Duration.Inf).toMap
+    finally pool.shutdown()
+    // Every out-of-fold row is scored by its own fold's model through one
+    // broadcast lookup; the union keeps the fold-major row layout, so the
+    // report's float sums add in a fixed order.
+    val bc = vectors.sparkSession.sparkContext.broadcast(models)
+    val score = udf((k: Int, v: Vector) => scoreRow(bc.value(k), v))
+    val scored = assembler.transform(labeled)
+      .select(col("fold"), col("label"), score(col("fold"), col("features")).as("s"))
+      .select(col("fold"), col("label"), col("s._1").as("prediction"),
+        col("s._2").as("p_similar"))
     // Materialize the out-of-fold predictions (gold-bounded: one row per
     // labeled pair) while the fold caches are still warm, then release
     // them — otherwise every battery/bench run leaks two cached relations
     // for the session's lifetime. Callers that keep the result past one
     // evaluation should unpersist it (run() does).
-    val out = preds.reduce(_ unionByName _).cache()
+    val out = live.map(k => scored.where(col("fold") === k))
+      .reduceOption(_ union _).getOrElse(scored.where(lit(false)))
+      .drop("fold").cache()
     out.count()
     prepared.unpersist()
     labeled.unpersist()
+    bc.unpersist()
     out
+  }
+
+  /** (prediction, P(similar)) of one row exactly as `model.transform`
+    * derives them: the argmax of the raw votes and the normalized class
+    * probabilities. A model trained on a single class yields a 1-element
+    * probability vector; P(similar) is then recovered from the lone
+    * class's probability.
+    */
+  private[graft] def scoreRow(model: RandomForestClassificationModel,
+      v: Vector): (Double, Double) = {
+    val prediction = model.predictRaw(v).argmax.toDouble
+    val p = model.predictProbability(v)
+    (prediction,
+      if (p.size == 2) p(1) else if (prediction == 1.0) p(0) else 1.0 - p(0))
   }
 
   /** Seeded stratified fold assignment as PURE HASH ARITHMETIC: within
@@ -219,20 +218,18 @@ object Classify {
         .cast("int"))
   }
 
-  /** [[evaluate]]'s report algebra as ONE declarative aggregation — the
-    * oracle-checkable form: confusion counts, accuracy, Cohen's kappa,
-    * positive-class and weighted precision/recall/F1, and (when a
-    * `p_similar` column is present) Weka's MAE/RMSE, computed from a
-    * (label, prediction[, p_similar]) relation in a single one-row
-    * DataFrame with the exact zero-denominator conventions of
-    * [[evaluate]] (ClassifySpec pins the 1e-12 equivalence). AUC is the
-    * one metric left to [[evaluate]] — it needs the rank pass.
+  /** The report algebra as ONE declarative aggregation — the
+    * oracle-checkable form, and the one [[evaluate]] reads: confusion
+    * counts, accuracy, Cohen's kappa, positive-class and weighted
+    * precision/recall/F1, and (when a `p_similar` column is present)
+    * Weka's MAE/RMSE, computed from a (label, prediction[, p_similar])
+    * relation in a single one-row DataFrame; a zero denominator gives 0.
+    * AUC is the one metric left to [[evaluate]] — it needs the rank pass.
     */
   def evaluateDf(predictions: DataFrame): DataFrame = {
     val l = col("label").cast("double")
     val p = col("prediction").cast("double")
-    def cell(lv: Double, pv: Double) =
-      sum(when(l === lv && p === pv, 1L).otherwise(0L))
+    def cell(lv: Double, pv: Double) = count(when(l === lv && p === pv, 1L))
     val hasProb = predictions.columns.contains("p_similar")
     val d = if (hasProb) col("p_similar").cast("double") - l else lit(0.0)
     val n = col("tp") + col("fn") + col("fp") + col("tn")
@@ -245,7 +242,7 @@ object Classify {
     def f1Of(pr: Column, rc: Column) =
       when(pr + rc === 0.0, 0.0).otherwise(lit(2.0) * pr * rc / (pr + rc))
     val acc = ratio(col("tp") + col("tn"), n)
-    // chance agreement from the margins; kappa 0 at pe = 1 as evaluate()
+    // chance agreement from the margins; kappa 0 at pe = 1
     val pe = when(n === 0L, 0.0).otherwise(
       ((col("tp") + col("fn")).cast("double") * (col("tp") + col("fp"))
         + (col("tn") + col("fp")).cast("double") * (col("tn") + col("fn")))
@@ -273,56 +270,21 @@ object Classify {
   }
 
   /** Confusion-matrix evaluation of out-of-fold predictions ("similar" =
-    * the positive class, as in `README.md:150-154`).
+    * the positive class, as in `README.md:150-154`): [[evaluateDf]]'s one
+    * row plus the AUC. MAE/RMSE are Weka's for a classifier
+    * (`README.md:114-115,143-144` of the reference; Weka
+    * `Evaluation.updateNumericScores`): for two classes both per-class
+    * differences have the magnitude |P(similar) − label|, so
+    * MAE = mean |p − y| and RMSE = sqrt(mean (p − y)²).
     */
   def evaluate(predictions: DataFrame, folds: Int = 10): Report = {
-    val counts = predictions
-      .groupBy(col("label"), col("prediction")).count()
-      .collect()
-      .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getLong(2)).toMap
-      .withDefaultValue(0L)
-    val tp = counts((1.0, 1.0)); val fn = counts((1.0, 0.0))
-    val fp = counts((0.0, 1.0)); val tn = counts((0.0, 0.0))
-    val n = tp + fn + fp + tn
-    val prec = if (tp + fp == 0) 0.0 else tp.toDouble / (tp + fp)
-    val rec = if (tp + fn == 0) 0.0 else tp.toDouble / (tp + fn)
-    val f1 = if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec)
-    val accuracy = if (n == 0) 0.0 else (tp + tn).toDouble / n
-    // Cohen's kappa: observed vs chance agreement from the margins
-    val pe = if (n == 0) 0.0
-      else ((tp + fn).toDouble * (tp + fp) + (tn + fp).toDouble * (tn + fn)) /
-        (n.toDouble * n)
-    val kappa = if (pe == 1.0) 0.0 else (accuracy - pe) / (1 - pe)
-    // negative-class and weighted one-vs-rest metrics (Weka's summary rows)
-    val precN = if (tn + fn == 0) 0.0 else tn.toDouble / (tn + fn)
-    val recN = if (tn + fp == 0) 0.0 else tn.toDouble / (tn + fp)
-    val f1N = if (precN + recN == 0) 0.0 else 2 * precN * recN / (precN + recN)
-    val wPos = (tp + fn).toDouble / math.max(1L, n)
-    val wNeg = (tn + fp).toDouble / math.max(1L, n)
-    val (mae, rmse) = errorMetrics(predictions)
-    Report(folds, n, accuracy, kappa, aucFromScores(predictions),
-      prec, rec, f1,
-      wPos * prec + wNeg * precN, wPos * rec + wNeg * recN,
-      wPos * f1 + wNeg * f1N,
-      mae, rmse,
-      tp, fn, fp, tn)
-  }
-
-  /** Weka's MAE/RMSE for a classifier (`README.md:114-115,143-144` of the
-    * reference; Weka `Evaluation.updateNumericScores`): per instance, the
-    * class-probability vector is compared against the 0/1 indicator vector
-    * and the per-class differences are averaged. For two classes both
-    * differences have the same magnitude |P(similar) − label|, so
-    * MAE = mean |p − y| and RMSE = sqrt(mean (p − y)²) over the
-    * out-of-fold P(similar).
-    */
-  private def errorMetrics(predictions: DataFrame): (Double, Double) = {
-    if (!predictions.columns.contains("p_similar")) return (0.0, 0.0)
-    val d = col("p_similar") - col("label")
-    val r = predictions.agg(
-      avg(abs(d)).as("mae"), sqrt(avg(d * d)).as("rmse")).head()
-    (if (r.isNullAt(0)) 0.0 else r.getDouble(0),
-      if (r.isNullAt(1)) 0.0 else r.getDouble(1))
+    val r = evaluateDf(predictions).head()
+    def d(c: String) = r.getAs[Double](c)
+    def l(c: String) = r.getAs[Long](c)
+    Report(folds, l("n"), d("accuracy"), d("kappa"), aucFromScores(predictions),
+      d("precision_similar"), d("recall_similar"), d("f1_similar"),
+      d("weighted_precision"), d("weighted_recall"), d("weighted_f1"),
+      d("mae"), d("rmse"), l("tp"), l("fn"), l("fp"), l("tn"))
   }
 
   /** ROC area for the positive class via the Mann-Whitney rank statistic

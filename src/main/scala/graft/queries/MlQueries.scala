@@ -29,9 +29,9 @@ object MlQueries {
             .toDF("w1", "w2", "related")
         }
         val vecs = PairVectors.vectors(DocPipelineAccess.assoc(s, d), gold)
-        // smoke-sized forest: 5 trees × 4 sequential folds keeps the MLlib
-        // job count low enough that the entry's cost is stable under host
-        // contention (the full-size path is ClassifySpec/EndToEndMlSpec)
+        // smoke-sized forest: 5 trees × 4 folds (fit concurrently) keeps
+        // the MLlib job count low (the full-size path is
+        // ClassifySpec/EndToEndMlSpec)
         val preds = Classify.crossValPredictions(vecs, folds = 4, seed = 42L,
           numTrees = 5)
         val r = try Classify.evaluate(preds, folds = 4)

@@ -12,9 +12,9 @@ class ClassifySpec extends AnyFunSuite with SparkTestBase {
     * high-similarity / low-distance profiles, unrelated the opposite, with
     * id-derived pseudo-noise — separable, so CV accuracy must be high.
     */
-  private def syntheticVectors(n: Int) = {
+  private def syntheticVectors(n: Int, posEvery: Int = 4) = {
     val base = spark.range(n.toLong).toDF("id")
-      .withColumn("related", col("id") % 4 === 0)
+      .withColumn("related", col("id") % posEvery === 0)
       .withColumn("noise", sin(col("id").cast("double")) * 0.05)
     PairVectors.vectorColumns.zipWithIndex.foldLeft(
       base.withColumn("w1", concat(lit("a"), col("id")))
@@ -98,13 +98,60 @@ class ClassifySpec extends AnyFunSuite with SparkTestBase {
     val s2 = spark; import s2.implicits._
     // any Observation user initializes the shared session's (non-
     // serializable) ObservationManager; a fitted model's trainingSummary
-    // pins the session, so WITHOUT the model.copy in fitFold every later
-    // prediction closure fails task serialization
+    // pins the session, so WITHOUT the model.copy in crossValPredictions
+    // the broadcast of the fold models fails serialization
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
     graft.ops.Dedup.spillCertificate(docs, 3).collect()
     val v = syntheticVectors(60)
     val r = Classify.evaluate(Classify.crossValPredictions(v, 2, 3L, 5))
     assert(r.nInstances == 60)
+  }
+
+  test("fewer rows than folds: one out-of-fold row per input row") {
+    // 8 rows (4 per label) over 10 folds: folds 0-3 hold one row of each
+    // label, folds 4-9 are empty; 60 rows over 2 folds: both folds live
+    for ((v, folds) <- Seq((syntheticVectors(8, posEvery = 2), 10),
+        (syntheticVectors(60), 2))) {
+      val n = v.count()
+      val preds = Classify.crossValPredictions(v, folds, 42L, 5)
+      try {
+        assert(preds.count() == n, s"folds=$folds")
+        assert(Classify.evaluate(preds, folds).nInstances == n)
+      } finally preds.unpersist()
+    }
+  }
+
+  test("fold-lookup scorer matches model.transform bit for bit, " +
+      "including a model trained on one class") {
+    import org.apache.spark.ml.classification.RandomForestClassifier
+    import org.apache.spark.ml.feature.VectorAssembler
+    import org.apache.spark.ml.functions.vector_to_array
+    import org.apache.spark.ml.linalg.Vector
+    val rows = new VectorAssembler()
+      .setInputCols(PairVectors.vectorColumns.toArray).setOutputCol("features")
+      .transform(noisyVectors(300)
+        .withColumn("label", col("related").cast("double")))
+    val rf = new RandomForestClassifier().setNumTrees(10).setMaxDepth(30)
+      .setFeatureSubsetStrategy("sqrt").setSeed(42L)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // both classes: 2-element probabilities; negatives only: 1-element
+    for ((train, classes) <- Seq((rows, 2), (rows.where(col("label") === 0.0), 1))) {
+      // the copy drops the trainingSummary (see the ObservationManager test)
+      val model = rf.fit(train).copy(org.apache.spark.ml.param.ParamMap.empty)
+      assert(model.numClasses == classes)
+      val arr = vector_to_array(col("probability"))
+      val want = model.transform(rows).select(col("features"),
+        col("prediction"),
+        when(size(arr) === 2, element_at(arr, 2))
+          .otherwise(when(col("prediction") === 1.0, element_at(arr, 1))
+            .otherwise(lit(1.0) - element_at(arr, 1))))
+        .collect()
+      for (r <- want) {
+        val (prediction, pSimilar) = Classify.scoreRow(model, r.getAs[Vector](0))
+        assert(bits(prediction) == bits(r.getDouble(1)), r)
+        assert(bits(pSimilar) == bits(r.getDouble(2)), r)
+      }
+    }
   }
 
   test("seeded CV is reproducible") {
