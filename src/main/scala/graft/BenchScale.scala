@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness.{arr, obj, str}
+import graft.queries.QueryDef
 
 /** Scale-rehearsal benchmark: runs a named subset of battery entries at
   * TWO scale factors (sf0.1 and a synthesized sf1 by default) and emits
@@ -13,10 +14,9 @@ import org.apache.spark.sql.SparkSession
   * Env knobs: `SPARK_GRAFT_SF_A` / `SPARK_GRAFT_SF_B` (dirs),
   * `SPARK_GRAFT_ENTRIES` (comma-separated names; defaults to the
   * most-expensive set the round-6 verdict asked to rehearse),
-  * `SPARK_GRAFT_BENCH_OUT` (artifact path). Sampling mirrors
-  * [[Bench]]: min-of-2 always, a third sample when the first two
-  * disagree by > 1.5× (load-spike signature), loadavg + GC recorded so
-  * a contended run self-identifies.
+  * `SPARK_GRAFT_BENCH_OUT` (artifact path). Each time is the min of
+  * [[Harness.minOf]] with at least 2 samples; loadavg + GC are recorded
+  * so a contended run self-identifies.
   */
 object BenchScale {
 
@@ -73,92 +73,43 @@ object BenchScale {
     "q283_epoch_shuffle", "q284_intrinsic_dimension",
     "q285_energy_distance", "q286_confusable_dedup", "q287_low_quality_spans")
 
-  private def loadavg: String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      .split(" ").take(3).mkString(",")
-    catch { case _: Throwable => "" }
-
-  private def gcSec: Double = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime.max(0L)).sum / 1e3
-  }
-
   def main(args: Array[String]): Unit = {
     val sfA = sys.env.getOrElse("SPARK_GRAFT_SF_A", "/root/testdata/sf0.1")
     val sfB = sys.env.getOrElse("SPARK_GRAFT_SF_B", "target/sf1")
-    val entries = sys.env.get("SPARK_GRAFT_ENTRIES")
+    val entries = Harness.entries(sys.env.get("SPARK_GRAFT_ENTRIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(defaultEntries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val defs = SparkEntry.defs.map(q => q.name -> q).toMap
-    val missing = entries.filterNot(defs.contains)
-    require(missing.isEmpty, s"unknown entries: $missing")
+      .getOrElse(defaultEntries))
+    val spark = Harness.session("graft-bench-scale")
+    Harness.warmUp(spark, sfA, "q03_distinct")
 
-    // warm-up (JIT + codegen + classloading off the first timed entry)
-    try SparkEntry.queries("q03_distinct")(spark, sfA).count()
-    catch { case _: Throwable => () }
+    // full-row noop materialization, NOT count(): count lets Catalyst
+    // prune a map-shaped entry's own compute (see Harness.materialize),
+    // which flattens exactly the curvature this instrument measures
+    def sample(q: QueryDef, dir: String): Double =
+      Harness.minOf(2)(Harness.timed(spark)(q.query(spark, dir))).min
 
-    def sample(name: String, dir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        // full-row noop materialization, NOT count(): count lets Catalyst
-        // prune a map-shaped entry's own compute (see Bench.materialize),
-        // which flattens exactly the curvature this instrument measures
-        Bench.materialize(defs(name).query(spark, dir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
-      }
-      val t1 = once(); val t2 = once()
-      val base = Seq(t1, t2)
-      (if (t2.max(t1) / t2.min(t1) > 1.5) base :+ once() else base).min
+    val loadStart = Harness.loadavg
+    val rows = entries.map { q =>
+      q.name -> Harness.attempt(spark, q.name)(
+        (sample(q, sfA), sample(q, sfB))).toOption
     }
-
-    val loadStart = loadavg
-    val rows = entries.map { name =>
-      val res = try {
-        val a = sample(name, sfA)
-        val b = sample(name, sfB)
-        Some((a, b))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench-scale] $name failed: ${e.getMessage}")
-        spark.catalog.clearCache()
-        None
-      }
-      name -> res
-    }
-    val qs = rows.map {
-      case (n, Some((a, b))) =>
-        f""""$n":{"sfA":$a%.3f,"sfB":$b%.3f,"ratio":${b / a}%.2f}"""
-      case (n, None) => s""""$n":{"failed":true}"""
-    }.mkString("{", ",", "}")
-    val failed = rows.collect { case (n, None) => "\"" + n + "\"" }
-      .mkString("[", ",", "]")
+    val qs = obj(rows.map {
+      case (n, Some((a, b))) => n -> obj(Seq("sfA" -> f"$a%.3f",
+        "sfB" -> f"$b%.3f", "ratio" -> f"${b / a}%.2f"))
+      case (n, None) => n -> obj(Seq("failed" -> "true"))
+    })
     // default to a scratch path: committed round artifacts (r0N_sf1.json)
     // are curated merges, and an unexported default must never clobber a
     // previous round's record (it did once - restored from history)
     val artifact = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench/scale_scratch.json")
-    val line =
-      f"""{"metric":"scale_rehearsal","sfA":"$sfA","sfB":"$sfB","queries":$qs,"failed":$failed,"loadavg_start":"$loadStart","loadavg_end":"$loadavg","gc_sec":$gcSec%.1f,"artifact":"$artifact"}"""
-    try {
-      val p = java.nio.file.Paths.get(artifact).toAbsolutePath
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench-scale] artifact write failed: ${e.getMessage}")
-    }
-    println(line)
+    Harness.publish(artifact, obj(Seq(
+      "metric" -> str("scale_rehearsal"), "sfA" -> str(sfA),
+      "sfB" -> str(sfB), "queries" -> qs,
+      "failed" -> arr(rows.collect { case (n, None) => str(n) }),
+      "loadavg_start" -> str(loadStart),
+      "loadavg_end" -> str(Harness.loadavg),
+      "gc_sec" -> f"${Harness.gcSec}%.1f", "artifact" -> str(artifact))))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness.{arr, obj, str}
 
 /** Streaming state-posture rehearsal: runs every stateful battery
   * entry at `SPARK_GRAFT_SF_DIR` under BOTH state-store providers (the
@@ -35,62 +35,40 @@ object BenchState {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-state")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val defs = SparkEntry.defs.map(q => q.name -> q).toMap
+    val entries = Harness.entries(statefulEntries.map(_._1))
+      .zip(statefulEntries.map(_._2))
+    val spark = Harness.session("graft-bench-state")
+    Harness.warmUp(spark, sfDir, "q65_streaming_hourly")
 
-    def runAll(provider: String): Seq[String] = {
+    def runAll(provider: String): String = {
       // set the conf EXPLICITLY for both legs (never unset): the session
       // conf is the channel withStateStore reads first, so an ambient
       // GRAFT_STATE_STORE env var cannot silently turn the hdfs leg into
       // a second rocksdb run
       spark.conf.set("spark.graft.stateStore", provider)
-      statefulEntries.map { case (name, sink) =>
-        val res = try {
+      obj(entries.map { case (q, sink) =>
+        q.name -> Harness.attempt(spark, q.name) {
           val t0 = System.nanoTime()
-          val n = defs(name).query(spark, sfDir).count()
+          val n = q.query(spark, sfDir).count()
           val dt = (System.nanoTime() - t0) / 1e9
           spark.catalog.clearCache()
-          val ops = graft.queries.StreamingQuery.stateMetricsFor(sink)
-            .map { case (op, rows, bytes) =>
-              s"""{"op":"$op","rows":$rows,"bytes":$bytes}"""
-            }.mkString("[", ",", "]")
-          f""""$name":{"sec":$dt%.3f,"rows_out":$n,"state":$ops}"""
-        } catch { case e: Throwable =>
-          spark.catalog.clearCache()
-          val msg = String.valueOf(e.getMessage)
-            .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120)
-          s""""$name":{"failed":"$msg"}"""
-        }
-        res
-      }
+          val ops = graft.queries.StreamingQuery.stateMetricsFor(sink).map {
+            case (op, rows, bytes) => obj(Seq("op" -> str(op),
+              "rows" -> rows.toString, "bytes" -> bytes.toString))
+          }
+          obj(Seq("sec" -> f"$dt%.3f", "rows_out" -> n.toString,
+            "state" -> arr(ops)))
+        }.fold(e => obj(Seq("failed" ->
+          str(String.valueOf(e.getMessage).take(120)))), identity)
+      })
     }
 
-    // warm-up off the first timed entry
-    try SparkEntry.queries("q65_streaming_hourly")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-
-    val byProvider = Seq("hdfs", "rocksdb").map { p =>
-      s""""$p":${runAll(p).mkString("{", ",", "}")}"""
-    }.mkString(",")
+    val byProvider = Seq("hdfs", "rocksdb").map(p => p -> runAll(p))
     val artifact = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench/state_scratch.json")
-    val line = s"""{"metric":"state_posture","sf":"$sfDir",$byProvider,"artifact":"$artifact"}"""
-    try {
-      val path = java.nio.file.Paths.get(artifact).toAbsolutePath
-      java.nio.file.Files.createDirectories(path.getParent)
-      java.nio.file.Files.write(path, (line + "\n").getBytes("UTF-8"))
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench-state] artifact write failed: ${e.getMessage}")
-    }
-    println(line)
+    Harness.publish(artifact, obj(
+      Seq("metric" -> str("state_posture"), "sf" -> str(sfDir)) ++
+        byProvider :+ ("artifact" -> str(artifact))))
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.Harness.{arr, obj, str}
+
 /** Machine-readable coverage index: joins the LIVE QueryDef registry
   * (battery entry names + oracle kinds — the authoritative list, not a
   * parse) with COVERAGE.md's operator tables (operator ID → implementation
@@ -18,10 +20,6 @@ package graft
   * registered entry, registered entries cited by no row).
   */
 object Coverage {
-
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\t", "\\t") + "\""
 
   def main(args: Array[String]): Unit = {
     val mdPath = args.headOption.getOrElse("COVERAGE.md")
@@ -83,34 +81,29 @@ object Coverage {
       .distinct.filterNot(byNum.contains).sorted
     val uncited = defs.map(_.name).filterNot(citedBy.contains)
 
-    val sb = new StringBuilder
-    sb.append("{\n \"generated_by\": \"sbt runMain graft.Coverage\",\n")
-    sb.append(" \"source\": ").append(jstr(mdPath)).append(",\n")
-    sb.append(" \"queries\": {\n")
-    sb.append(defs.map { q =>
-      val ops = citedBy.getOrElse(q.name, Nil)
-      s"""  ${jstr(q.name)}: {"check": ${jstr(oracleKind(q.name))}, """ +
-        s""""operators": [${ops.map(jstr).mkString(", ")}]}"""
-    }.mkString(",\n"))
-    sb.append("\n },\n \"operators\": [\n")
-    sb.append(opRows.map { r =>
-      val cells = r.header.zipAll(r.cells, "col", "")
-        .map { case (h, c) => s"${jstr(h)}: ${jstr(c)}" }.mkString(", ")
-      s"""  {"id": ${jstr(r.id)}, "section": ${jstr(r.section)}, """ +
-        s""""queries": [${r.queries.map(jstr).mkString(", ")}], $cells}"""
-    }.mkString(",\n"))
-    sb.append("\n ],\n \"counts\": {\n")
-    sb.append(s"""  "battery_entries": ${defs.size},\n""")
-    sb.append(s"""  "with_oracle": ${defs.count(_.oracle.isDefined)},\n""")
-    sb.append(s"""  "rows_only": ${defs.count(_.oracle.isEmpty)},\n""")
-    sb.append(s"""  "operator_rows": ${opRows.size},\n""")
-    sb.append(s"""  "entries_cited_by_coverage": ${citedBy.size},\n""")
-    sb.append(s"""  "entries_uncited": ${uncited.size},\n""")
-    sb.append(s"""  "uncited_names": [${uncited.map(jstr).mkString(", ")}],\n""")
-    sb.append(s"""  "unresolved_qrefs": [${unresolvedRefs.mkString(", ")}]\n""")
-    sb.append(" }\n}\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      sb.toString.getBytes("UTF-8"))
+    def strs(xs: Seq[String]): String = arr(xs.map(str), ", ")
+    val json = obj(Seq(
+      "generated_by" -> str("sbt runMain graft.Coverage"),
+      "source" -> str(mdPath),
+      "queries" -> obj(defs.map(q => q.name -> obj(Seq(
+        "check" -> str(oracleKind(q.name)),
+        "operators" -> strs(citedBy.getOrElse(q.name, Nil))), ": ", ", ")),
+        ": ", ",\n  "),
+      "operators" -> arr(opRows.map(r => obj(Seq("id" -> str(r.id),
+        "section" -> str(r.section), "queries" -> strs(r.queries)) ++
+        r.header.zipAll(r.cells, "col", "").map { case (h, c) => h -> str(c) },
+        ": ", ", ")), ",\n  "),
+      "counts" -> obj(Seq(
+        "battery_entries" -> defs.size.toString,
+        "with_oracle" -> defs.count(_.oracle.isDefined).toString,
+        "rows_only" -> defs.count(_.oracle.isEmpty).toString,
+        "operator_rows" -> opRows.size.toString,
+        "entries_cited_by_coverage" -> citedBy.size.toString,
+        "entries_uncited" -> uncited.size.toString,
+        "uncited_names" -> strs(uncited),
+        "unresolved_qrefs" -> arr(unresolvedRefs.map(_.toString), ", ")),
+        ": ", ",\n  ")), ": ", ",\n ")
+    Harness.write(outPath, json + "\n")
     println(s"coverage.json: ${defs.size} entries " +
       s"(${defs.count(_.oracle.isDefined)} oracle / " +
       s"${defs.count(_.oracle.isEmpty)} rows-only), ${opRows.size} " +

@@ -1,50 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each battery entry's result → parquet, plus
+  * oracle_sql.json, for a DuckDB compare (`tools/check_oracles.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing names restrict the dump (local iteration only —
     // the driver always runs the full battery)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val entries = Harness.entries(args.drop(2).toSeq)
+    val spark = Harness.session("graft-verify")
+    entries.foreach { q =>
+      Harness.attempt(spark, q.name)(q.query(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/${q.name}"))
       // don't let one query's persisted relations distort the next
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Harness.write(s"$outDir/oracle_sql.json", Harness.obj(
+      SparkEntry.oracleSql.map { case (k, v) => k -> Harness.str(v) }, ": "))
     spark.stop()
   }
 }

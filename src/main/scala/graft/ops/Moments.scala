@@ -161,85 +161,4 @@ object Moments {
           - col("s_i") * col("s_j")).cast("double")
           / (col("n").cast("double") * col("n").cast("double") * 1e12))
   }
-
-  /** Top-principal-component removal — the "all-but-the-top"
-    * embedding post-processing (Mu & Viswanath, ICLR 2018): embedding
-    * corpora concentrate a large fraction of their variance in one
-    * dominant direction (frequency/length artifacts), and similarity
-    * search sharpens measurably once it's projected out. Appends to
-    * each row its coordinate along the top principal component
-    * (`coord = ⟨x − μ, v⟩`) and the norm of what remains
-    * (`resid = ‖x − μ − coord·v‖`): downstream code keeps `resid` as
-    * the denoised magnitude, or uses `coord` itself as the artifact
-    * score.
-    *
-    * Fully deterministic and oracle-replayable: the covariance comes
-    * from [[gramProfile]]'s exact integer moments; the power iteration
-    * (`iters` rounds from the all-ones start, v rounded to 12 decimals
-    * after each normalization so 1-ulp engine drift can never
-    * compound) runs on the d×d matrix DRIVER-side — d² doubles, the
-    * documented contract of [[gramProfile]]; and every per-row fold
-    * (dot, residual) sums components in ascending index order.
-    *
-    * Shape at 100 TB: ONE [[GramAgg]] aggregation pass (map-side
-    * combined, `partitions` buffers on the wire), a d²-scalar collect,
-    * then ONE narrow projection pass with v and μ as plan literals —
-    * no shuffle, no join, the corpus never moves.
-    */
-  def topComponentRemoval(df: DataFrame, d: Int, iters: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    require(iters >= 1, s"iters=$iters must be >= 1")
-    // SQL ROUND(x, 12) bit-parity: scale in double, half away from
-    // zero, unscale (probed identical to DuckDB on 200k samples)
-    def r12(x: Double): Double =
-      if (x >= 0) math.floor(x * 1e12 + 0.5) / 1e12
-      else math.ceil(x * 1e12 - 0.5) / 1e12
-    val g = gramProfile(df, d, vecCol)
-      .select("i", "j", "n", "s_i", "cov").collect()
-    require(g.nonEmpty, "empty corpus")
-    val n = g.head.getAs[Long]("n")
-    require(n >= 2, s"need >= 2 rows, got $n")
-    val c = Array.ofDim[Double](d, d)
-    val s = new Array[Double](d)
-    g.foreach { r =>
-      val i = r.getAs[Int]("i") - 1
-      val j = r.getAs[Int]("j") - 1
-      c(i)(j) = r.getAs[Double]("cov")
-      c(j)(i) = c(i)(j)
-      s(i) = r.getAs[java.math.BigDecimal]("s_i").doubleValue()
-    }
-    val v = Array.fill(d)(r12(1.0 / math.sqrt(d.toDouble)))
-    for (_ <- 1 to iters) {
-      val w = Array.tabulate(d) { i =>
-        var acc = 0.0
-        var j = 0
-        while (j < d) { acc += c(i)(j) * v(j); j += 1 }
-        acc
-      }
-      var sq = 0.0
-      var i = 0
-      while (i < d) { sq += w(i) * w(i); i += 1 }
-      val nrm = math.sqrt(sq)
-      require(nrm > 0, "zero covariance: no principal direction")
-      i = 0
-      while (i < d) { v(i) = r12(w(i) / nrm); i += 1 }
-    }
-    val mu = Array.tabulate(d)(i => s(i) / (n.toDouble * 1e6))
-    var muDotV = 0.0
-    for (i <- 0 until d) muDotV += mu(i) * v(i)
-    val vL = typedLit(v.toSeq)
-    val muL = typedLit(mu.toSeq)
-    val cRaw = aggregate(
-      zip_with(col(vecCol), vL, (a, b) => a.cast("double") * b),
-      lit(0.0), (acc, x) => acc + x) - lit(muDotV)
-    val diffs = zip_with(
-      zip_with(col(vecCol), muL, (a, b) => a.cast("double") - b),
-      vL, (a, b) => a - col("graft_c") * b)
-    df.withColumn("graft_c", cRaw)
-      .select(col(idCol),
-        round(col("graft_c"), 6).as("coord"),
-        round(sqrt(aggregate(transform(diffs, x => x * x),
-          lit(0.0), (acc, x) => acc + x)), 6).as("resid"))
-  }
 }

@@ -72,17 +72,10 @@ object PairVectors {
         porter_stem(element_at(col("p"), 2)).as("w2"),
         (lower(element_at(col("p"), 3)) === "true").as("related"))
 
-  /** Association rows ⋈ gold pairs → one 24-dim similarity vector per gold
-    * pair that has at least one matching association row (pairs with no
-    * data never appear, matching the reference: 14,547 gold pairs → 14,337
-    * instances).
-    *
-    * Output: `w1, w2, related` + [[vectorColumns]].
-    */
   /** The pivot stage alone: gold-matched association rows pivoted to one
     * row per (pair, feature) with `<measure>_1` / `<measure>_2` columns —
-    * the input shape shared by the wide-agg ([[vectors]]) and single-UDAF
-    * ([[vectorsViaAggregator]]) finishers.
+    * the input shape shared by the wide-agg ([[vectors]]) and
+    * order-preserving ([[vectorsOrdered]]) finishers.
     */
   def perFeature(assoc: DataFrame, gold: DataFrame): DataFrame = {
     // Both orientations of every gold pair, keyed by the word whose feature
@@ -113,12 +106,6 @@ object PairVectors {
       .groupBy("w1", "w2", "related", "feature")
       .agg(pivotAggs.head, pivotAggs.tail: _*)
   }
-
-  /** The 24-dim aggregation via the single-buffer typed UDAF (corrected
-    * mode only — see [[Vector24Aggregator]]).
-    */
-  def vectorsViaAggregator(assoc: DataFrame, gold: DataFrame): DataFrame =
-    Vector24Aggregator.aggregate(perFeature(assoc, gold))
 
   /** Order-preserving aggregation path: per pair, features are consumed in
     * sorted order (`flatMapSortedGroups`), so every floating-point sum
@@ -191,6 +178,13 @@ object PairVectors {
     out.select(col("w1") +: col("w2") +: col("related") +: named: _*)
   }
 
+  /** Association rows ⋈ gold pairs → one 24-dim similarity vector per gold
+    * pair that has at least one matching association row (pairs with no
+    * data never appear, matching the reference: 14,547 gold pairs → 14,337
+    * instances).
+    *
+    * Output: `w1, w2, related` + [[vectorColumns]].
+    */
   def vectors(assoc: DataFrame, gold: DataFrame, faithful: Boolean = false): DataFrame = {
     val pf = perFeature(assoc, gold)
 

@@ -8,12 +8,17 @@ import graft.pipeline._
 /** Differential tests of the distributed pipeline against
   * [[NaiveSemanticOracle]] on the reference's own fixtures
   * (`small-sample.txt`, `test_gold_standard.txt`, and a slice of
-  * `word-relatedness.txt`).
+  * `word-relatedness.txt`), and on a hand-written in-repo corpus
+  * (`golden/oracle/`) that needs nothing from outside the repo.
   */
 class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   private def corpusPath = ReferenceFixtures.corpus
   private def goldPath = ReferenceFixtures.gold
+  private def oracleFixture(name: String): String = java.nio.file.Paths.get(
+    getClass.getResource(s"/golden/oracle/$name").toURI).toString
+  private lazy val inRepoCorpus = oracleFixture("corpus.txt")
+  private lazy val inRepoGold = oracleFixture("gold.txt")
 
   // Decode with UTF-8 replacement (not strict) to see exactly the
   // characters Spark's text source produces for invalid byte sequences —
@@ -25,14 +30,22 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   private lazy val corpusLines = readLines(corpusPath)
 
-  test("edges match naive oracle on small-sample (exact multiset)") {
-    val got = Biarcs.readEdges(spark, corpusPath)
+  private def checkEdges(corpus: String): Unit = {
+    val got = Biarcs.readEdges(spark, corpus)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .sorted.toSeq
-    val want = NaiveSemanticOracle.edges(corpusLines)
+    val want = NaiveSemanticOracle.edges(readLines(corpus))
       .map(e => (e.lex, e.feat, e.cnt)).sorted
     assert(got.size == want.size, s"edge count ${got.size} != ${want.size}")
     assert(got == want)
+  }
+
+  test("edges match naive oracle on small-sample (exact multiset)") {
+    checkEdges(corpusPath)
+  }
+
+  test("edges match naive oracle on the in-repo corpus (exact multiset)") {
+    checkEdges(inRepoCorpus)
   }
 
   test("counts: marginals re-aggregated from pairs equal edge-level sums") {
@@ -47,12 +60,12 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(featGot == featWant)
   }
 
-  test("association measures match naive oracle (1e-12 rel)") {
-    val gotMap = SemanticPipeline.associations(spark, corpusPath).collect()
+  private def checkAssoc(corpus: String): Unit = {
+    val gotMap = SemanticPipeline.associations(spark, corpus).collect()
       .map(r => (r.getAs[String]("lexeme"), r.getAs[String]("feature")) ->
         Array(r.getAs[Double]("assoc_freq"), r.getAs[Double]("assoc_prob"),
           r.getAs[Double]("assoc_pmi"), r.getAs[Double]("assoc_ttest"))).toMap
-    val want = NaiveSemanticOracle.assoc(corpusLines)
+    val want = NaiveSemanticOracle.assoc(readLines(corpus))
     assert(gotMap.keySet == want.keySet)
     for ((k, w) <- want; i <- 0 until 4) {
       val g = gotMap(k)(i)
@@ -60,39 +73,58 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  for (faithful <- Seq(false, true)) {
-    test(s"24-dim vectors match naive oracle (faithful=$faithful)") {
-      val df = SemanticPipeline.vectors(spark, corpusPath, goldPath, faithful)
-      val got = df.collect().map { r =>
-        (r.getAs[String]("w1"), r.getAs[String]("w2"), r.getAs[Boolean]("related")) ->
-          PairVectors.vectorColumns.map(c => r.getAs[Double](c)).toArray
-      }.toMap
-      val want = NaiveSemanticOracle.vectors(corpusLines, readLines(goldPath), faithful)
-      assert(got.keySet == want.keySet,
-        s"missing=${want.keySet -- got.keySet} extra=${got.keySet -- want.keySet}")
-      for ((k, w) <- want; i <- 0 until 24) {
-        val g = got(k)(i)
-        assert(relClose(g, w(i)), s"$k dim $i (${PairVectors.vectorColumns(i)}): got $g want ${w(i)}")
-      }
-      // the reference's own smoke pair must be present and labeled related
-      assert(got.keySet.exists(k => k._1 == "about" && k._2 == "us" && k._3))
-    }
+  test("association measures match naive oracle (1e-12 rel)") {
+    checkAssoc(corpusPath)
   }
 
-  test("single-UDAF aggregator ≡ wide-expression aggregation (corrected mode)") {
-    val assoc = SemanticPipeline.associations(spark, corpusPath)
-    val gold = PairVectors.parseGold(spark.read.text(goldPath))
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
+  test("association measures match naive oracle on the in-repo corpus (1e-12 rel)") {
+    checkAssoc(inRepoCorpus)
+  }
+
+  /** The distributed vectors, checked against the oracle's; returns them. */
+  private def checkVectors(corpus: String, gold: String, faithful: Boolean)
+      : Map[(String, String, Boolean), Array[Double]] = {
+    val df = SemanticPipeline.vectors(spark, corpus, gold, faithful)
+    val got = df.collect().map { r =>
       (r.getAs[String]("w1"), r.getAs[String]("w2"), r.getAs[Boolean]("related")) ->
         PairVectors.vectorColumns.map(c => r.getAs[Double](c)).toArray
     }.toMap
-    val wide = toMap(PairVectors.vectors(assoc, gold))
-    val udafV = toMap(PairVectors.vectorsViaAggregator(assoc, gold))
-    assert(wide.keySet == udafV.keySet)
-    for ((k, w) <- wide; i <- 0 until 24) {
-      assert(relClose(udafV(k)(i), w(i)),
-        s"$k dim $i: udaf ${udafV(k)(i)} wide ${w(i)}")
+    val want = NaiveSemanticOracle.vectors(readLines(corpus), readLines(gold), faithful)
+    assert(got.keySet == want.keySet,
+      s"missing=${want.keySet -- got.keySet} extra=${got.keySet -- want.keySet}")
+    for ((k, w) <- want; i <- 0 until 24) {
+      val g = got(k)(i)
+      assert(relClose(g, w(i)), s"$k dim $i (${PairVectors.vectorColumns(i)}): got $g want ${w(i)}")
     }
+    got
+  }
+
+  for (faithful <- Seq(false, true)) {
+    test(s"24-dim vectors match naive oracle (faithful=$faithful)") {
+      val got = checkVectors(corpusPath, goldPath, faithful)
+      // the reference's own smoke pair must be present and labeled related
+      assert(got.keySet.exists(k => k._1 == "about" && k._2 == "us" && k._3))
+    }
+
+    test(s"24-dim vectors match naive oracle on the in-repo corpus (faithful=$faithful)") {
+      val got = checkVectors(inRepoCorpus, inRepoGold, faithful)
+      assert(got.contains(("dog", "puppi", true)), "the related pair")
+      assert(got.contains(("dog", "zebra", false)), "a pair with one side's data")
+      assert(!got.keySet.exists(_._1 == "zebra"), "a pair with no data")
+    }
+  }
+
+  test("the in-repo corpus exercises the faithful Jensen-Shannon reset") {
+    // old-amod is one of dog's features with t-test exactly 0 (lf*L == l*f:
+    // 1*64 == 16*4), and puppy lacks it: both words are zero there, so the
+    // faithful js restarts after it and differs from the corrected one
+    val corpus = readLines(inRepoCorpus)
+    val gold = readLines(inRepoGold)
+    assert(NaiveSemanticOracle.assoc(corpus)(("dog", "old-amod"))(3) == 0.0)
+    val ttestJs = PairVectors.vectorColumns.indexOf("ttest_js")
+    val pair = ("dog", "puppi", true)
+    assert(NaiveSemanticOracle.vectors(corpus, gold, faithful = true)(pair)(ttestJs) !=
+      NaiveSemanticOracle.vectors(corpus, gold, faithful = false)(pair)(ttestJs))
   }
 
   test("vectors on a word-relatedness slice produce sane similarity identities") {

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Round-12 measurement workhorse (test scope, never shipped): times
-  * selected battery entries in isolation with the bench's exact
-  * methodology (noop sink, cache-clear between samples, min-of-k) and
-  * optionally dumps `.explain("formatted")` for each.
+/** Measurement workhorse (test scope, never shipped): times selected
+  * battery entries in isolation with the bench's exact methodology
+  * ([[Harness.timed]] samples, min of [[Harness.minOf]] with at least
+  * `<samples>` samples) and optionally dumps `.explain("formatted")` for
+  * each. No names probes every entry.
   *
   * Usage:
   *   Test/runMain graft.ProbeMain <sfDir> <samples> [--plans <dir>] q...
@@ -18,38 +17,20 @@ object ProbeMain {
       if (args.length > 3 && args(2) == "--plans")
         (Some(args(3)), args.drop(4).toSeq)
       else (None, args.drop(2).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.queries("q03_distinct")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    val defs = SparkEntry.defs.map(q => q.name -> q).toMap
-    names.foreach { n =>
-      val q = defs.getOrElse(n, sys.error(s"unknown entry $n"))
+    val entries = Harness.entries(names)
+    val spark = Harness.session("graft-probe")
+    Harness.warmUp(spark, sfDir, "q03_distinct")
+    entries.foreach { q =>
       planDir.foreach { pd =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pd))
         val plan = q.query(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$pd/$n.txt"), plan.getBytes("UTF-8"))
+        Harness.write(s"$pd/${q.name}.txt", plan)
       }
-      spark.sparkContext.setJobDescription(n)
-      val ts = (1 to samples).map { _ =>
-        val t0 = System.nanoTime()
-        Bench.materialize(q.query(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
-      }
+      spark.sparkContext.setJobDescription(q.name)
+      val ts = Harness.minOf(samples)(
+        Harness.timed(spark)(q.query(spark, sfDir)))
       spark.sparkContext.setJobDescription(null)
-      println(f"PROBE $n min=${ts.min}%.3f samples=" +
+      println(f"PROBE ${q.name} min=${ts.min}%.3f samples=" +
         ts.map(t => f"$t%.3f").mkString(","))
     }
     spark.stop()
