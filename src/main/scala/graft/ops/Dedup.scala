@@ -57,6 +57,9 @@ object Dedup {
   def shingles(docs: DataFrame, n: Int, idCol: String = "doc_id",
       textCol: String = "text", dedup: Boolean = true,
       tokenizer: Tokenize.Mode = Tokenize.Whitespace): DataFrame = {
+    // n = 0 would make "" every document's only shingle: any two
+    // documents would then look identical to every Jaccard tier
+    require(n >= 1, s"n=$n must be >= 1")
     val raw = docs.select(col(idCol).as("id"),
         Tokenize.tokens(col(textCol), tokenizer).as("l"))
       .where(size(col("l")) >= n)
@@ -1026,10 +1029,13 @@ object Dedup {
     * only on PREFIX grams, which the df-ascending order makes the rarest
     * grams in the corpus (stop-word buckets never form), and the
     * size/positional prunes cut candidates before they are even
-    * deduplicated. Verification joins the candidate list twice against a
-    * per-doc sorted gram-array relation (linear in the corpus) and
-    * intersects arrays per pair — candidates move with two narrow
-    * equi-joins; the gram relation is never expanded candidate-ways.
+    * deduplicated. The grams are numbered once in (df, gram) order
+    * (Vernica, Carey & Li, SIGMOD 2010), so each document is one sorted
+    * token array: its prefix is a slice, and verification joins the
+    * candidate list twice against those arrays (linear in the corpus)
+    * and intersects integer sets per pair — candidates move with two
+    * narrow equi-joins; the gram strings never cross a shuffle after the
+    * numbering join.
     * Candidate volume itself is a DATA property: it scales with
     * Σ per-gram prefix-bucket C(df,2), i.e. linearly in docs when
     * near-dup density per doc is bounded (measured: 10× docs with ~10
@@ -1044,39 +1050,45 @@ object Dedup {
     * [[jaccardPairs]]'; a nonzero spill trades bounded recall loss on
     * the pathological buckets for a bounded plan, with the refused
     * volume reported, never absorbed.
+    *
+    * Building the plan runs Spark jobs: the token sets are
+    * `localCheckpoint`ed eagerly.
     */
   def prefixFilterPairs(docs: DataFrame, n: Int,
       minJaccard: Double, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(minJaccard > 0.0 && minJaccard <= 1.0,
       s"minJaccard=$minJaccard must be in (0, 1]")
     val t = minJaccard
-    // FIVE consumers read the shingle relation (document frequencies,
-    // sizes, the prefix projection, and the verification join twice for
-    // g1/g2): left as lineage, each one re-runs the tokenize + shingle
-    // explode + dedup from the source — five full corpus scans where one
-    // suffices (guide §2.4; measured 7.0 s → ~4 s at sf0.1).
-    // localCheckpoint materializes it once; every consumer reads blocks.
-    val sh = shingles(docs, n).localCheckpoint(true)
-    val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val wDoc = Window.partitionBy("id").orderBy(col("df"), col("shingle"))
-    val prefix = sh.join(dfreq, "shingle").join(sizes, "id")
-      .withColumn("pos", row_number().over(wDoc))
-      .where(col("pos") <=
-        col("n_sh") - ceil(lit(t) * col("n_sh") - 1e-9) + 1)
+    val sh = shingles(docs, n)
+    // grams numbered once in ascending (df, gram) order: `orderBy` is a
+    // distributed range sort whose partitions are contiguous and
+    // ascending, so monotonically_increasing_id rises in that order too
+    val dict = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .orderBy("df", "shingle")
+      .select(col("shingle"), monotonically_increasing_id().as("tok"))
+    // three consumers read the token sets (the prefix and both
+    // verification sides); left as lineage each re-runs the shingling
+    // and the numbering (q223 at sf0.1 on 4 cores: 4.2-4.7 s with this
+    // checkpoint, 5.0-5.6 s without it)
+    val sets = sh.join(dict, "shingle")
+      .groupBy("id").agg(array_sort(collect_list("tok")).as("toks"))
+      .withColumn("n_sh", size(col("toks")))
+      .localCheckpoint(true)
+    // ascending tokens ARE the df order, so the prefix is a slice
+    val prefix = sets.select(col("id"), col("n_sh"), posexplode(slice(
+        col("toks"), lit(1), (col("n_sh") - ceil(lit(t) * col("n_sh") - 1e-9)
+          + 1).cast("int"))).as(Seq("i", "tok")))
     // pairs ordered by (n_sh, id): `a` is the smaller set of the two
     val alpha = ceil(lit(t / (1 + t)) *
       (col("a.n_sh") + col("b.n_sh")) - 1e-9)
     // this expansion stays on the COLLECT backend (`viaCollect`), the
     // one caller measured better there: (a) the rank join cannot reuse
-    // an exchange whose subtree contains the `sh` localCheckpoint (the
+    // an exchange whose subtree contains the `sets` localCheckpoint (the
     // LogicalRDD loses canonical equality once the analyzer
-    // deduplicates the self-join's attributes), so the whole prefix
-    // pipeline — two joins + the df-order window — evaluated TWICE
-    // (6.2 s → 8.3 s at sf0.1; checkpointing the prefix relation only
-    // recovered part of it, 6.9 s); (b) prefix buckets are df-ascending
-    // RARE-gram buckets, small by construction and maxBucket-gated, so
-    // the collect buffer is bounded here.
+    // deduplicates the self-join's attributes), so both of its branches
+    // would re-read the checkpoint and re-explode the prefix; (b) prefix
+    // buckets are df-ascending RARE-gram buckets, small by construction
+    // and maxBucket-gated, so the collect buffer is bounded here.
     // PPJoin asymmetry, hoisted into the expansion lambda (`aGate`): only
     // rows inside the SHORTER indexing prefix may serve as the pair's
     // first element `a`, so non-indexing rows skip their O(suffix) pair
@@ -1088,9 +1100,10 @@ object Dedup {
       java.lang.Double.toString(2 * t / (1 + t)) +
       "D * x.n_sh - 1.0E-9D) + 1"
     val cand = bucketPairsOf(
-        prefix.select(col("shingle"),
-          struct(col("n_sh"), col("id"), col("pos")).as("p")),
-        Seq("shingle"), col("p"), maxBucket, viaCollect = true,
+        // `pos`: the gram's 1-based rank in its document
+        prefix.select(col("tok"),
+          struct(col("n_sh"), col("id"), (col("i") + 1).as("pos")).as("p")),
+        Seq("tok"), col("p"), maxBucket, viaCollect = true,
         aGate = Some(idxGate))
       .where(col("a.pos") <= col("a.n_sh") -
         ceil(lit(2 * t / (1 + t)) * col("a.n_sh") - 1e-9) + 1)
@@ -1102,16 +1115,9 @@ object Dedup {
         greatest(col("a.id"), col("b.id")).as("id2"),
         (col("a.n_sh") + col("b.n_sh")).as("nsum"))
       .distinct()
-    // consumed twice (id1 and id2 sides of the verification join):
-    // checkpoint so the sorted-gram aggregation runs once, not twice
-    val docSets = sh.groupBy("id")
-      .agg(sort_array(collect_list("shingle")).as("grams"))
-      .localCheckpoint(true)
     cand
-      .join(docSets.select(col("id").as("id1"), col("grams").as("g1")),
-        "id1")
-      .join(docSets.select(col("id").as("id2"), col("grams").as("g2")),
-        "id2")
+      .join(sets.select(col("id").as("id1"), col("toks").as("g1")), "id1")
+      .join(sets.select(col("id").as("id2"), col("toks").as("g2")), "id2")
       .withColumn("n_common",
         size(array_intersect(col("g1"), col("g2"))).cast("long"))
       .select(col("id1"), col("id2"),

@@ -1758,18 +1758,68 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       s"boundary pair must survive: ${kept.toSeq}")
   }
 
+  test("shingles, jaccardPairs and prefixFilterPairs reject n < 1") {
+    val s2 = spark; import s2.implicits._
+    // at n = 0 every document's only shingle would be "", so these two
+    // unrelated documents would score J = 1.0
+    val d = Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id", "text")
+    intercept[IllegalArgumentException](Dedup.shingles(d, 0))
+    intercept[IllegalArgumentException](Dedup.jaccardPairs(d, 0, 0.7))
+    intercept[IllegalArgumentException](Dedup.prefixFilterPairs(d, 0, 0.7))
+  }
+
+  /** Runs `df` and reads its bucket-pair spill certificate:
+    * (spilled_buckets, spilled_ids, max_bucket). */
+  private def spill(df: org.apache.spark.sql.DataFrame): (Long, Long, Int) = {
+    df.collect()
+    val m = df.queryExecution.observedMetrics
+      .collectFirst { case (k, v) if k.startsWith("graft_bucket_spill") => v }
+      .getOrElse(fail("no spill metric observed"))
+    (m.getAs[Long]("spilled_buckets"), m.getAs[Long]("spilled_ids"),
+      m.getAs[Int]("max_bucket"))
+  }
+
+  test("prefix filter numbers grams in df order: a gram in every " +
+      "document stays out of every prefix bucket") {
+    val s2 = spark; import s2.implicits._
+    // 12 documents = 6 identical twin pairs. Each holds the same 20
+    // stop trigrams (df 12) and 4 trigrams only its twin shares (df 2):
+    // 24 grams, so at t = 0.9 the prefix is its 3 lowest-df grams. The
+    // result is exact under ANY global gram order; only df order keeps
+    // the stop grams out of the prefix, so a wrong numbering shows in
+    // the bucket sizes alone.
+    val stop = (1 to 22).map(i => s"s$i").mkString(" ")
+    val fx = (1L to 12L).map { id =>
+      val k = (id + 1) / 2
+      (id, s"$stop r${k}a r${k}b r${k}c r${k}d")
+    }.toDF("doc_id", "text")
+    val exact = Dedup.jaccardPairs(fx, 3, 0.9).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(exact == (1L to 11L by 2).map(i => (i, i + 1, 1.0)).toSet)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      for (parts <- Seq(1, 7)) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        val pf = Dedup.prefixFilterPairs(fx, 3, 0.9)
+        val (sb, _, mb) = spill(pf)
+        assert(sb == 0L && mb == 2,
+          s"$parts partitions: only twin buckets may form, got max $mb")
+        val got = pf.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        assert(got == exact, s"$parts partitions: $got")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("bucket cap: a pathological high-density corpus stays within " +
       "the ceiling with the refused volume reported; zero spill " +
       "certifies exactness on normal data") {
     val s2 = spark; import s2.implicits._
-    def spill(df: org.apache.spark.sql.DataFrame): (Long, Long, Int) = {
-      df.collect()
-      val m = df.queryExecution.observedMetrics
-        .collectFirst { case (k, v) if k.startsWith("graft_bucket_spill") => v }
-        .getOrElse(fail("no spill metric observed"))
-      (m.getAs[Long]("spilled_buckets"), m.getAs[Long]("spilled_ids"),
-        m.getAs[Int]("max_bucket"))
-    }
     // 60 docs all sharing the same 5-token core (every core trigram's
     // bucket holds all 60 ids) plus a unique tail each
     val dense = (1L to 60L).map(id =>
@@ -1799,8 +1849,12 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
         s"3 core-trigram buckets x 60 ids: got ($sb, $si, $mb)")
       // the prefix-filter tier caps its PREFIX buckets the same way
       val cappedPf = Dedup.prefixFilterPairs(dense, 3, 0.1, maxBucket = 16)
-      val (sb3, _, _) = spill(cappedPf)
+      val (sb3, si3, mb3) = spill(cappedPf)
       assert(sb3 > 0L)
+      // every trigram of a 6-token doc is in its t = 0.1 prefix: the
+      // same 3 core buckets x 60 ids as the quadratic tier
+      assert((sb3, si3, mb3) == (3L, 180L, 60),
+        s"prefix certificate: ($sb3, $si3, $mb3)")
       // and the banded minhash tier its band buckets: the giant
       // all-shared band buckets spill; pairs may still arrive from the
       // legitimately sub-cap buckets, just never the full quadratic set

@@ -740,10 +740,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(!"(?i)cartesian".r.findAllIn(p).hasNext, p)
     // THIS caller keeps the collect backend (viaCollect): the expansion
     // is the single-branch explode (Generate) — the rank join cannot
-    // reuse the sh-checkpoint-backed exchange across its branches, so
-    // it would evaluate the prefix pipeline twice (measured; see the
-    // operator's note)
+    // reuse an exchange over the `sets` checkpoint across its branches,
+    // so both would re-read it (see the operator's note)
     assert("Generate explode".r.findAllIn(p).nonEmpty, p)
+    // the prefix is a slice of each document's sorted token array, not
+    // a per-document rank window
+    assert("Generate posexplode".r.findAllIn(p).nonEmpty, p)
+    assert(!"(?i)window".r.findAllIn(p).hasNext, p)
   }
 
   test("time-weighted avg: one key window + one key-grain agg") {
