@@ -45,11 +45,8 @@ object Curation {
     * passages) can still straddle the train/eval boundary; this is the
     * detector an evaluation-integrity pass runs before shipping a split.
     * One fingerprint shuffle; quadratic only inside fingerprint buckets.
-    * Single-branch by construction: the split column rides the winnow
-    * projection and pairs come from [[Dedup.bucketPairsOf]]'s in-bucket
-    * expansion, so the corpus is scanned ONCE (a fingerprint self-join
-    * would evaluate the whole winnow pipeline per branch — Spark does not
-    * reuse exchanges across self-join branches).
+    * The split column rides the winnow projection into
+    * [[Dedup.bucketPairsOf]], so the corpus is scanned once.
     */
   def leakageScan(splitDocs: DataFrame, k: Int, w: Int): DataFrame =
     Dedup.bucketPairsOf(

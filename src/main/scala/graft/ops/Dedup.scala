@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -76,10 +77,11 @@ object Dedup {
     * `graft_bucket_spill_*` observed metric instead of silently costing
     * C(size, 2) candidates. 65536 ids ≈ 2.1e9 pairs per bucket — far
     * above anything a sane banding produces (measured adversarial max:
-    * ~8k), far below the 10^7-id bucket that would OOM the collect_list
-    * or take a task hostage. A spilled bucket is a DATA pathology
-    * (stop-gram prefix, degenerate band, unremoved exact duplicates);
-    * the metric names it instead of the operator absorbing it.
+    * ~8k). The cap also bounds the rows the expansion holds per
+    * bucket, so a 10^7-id bucket is counted in one pass, never
+    * buffered. A spilled bucket is a DATA pathology (stop-gram prefix,
+    * degenerate band, unremoved exact duplicates); the metric names it
+    * instead of the operator absorbing it.
     */
   val DefaultMaxBucket: Int = 1 << 16
 
@@ -91,222 +93,110 @@ object Dedup {
   private val spillSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** All ordered id pairs (id1 < id2) inside each bucket of `keyed`,
-    * where a bucket is one group of `keys`. The upstream pipeline
-    * (corpus scan → signatures → bucket keys) is evaluated ONCE: both
-    * sides of the rank self-join read the SAME bucket-key exchange
-    * (exchange/stage reuse — verified at runtime and in the executed
-    * plan as a ReusedExchange node), so the corpus is never scanned per
-    * join side. `maxBucket` (see [[DefaultMaxBucket]]) is the enforced
-    * ceiling: oversized buckets yield no pairs and surface in the
-    * observed spill metric.
-    */
+    * where a bucket is one group of `keys` (see [[bucketPairsOf]]). */
   private def bucketPairs(keyed: DataFrame, keys: Seq[String],
       maxBucket: Int = DefaultMaxBucket,
-      strict: Option[Boolean] = None,
-      viaCollect: Boolean = false): DataFrame =
-    bucketPairsOf(keyed, keys, col("id"), maxBucket, strict = strict,
-        viaCollect = viaCollect)
+      strict: Option[Boolean] = None): DataFrame =
+    bucketPairsOf(keyed, keys, col("id"), maxBucket, strict = strict)
       .select(col("a").as("id1"), col("b").as("id2"))
 
-  /** Generalized bucket pair expansion: all ordered payload pairs
-    * (a, b) inside each bucket, where buckets are groups of `keys` and
-    * `payload` is any column (a plain id or a struct carrying extra fields
-    * — ordering is by the payload's first field, so callers put the unique
-    * id first). This is the shape that replaces EVERY bucket-key
-    * self-join ON RAW IDS in the engine: ONE upstream evaluation (the
-    * bucket-key exchange is built once and both rank-join branches read
-    * it — exchange/stage reuse, visible as ReusedExchange in the
-    * executed plan), then pairs by a sort-merge self-join of the
-    * window-RANKED bucket rows on `rank_a < rank_b`.
+  /** The bucket pair expansion behind every near-dup, linkage and
+    * leakage operator: all payload pairs (a, b), a before b in `payload`
+    * order, inside each bucket, where a bucket is one group of non-null
+    * `keys`. `payload` is any orderable column (a plain id, or a struct
+    * whose first field is the unique id). Equal payloads pair like any
+    * others, so the pair multiset does not depend on how ties sort.
     *
-    * Until round 13 the expansion collected each bucket into an array
-    * (`sort_array(collect_list(payload))`) and exploded a nested pair
-    * transform. That spelling ran as an ObjectHashAggregate (unspillable
-    * whole-bucket object buffers — a degenerate bucket OOMs the task)
-    * with interpreted per-pair `slice` copies (O(bucket²) allocations).
-    * The rank join produces the IDENTICAL pair multiset (verified
-    * exceptAll both directions at sf0.1) on codegen machinery: a radix
-    * window sort that SPILLS on skew, and a streamed merge join. With
-    * ties in `payload`, row_number breaks them arbitrarily, but equal
-    * payloads yield the same (a, b) values either way — the multiset is
-    * order-invariant.
+    * Shape (the reduce side of Vernica, Carey & Li, SIGMOD 2010): one
+    * hash exchange on `keys`, one sort on (keys, payload), then one pass
+    * over each sorted bucket that holds at most `maxBucket` rows and
+    * streams its pairs. No self-join, no window, no exchange reuse; the
+    * upstream is evaluated once.
     *
-    * Buckets larger than `maxBucket` produce NO pairs; their count,
-    * their id volume, and the query's max bucket size are recorded as
-    * the observed metric `graft_bucket_spill_<n>` (columns
-    * `spilled_buckets`, `spilled_ids`, `max_bucket`) — an aggregate
-    * computed INSIDE the ranked row stream (conditioned on each
-    * bucket's first row so every bucket counts once), zero extra jobs.
-    * `spilled_buckets == 0` is the exactness certificate:
-    * when it holds, the capped expansion is byte-identical to the
-    * uncapped one; when it doesn't, the caller sees exactly how much
-    * pathological volume was refused.
+    * `aGate`, evaluated per row before the exchange, restricts which
+    * rows may be the pair's FIRST element `a`; a null gate counts as
+    * false. Every row still serves as `b`.
     *
-    * Read-side AQE corner: if the DOWNSTREAM result of the whole query
-    * is empty, AQE's empty-relation propagation prunes the (already
-    * executed) metric stage from the final plan and
-    * `QueryExecution.observedMetrics` comes back empty — the SQL UI
-    * still records the stage. Audit queries that must READ the metric
-    * programmatically should keep a non-empty output or disable AQE
-    * for the audit run (OpsSpec pins both modes).
+    * `maxBucket` (see [[DefaultMaxBucket]]) is the enforced ceiling: a
+    * larger bucket yields NO pairs. Each bucket of 2 or more rows is
+    * recorded in the observed metric `graft_bucket_spill_<n>` (or `obs`,
+    * when the caller reads it, see [[spillCertificate]]) with columns
+    * `spilled_buckets`, `spilled_ids` and `max_bucket`.
+    * `spilled_buckets == 0` is the exactness certificate: the capped
+    * expansion then equals the uncapped one. When the query's whole
+    * output is empty, AQE's empty-relation propagation can prune the
+    * metric's stage from the final plan and `observedMetrics` reads
+    * empty; audits that read it keep a non-empty output or run with AQE
+    * off (OpsSpec pins both).
     *
-    * STRICT MODE: callers who never read observed metrics can make
-    * recall loss impossible to miss by setting the session conf
-    * `spark.graft.dedup.failOnSpill=true` — an oversized bucket then
-    * FAILS the job with the bucket size in the error (a loud task
-    * failure at the exact offending group) instead of being skipped
-    * and counted. The default stays skip-and-certify: at 100 TB a
-    * single stop-gram bucket should cost recall on one pathological
-    * key, not the whole nightly run, and `spilled_buckets == 0` is
-    * the machine-checkable exactness certificate either way.
-    * `strict = Some(_)` overrides the session conf PER PLAN — the
-    * audit path uses it so building a strict plan never mutates
-    * session state a concurrently-built plan could inherit.
+    * Strict mode: `strict = Some(true)`, or the session conf
+    * `spark.graft.dedup.failOnSpill=true` when `strict` is None, fails
+    * the job at the first oversized bucket (its size and `failOnSpill`
+    * are in the message) instead of skipping and counting it. `strict`
+    * decides per plan, so building a strict plan never changes session
+    * state.
     */
   private[ops] def bucketPairsOf(keyed: DataFrame, keys: Seq[String],
       payload: Column, maxBucket: Int = DefaultMaxBucket,
       obs: Option[org.apache.spark.sql.Observation] = None,
       strict: Option[Boolean] = None,
-      viaCollect: Boolean = false,
-      aGate: Option[String] = None): DataFrame = {
+      aGate: Option[Column] = None): DataFrame = {
     require(maxBucket >= 2, s"maxBucket=$maxBucket must be >= 2")
-    require(aGate.isEmpty || viaCollect,
-      "aGate is only implemented for the collect backend")
     val failOnSpill = strict.getOrElse(keyed.sparkSession.conf
       .getOption("spark.graft.dedup.failOnSpill").exists(_.toBoolean))
-    if (viaCollect)
-      return bucketPairsOfCollected(keyed, keys, payload, maxBucket, obs,
-        failOnSpill, aGate)
-    val sizeGate =
-      if (failOnSpill)
-        when(col("__bn") > maxBucket, raise_error(format_string(
-          "bucketPairsOf: bucket of %d ids exceeds maxBucket=" +
-            s"$maxBucket in strict spill mode (failOnSpill) — " +
-            "remove the degenerate key (stop-gram / exact-duplicate " +
-            "prefix) or raise maxBucket", col("__bn"))))
-          .otherwise(lit(true))
-      else col("__bn") <= maxBucket
-    // per-bucket metrics on the per-row stream: condition on the
-    // bucket's FIRST row so each bucket counts once, exactly like the
-    // one-row-per-bucket stream the collect form observed
-    val spillMetrics = Seq(
-      sum(when(col("__bn") > maxBucket && col("__rn") === 1, 1L)
-        .otherwise(0L)).as("spilled_buckets"),
-      sum(when(col("__bn") > maxBucket && col("__rn") === 1,
-        col("__bn")).otherwise(0L)).as("spilled_ids"),
-      max(col("__bn").cast("int")).as("max_bucket"))
-    val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col("__p"))
-    val wAll = wOrd.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    // explicit non-null key filter BELOW the window, for two reasons:
-    // (1) the inner pair join drops null-keyed rows anyway — every call
-    // site keys on grams/hashes that cannot be null, and making that
-    // explicit keeps the grouping semantics visible; (2) placement: the
-    // join would otherwise INFER isnotnull filters per branch, and the
-    // left branch's CollectMetrics blocks that pushdown while the right
-    // branch pushes it into the scan — the two exchange subtrees would
-    // no longer canonicalize equal and exchange reuse (the single
-    //-upstream-evaluation guarantee) would silently break.
-    val ranked = keyed
-      .select(keys.map(col) :+ payload.as("__p"): _*)
+    val rows = keyed
+      .select(keys.map(col) :+ payload.as("__p") :+
+        aGate.getOrElse(lit(true)).as("__g"): _*)
       .where(keys.map(col(_).isNotNull).reduce(_ && _))
-      .withColumn("__rn", row_number().over(wOrd))
-      .withColumn("__bn", count(lit(1)).over(wAll))
-      .where(col("__bn") > 1)
-    // an Observation (when the caller wants to READ the certificate
-    // programmatically — see [[spillCertificate]]) or the default
-    // string-named metric (SQL-UI/listener visibility only); metrics
-    // ride the LEFT join branch only (one CollectMetrics per name)
+    val keySchema = StructType(keys.map(k => rows.schema(k)))
+    val pType = rows.schema("__p").dataType
+    val outSchema = StructType(Seq(StructField("a", pType),
+      StructField("b", pType), StructField("__bn", LongType)))
+    val expanded = rows.groupBy(keys.map(col): _*)
+      .as[Row, Row](Encoders.row(keySchema), Encoders.row(rows.schema))
+      .flatMapSortedGroups(col("__p"))(
+        expandBucket(keys.size, maxBucket, failOnSpill))(
+        Encoders.row(outSchema))
+    // one summary row (null, null, n) per bucket of n >= 2 rows
+    val spillMetrics = Seq(
+      sum(when(col("__bn") > maxBucket, 1L).otherwise(0L))
+        .as("spilled_buckets"),
+      sum(when(col("__bn") > maxBucket, col("__bn")).otherwise(0L))
+        .as("spilled_ids"),
+      max(col("__bn").cast("int")).as("max_bucket"))
     val observed = obs match {
       case Some(o) =>
-        ranked.observe(o, spillMetrics.head, spillMetrics.tail: _*)
-      case None => ranked.observe(
+        expanded.observe(o, spillMetrics.head, spillMetrics.tail: _*)
+      case None => expanded.observe(
         s"graft_bucket_spill_${spillSeq.incrementAndGet()}",
         spillMetrics.head, spillMetrics.tail: _*)
     }
-    val lhs = observed.where(sizeGate)
-      .select(keys.map(col) :+ col("__p").as("a") :+
-        col("__rn").as("__rna"): _*)
-    val rhs = ranked.where(sizeGate)
-      .select(keys.map(col) :+ col("__p").as("b") :+
-        col("__rn").as("__rnb"): _*)
-    // MERGE hint, load-bearing twice over: (1) a broadcast pair join
-    // would re-evaluate the upstream corpus pipeline into the build
-    // side (and broadcasting a corpus-sized relation is exactly wrong
-    // at 100 TB) — the merge join makes both branches read the SAME
-    // bucket-key exchange via exchange/stage reuse; (2) under AQE an
-    // all-spill run would leave the broadcast build empty, convert the
-    // join to an empty relation, and PRUNE the streamed branch carrying
-    // CollectMetrics — the certificate would read zeros. The merge join
-    // keeps the metric in the (non-empty-input) result stage.
-    lhs.join(rhs.hint("merge"), keys)
-      .where(col("__rna") < col("__rnb"))
-      .select(col("a"), col("b"))
+    observed.where(col("__bn").isNull).select(col("a"), col("b"))
   }
 
-  /** The pre-round-13 collect-and-explode expansion, kept as the
-    * MEASURED better backend for callers whose buckets are small by
-    * construction and whose upstream is already a materialized
-    * checkpoint ([[prefixFilterPairs]]: df-ascending PREFIX buckets are
-    * rare-gram-sized, and the rank join cannot reuse a LogicalRDD-backed
-    * exchange across self-join branches — see the caller note). The
-    * whole-bucket `collect_list` buffer is unspillable, which is exactly
-    * why `maxBucket` gates it; the rank-join backend is the default
-    * everywhere buckets can be data-sized. Metrics, gate, and output
-    * contract are identical to the rank-join path (same columns, same
-    * pair multiset, same observed metric schema).
-    */
-  private def bucketPairsOfCollected(keyed: DataFrame, keys: Seq[String],
-      payload: Column, maxBucket: Int,
-      obs: Option[org.apache.spark.sql.Observation],
-      failOnSpill: Boolean,
-      aGate: Option[String] = None): DataFrame = {
-    val sizeGate =
-      if (failOnSpill)
-        when(size(col("ms")) > maxBucket, raise_error(format_string(
-          "bucketPairsOf: bucket of %d ids exceeds maxBucket=" +
-            s"$maxBucket in strict spill mode (failOnSpill) — " +
-            "remove the degenerate key (stop-gram / exact-duplicate " +
-            "prefix) or raise maxBucket", size(col("ms")))))
-          .otherwise(lit(true))
-      else size(col("ms")) <= maxBucket
-    val spillMetrics = Seq(
-      sum(when(size(col("ms")) > maxBucket, 1L).otherwise(0L))
-        .as("spilled_buckets"),
-      sum(when(size(col("ms")) > maxBucket,
-        size(col("ms")).cast("long")).otherwise(0L)).as("spilled_ids"),
-      max(size(col("ms"))).as("max_bucket"))
-    val sized = keyed.groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(payload)).as("ms"))
-      .where(size(col("ms")) > 1)
-    val observed = obs match {
-      case Some(o) =>
-        sized.observe(o, spillMetrics.head, spillMetrics.tail: _*)
-      case None => sized.observe(
-        s"graft_bucket_spill_${spillSeq.incrementAndGet()}",
-        spillMetrics.head, spillMetrics.tail: _*)
-    }
-    // aGate: a predicate over the pair's FIRST (sort-order-smaller)
-    // payload `x` that the CALLER would apply to `a` immediately after
-    // expansion anyway (prefixFilterPairs' PPJoin indexing-prefix
-    // condition). Hoisting it INTO the lambda skips the O(suffix) slice
-    // copy for every non-qualifying x instead of materializing and then
-    // discarding those pairs; `slice(ms, 1, 0)` keeps the else-branch an
-    // empty array of the right struct type. Pair multiset = the ungated
-    // expansion followed by the caller's filter, by construction.
-    val pairLambda = aGate match {
-      case Some(p) =>
-        "flatten(transform(ms, (x, i) -> transform(" +
-          s"slice(ms, IF($p, i + 2, 1), IF($p, size(ms), 0)), " +
-          "y -> struct(x AS a, y AS b))))"
-      case None =>
-        "flatten(transform(ms, (x, i) -> transform(" +
-          "slice(ms, i + 2, size(ms)), y -> struct(x AS a, y AS b))))"
-    }
-    observed
-      .where(sizeGate)
-      .select(explode(expr(pairLambda)).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+  /** One sorted bucket of [[bucketPairsOf]]'s rows (keys..., __p, __g)
+    * to its output rows (a, b, __bn): at most `maxBucket` rows are held,
+    * the rest only counted. */
+  private def expandBucket(nKeys: Int, maxBucket: Int,
+      failOnSpill: Boolean)(key: Row, rows: Iterator[Row]): Iterator[Row] = {
+    val buf = new scala.collection.mutable.ArrayBuffer[Row]()
+    var n = 0L
+    rows.foreach { r => if (n < maxBucket) buf += r; n += 1 }
+    if (n < 2) return Iterator.empty
+    if (n > maxBucket && failOnSpill) throw new IllegalStateException(
+      s"bucketPairsOf: bucket of $n ids exceeds maxBucket=$maxBucket " +
+        "in strict spill mode (failOnSpill) — remove the degenerate key " +
+        "(stop-gram / exact-duplicate prefix) or raise maxBucket")
+    val (p, g) = (nKeys, nKeys + 1)
+    val pairs =
+      if (n > maxBucket) Iterator.empty
+      else buf.indices.iterator
+        .filter(i => !buf(i).isNullAt(g) && buf(i).getBoolean(g))
+        .flatMap { i =>
+          val a = buf(i).get(p)
+          (i + 1 until buf.size).iterator.map(j => Row(a, buf(j).get(p), null))
+        }
+    Iterator.single(Row(null, null, n)) ++ pairs
   }
 
   /** The co-shingle tier's bucket-spill exactness certificate, DRIVER-
@@ -465,13 +355,8 @@ object Dedup {
       rowsPerBand: Int, maxBucket: Int = DefaultMaxBucket,
       strict: Option[Boolean] = None,
       tokenizer: Tokenize.Mode = Tokenize.Whitespace): DataFrame =
-    // collect backend, by measurement: the banded stream is short (docs
-    // × bands rows) with WIDE md5 band_key strings, so the rank join's
-    // two key sorts + merge cost more than one small object aggregation
-    // (same-JVM interleaved min-of-4 at sf0.1: join 2.25 s vs collect
-    // 2.07 s); buckets are band-collision-sized and maxBucket-gated
     bucketPairs(minhashBandKeys(docs, n, numHashes, rowsPerBand, tokenizer),
-      Seq("band", "band_key"), maxBucket, strict, viaCollect = true)
+      Seq("band", "band_key"), maxBucket, strict)
       .distinct()
 
   /** Candidate-then-verify near-dup pairs: [[minhashCandidates]]
@@ -808,9 +693,8 @@ object Dedup {
       numBands: Int = 4, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(numBands > maxHamming,
       s"pigeonhole cover needs numBands=$numBands > maxHamming=$maxHamming")
-    // single-branch bucket expansion (see bucketPairsOf) carrying the full
-    // signature into each pair for exact Hamming re-scoring; struct order
-    // is id order since ids are unique per bucket
+    // the signature rides the payload for exact Hamming re-scoring;
+    // struct order is id order since ids are unique per bucket
     bucketPairsOf(simhashBands(docs, numBands), Seq("band", "band_bits"),
         struct(col("id"), col("simhash")), maxBucket = maxBucket)
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
@@ -1081,32 +965,15 @@ object Dedup {
     // pairs ordered by (n_sh, id): `a` is the smaller set of the two
     val alpha = ceil(lit(t / (1 + t)) *
       (col("a.n_sh") + col("b.n_sh")) - 1e-9)
-    // this expansion stays on the COLLECT backend (`viaCollect`), the
-    // one caller measured better there: (a) the rank join cannot reuse
-    // an exchange whose subtree contains the `sets` localCheckpoint (the
-    // LogicalRDD loses canonical equality once the analyzer
-    // deduplicates the self-join's attributes), so both of its branches
-    // would re-read the checkpoint and re-explode the prefix; (b) prefix
-    // buckets are df-ascending RARE-gram buckets, small by construction
-    // and maxBucket-gated, so the collect buffer is bounded here.
-    // PPJoin asymmetry, hoisted into the expansion lambda (`aGate`): only
-    // rows inside the SHORTER indexing prefix may serve as the pair's
-    // first element `a`, so non-indexing rows skip their O(suffix) pair
-    // slice instead of expanding and being filtered right back out. The
-    // literal below renders the same Scala double the post-filter's
-    // lit() carries (Double.toString round-trips), and the post-filter
-    // stays in place — the gate can only remove rows the filter removes.
-    val idxGate = "x.pos <= x.n_sh - CEIL(" +
-      java.lang.Double.toString(2 * t / (1 + t)) +
-      "D * x.n_sh - 1.0E-9D) + 1"
+    // PPJoin asymmetry: only rows inside the SHORTER indexing prefix may
+    // be the pair's first element `a`
     val cand = bucketPairsOf(
         // `pos`: the gram's 1-based rank in its document
         prefix.select(col("tok"),
           struct(col("n_sh"), col("id"), (col("i") + 1).as("pos")).as("p")),
-        Seq("tok"), col("p"), maxBucket, viaCollect = true,
-        aGate = Some(idxGate))
-      .where(col("a.pos") <= col("a.n_sh") -
-        ceil(lit(2 * t / (1 + t)) * col("a.n_sh") - 1e-9) + 1)
+        Seq("tok"), col("p"), maxBucket,
+        aGate = Some(col("p.pos") <= col("p.n_sh") -
+          ceil(lit(2 * t / (1 + t)) * col("p.n_sh") - 1e-9) + 1))
       .where(least(col("a.pos"), col("b.pos")) +
         least(col("a.n_sh") - col("a.pos"),
           col("b.n_sh") - col("b.pos")) >= alpha)

@@ -1951,6 +1951,31 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.conf.unset("spark.graft.dedup.failOnSpill")
   }
 
+  test("strict spill mode on minhash candidates: strict = Some(true) " +
+      "fails an oversized band bucket; Some(false) wins over the conf") {
+    val s2 = spark; import s2.implicits._
+    val dense = (1L to 60L).map(id =>
+      (id, s"c1 c2 c3 c4 c5 tail$id")).toDF("doc_id", "text")
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else String.valueOf(t.getMessage) +: msgs(t.getCause)
+    val e = intercept[Exception](Dedup.minhashCandidates(dense, 3, 8, 2,
+      maxBucket = 16, strict = Some(true)).count())
+    assert(msgs(e).exists(_.contains("failOnSpill")),
+      s"want the strict-mode message, got: ${msgs(e)}")
+    val saved = spark.conf.getOption("spark.graft.dedup.failOnSpill")
+    spark.conf.set("spark.graft.dedup.failOnSpill", "true")
+    try {
+      val lenient = Dedup.minhashCandidates(dense, 3, 8, 2, maxBucket = 16,
+        strict = Some(false)).count()
+      assert(lenient < Dedup.minhashCandidates(dense, 3, 8, 2,
+        strict = Some(false)).count())
+    } finally saved match {
+      case Some(v) => spark.conf.set("spark.graft.dedup.failOnSpill", v)
+      case None => spark.conf.unset("spark.graft.dedup.failOnSpill")
+    }
+  }
+
   test("spillCertificate: the driver-visible certificate matches the " +
       "bucket-size distribution; zero spill certifies the full pair set; " +
       "correct UNDER AQE in both the zero-spill and all-spill fixtures") {

@@ -35,10 +35,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("minhash candidates: signature shuffle + band shuffle + dedup only") {
-    // groupBy(id) for signatures, groupBy(band, band_key) for buckets
-    // (collect backend — see minhashCandidates' measurement note),
-    // distinct() on the candidate pairs — anything more means a branch
-    // re-evaluates the corpus scan
+    // groupBy(id) for signatures, the bucket-pair kernel's one exchange
+    // on (band, band_key), distinct() on the candidate pairs — anything
+    // more means a branch re-evaluates the corpus scan
     assert(exchanges(Dedup.minhashCandidates(docs, 3, 8, 2)) <= 3)
   }
 
@@ -49,11 +48,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(exchanges(out) == 1)
   }
 
-  test("leakage scan reads the corpus ONCE (reused bucket exchange)") {
-    // asserted on the non-AQE physical plan, where exchange reuse is
-    // applied at planning time and visible in the text (the second
-    // rank-join branch MUST be a ReusedExchange, never a second corpus
-    // evaluation); AQE performs the same reuse at stage materialization
+  test("leakage scan reads the corpus ONCE (one bucket exchange, no " +
+      "self-join)") {
+    // asserted on the non-AQE physical plan, whose text shows every
+    // scan; the pair expansion is one grouped pass over the fingerprint
+    // buckets, so no join or window branch can read the corpus again
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val split = Sampling.contentSplit(docs,
@@ -62,7 +61,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       val p = plan(df)
       val scans = "(?i)scan parquet".r.findAllIn(p).size
       assert(scans == 1, s"expected 1 corpus scan, got $scans:\n$p")
-      assert("ReusedExchange".r.findAllIn(p).nonEmpty, p)
+      assert(!p.contains("SortMergeJoin"), p)
+      assert(!"(?i)window".r.findAllIn(p).hasNext, p)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -738,11 +738,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val df = Dedup.prefixFilterPairs(docs, 3, 0.8)
     val p = plan(df)
     assert(!"(?i)cartesian".r.findAllIn(p).hasNext, p)
-    // THIS caller keeps the collect backend (viaCollect): the expansion
-    // is the single-branch explode (Generate) — the rank join cannot
-    // reuse an exchange over the `sets` checkpoint across its branches,
-    // so both would re-read it (see the operator's note)
-    assert("Generate explode".r.findAllIn(p).nonEmpty, p)
+    // the prefix buckets expand in the bucket-pair kernel's grouped
+    // pass, not in a collect_list aggregate
+    assert(p.contains("MapGroups"), p)
+    assert(!p.contains("ObjectHashAggregate"), p)
     // the prefix is a slice of each document's sorted token array, not
     // a per-document rank window
     assert("Generate posexplode".r.findAllIn(p).nonEmpty, p)
