@@ -12,8 +12,10 @@ import graft.pipeline._
   * standalone classification rerun is `classify`.
   *
   * {{{
-  * graft.cli.Main counts    --corpus F --out D [--format parquet|text]
-  * graft.cli.Main associate --corpus F --out D [--format parquet|text]
+  * graft.cli.Main counts    --corpus F --out D [--faithful]
+  *                          [--format parquet|text]
+  * graft.cli.Main associate --corpus F --out D [--faithful]
+  *                          [--format parquet|text]
   * graft.cli.Main vectors   --corpus F --gold F --out D
   *                          [--faithful] [--format parquet|text|arff]
   * graft.cli.Main classify  --vectors D --report F [--folds N]
@@ -43,26 +45,19 @@ object Main {
     } finally spark.stop()
   }
 
-  private def run(cmd: String, opts: Map[String, String],
+  /** Runs one command on `spark`; the caller owns the session. */
+  private[graft] def run(cmd: String, opts: Map[String, String],
       spark: SparkSession): Unit = cmd match {
-    case "counts" =>
-      val c = Counts.fromEdges(Biarcs.readEdges(spark, req(opts, "corpus")))
-      write(Counts.taggedUnion(c), c.pairs, opts)
-    case "associate" =>
-      val assoc = SemanticPipeline.associations(spark, req(opts, "corpus"))
-      write(FaithfulText.assocLines(assoc), assoc, opts)
+    case "counts" | "associate" =>
+      val (assoc, c) = SemanticPipeline.associationsManaged(spark,
+        req(opts, "corpus"), opts.contains("faithful"))
+      try {
+        if (cmd == "counts") write(Counts.taggedUnion(c), c.pairs, opts)
+        else write(FaithfulText.assocLines(assoc), assoc, opts)
+      } finally c.unpersist()
     case "vectors" =>
-      // faithful mode routes through the order-preserving aggregation so
-      // the text rendering is byte-identical to the reference's output
-      val vecs =
-        if (opts.contains("faithful")) {
-          val assoc = SemanticPipeline.associations(spark,
-            req(opts, "corpus"), faithful = true)
-          val gold = PairVectors.parseGold(
-            spark.read.text(req(opts, "gold")))
-          PairVectors.vectorsOrdered(assoc, gold, faithful = true)
-        } else SemanticPipeline.vectors(spark, req(opts, "corpus"),
-          req(opts, "gold"))
+      val vecs = SemanticPipeline.vectors(spark, req(opts, "corpus"),
+        req(opts, "gold"), opts.contains("faithful"))
       opts.getOrElse("format", "parquet") match {
         case "arff" => ArffSink.writeLocal(vecs, req(opts, "out"))
         case "text" =>
@@ -158,9 +153,9 @@ object Main {
   }
 
   private val usage: String =
-    """usage: graft.cli.Main <counts|associate|vectors|classify|pipeline> [options]
-      |  counts    --corpus FILE --out DIR [--format parquet|text]
-      |  associate --corpus FILE --out DIR [--format parquet|text]
+    """usage: graft.cli.Main <counts|associate|vectors|classify|pipeline|curate> [options]
+      |  counts    --corpus FILE --out DIR [--faithful] [--format parquet|text]
+      |  associate --corpus FILE --out DIR [--faithful] [--format parquet|text]
       |  vectors   --corpus FILE --gold FILE --out DIR [--faithful]
       |            [--format parquet|text|arff]
       |  classify  (--vectors DIR | --vectors-text PATH | --vectors-arff FILE)

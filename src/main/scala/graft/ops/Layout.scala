@@ -276,15 +276,6 @@ object Layout {
     df.withColumn("hvalue", graft.functions.hilbert_index(
       col(xCol).cast("long"), col(yCol).cast("long"), bits))
 
-  /** Cluster for writing on the HILBERT index — [[clusterByZ]] with the
-    * locality-superior curve; same ONE-shuffle cost.
-    */
-  def clusterByHilbert(df: DataFrame, cols: Seq[String], bits: Int,
-      numPartitions: Int): DataFrame =
-    hilbertValue(df, cols, bits)
-      .repartitionByRange(numPartitions, col("hvalue"))
-      .sortWithinPartitions("hvalue")
-
   /** Cluster the table for writing: range-partition on the Z-value and
     * sort within partitions — each output file then covers a small
     * hyper-rectangle of the clustered columns, which is what makes

@@ -36,8 +36,7 @@ object Associate {
     * assoc_ttest.
     */
   def associate(counts: CorpusCounts): DataFrame = {
-    val bigL = lit(counts.totalL.toDouble)
-    val bigF = lit(counts.totalF.toDouble)
+    val bigL, bigF = lit(counts.total.toDouble) // L == F (Step1.java:73-74)
     val lf = col("lf").cast("double")
     val l = col("l").cast("double")
     val f = col("f").cast("double")

@@ -23,8 +23,6 @@ final case class CorpusCounts(
     lexemes: DataFrame,  // lexeme, l
     features: DataFrame, // feature, f
     total: Long) {       // L == F by construction (Step1.java:73-74)
-  def totalL: Long = total
-  def totalF: Long = total
   /** Release the cached pair counts once downstream plans are executed. */
   def unpersist(): Unit = pairs.unpersist()
 }
@@ -33,19 +31,21 @@ object Counts {
 
   /** Aggregate edges `(lexeme, feature, count)` into pair counts, marginal
     * counts, and the grand total. Triggers one Spark job for the total (the
-    * driver-side analog of the reference's counters file).
+    * driver-side analog of the reference's counters file) and persists the
+    * pair counts: the caller owns them and releases them with
+    * [[CorpusCounts.unpersist]].
     */
-  def fromEdges(edges: DataFrame, persistPairs: Boolean = true): CorpusCounts = {
-    val raw = edges
-      .groupBy("lexeme", "feature")
-      .agg(sum("count").as("lf"))
+  def fromEdges(edges: DataFrame): CorpusCounts = {
     // Without persistence each derived relation (marginals, total, assoc)
     // re-plans the whole corpus scan — observed as 3 text scans in the
     // physical plan. Persisting the reduced pair relation is the Spark
     // analog of the reference's Step-1 S3 materialization, at a fraction
     // of the size of the raw edges. MEMORY_AND_DISK: spills instead of
     // recomputing at the 100 TB target.
-    val pairs = if (persistPairs) raw.persist(StorageLevel.MEMORY_AND_DISK) else raw
+    val pairs = edges
+      .groupBy("lexeme", "feature")
+      .agg(sum("count").as("lf"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val lexemes = pairs.groupBy("lexeme").agg(sum("lf").as("l"))
     val features = pairs.groupBy("feature").agg(sum("lf").as("f"))
     // coalesce: sum over an empty relation is NULL, not 0

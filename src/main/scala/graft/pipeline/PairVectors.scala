@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.porter_stem
@@ -26,19 +25,17 @@ import graft.functions.porter_stem
   *     → ONE hash aggregation pivoting the ≤2 side-rows per (pair, feature)
   *     into `v1`/`v2` columns with `coalesce(_, 0)` — no ordering, no
   *     full-outer self-join (which would shuffle the fan-out twice);
-  *   - the 24 accumulators (`Step4.java:308-363`) → built-in partial
-  *     aggregates (`sum(abs(a-b))`, `sum(a*b)`, `sum(least/greatest)` …),
-  *     finalized by column arithmetic with the reference's exact
-  *     NaN/Infinity policy (`Step4.java:250-295`).
+  *   - the 24 accumulators (`Step4.java:308-363`) → one finisher per
+  *     mode, each finalized with the reference's exact NaN/Infinity policy
+  *     (`Step4.java:250-295`).
   *
   * Quirk modes (SURVEY §7.4), default `faithful = false`:
   *   - "Euclidean" accumulates `(v1 + v2)^2` in the reference
   *     (`Step4.java:332`); corrected mode uses `(v1 - v2)^2`.
   *   - The Jensen-Shannon both-zero case *assigns* 0, clobbering prior
   *     accumulation in feature-sort order (`Step4.java:355-359`); faithful
-  *     mode reproduces this with a per-pair window (contributions count
-  *     only after the last both-zero feature), corrected mode treats
-  *     both-zero as contributing nothing.
+  *     mode folds each pair's features in that order, corrected mode
+  *     treats both-zero as contributing nothing.
   */
 object PairVectors {
 
@@ -72,12 +69,25 @@ object PairVectors {
         porter_stem(element_at(col("p"), 2)).as("w2"),
         (lower(element_at(col("p"), 3)) === "true").as("related"))
 
-  /** The pivot stage alone: gold-matched association rows pivoted to one
-    * row per (pair, feature) with `<measure>_1` / `<measure>_2` columns —
-    * the input shape shared by the wide-agg ([[vectors]]) and
-    * order-preserving ([[vectorsOrdered]]) finishers.
+  /** Association rows ⋈ gold pairs → one 24-dim similarity vector per gold
+    * pair that has at least one matching association row (pairs with no
+    * data never appear, matching the reference: 14,547 gold pairs → 14,337
+    * instances). One finisher per mode:
+    *   - `faithful = false`: the wide aggregation ([[wideAgg]]);
+    *   - `faithful = true`: the ordered fold ([[orderedFold]]), bit-identical
+    *     to the reference's Step-4 output.
+    *
+    * Output: `w1, w2, related` + [[vectorColumns]].
     */
-  def perFeature(assoc: DataFrame, gold: DataFrame): DataFrame = {
+  def vectors(assoc: DataFrame, gold: DataFrame, faithful: Boolean = false): DataFrame = {
+    val pf = perFeature(assoc, gold)
+    if (faithful) orderedFold(pf) else wideAgg(pf)
+  }
+
+  /** The pivot stage: gold-matched association rows pivoted to one row per
+    * (pair, feature) with `<measure>_1` / `<measure>_2` columns.
+    */
+  private def perFeature(assoc: DataFrame, gold: DataFrame): DataFrame = {
     // Both orientations of every gold pair, keyed by the word whose feature
     // rows they consume; distinct = the reference's per-key HashSet dedup.
     val sides = gold
@@ -107,18 +117,15 @@ object PairVectors {
       .agg(pivotAggs.head, pivotAggs.tail: _*)
   }
 
-  /** Order-preserving aggregation path: per pair, features are consumed in
-    * sorted order (`flatMapSortedGroups`), so every floating-point sum
-    * accumulates in exactly the reference reducer's order
-    * (`Step4.java:211-247` walks a feature-sorted stream) — the resulting
-    * doubles are BIT-IDENTICAL to the reference, not just within tolerance,
-    * and the faithful JS both-zero reset falls out naturally. One extra
-    * sort inside the existing shuffle; use when byte-parity text output
-    * matters more than raw throughput.
+  /** Faithful finisher: per pair, features are consumed in sorted order
+    * (`flatMapSortedGroups`), so every floating-point sum accumulates in
+    * exactly the reference reducer's order (`Step4.java:211-247` walks a
+    * feature-sorted stream) and the doubles are bit-identical to the
+    * reference's. The reference's quirks are reproduced: "Euclidean"
+    * accumulates `(v1 + v2)^2` (`Step4.java:332`), and a both-zero feature
+    * resets the Jensen-Shannon accumulators (`Step4.java:355-359`).
     */
-  def vectorsOrdered(assoc: DataFrame, gold: DataFrame,
-      faithful: Boolean = false): DataFrame = {
-    val pf = perFeature(assoc, gold)
+  private def orderedFold(pf: DataFrame): DataFrame = {
     val s2 = pf.sparkSession
     import s2.implicits._
     val typed = pf.select(
@@ -137,13 +144,12 @@ object PairVectors {
           while (m < 4) {
             val v1 = vs(2 * m); val v2 = vs(2 * m + 1)
             man(m) += math.abs(v1 - v2)
-            euc(m) += (if (faithful) (v1 + v2) * (v1 + v2)
-                       else (v1 - v2) * (v1 - v2))
+            euc(m) += (v1 + v2) * (v1 + v2)
             dot(m) += v1 * v2; n1(m) += v1 * v1; n2(m) += v2 * v2
             mn(m) += math.min(v1, v2); mx(m) += math.max(v1, v2)
             sm(m) += v1 + v2
             val mean = (v1 + v2) / 2.0
-            if (faithful && v1 == 0.0 && v2 == 0.0) {
+            if (v1 == 0.0 && v2 == 0.0) {
               js1(m) = 0.0; js2(m) = 0.0
             } else {
               if (v1 > 0 && mean > 0) js1(m) += v1 * math.log(v1 / mean)
@@ -178,50 +184,28 @@ object PairVectors {
     out.select(col("w1") +: col("w2") +: col("related") +: named: _*)
   }
 
-  /** Association rows ⋈ gold pairs → one 24-dim similarity vector per gold
-    * pair that has at least one matching association row (pairs with no
-    * data never appear, matching the reference: 14,547 gold pairs → 14,337
-    * instances).
-    *
-    * Output: `w1, w2, related` + [[vectorColumns]].
+  /** Corrected finisher: built-in partial aggregates (`sum(abs(a-b))`,
+    * `sum(a*b)`, `sum(least/greatest)` …) in one hash aggregation, with
+    * the corrected Euclidean term `(v1 - v2)^2` and both-zero features
+    * contributing nothing to Jensen-Shannon.
     */
-  def vectors(assoc: DataFrame, gold: DataFrame, faithful: Boolean = false): DataFrame = {
-    val pf = perFeature(assoc, gold)
-
-    // Faithful JS reset: find the last both-zero feature per pair and
-    // measure; only later features contribute. Window and the following
-    // aggregation share the (w1, w2, related) hash partitioning, so this
-    // adds no extra shuffle.
-    val withReset =
-      if (!faithful) pf
-      else {
-        val w = Window.partitionBy("w1", "w2", "related")
-        measureShort.foldLeft(pf) { (df, s) =>
-          df.withColumn(s"${s}_rf",
-            max(when(col(s"${s}_1") === 0.0 && col(s"${s}_2") === 0.0,
-              col("feature"))).over(w))
-        }
-      }
-
+  private def wideAgg(pf: DataFrame): DataFrame = {
     val aggs = measureShort.flatMap { s =>
       val v1 = col(s"${s}_1")
       val v2 = col(s"${s}_2")
       val mean = (v1 + v2) / lit(2.0)
-      val eucTerm = if (faithful) (v1 + v2) * (v1 + v2) else (v1 - v2) * (v1 - v2)
-      val live: Column =
-        if (faithful) col("feature") > coalesce(col(s"${s}_rf"), lit("")) else lit(true)
       Seq(
         sum(abs(v1 - v2)).as(s"${s}_man"),
-        sum(eucTerm).as(s"${s}_euc"),
+        sum((v1 - v2) * (v1 - v2)).as(s"${s}_euc"),
         sum(v1 * v2).as(s"${s}_dot"),
         sum(v1 * v1).as(s"${s}_n1"),
         sum(v2 * v2).as(s"${s}_n2"),
         sum(least(v1, v2)).as(s"${s}_min"),
         sum(greatest(v1, v2)).as(s"${s}_max"),
         sum(v1 + v2).as(s"${s}_sum"),
-        sum(when(live && v1 > 0.0 && mean > 0.0, v1 * log(v1 / mean))
+        sum(when(v1 > 0.0 && mean > 0.0, v1 * log(v1 / mean))
           .otherwise(0.0)).as(s"${s}_js1"),
-        sum(when(live && v2 > 0.0 && mean > 0.0, v2 * log(v2 / mean))
+        sum(when(v2 > 0.0 && mean > 0.0, v2 * log(v2 / mean))
           .otherwise(0.0)).as(s"${s}_js2"))
     }
 
@@ -245,8 +229,7 @@ object PairVectors {
         when(isnan(js), inf).otherwise(js).as(s"${s}_js"))
     }
 
-    withReset
-      .groupBy("w1", "w2", "related")
+    pf.groupBy("w1", "w2", "related")
       .agg(aggs.head, aggs.tail: _*)
       .select(col("w1") +: col("w2") +: col("related") +: finalCols: _*)
   }

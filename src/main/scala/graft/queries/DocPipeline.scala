@@ -1,19 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.porter_stem
-import graft.pipeline.PairVectors
+import graft.pipeline.{Associate, Counts, PairVectors, SemanticPipeline}
 import QueryDef.table
 
 /** The semantic-similarity pipeline (SURVEY.md §2: A1-A5, J1-J4) re-expressed
   * over the `documents` test table so the driver's DuckDB oracle can check it
   * end-to-end: token bigrams play the role of (lexeme, feature) dependency
-  * edges, and an inline gold list plays the gold standard. The flagship
-  * `q32_doc_pair_vectors` exercises the REAL engine operator
-  * ([[graft.pipeline.PairVectors.vectors]]) — broadcast gold join, pivot
-  * aggregation, 24-metric wide agg — against a fully independent SQL oracle.
+  * edges, and an inline gold list plays the gold standard. q31, q32, q60 and
+  * q61 run the engine's own Steps 2-4 (`Counts.fromEdges →
+  * Associate.associate → PairVectors.vectors`); the flagship
+  * `q32_doc_pair_vectors` checks the whole chain — broadcast gold join,
+  * pivot aggregation, 24-metric wide agg — against a fully independent SQL
+  * oracle.
   */
 object DocPipeline {
 
@@ -44,30 +46,25 @@ object DocPipeline {
       |          FROM toks, UNNEST(generate_series(1, len(l) - 1)) AS t(i))"""
       .stripMargin
 
-  /** Association measures over bigram counts, totals via a broadcast cross
-    * join (no driver action — the query form of [[graft.pipeline.Associate]],
-    * same operand shapes/order).
+  /** [[edges]] counted once each: the `(lexeme, feature, count)` input of
+    * the engine's Steps 2-4.
     */
-  private[queries] def docAssocPublic(s: SparkSession, d: String): DataFrame =
-    docAssoc(s, d)
+  private def bigrams(s: SparkSession, d: String): DataFrame =
+    edges(s, d).withColumn("count", lit(1L))
 
-  private def docAssoc(s: SparkSession, d: String): DataFrame = {
-    val pairs = edges(s, d).groupBy("lexeme", "feature")
-      .agg(count(lit(1)).as("lf"))
-    val lex = pairs.groupBy("lexeme").agg(sum("lf").as("l"))
-    val feat = pairs.groupBy("feature").agg(sum("lf").as("f"))
-    val tot = pairs.agg(sum("lf").cast("double").as("total"))
-    val lf = col("lf").cast("double")
-    val l = col("l").cast("double")
-    val f = col("f").cast("double")
-    val t = col("total")
-    pairs.join(lex, "lexeme").join(feat, "feature").crossJoin(broadcast(tot))
-      .select(
-        col("lexeme"), col("feature"), col("lf"), col("l"), col("f"),
-        lf.as("assoc_freq"),
-        (lf / l).as("assoc_prob"),
-        ((t * lf) / (l * f)).as("assoc_pmi"),
-        (((lf / t) - ((l / t) * (f / t))) / sqrt((l / t) * (f / t))).as("assoc_ttest"))
+  /** Association measures by the engine's Steps 2-3. Runs the grand-total
+    * job and persists the pair counts, which the harness's `clearCache`
+    * releases after the entry.
+    */
+  private[queries] def assoc(s: SparkSession, d: String): DataFrame =
+    Associate.associate(Counts.fromEdges(bigrams(s, d)))
+
+  /** 24-dim vectors of the inline gold pairs by the engine's Steps 2-4
+    * ([[graft.pipeline.SemanticPipeline.vectorsOf]], which runs its jobs).
+    */
+  private[queries] def pairVectors(s: SparkSession, d: String): DataFrame = {
+    val s2 = s; import s2.implicits._
+    SemanticPipeline.vectorsOf(bigrams(s, d), goldPairs.toDF("w1", "w2", "related"))
   }
 
   private[queries] val assocSql =
@@ -177,7 +174,7 @@ object DocPipeline {
               |FROM edges GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     QueryDef("q31_doc_assoc",
-      (s, d) => docAssoc(s, d)
+      (s, d) => assoc(s, d)
         .select(col("lexeme"), col("feature"), col("lf"), col("l"), col("f"),
           round(col("assoc_prob"), 6).as("assoc_prob"),
           round(col("assoc_pmi"), 6).as("assoc_pmi"),
@@ -190,13 +187,11 @@ object DocPipeline {
               |  ROUND(assoc_ttest, 6) AS assoc_ttest
               |FROM assoc ORDER BY 1, 2""".stripMargin)),
 
-    // Flagship: the real PairVectors engine operator vs an independent SQL
+    // Flagship: the engine's Steps 2-4 chain vs an independent SQL
     // re-derivation of the whole 24-dim computation.
     QueryDef("q32_doc_pair_vectors",
       (s, d) => {
-        val s2 = s; import s2.implicits._
-        val gold = goldPairs.toDF("w1", "w2", "related")
-        val vecs = PairVectors.vectors(docAssoc(s, d), gold)
+        val vecs = pairVectors(s, d)
         val rounded = col("w1") +: col("w2") +: col("related") +:
           PairVectors.vectorColumns.map(c => round(col(c), 6).as(c))
         vecs.select(rounded: _*).orderBy("w1", "w2")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 
 import graft.io.FaithfulText
 import graft.ml.Classify
-import graft.pipeline.PairVectors
 
 /** ML-evaluation and faithful-sink surfaces as battery entries. The
   * RandomForest FIT itself has no DuckDB equivalent (q60 stays rows-only,
@@ -20,15 +19,7 @@ object MlQueries {
     // M1-M4: assemble → RF → seeded stratified 10-fold CV → report row
     QueryDef("q60_classify_report",
       (s, d) => {
-        val gold = {
-          val s2 = s; import s2.implicits._
-          Seq(("join", "merge", true), ("sort", "order", true),
-            ("scan", "filter", true), ("hash", "join", true),
-            ("fast", "slow", false), ("big", "small", false),
-            ("table", "row", false), ("spark", "stream", false))
-            .toDF("w1", "w2", "related")
-        }
-        val vecs = PairVectors.vectors(DocPipelineAccess.assoc(s, d), gold)
+        val vecs = DocPipeline.pairVectors(s, d)
         // smoke-sized forest: 5 trees × 4 folds (fit concurrently) keeps
         // the MLlib job count low (the full-size path is
         // ClassifySpec/EndToEndMlSpec)
@@ -56,7 +47,7 @@ object MlQueries {
     // doubles are bit-identical to the computed ones.
     QueryDef("q61_faithful_assoc_lines",
       (s, d) => {
-        val lines = FaithfulText.assocLines(DocPipelineAccess.assoc(s, d))
+        val lines = FaithfulText.assocLines(DocPipeline.assoc(s, d))
         val key = split(split(col("value"), "\t").getItem(0), " ")
         def metric(name: String) =
           regexp_extract(col("value"), name + "=([^ ]+)", 1).cast("double")
@@ -207,10 +198,4 @@ object MlQueries {
            |FROM f GROUP BY 1 ORDER BY 1""".stripMargin
       })),
   )
-}
-
-/** Exposes DocPipeline's internal assoc builder to sibling query modules. */
-private[queries] object DocPipelineAccess {
-  def assoc(s: org.apache.spark.sql.SparkSession, d: String) =
-    DocPipeline.docAssocPublic(s, d)
 }

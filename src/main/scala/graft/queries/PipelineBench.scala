@@ -143,25 +143,11 @@ object PipelineBench {
       (s, d) => {
         // scale with the harness SF: ~200 corpus lines per document row
         val lines = table(s, d, "documents").count() * 200L
-        // NOTE (round 12): materializing the synthesized corpus here
-        // (localCheckpoint, the q213/q277 derived-column pattern) was
-        // tried and REVERTED — warm samples improved only marginally
-        // (7.2 → 6.9 s at sf0.1) while cold samples degraded badly
-        // (observed 57 s first run vs ~15 s), so the lazy generator
-        // wins under the bench's min-of-k on realistic hosts
-        val corpus = syntheticCorpus(s, lines, 8)
-        val counts = Counts.fromEdges(Biarcs.edges(corpus))
-        val assoc = Associate.associate(counts)
         val s2 = s; import s2.implicits._
-        val goldDf = gold.toDF("w1", "w2", "related")
-        val res = PairVectors.vectors(assoc, goldDf).orderBy("w1", "w2")
-        // The result is gold-bounded (|gold| rows × 26 cols): run the heavy
-        // plan now, keep the rows locally, and release the persisted pair
-        // relation — leaving it cached leaked a corpus-sized relation into
-        // every later battery entry (the round-1 8× bench inflation).
-        val rows = res.collect()
-        counts.unpersist()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+        SemanticPipeline.vectorsOf(
+          Biarcs.edges(syntheticCorpus(s, lines, 8)),
+          gold.toDF("w1", "w2", "related"))
+          .orderBy("w1", "w2")
       },
       None),
   )

@@ -3,14 +3,13 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{Associate, Biarcs, Counts, PairVectors}
+import graft.pipeline.{Biarcs, PairVectors, SemanticPipeline}
 import QueryDef.table
 
 /** End-to-end oracle for the REAL reference pipeline (Steps 1-4:
-  * `Biarcs.edges → Counts.fromEdges → Associate.associate →
-  * PairVectors.vectors`) — the chain q62 benches, here with a fully
-  * independent DuckDB re-derivation (closing round-1's only `no_oracle`
-  * hole on the core pipeline).
+  * `Biarcs.edges` → [[graft.pipeline.SemanticPipeline.vectorsOf]]) — the
+  * chain q62 benches, here with a fully independent DuckDB re-derivation
+  * (closing round-1's only `no_oracle` hole on the core pipeline).
   *
   * The corpus is derived deterministically from the `documents` table in a
   * form BOTH engines can construct identically:
@@ -125,18 +124,12 @@ object PipelineOracle {
   val all: Seq[QueryDef] = Seq(
     QueryDef("q67_pipeline_oracle",
       (s, d) => {
-        val counts = Counts.fromEdges(Biarcs.edges(corpus(s, d)))
-        val assoc = Associate.associate(counts)
         val s2 = s; import s2.implicits._
-        val gold = goldPairs.toDF("w1", "w2", "related")
-        val vecs = PairVectors.vectors(assoc, gold)
+        val vecs = SemanticPipeline.vectorsOf(Biarcs.edges(corpus(s, d)),
+          goldPairs.toDF("w1", "w2", "related"))
         val rounded = col("w1") +: col("w2") +: col("related") +:
           PairVectors.vectorColumns.map(c => round(col(c), 6).as(c))
-        val res = vecs.select(rounded: _*).orderBy("w1", "w2")
-        // gold-bounded result: materialize, then release the pair cache
-        val rows = res.collect()
-        counts.unpersist()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+        vecs.select(rounded: _*).orderBy("w1", "w2")
       },
       Some(DocPipeline.pairVectorsSql(assocSql, goldValuesSql))),
   )

@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.FaithfulText
@@ -13,12 +14,13 @@ import graft.pipeline._
   *
   * Steps 1-3 are compared byte-for-byte (integer counts and per-row double
   * arithmetic with identical operation order ⇒ identical digits). Step 4's
-  * 24-dim vectors involve sums over features whose accumulation order
-  * differs between the reference's sorted stream and Spark's partial
-  * aggregation, so they are compared numerically at 1e-9 relative
-  * tolerance, with the text rendering checked structurally.
+  * 24-dim vectors are sums over features; the faithful finisher adds them
+  * in the reference's feature order, so they are compared byte-for-byte
+  * too, and through the whole chain (`SemanticPipeline.vectors`) at 1e-9
+  * relative tolerance.
   */
-class ByteParitySpec extends AnyFunSuite with SparkTestBase {
+class ByteParitySpec extends AnyFunSuite with SparkTestBase
+    with BeforeAndAfterAll {
 
   private def corpus = ReferenceFixtures.corpus
   private def goldFile = ReferenceFixtures.gold
@@ -29,8 +31,15 @@ class ByteParitySpec extends AnyFunSuite with SparkTestBase {
     try s.getLines().toVector finally s.close()
   }
 
-  private lazy val counts =
-    Counts.fromEdges(Biarcs.readEdges(spark, corpus), persistPairs = false)
+  // built on first use; afterAll releases the cached pair counts
+  private var built: Option[CorpusCounts] = None
+  private lazy val counts = {
+    val c = Counts.fromEdges(Biarcs.readEdges(spark, corpus))
+    built = Some(c); c
+  }
+
+  override def afterAll(): Unit =
+    try built.foreach(_.unpersist()) finally super.afterAll()
 
   test("grand total equals the reference's L/F counters") {
     val Seq(l, f) = golden("counters.txt").map(_.split(" ")(1).toLong)
@@ -66,7 +75,7 @@ class ByteParitySpec extends AnyFunSuite with SparkTestBase {
     val assoc = Associate.associate(counts)
     val gold = PairVectors.parseGold(spark.read.text(goldFile))
     val got = FaithfulText.vectorLines(
-      PairVectors.vectorsOrdered(assoc, gold, faithful = true))
+      PairVectors.vectors(assoc, gold, faithful = true))
       .collect().map(_.getString(0)).sorted
     val want = golden("step4.txt").sorted
     assert(got.length == want.length)

@@ -61,10 +61,12 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def checkAssoc(corpus: String): Unit = {
-    val gotMap = SemanticPipeline.associations(spark, corpus).collect()
+    val (assoc, counts) = SemanticPipeline.associationsManaged(spark, corpus)
+    val gotMap = try assoc.collect()
       .map(r => (r.getAs[String]("lexeme"), r.getAs[String]("feature")) ->
         Array(r.getAs[Double]("assoc_freq"), r.getAs[Double]("assoc_prob"),
           r.getAs[Double]("assoc_pmi"), r.getAs[Double]("assoc_ttest"))).toMap
+      finally counts.unpersist()
     val want = NaiveSemanticOracle.assoc(readLines(corpus))
     assert(gotMap.keySet == want.keySet)
     for ((k, w) <- want; i <- 0 until 4) {

@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.FaithfulText
@@ -18,7 +19,8 @@ import graft.pipeline._
   * field-wise rewrite must NOT reproduce the corruption (that divergence
   * is the documented defensive improvement).
   */
-class QuirkParitySpec extends AnyFunSuite with SparkTestBase {
+class QuirkParitySpec extends AnyFunSuite with SparkTestBase
+    with BeforeAndAfterAll {
 
   private def res(name: String) =
     getClass.getResource(s"/golden/quirk/$name").getPath
@@ -29,9 +31,16 @@ class QuirkParitySpec extends AnyFunSuite with SparkTestBase {
     try s.getLines().toVector finally s.close()
   }
 
-  private lazy val counts = Counts.fromEdges(
-    Biarcs.readEdges(spark, res("quirk-corpus.txt"), faithful = true),
-    persistPairs = false)
+  // built on first use; afterAll releases the cached pair counts
+  private var built: Option[CorpusCounts] = None
+  private lazy val counts = {
+    val c = Counts.fromEdges(
+      Biarcs.readEdges(spark, res("quirk-corpus.txt"), faithful = true))
+    built = Some(c); c
+  }
+
+  override def afterAll(): Unit =
+    try built.foreach(_.unpersist()) finally super.afterAll()
 
   test("faithful Step-1 counts byte-match the reference on the quirk corpus") {
     val got = Counts.taggedUnion(counts).collect().map(_.getString(0)).sorted
@@ -52,10 +61,12 @@ class QuirkParitySpec extends AnyFunSuite with SparkTestBase {
   test("faithful Step-4 vectors byte-match the reference on the quirk corpus") {
     val assoc = Associate.associate(counts)
     val gold = PairVectors.parseGold(spark.read.text(res("quirk-gold.txt")))
-    val got = FaithfulText.vectorLines(
-      PairVectors.vectorsOrdered(assoc, gold, faithful = true))
-      .collect().map(_.getString(0)).sorted
-    assert(got.toSeq == golden("step4.txt").sorted)
+    val chained = SemanticPipeline.vectors(spark, res("quirk-corpus.txt"),
+      res("quirk-gold.txt"), faithful = true)
+    for (vecs <- Seq(PairVectors.vectors(assoc, gold, faithful = true), chained)) {
+      val got = FaithfulText.vectorLines(vecs).collect().map(_.getString(0)).sorted
+      assert(got.toSeq == golden("step4.txt").sorted)
+    }
   }
 
   test("default field-wise rewrite does NOT corrupt labels (the quirk is opt-in)") {

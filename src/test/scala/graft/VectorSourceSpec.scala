@@ -30,15 +30,16 @@ class VectorSourceSpec extends AnyFunSuite with SparkTestBase {
     }.toMap
 
   test("parsing the reference's Step-4 output reproduces the engine vectors exactly") {
-    val counts = Counts.fromEdges(Biarcs.readEdges(spark, corpus),
-      persistPairs = false)
-    val gold = PairVectors.parseGold(spark.read.text(goldFile))
-    val engine = vecMap(PairVectors.vectorsOrdered(
-      Associate.associate(counts), gold, faithful = true))
-    val parsed = vecMap(VectorSource.vectorLines(goldenStep4))
-    assert(parsed.keySet == engine.keySet)
-    // Double.toString round-trips losslessly: EXACT equality, all 24 dims
-    for ((k, e) <- engine) assert(parsed(k) == e, s"pair $k")
+    val counts = Counts.fromEdges(Biarcs.readEdges(spark, corpus))
+    try {
+      val gold = PairVectors.parseGold(spark.read.text(goldFile))
+      val engine = vecMap(PairVectors.vectors(
+        Associate.associate(counts), gold, faithful = true))
+      val parsed = vecMap(VectorSource.vectorLines(goldenStep4))
+      assert(parsed.keySet == engine.keySet)
+      // Double.toString round-trips losslessly: EXACT equality, all 24 dims
+      for ((k, e) <- engine) assert(parsed(k) == e, s"pair $k")
+    } finally counts.unpersist()
   }
 
   test("text-vector classification equals the parquet path") {
@@ -55,8 +56,7 @@ class VectorSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("faithful text rendering round-trips through the parser") {
-    val counts = Counts.fromEdges(Biarcs.readEdges(spark, corpus),
-      persistPairs = false)
+    val counts = Counts.fromEdges(Biarcs.readEdges(spark, corpus))
     val gold = PairVectors.parseGold(spark.read.text(goldFile))
     // cache: the round-trip compares two reads of this relation, and an
     // uncached recompute can re-order the floating-point partial sums
@@ -64,12 +64,11 @@ class VectorSourceSpec extends AnyFunSuite with SparkTestBase {
     try {
       val back = VectorSource.vectorLines(FaithfulText.vectorLines(vecs))
       assert(vecMap(back) == vecMap(vecs))
-    } finally vecs.unpersist()
+    } finally { vecs.unpersist(); counts.unpersist() }
   }
 
   test("ARFF data lines round-trip through the ARFF reader") {
-    val counts = Counts.fromEdges(Biarcs.readEdges(spark, corpus),
-      persistPairs = false)
+    val counts = Counts.fromEdges(Biarcs.readEdges(spark, corpus))
     val gold = PairVectors.parseGold(spark.read.text(goldFile))
     // cache: compared against its own re-read below (same ULP concern as
     // the text round-trip test)
@@ -89,6 +88,6 @@ class VectorSourceSpec extends AnyFunSuite with SparkTestBase {
           PairVectors.vectorColumns.map(c => r.getAs[Double](c)))
       }.sortBy(_.toString)
       assert(got.toSeq == want.toSeq)
-    } finally vecs.unpersist()
+    } finally { vecs.unpersist(); counts.unpersist() }
   }
 }
