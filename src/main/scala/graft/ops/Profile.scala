@@ -337,31 +337,61 @@ object Profile {
     * keys ranked by total descending, with each key's share and running
     * cumulative share — "the top N sources carry X% of the tokens", the
     * concentration report behind mixture design, skew diagnosis, and
-    * 80/20 prioritization. Ties rank by key for determinism; shares are
-    * exact integer totals divided once at the end. The measure should
-    * be non-negative — with mixed-sign totals "share of grand total"
-    * stops being a concentration statement (shares can exceed 1 or go
-    * negative), though the arithmetic stays exact.
+    * 80/20 prioritization. Returns `(rk, key, n_rows, total, share,
+    * cum_share)` with `rk` a bigint. Ties rank by key for determinism;
+    * shares are exact integer totals divided once at the end. The
+    * measure should be non-negative — with mixed-sign totals "share of
+    * grand total" stops being a concentration statement (shares can
+    * exceed 1 or go negative), though the arithmetic stays exact.
     *
-    * Shape at 100 TB: one aggregation to the key grain, then the rank
-    * and running-sum windows run on the COLLAPSED relation (one row per
-    * key) against a broadcast grand total. Note the windows are global
-    * (single partition) over that collapsed relation — fine for
-    * reporting grains (sources, hosts, shards); for billions of
-    * distinct keys, bucket the rank space first.
+    * How: totals bucket by integer radix over the value range —
+    * `b = (hi − total) div width`, `width = (hi − lo) div buckets + 1`
+    * — so buckets are DISJOINT value ranges and bucket order IS rank
+    * order (every key in bucket b outranks every key in b+1; ties
+    * share one exact total, hence one bucket). Global rank = the
+    * bucket's key-count offset + the within-bucket rank; the
+    * cumulative total likewise. All arithmetic is exact integers — a
+    * SQL oracle replays it bit-for-bit. The output does not depend on
+    * `buckets`; `buckets = 1` is one global rank window.
+    *
+    * Shape at 100 TB: one aggregation to the key grain; one broadcast
+    * min/max bounds row; per-key windows partition by BUCKET (~uniform
+    * for spread totals — the parameter caps partition width at
+    * range/buckets); the only single-partition work is the offset
+    * rollup over the ≤ `buckets`+1 bucket-stats rows — bounded by the
+    * PARAMETER, never the data. Residual skew bound: keys tied on one
+    * exact total are rank-adjacent by construction and so necessarily
+    * share a bucket — a measure with billions of identical totals
+    * concentrates those keys in its tie bucket.
     */
-  def paretoProfile(df: DataFrame, keyCol: String,
-      valueCol: String): DataFrame = {
+  def paretoProfile(df: DataFrame, keyCol: String, valueCol: String,
+      buckets: Int = 1024): DataFrame = {
+    require(buckets >= 1, s"buckets=$buckets must be >= 1")
     val per = df.groupBy(col(keyCol).as("key"))
       .agg(sum(col(valueCol).cast("long")).as("total"),
         count(lit(1)).as("n_rows"))
-    val grand = per.agg(sum("total").as("grand"))
-    val wRank = Window.orderBy(col("total").desc, col("key").asc)
-    val wCum = wRank.rowsBetween(Window.unboundedPreceding,
+    val grand = per.agg(sum("total").as("grand"),
+      min("total").as("lo"), max("total").as("hi"))
+    val perB = per.crossJoin(broadcast(grand))
+      .withColumn("__w", expr(s"(hi - lo) div $buckets + 1"))
+      .withColumn("__b", expr("(hi - total) div __w"))
+    // bucket-offset rollup: collapsed to <= buckets+1 rows, so the
+    // single-partition window is parameter-bounded
+    val bstats = perB.groupBy("__b")
+      .agg(count(lit(1)).as("__nk"), sum("total").as("__s"))
+    val wOff = Window.orderBy("__b")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = bstats
+      .withColumn("__kb", coalesce(sum("__nk").over(wOff), lit(0L)))
+      .withColumn("__sb", coalesce(sum("__s").over(wOff), lit(0L)))
+      .select("__b", "__kb", "__sb")
+    val wB = Window.partitionBy("__b")
+      .orderBy(col("total").desc, col("key").asc)
+    val wBCum = wB.rowsBetween(Window.unboundedPreceding,
       Window.currentRow)
-    per.crossJoin(broadcast(grand))
-      .withColumn("rk", row_number().over(wRank))
-      .withColumn("cum_total", sum("total").over(wCum))
+    perB.join(broadcast(offsets), "__b")
+      .withColumn("rk", col("__kb") + row_number().over(wB))
+      .withColumn("cum_total", col("__sb") + sum("total").over(wBCum))
       .select(col("rk"), col("key"), col("n_rows"), col("total"),
         (col("total").cast("double") / col("grand")).as("share"),
         (col("cum_total").cast("double") / col("grand"))
@@ -473,8 +503,9 @@ object Profile {
     * counts, cumulative windows PARTITIONED BY GROUP over the
     * collapsed distinct-value grain, one group-grain argmax. The
     * per-group window is single-partition over DISTINCT VALUES — a
-    * reporting-grain contract like [[paretoProfile]]; quantize the
-    * measure first if a group has billions of distinct values.
+    * reporting-grain contract; quantize the measure first (or
+    * radix-bucket the value space, as [[paretoProfile]] does) if a
+    * group has billions of distinct values.
     */
   def ksDrift(before: DataFrame, after: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
@@ -674,68 +705,6 @@ object Profile {
         ((col("total") / col("n")) / col("global_mean")).as("factor"))
   }
 
-  /** [[paretoProfile]] for billions-of-keys grains: identical output
-    * (exact global ranks, shares, cumulative shares — the equivalence
-    * is spec-pinned), but the rank space is value-RADIX bucketed first
-    * so no window ever sees the whole key grain on one partition — the
-    * packShards pattern (per-bucket windows + bucket-offset rollup)
-    * applied to ranking.
-    *
-    * How: totals bucket by integer radix over the value range —
-    * `b = (hi − total) div width`, `width = (hi − lo) div buckets + 1`
-    * — so buckets are DISJOINT value ranges and bucket order IS rank
-    * order (every key in bucket b outranks every key in b+1; ties
-    * share one exact total, hence one bucket). Global rank = the
-    * bucket's key-count offset + the within-bucket rank; the
-    * cumulative total likewise. All arithmetic is exact integers — a
-    * SQL oracle replays it bit-for-bit.
-    *
-    * Shape at 100 TB: one aggregation to the key grain; one broadcast
-    * min/max bounds row; per-key windows partition by BUCKET (~uniform
-    * for spread totals — the parameter caps partition width at
-    * range/buckets); the only single-partition work is the offset
-    * rollup over the ≤ `buckets`+1 bucket-stats rows — bounded by the
-    * PARAMETER, never the data. Residual skew bound: keys tied on one
-    * exact total are rank-adjacent by construction and so necessarily
-    * share a bucket — a measure with billions of identical totals
-    * concentrates those keys in its tie bucket (if that is your shape,
-    * rank ties by key inside sub-buckets and fold counts, or accept
-    * the documented [[paretoProfile]] reporting-grain tier).
-    */
-  def paretoProfileBucketed(df: DataFrame, keyCol: String,
-      valueCol: String, buckets: Int = 1024): DataFrame = {
-    require(buckets >= 1, s"buckets=$buckets must be >= 1")
-    val per = df.groupBy(col(keyCol).as("key"))
-      .agg(sum(col(valueCol).cast("long")).as("total"),
-        count(lit(1)).as("n_rows"))
-    val grand = per.agg(sum("total").as("grand"),
-      min("total").as("lo"), max("total").as("hi"))
-    val perB = per.crossJoin(broadcast(grand))
-      .withColumn("__w", expr(s"(hi - lo) div $buckets + 1"))
-      .withColumn("__b", expr("(hi - total) div __w"))
-    // bucket-offset rollup: collapsed to <= buckets+1 rows, so the
-    // single-partition window is parameter-bounded
-    val bstats = perB.groupBy("__b")
-      .agg(count(lit(1)).as("__nk"), sum("total").as("__s"))
-    val wOff = Window.orderBy("__b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bstats
-      .withColumn("__kb", coalesce(sum("__nk").over(wOff), lit(0L)))
-      .withColumn("__sb", coalesce(sum("__s").over(wOff), lit(0L)))
-      .select("__b", "__kb", "__sb")
-    val wB = Window.partitionBy("__b")
-      .orderBy(col("total").desc, col("key").asc)
-    val wBCum = wB.rowsBetween(Window.unboundedPreceding,
-      Window.currentRow)
-    perB.join(broadcast(offsets), "__b")
-      .withColumn("rk", col("__kb") + row_number().over(wB))
-      .withColumn("cum_total", col("__sb") + sum("total").over(wBCum))
-      .select(col("rk"), col("key"), col("n_rows"), col("total"),
-        (col("total").cast("double") / col("grand")).as("share"),
-        (col("cum_total").cast("double") / col("grand"))
-          .as("cum_share"))
-  }
-
   /** Equi-width histogram of `valueCol` per group: `bins` buckets
     * spanning the group's own [min, max], EVERY bucket emitted
     * (including empty ones — a gap in a distribution is a finding, not
@@ -805,7 +774,7 @@ object Profile {
     * over distinct values, and ONE interleaved ordered scan (a window,
     * not a join) that resolves every lookup in a single pass. The
     * global windows are single-partition over DISTINCT VALUES — the
-    * same reporting-grain contract as [[ksDrift]]/[[paretoProfile]]:
+    * same reporting-grain contract as [[ksDrift]]:
     * quantize the measure first if it has billions of distinct values.
     */
   def quantileNormalize(df: DataFrame, sourceCol: String,
@@ -921,7 +890,7 @@ object Profile {
     * rank, on an already-collapsed `(value, count)` relation — the
     * exact lower median without ever sorting raw rows. The cumulative
     * window is single-partition over DISTINCT VALUES (the
-    * [[ksDrift]]/[[paretoProfile]] reporting-grain contract).
+    * [[ksDrift]] reporting-grain contract).
     */
   private def medianOfCounts(vc: DataFrame, valueCol: String,
       cntCol: String): DataFrame = {

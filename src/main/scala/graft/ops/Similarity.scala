@@ -118,17 +118,11 @@ object Similarity {
   private def nearest(scored: DataFrame, k: Int, score: String): DataFrame =
     keepTop(scored, k, Seq("query_id"), col(score).desc, col("neighbor_id").asc)
 
-  /** Deterministic pseudo-random hyperplane component for (plane p, dim i):
-    * a value in [-1, 1] derived from one md5 hex digit — portable to any
-    * engine with md5/instr, and computable driver-side (see
-    * [[planeWeight]]) so plane application needs no plane-table join.
-    */
-  def planeComponent(p: Column, i: Column): Column =
-    (expr(s"instr('0123456789abcdef', substring(md5(concat(p, '-', i)), 1, 1))")
-      .cast("double") - 1.0 - 7.5) / 7.5
-
-  /** Driver-side value of [[planeComponent]] — bit-identical arithmetic
-    * ((hex digit of md5("p-i")) - 7.5) / 7.5.
+  /** Deterministic pseudo-random hyperplane component for (plane p,
+    * dim i): `(h - 7.5) / 7.5`, a value in [-1, 1], where `h` is the
+    * first hex digit (high nibble of the first byte) of md5 of the
+    * UTF-8 string `"p-i"`. Computed on the driver, so plane application
+    * needs no plane-table join; any engine with md5 replays it.
     */
   private def planeWeight(p: Int, i: Int): Double = {
     val d = java.security.MessageDigest.getInstance("MD5")
@@ -901,62 +895,10 @@ object Similarity {
     * selection time (0 for the seed; monotonically non-increasing — the
     * classic cover-radius curve).
     *
-    * Shape at 100 TB: k rounds, each ONE narrow corpus pass against the
-    * ≤ k broadcast chosen centers plus a global `TakeOrdered(1)` (O(n),
-    * no sort shuffle). The driver holds only the k chosen rows — the
-    * same bounded-collect contract as the Bloom build. Deterministic
-    * end-to-end: float dot products in index order, integer tie-breaks,
-    * no RNG.
-    *
-    * INTENDED k REGIME: ≤ ~100. Each selection is a full corpus pass
-    * (k sequential Spark jobs — greedy farthest-point is inherently
-    * sequential: pick i+1 depends on pick i), so k=1000 means 1000
-    * corpus scans. For large coresets, run this over a deterministic
-    * content-hash sample, or use [[ivfIndex]]'s data-point centroids
-    * as the diverse seed set instead.
-    */
-  def kCenters(corpus: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k=$k must be >= 1")
-    val s2 = corpus.sparkSession; import s2.implicits._
-    val base = corpus.select(col("vec_id"), col("embedding"))
-      .withColumn("n2", dot(col("embedding"), col("embedding")))
-    val seedOpt = base.orderBy("vec_id").limit(1)
-      .select(col("vec_id"), col("embedding"), col("n2")).collect().headOption
-    if (seedOpt.isEmpty) // empty corpus: empty selection, not an exception
-      return s2.emptyDataset[(Int, Long, Double)].toDF("rk", "vec_id", "d2")
-    val seed = seedOpt.get
-    var chosen = Vector((seed.getLong(0), seed.getSeq[Float](1), 0.0,
-      seed.getDouble(2)))
-    var exhausted = false
-    for (_ <- 2 to k if !exhausted) {
-      val centers = chosen.map { case (id, e, _, n2) => (id, e, n2) }
-        .toDF("c_id", "c_emb", "c_n2")
-      val far = base
-        .crossJoin(broadcast(centers))
-        .where(!col("vec_id").isin(chosen.map(_._1): _*))
-        .withColumn("d2", col("n2") + col("c_n2") -
-          lit(2.0) * dot(col("embedding"), col("c_emb")))
-        .groupBy("vec_id").agg(min("d2").as("d2"),
-          first("n2").as("n2"), first("embedding").as("embedding"))
-        .orderBy(col("d2").desc, col("vec_id").asc)
-        .limit(1).collect()
-      far.headOption match {
-        case Some(r) => chosen = chosen :+ ((r.getLong(0),
-          r.getSeq[Float](3), r.getDouble(1), r.getDouble(2)))
-        case None => exhausted = true // k exceeds the corpus: stop early
-      }
-    }
-    chosen.zipWithIndex
-      .map { case ((id, _, d2, _), i) => (i + 1, id, d2) }
-      .toDF("rk", "vec_id", "d2")
-  }
-
-  /** [[kCenters]] with BATCHED selection — identical output (the
-    * equivalence is spec-pinned and exact, not approximate), k/batch-ish
-    * corpus passes instead of k: each distributed pass collects the
+    * Selection is BATCHED: each distributed pass collects the
     * top-`batch` farthest candidates (score desc, vec_id asc) WITH
-    * their vectors, and the driver then replays the exact sequential
-    * greedy rule inside the batch while it remains PROVABLY correct:
+    * their vectors, and the driver replays the sequential greedy rule
+    * inside the batch while it remains PROVABLY correct:
     *
     *   - the batch head is the true next center (same ordering as the
     *     global argmax);
@@ -974,17 +916,18 @@ object Similarity {
     *
     * A batch that collects the whole remaining corpus (fewer than
     * `batch` rows) has no outside points, so it drains sequentially to
-    * the end. Worst case (adversarially tied geometry) degrades to
-    * [[kCenters]]'s one pass per pick; spread data takes close to
-    * k/batch passes — the fix for the k-sequential-jobs ceiling noted
-    * in [[kCenters]]'s k-regime contract.
+    * the end. `batch = 1` is one pass per pick, and adversarially tied
+    * geometry degrades to it; spread data takes close to k/batch
+    * passes.
     *
-    * Shape at 100 TB: ≈ k/batch rounds, each ONE narrow corpus pass
-    * against the ≤ k broadcast centers plus a global TakeOrdered
-    * (batch); the driver holds ≤ k + batch rows.
+    * Shape at 100 TB: ≈ k/batch rounds, each ONE corpus pass against
+    * the ≤ k broadcast chosen centers, whose min-per-vector aggregation
+    * hash-shuffles every vector (embedding included) once, plus a
+    * global TakeOrdered(batch) (no sort shuffle); the driver holds
+    * ≤ k + batch rows. Deterministic end-to-end: float dot products in
+    * index order, integer tie-breaks, no RNG.
     */
-  def kCentersBatched(corpus: DataFrame, k: Int,
-      batch: Int = 16): DataFrame = {
+  def kCenters(corpus: DataFrame, k: Int, batch: Int = 16): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     require(batch >= 1, s"batch=$batch must be >= 1")
     val s2 = corpus.sparkSession; import s2.implicits._
@@ -993,7 +936,7 @@ object Similarity {
     val seedOpt = base.orderBy("vec_id").limit(1)
       .select(col("vec_id"), col("embedding"), col("n2")).collect()
       .headOption
-    if (seedOpt.isEmpty)
+    if (seedOpt.isEmpty) // empty corpus: empty selection, not an exception
       return s2.emptyDataset[(Int, Long, Double)].toDF("rk", "vec_id", "d2")
     // same double arithmetic as the FloatDot expression + the d2 column
     def dotD(a: Seq[Float], b: Seq[Float]): Double = {

@@ -681,135 +681,42 @@ object TextAnalysis {
       .select(col("query_id"), col("rk"), col("doc_id"), col("rrf"))
   }
 
-  /** A word as its character-symbol array — the BPE start state. */
-  private def charSyms(word: Column): Column =
-    transform(sequence(lit(1), length(word)),
-      i => substring(word, i, lit(1).cast("int")))
-
-  /** One BPE merge applied to a symbol array: greedy left-to-right
-    * replacement of adjacent (`a`, `b`) with their concatenation, via an
-    * ordered fold — the accumulator appends each symbol unless it
-    * completes the pair, in which case the pair collapses. Left-to-right
-    * greediness falls out of the fold order (`"aaaa"` with merge (a,a) →
-    * `[aa, aa]`), matching reference BPE implementations and the SQL
-    * oracle's `list_reduce` replay exactly.
-    */
-  private def mergeFold(syms: Column, a: String, b: String): Column =
-    aggregate(syms, lit(Array.empty[String]),
-      (acc, s) => when(
-        try_element_at(acc, lit(-1)) === lit(a) && s === lit(b),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-        .otherwise(concat(acc, array(s))))
-
   /** Byte-pair-encoding merge training (Sennrich et al. 2016): learn the
     * `numMerges` highest-frequency adjacent-symbol merges over the
     * corpus's word vocabulary. Returns the learned merge table
     * (step, a, b, cnt) — the tokenizer artifact; apply it with
     * [[bpeApply]]. Ties break deterministically (count desc, then (a, b)
-    * lexicographic), so the merge sequence is identical on every run and
-    * engine.
+    * lexicographic), merges fold greedily left to right (`"aaaa"` with
+    * merge (a, a) → `[aa, aa]`), and training stops early when no word
+    * has two symbols left, so the merge sequence is identical on every
+    * run and engine. Symbol splitting is codepoint-based (matching
+    * Spark's `substring`) and the lexicographic tie-break compares
+    * UTF-16 code units, which agrees with UTF-8 binary order on ASCII
+    * vocabularies — non-BMP corpora should pin one engine's collation
+    * before relying on tie order.
     *
-    * Shape at 100 TB: the corpus is scanned ONCE (the word-frequency
-    * aggregation); every iteration then runs on the weighted VOCABULARY —
-    * bounded by distinct words, not corpus size — exactly the reference
-    * algorithm's trick. Per merge: one adjacent-pair aggregation over the
-    * vocab + one driver-side 1-row argmax (the PageRank per-iteration
-    * scalar pattern) + one narrow fold rewrite.
+    * Shape at 100 TB: ONE Spark job — the word-frequency aggregation —
+    * then the `numMerges` greedy rounds run on the driver over the
+    * collected vocabulary, so a 30k-merge tokenizer costs one corpus
+    * scan plus driver arithmetic, not 30k scheduler round-trips.
+    * `sampleFraction` trains on a deterministic content-hash sample of
+    * the documents (merge statistics converge on a tiny fraction of a
+    * web-scale corpus; the sample is `md5(text)`-gated, so it is
+    * reproducible across runs and engines and biased by content, never
+    * by partition layout); tokenize the FULL corpus with [[bpeApply]],
+    * which is one narrow pass.
     *
-    * MERGE-COUNT CEILING (the contract): each merge is one Spark job
-    * over the vocabulary, so training cost is `numMerges` sequential
-    * jobs — fine into the hundreds, NOT for a production 30k-merge
-    * tokenizer (days of pure scheduler overhead at corpus scale). The
-    * standard practice at 100 TB, supported here via `sampleFraction`:
-    * train the merge table on a bounded deterministic content-hash
-    * sample of the documents (merge statistics converge on a tiny
-    * fraction of a web-scale corpus; the sample is
-    * `md5(text)`-gated, so it is reproducible across runs and engines
-    * and biased by content, never by partition layout), then tokenize
-    * the FULL corpus with [[bpeApply]], which is one narrow pass.
-    * Vocab snapshots persist across iterations and release as soon as
-    * superseded.
+    * THE COLLECT IS BOUNDED: the vocabulary is heavy-hitter pruned to
+    * the `maxVocab` most frequent words (ties by word, a total
+    * deterministic order) BEFORE it leaves the cluster, through a
+    * TakeOrderedAndProject partial top-k — never a global sort. With
+    * `maxVocab` >= the distinct-word count the output is the unpruned
+    * training; below it, training sees exactly the top-V head — the
+    * standard heavy-hitter practice (greedy BPE argmaxes are decided
+    * by high-frequency words). Driver memory and per-merge CPU are both
+    * O(maxVocab) regardless of corpus size.
     */
   def bpeTrain(docs: DataFrame, numMerges: Int,
-      textCol: String = "text", sampleFraction: Double = 1.0): DataFrame = {
-    require(numMerges >= 1, s"numMerges=$numMerges must be >= 1")
-    require(sampleFraction > 0 && sampleFraction <= 1.0,
-      s"sampleFraction=$sampleFraction must be in (0, 1]")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val trainDocs =
-      if (sampleFraction >= 1.0) docs
-      else docs.where(
-        Sampling.hashUnit(col(textCol), "bpe:") < sampleFraction)
-    var vocab = trainDocs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .where(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .withColumn("syms", charSyms(col("w")))
-      .persist()
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var exhausted = false
-    for (step <- 1 to numMerges if !exhausted) {
-      val top = vocab.where(size(col("syms")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), i -> " +
-            "struct(element_at(syms, i) AS a, " +
-            "element_at(syms, i + 1) AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("freq").as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((step, a, b, top(0).getLong(2)))
-        val next = vocab
-          .withColumn("syms", mergeFold(col("syms"), a, b)).persist()
-        next.count() // materialize before releasing the parent snapshot
-        vocab.unpersist()
-        vocab = next
-      }
-    }
-    vocab.unpersist()
-    merges.toSeq.toDF("step", "a", "b", "cnt")
-  }
-
-  /** [[bpeTrain]] with the merge LOOP on the driver: the sampled
-    * word-frequency vocabulary is collected ONCE (it is a distinct-word
-    * table — MBs at any corpus scale under the content-hash sample,
-    * the same bounded-collect contract as the Bloom build), the
-    * `numMerges` greedy merge rounds run locally over it, and the
-    * learned merge table comes back as a DataFrame ready to broadcast
-    * into [[bpeApply]]. Output and semantics are IDENTICAL to
-    * [[bpeTrain]] given the same vocabulary (spec-pinned): same
-    * adjacent-pair counting, same (count desc, (a, b) lexicographic)
-    * tie-break, same greedy left-to-right merge fold, same early stop
-    * when no word has two symbols left.
-    *
-    * This is the production-scale path [[bpeTrain]]'s merge-count
-    * ceiling points at: ONE Spark job (the vocabulary aggregation)
-    * instead of `numMerges` sequential jobs — a 30k-merge tokenizer
-    * costs one corpus scan plus seconds of driver arithmetic, not 30k
-    * scheduler round-trips. Symbol splitting is codepoint-based
-    * (matching Spark's `substring`) and the lexicographic tie-break
-    * compares UTF-16 code units, which agrees with UTF-8 binary order
-    * on ASCII vocabularies — non-BMP corpora should pin one engine's
-    * collation before relying on tie order.
-    *
-    * THE COLLECT IS BOUNDED, not merely "MBs in practice": the
-    * vocabulary is heavy-hitter pruned to the `maxVocab` most frequent
-    * words (ties by word, a total deterministic order) BEFORE it
-    * leaves the cluster, through a TakeOrderedAndProject partial top-k
-    * — never a global sort. Truncation contract (spec-pinned): with
-    * `maxVocab` >= the distinct-word count the output is IDENTICAL to
-    * the unpruned path; below it, training sees exactly the top-V
-    * head — the standard heavy-hitter practice (greedy BPE argmaxes
-    * are decided by high-frequency words; a tail word's pairs can only
-    * matter once its frequency rivals the head, at which point it IS
-    * the head). Driver memory and per-merge CPU are both O(maxVocab)
-    * regardless of corpus size.
-    */
-  def bpeTrainLocal(docs: DataFrame, numMerges: Int,
       textCol: String = "text", sampleFraction: Double = 1.0,
       maxVocab: Int = 1 << 20): DataFrame = {
     require(numMerges >= 1, s"numMerges=$numMerges must be >= 1")
@@ -861,8 +768,8 @@ object TextAnalysis {
     // words. The counts map after every step is EXACTLY the full
     // recount (each word's old pairs retracted, new pairs added), so
     // the argmax sequence — and therefore the merge table — is
-    // bit-identical to the rescan form (OpsSpec pins local-vs-
-    // distributed equivalence; the q213 oracle replays every step).
+    // bit-identical to the rescan form (OpsSpec pins it against a
+    // naive rescan BPE; the q213 oracle replays every step).
     val counts = scala.collection.mutable.HashMap[(String, String), Long]()
     val index =
       scala.collection.mutable.HashMap[(String, String),

@@ -2572,12 +2572,7 @@ object TrainingOps {
     QueryDef("q144_bpe_apply",
       (s, d) => {
         val docs = table(s, d, "documents")
-        // the merge table here is INPUT PLUMBING for the apply pass
-        // under test -- train with the driver-loop trainer (one vocab
-        // job instead of one Spark job per merge; output spec-pinned
-        // identical to bpeTrain, q128 still exercises the distributed
-        // trainer itself)
-        val merges = TextAnalysis.bpeTrainLocal(docs, 6).orderBy("step")
+        val merges = TextAnalysis.bpeTrain(docs, 6).orderBy("step")
           .collect().map(r => (r.getString(1), r.getString(2))).toSeq
         docs
           .select(col("doc_id"),
@@ -3857,7 +3852,8 @@ object TrainingOps {
 
     // Pareto concentration of supplier revenue (cents): exact integer
     // totals, one divide at the end; rank/cumulative windows run on the
-    // collapsed per-supplier relation.
+    // collapsed per-supplier relation, partitioned by value-radix
+    // bucket (the default 1024 buckets).
     QueryDef("q183_pareto_suppliers",
       (s, d) => graft.ops.Profile.paretoProfile(
           table(s, d, "lineitem").select(col("l_suppkey"),
@@ -3997,10 +3993,7 @@ object TrainingOps {
     QueryDef("q190_bpe_sampled",
       (s, d) => {
         val docs = table(s, d, "documents")
-        // q144's train-tier swap: same merge table from one vocab job
-        // (the sampled-training mode under test is the SAMPLE GATE +
-        // full-corpus apply, not the trainer's job structure)
-        val merges = TextAnalysis.bpeTrainLocal(docs, 4,
+        val merges = TextAnalysis.bpeTrain(docs, 4,
             sampleFraction = 0.5)
           .orderBy("step")
           .collect().map(r => (r.getString(1), r.getString(2))).toSeq
@@ -4087,14 +4080,12 @@ object TrainingOps {
              |    ORDER BY score DESC, m_cls) AS rk FROM scored)
              |WHERE rk = 1 ORDER BY doc_id""".stripMargin)),
 
-    // Bucketed Pareto tier (the billions-of-keys path): customer
-    // revenue concentration with the rank space value-radix bucketed —
-    // exact integer bucket arithmetic both engines replay; global
-    // ranks/cumulative shares equal q183's single-window form (the
-    // spec pins the equivalence; the oracle replays the BUCKETED
-    // construction end-to-end).
+    // Pareto at an explicit bucket count: customer revenue
+    // concentration with the rank space value-radix bucketed 64 ways —
+    // exact integer bucket arithmetic both engines replay; the oracle
+    // replays the BUCKETED construction end-to-end.
     QueryDef("q192_pareto_bucketed",
-      (s, d) => graft.ops.Profile.paretoProfileBucketed(
+      (s, d) => graft.ops.Profile.paretoProfile(
           table(s, d, "orders").select(col("o_custkey"),
             round(col("o_totalprice") * 100).cast("long").as("cents")),
           "o_custkey", "cents", buckets = 64)
@@ -5013,14 +5004,13 @@ object TrainingOps {
             |ORDER BY node""").stripMargin
       }),
 
-    // DRIVER-LOCAL BPE at production merge count: the corpus (documents
-    // word-BIGRAMS joined by '_', a ~900-word derived vocabulary rich
-    // enough to sustain 1000 real merges) is scanned ONCE for the
+    // BPE at production merge count: the corpus (documents word-BIGRAMS
+    // joined by '_', a ~900-word derived vocabulary rich enough to
+    // sustain 1000 real merges) is scanned ONCE for the
     // content-hash-sampled word-frequency table; the 1000 greedy merge
-    // rounds run on the driver — one Spark job instead of numMerges
-    // sequential jobs (the round-7 verdict's ask). The oracle replays
-    // the identical loop as ONE recursive CTE carrying the evolving
-    // vocabulary, so the full 1000-step merge sequence is hash-checked.
+    // rounds run on the driver. The oracle replays the identical loop
+    // as ONE recursive CTE carrying the evolving vocabulary, so the
+    // full 1000-step merge sequence is hash-checked.
     QueryDef("q213_bpe_local",
       (s, d) => {
         val docsB = table(s, d, "documents")
@@ -5039,7 +5029,7 @@ object TrainingOps {
           // duplicated subtrees; computed from parquet every run, so
           // nothing persists across bench/oracle invocations)
           .localCheckpoint(true)
-        TextAnalysis.bpeTrainLocal(docsB, 1000, sampleFraction = 0.5,
+        TextAnalysis.bpeTrain(docsB, 1000, sampleFraction = 0.5,
           maxVocab = 20000)
       },
       Some(bpeLocalOracleSql(1000, 0.5, maxVocab = 20000))),
@@ -5068,13 +5058,12 @@ object TrainingOps {
       },
       Some(linkageEmOracleSql(5))),
 
-    // Batched k-centers: same greedy farthest-point selection as q172
-    // (the batching is EXACTLY output-equivalent — spec-pinned — so
-    // the oracle is q172's unrolled selection), but k=8 at batch=3
-    // exercises multiple batch rounds with mid-batch threshold stops
-    // instead of one corpus pass per pick.
+    // k-centers at a small batch: same greedy farthest-point selection
+    // as q172 (the batch size never changes the output, so the oracle
+    // is q172's unrolled selection), but k=8 at batch=3 exercises
+    // multiple batch rounds with mid-batch threshold stops.
     QueryDef("q216_kcenters_batched",
-      (s, d) => Similarity.kCentersBatched(table(s, d, "embeddings"),
+      (s, d) => Similarity.kCenters(table(s, d, "embeddings"),
           8, batch = 3)
         .select(col("rk"), col("vec_id"), round(col("d2"), 5).as("d2"))
         .orderBy("rk"),
@@ -5897,9 +5886,7 @@ object TrainingOps {
     QueryDef("q241_tokenizer_fertility",
       (s, d) => {
         val docs = table(s, d, "documents")
-        // q144's train-tier swap: identical merge table from one vocab
-        // job (the entry under test is the fertility aggregation)
-        val merges = TextAnalysis.bpeTrainLocal(docs, 6).orderBy("step")
+        val merges = TextAnalysis.bpeTrain(docs, 6).orderBy("step")
           .collect().map(r => (r.getString(1), r.getString(2))).toSeq
         docs
           .select(col("lang"),
@@ -7854,7 +7841,7 @@ object TrainingOps {
     sb.toString
   }
 
-  /** DuckDB replay of [[graft.ops.TextAnalysis.bpeTrainLocal]] at a
+  /** DuckDB replay of [[graft.ops.TextAnalysis.bpeTrain]] at a
     * merge count no unrolled-CTE oracle could carry (q213 runs 1000):
     * ONE recursive CTE whose working table is the evolving sampled
     * vocabulary; each iteration re-derives the argmax pair from the

@@ -1596,6 +1596,50 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(shared > 0.5, s"only $shared of chunk hashes survived the edit")
   }
 
+  /** One greedy left-to-right BPE merge of (a, b) over a symbol list. */
+  private def naiveMerge(syms: Vector[String], a: String,
+      b: String): Vector[String] = {
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    for (s <- syms) {
+      if (out.nonEmpty && out.last == a && s == b)
+        out(out.length - 1) = a + b
+      else out += s
+    }
+    out.toVector
+  }
+
+  /** Naive reference BPE: recount every adjacent pair of the weighted
+    * vocabulary each step, take the (count desc, a asc, b asc) argmax,
+    * merge, and stop at `k` merges or when no word has two symbols.
+    */
+  private def naiveBpe(words: Seq[String],
+      k: Int): Seq[(Int, String, String, Long)] = {
+    var vocab: Map[Vector[String], Long] = words.groupBy(identity)
+      .map { case (w, ws) => w.split("").toVector -> ws.size.toLong }
+    val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var done = false
+    while (out.length < k && !done) {
+      val counts = scala.collection.mutable.Map[(String, String), Long]()
+      for ((syms, f) <- vocab; i <- 0 until syms.length - 1)
+        counts((syms(i), syms(i + 1))) =
+          counts.getOrElse((syms(i), syms(i + 1)), 0L) + f
+      if (counts.isEmpty) done = true
+      else {
+        val ((a, b), c) = counts.toSeq
+          .minBy { case ((a, b), c) => (-c, a, b) }
+        vocab = vocab.groupBy { case (syms, _) => naiveMerge(syms, a, b) }
+          .map { case (syms, m) => syms -> m.values.sum }
+        out += ((out.length + 1, a, b, c))
+      }
+    }
+    out.toSeq
+  }
+
+  private def mergeTable(
+      df: org.apache.spark.sql.DataFrame): Seq[(Int, String, String, Long)] =
+    df.orderBy("step").collect().map(r =>
+      (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+
   test("bpe training reproduces a naive driver-side BPE exactly") {
     val s2 = spark; import s2.implicits._
     // the classic Sennrich fixture, expressed as a corpus whose word
@@ -1603,43 +1647,18 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     val words = Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")
     val docs = Seq((0L, words.mkString(" "))).toDF("doc_id", "text")
-    val k = 5
-    val got = TextAnalysis.bpeTrain(docs, k).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-
-    // naive reference BPE over the same weighted vocabulary
-    var vocab: Map[Vector[String], Long] = words.groupBy(identity)
-      .map { case (w, ws) => w.split("").toVector -> ws.size.toLong }
-    def applyMerge(syms: Vector[String], a: String, b: String) = {
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      for (s <- syms) {
-        if (out.nonEmpty && out.last == a && s == b)
-          out(out.length - 1) = a + b
-        else out += s
-      }
-      out.toVector
-    }
-    val expect = (1 to k).map { step =>
-      val counts = scala.collection.mutable.Map[(String, String), Long]()
-      for ((syms, f) <- vocab; i <- 0 until syms.length - 1)
-        counts((syms(i), syms(i + 1))) =
-          counts.getOrElse((syms(i), syms(i + 1)), 0L) + f
-      val ((a, b), c) = counts.toSeq
-        .minBy { case ((a, b), c) => (-c, a, b) }
-      vocab = vocab.groupBy { case (syms, _) => applyMerge(syms, a, b) }
-        .map { case (syms, m) => syms -> m.values.sum }
-      (step, a, b, c)
-    }
-    assert(got.toSeq == expect, s"got ${got.toSeq}\nexpect $expect")
+    val got = mergeTable(TextAnalysis.bpeTrain(docs, 5))
+    val expect = naiveBpe(words, 5)
+    assert(got == expect, s"got $got\nexpect $expect")
 
     // bpeApply segments a held-out word with the learned merges the same
     // way the naive fold does
-    val merges = got.map(t => (t._2, t._3)).toSeq
+    val merges = got.map(t => (t._2, t._3))
     val seg = Seq(Tuple1("lowest")).toDF("w")
       .select(TextAnalysis.bpeApply(col("w"), merges).as("syms"))
       .first().getSeq[String](0)
     val naive = merges.foldLeft("lowest".split("").toVector) {
-      case (syms, (a, b)) => applyMerge(syms, a, b)
+      case (syms, (a, b)) => naiveMerge(syms, a, b)
     }
     assert(seg == naive, s"$seg vs $naive")
   }
@@ -1667,7 +1686,8 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(apply1("héé", Seq(("é", "é"))) == Seq("h", "éé"))
   }
 
-  test("driver-local bpe training equals the distributed merge loop") {
+  test("bpe training equals the naive BPE when sampled, exhausted and " +
+      "vocab-pruned") {
     val s2 = spark; import s2.implicits._
     val words = Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest") ++
@@ -1676,31 +1696,34 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     val docs = words.grouped(3).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
       .toSeq.toDF("doc_id", "text")
+    // the operator's md5 content gate, applied here on the driver
+    val draws = docs.select(col("text"),
+        Sampling.hashUnit(col("text"), "bpe:").as("u")).collect()
+      .map(r => (r.getString(0), r.getDouble(1)))
     for (frac <- Seq(1.0, 0.6)) {
-      val dist = TextAnalysis.bpeTrain(docs, 8, sampleFraction = frac)
-        .collect().map(r =>
-          (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-      val local = TextAnalysis.bpeTrainLocal(docs, 8,
-        sampleFraction = frac).collect().map(r =>
-          (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-      assert(dist.toSeq == local.toSeq,
-        s"frac=$frac\ndist=${dist.toSeq}\nlocal=${local.toSeq}")
+      val kept = draws.filter(_._2 < frac).map(_._1)
+      if (frac < 1.0) assert(kept.length < draws.length,
+        s"frac=$frac keeps every doc: the gate is not exercised")
+      val sampled = kept.toSeq.flatMap(_.split(" ")).filter(_.nonEmpty)
+      val got = mergeTable(
+        TextAnalysis.bpeTrain(docs, 8, sampleFraction = frac))
+      val expect = naiveBpe(sampled, 8)
+      assert(got == expect, s"frac=$frac\ngot=$got\nexpect=$expect")
     }
-    // exhaustion parity: ask for far more merges than the vocab holds
-    val distX = TextAnalysis.bpeTrain(docs, 100).count()
-    val localX = TextAnalysis.bpeTrainLocal(docs, 100).count()
-    assert(distX == localX && localX < 100,
-      s"exhaustion must stop both paths at the same step: $distX/$localX")
+    // exhaustion: ask for far more merges than the vocab holds
+    val exhausted = mergeTable(TextAnalysis.bpeTrain(docs, 100))
+    assert(exhausted == naiveBpe(words, 100) && exhausted.length < 100,
+      s"exhaustion must stop at the naive step: ${exhausted.length}")
     // truncation contract: maxVocab >= distinct words is EXACTLY the
     // unpruned path (6 distinct words here)...
-    val full = TextAnalysis.bpeTrainLocal(docs, 8).collect().toSeq
-    val atCount = TextAnalysis.bpeTrainLocal(docs, 8, maxVocab = 6)
+    val full = TextAnalysis.bpeTrain(docs, 8).collect().toSeq
+    val atCount = TextAnalysis.bpeTrain(docs, 8, maxVocab = 6)
       .collect().toSeq
     assert(full.map(_.toString) == atCount.map(_.toString))
     // ...and below it, training sees exactly the (freq desc, word asc)
     // top-V head: V=2 keeps {newest x6, low x5}, so the first merge
     // must come from "newest" (pair counts 6) over "low" (5)
-    val pruned = TextAnalysis.bpeTrainLocal(docs, 1, maxVocab = 2)
+    val pruned = TextAnalysis.bpeTrain(docs, 1, maxVocab = 2)
       .collect().map(r => (r.getString(1), r.getString(2), r.getLong(3)))
     assert(pruned.head._3 == 6L &&
       "newest".contains(pruned.head._1 + pruned.head._2),
@@ -3376,34 +3399,61 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
 
   test("batched k-centers equals sequential selection exactly") {
     val s2 = spark; import s2.implicits._
+    // plain-Scala farthest-point traversal: seed = min id, then the point
+    // with the largest min-d2 to the chosen set (ties to the smallest id),
+    // each d2 the operator's (n2 + c_n2) - 2·dot in doubles, index order
+    def dotD(a: Array[Float], b: Array[Float]): Double =
+      a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+    def farthestPoint(pts: Seq[(Long, Array[Float])],
+        k: Int): Seq[(Int, Long, Double)] = {
+      val seed = pts.minBy(_._1)
+      var chosen = Vector((seed._1, seed._2, 0.0))
+      var rest = pts.filterNot(_._1 == seed._1)
+      while (chosen.length < k && rest.nonEmpty) {
+        val (id, e, d2) = rest.map { case (id, e) =>
+          (id, e, chosen.map { case (_, c, _) =>
+            dotD(e, e) + dotD(c, c) - 2.0 * dotD(e, c) }.min)
+        }.minBy { case (id, _, d2) => (-d2, id) }
+        chosen :+= ((id, e, d2))
+        rest = rest.filterNot(_._1 == id)
+      }
+      chosen.zipWithIndex.map { case ((id, _, d2), i) => (i + 1, id, d2) }
+    }
+    def check(pts: Seq[(Long, Array[Float])], k: Int,
+        batches: Seq[Int]): Unit = {
+      val expect = farthestPoint(pts, k)
+      val fix = pts.toDF("vec_id", "embedding")
+      for (b <- batches) {
+        val got = Similarity.kCenters(fix, k, batch = b).collect()
+          .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+        assert(got == expect, s"k=$k batch=$b\nexpect=$expect\ngot=$got")
+      }
+    }
     // 40 deterministic pseudo-random-ish 3d points (integer lattice
-    // scramble, no RNG), plus the tie-heavy rectangle fixture — the
-    // threshold rule must survive ties by falling back to a new pass
-    val pts = (0 until 40).map { i =>
+    // scramble, no RNG)
+    check((0 until 40).map { i =>
       (i.toLong, Array(((i * 37) % 19).toFloat,
         ((i * 53) % 23).toFloat, ((i * 71) % 17).toFloat))
-    }
-    val fix = pts.toDF("vec_id", "embedding")
-    val seqSel = Similarity.kCenters(fix, 9).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    for (b <- Seq(1, 3, 8, 64)) {
-      val bat = Similarity.kCentersBatched(fix, 9, batch = b).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(bat == seqSel, s"batch=$b\nseq=$seqSel\nbat=$bat")
-    }
+    }, 9, Seq(1, 3, 8, 64))
+    // the tie-heavy rectangle fixture: the threshold rule must survive
+    // ties by falling back to a new pass
     val rect = Seq(
       (0L, Array(0f, 0f)), (1L, Array(10f, 0f)),
       (2L, Array(0f, 4f)), (3L, Array(10f, 4f)),
-      (4L, Array(1f, 0f))).toDF("vec_id", "embedding")
-    val seqR = Similarity.kCenters(rect, 5).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    for (b <- Seq(2, 3, 10)) {
-      val batR = Similarity.kCentersBatched(rect, 5, batch = b).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(batR == seqR, s"batch=$b\nseq=$seqR\nbat=$batR")
-    }
+      (4L, Array(1f, 0f)))
+    check(rect, 5, Seq(1, 3, 8, 64))
+    // a batch whose threshold T ties an outside point: batch 3 collects
+    // 1 (d2 64), 9 (41) and 2 (25, beating 3 on id), so T = 25; after 1
+    // is chosen, 9 falls to exactly 25 and 2 to 9, while 3 (outside the
+    // batch) stays at 25 and wins the id tie-break — accepting 9 at
+    // score == T would pick the wrong center
+    check(Seq((0L, Array(0f, 0f)), (1L, Array(8f, 0f)),
+      (2L, Array(5f, 0f)), (3L, Array(0f, 5f)), (9L, Array(5f, 4f))),
+      5, Seq(1, 3, 8, 64))
     // k past the corpus size returns every point, not an error
-    assert(Similarity.kCentersBatched(rect, 10, batch = 4).count() == 5)
+    check(rect, 10, Seq(1, 4))
+    assert(Similarity.kCenters(rect.toDF("vec_id", "embedding"), 10,
+      batch = 4).count() == 5)
   }
 
   test("group trend: exact slope/intercept and degenerate-x NULL") {
@@ -3576,10 +3626,10 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       .toDF("k", "v")
     val got = graft.ops.Profile.paretoProfile(fix, "k", "v")
       .orderBy("rk").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(3),
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(3),
         r.getDouble(4), r.getDouble(5)))
     assert(got.map(t => (t._1, t._2, t._3)).toSeq ==
-      Seq((1, "a", 80L), (2, "b", 15L), (3, "c", 5L)), got.mkString(","))
+      Seq((1L, "a", 80L), (2L, "b", 15L), (3L, "c", 5L)), got.mkString(","))
     assert(math.abs(got(0)._4 - 0.80) < 1e-12)
     assert(math.abs(got(1)._5 - 0.95) < 1e-12)
     assert(math.abs(got(2)._5 - 1.0) < 1e-12)
@@ -3588,22 +3638,28 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
   test("bucketed pareto equals the single-window form, ties included") {
     val s2 = spark; import s2.implicits._
     // deterministic mixed fixture: spread totals AND heavy exact ties
-    // (every tie group must stay rank-adjacent across bucket borders)
-    val rows = (1 to 200).map(i => (s"k$i", ((i * 37) % 13).toLong * 10 + 1))
+    // (every tie group must stay rank-adjacent across bucket borders),
+    // plus a few repeated keys so n_rows and totals aggregate
+    val rows = (1 to 200).map(i => (s"k$i", ((i * 37) % 13).toLong * 10 + 1)) ++
+      Seq(("k3", 40L), ("k3", 9L), ("k150", 500L))
+    // the single-window form in plain Scala: sort by (total desc, key
+    // asc), number the rows, keep a running sum, divide once at the end
+    val per = rows.groupBy(_._1).toSeq
+      .map { case (k, vs) => (k, vs.length.toLong, vs.map(_._2).sum) }
+      .sortBy { case (k, _, t) => (-t, k) }
+    val grand = per.map(_._3).sum
+    val cums = per.scanLeft(0L)(_ + _._3).tail
+    val expect = per.zip(cums).zipWithIndex.map {
+      case (((k, n, t), cum), i) =>
+        (i + 1L, k, n, t, t.toDouble / grand, cum.toDouble / grand)
+    }
     val fix = rows.toDF("k", "v")
-    def canon(df: org.apache.spark.sql.DataFrame) = df.orderBy("rk")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3),
-        math.round(r.getDouble(4) * 1e12), math.round(r.getDouble(5) * 1e12)))
-      .toSeq
-    val plain = graft.ops.Profile.paretoProfile(fix, "k", "v")
-      .withColumn("rk", col("rk").cast("long"))
-      .select("rk", "key", "n_rows", "total", "share", "cum_share")
     for (b <- Seq(1, 7, 64)) {
-      val bucketed = graft.ops.Profile.paretoProfileBucketed(fix, "k", "v", b)
-        .withColumn("rk", col("rk").cast("long"))
-        .select("rk", "key", "n_rows", "total", "share", "cum_share")
-      assert(canon(bucketed) == canon(plain), s"buckets=$b diverged")
+      val got = graft.ops.Profile.paretoProfile(fix, "k", "v", b)
+        .orderBy("rk").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getDouble(4), r.getDouble(5))).toSeq
+      assert(got == expect, s"buckets=$b diverged\ngot=$got")
     }
   }
 

@@ -611,17 +611,24 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   test("bucketed pareto: key-grain windows partition by bucket; only " +
       "collapsed grains hit a single partition") {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
-      .select(org.apache.spark.sql.functions.col("l_suppkey"),
-        org.apache.spark.sql.functions.col("l_quantity"))
-    val df = Profile.paretoProfileBucketed(li, "l_suppkey", "l_quantity", 64)
-    val p = plan(df)
-    // the per-key rank/cumsum windows must run partitioned by the radix
-    // bucket — a regression to the global-window form would plan the
-    // key-grain Sort+Window downstream of an Exchange SinglePartition
-    assert("(?i)hashpartitioning\\(__b".r.findAllIn(p).nonEmpty, p)
-    // single-partition exchanges exist only for the collapsed grains
-    // (global bounds agg + the <= buckets+1 offset rollup)
-    assert("Exchange SinglePartition".r.findAllIn(p).size <= 3, p)
+    // q192's explicit bucket count and q183's default one
+    val at64 = Profile.paretoProfile(
+      li.select(col("l_suppkey"), col("l_quantity")),
+      "l_suppkey", "l_quantity", 64)
+    val atDefault = Profile.paretoProfile(
+      li.select(col("l_suppkey"),
+        round(col("l_extendedprice") * 100).cast("long").as("cents")),
+      "l_suppkey", "cents")
+    for (df <- Seq(at64, atDefault)) {
+      val p = plan(df)
+      // the per-key rank/cumsum windows must run partitioned by the radix
+      // bucket — a regression to the global-window form would plan the
+      // key-grain Sort+Window downstream of an Exchange SinglePartition
+      assert("(?i)hashpartitioning\\(__b".r.findAllIn(p).nonEmpty, p)
+      // single-partition exchanges exist only for the collapsed grains
+      // (global bounds agg + the <= buckets+1 offset rollup)
+      assert("Exchange SinglePartition".r.findAllIn(p).size <= 3, p)
+    }
   }
 
   test("expanding z-scores: one key window carries all three sums") {

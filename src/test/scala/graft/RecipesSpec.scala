@@ -119,7 +119,7 @@ class RecipesSpec extends AnyFunSuite with SparkTestBase {
 
   test("recipe 2: tokenizer training + application — BPE merges " +
       "reassemble every word exactly") {
-    val merges = TextAnalysis.bpeTrainLocal(docs, numMerges = 40)
+    val merges = TextAnalysis.bpeTrain(docs, numMerges = 40)
       .orderBy("step").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     assert(merges.nonEmpty, "training must learn merges on real text")
