@@ -503,134 +503,109 @@ object Dedup {
       Seq("fp")).distinct()
 
   /** Connected components over an undirected candidate-pair edge list
-    * (id1, id2): returns (id, component) where `component` is the smallest
-    * id reachable from `id`. This is what turns pairwise near-dup output
-    * (MinHash/SimHash/Jaccard candidates) into deduplicatable CLUSTERS
-    * with a canonical representative (the component label itself).
+    * `(id1, id2)`: returns `(id, label)` with `label` the smallest id
+    * reachable from `id`. This turns pairwise near-dup output (MinHash,
+    * SimHash, Jaccard candidates) into clusters whose label is the
+    * canonical member.
     *
-    * Iterative min-label propagation: each round every node takes the min
-    * of its own label and its neighbors' labels — one equi-shuffle per
-    * round, converging in O(max graph distance to the component's minimum)
-    * rounds. Near-dup clusters have tiny diameter, so 3-5 rounds in
-    * practice; a graph whose diameter exceeds `propagationRounds` (an
-    * adversarial duplicate chain) switches automatically to
-    * [[starComponents]] — large-star/small-star contraction, O(log n)
-    * rounds regardless of diameter — instead of burning a linear round
-    * budget. `localCheckpoint` cuts the growing lineage each round so plan
-    * size stays constant, and each round releases the previous round's
-    * checkpointed blocks — iterative state must not outlive the iteration
-    * (RDD-level storage is invisible to `spark.catalog.clearCache()`).
+    * Min-label propagation: each round every node takes the min of its
+    * own and its neighbors' labels in one shuffle, and the round's own
+    * `prev` column shows whether any label changed. Near-dup clusters
+    * have a small diameter, so this converges in a few rounds. A graph
+    * still changing after `min(propagationRounds, maxIter)` rounds (a long
+    * duplicate chain) goes to [[starComponents]] instead, which needs
+    * O(log n) rounds whatever the diameter.
+    *
+    * Runs Spark jobs while the plan is built: the edge checkpoint, one
+    * checkpoint and one emptiness check per round, and on the star path
+    * [[starComponents]]' jobs. The returned plan reads the final round's
+    * checkpoint, which stays cached for it; every other checkpoint is
+    * released before return.
     */
   def components(pairs: DataFrame, maxIter: Int = 50,
       propagationRounds: Int = 8): DataFrame = {
     val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
       .localCheckpoint(true)
-    var labels = edges.select(col("src").as("id")).distinct()
+    val init = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    var it = 0
-    var converged = false
-    val budget = math.min(propagationRounds, maxIter)
-    while (!converged && it < budget) {
-      val nbrLabels = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("label"),
-          lit(null).cast("long").as("prev"))
-      // each node's own row carries its previous label through the min
-      // aggregation, so convergence (no label changed) falls out of the
-      // SAME shuffle — no extra join per round
-      val merged = labels
-        .select(col("id"), col("label"), col("label").as("prev"))
-        .union(nbrLabels)
-        .groupBy("id")
-        .agg(min("label").as("label"), min("prev").as("prev"))
-        .localCheckpoint(true)
-      converged =
-        merged.where(col("label") =!= col("prev")).isEmpty
-      ckptStorage(labels).foreach(_.unpersist(blocking = false))
-      labels = merged.select("id", "label")
-      it += 1
+    val r = Rounds.run(init, math.min(propagationRounds, maxIter), Seq(edges),
+        done = (_, next) => next.where(col("label") =!= col("prev")).isEmpty) {
+      (labels, _) =>
+        val nbrLabels = edges
+          .join(labels.withColumnRenamed("id", "dst"), "dst")
+          .select(col("src").as("id"), col("label"),
+            lit(null).cast("long").as("prev"))
+        // each node's own row carries its previous label through the min,
+        // so convergence falls out of the same shuffle
+        labels
+          .select(col("id"), col("label"), col("label").as("prev"))
+          .union(nbrLabels)
+          .groupBy("id")
+          .agg(min("label").as("label"), min("prev").as("prev"))
     }
-    ckptStorage(edges).foreach(_.unpersist(blocking = false))
-    if (converged) labels
+    if (r.done) r.state.select("id", "label")
     else {
-      // diameter > propagation budget: hand the ORIGINAL pairs to the
-      // logarithmic scheme (propagation state is released first)
-      ckptStorage(labels).foreach(_.unpersist(blocking = false))
+      Rounds.release(r.state)
       starComponents(pairs, maxIter)
     }
   }
 
-  private def ckptStorage(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
-
-  /** Connected components by alternating large-star/small-star contraction
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014): large-star hangs every larger neighbor off the minimum of
-    * each node's neighborhood, small-star hangs the smaller neighbors off
-    * it, and the alternation converges to min-rooted stars in O(log n)
-    * rounds WHATEVER the graph diameter — the scheme for graphs that defeat
-    * min-label propagation (long duplicate chains). Each round is two
-    * grouped aggregations + a distinct; the edge set never grows beyond the
-    * input (both operations only re-point edges at smaller ids). Still
-    * converge-or-throw at `maxIter`: with O(log n) rounds, 50 covers any
-    * physically storable graph, so hitting the bound means a bug, not a big
-    * input.
+  /** Connected components by alternating large-star/small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC 2014) over `(id1, id2)` pairs; returns `(id, label)`
+    * like [[components]]. Large-star hangs every larger neighbor off the
+    * minimum of each node's neighborhood, small-star hangs the smaller
+    * neighbors off it, and the alternation reaches min-rooted stars in
+    * O(log n) rounds whatever the diameter. The edge set never grows
+    * beyond the input. Not converging within `maxIter` rounds throws: at
+    * O(log n) rounds that means a bug, not a big input.
+    *
+    * Runs Spark jobs while the plan is built: one checkpoint of the edge
+    * set per round and three fixed-point checks per round. The returned
+    * plan reads the final round's checkpoint, which stays cached for it.
     */
   def starComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // canonical (hi, lo) direction, self-loops dropped
-    var edges = pairs
+    val init = pairs
       .select(greatest(col("id1"), col("id2")).as("u"),
         least(col("id1"), col("id2")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      // large-star: group the symmetric neighborhood of u; every neighbor
-      // LARGER than u re-points at m = min(N(u) ∪ {u})
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val withMin = sym
-        .join(sym.groupBy("u").agg(min("v").as("mn")), "u")
-        .select(col("u"), col("v"), least(col("u"), col("mn")).as("m"))
-      val large = withMin.where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-      // small-star: per hub u (edges already point (hi, lo)), every smaller
-      // neighbor and u itself re-point at m = min of the smaller neighbors
-      val mn = large.groupBy("u").agg(min("v").as("m"))
-      val small = large.join(mn, "u")
-        .where(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mn.select(col("u"), col("m").as("v")))
-        .distinct()
-        .localCheckpoint(true)
-      // fixed point: the round re-derived exactly the same edge set
-      converged = small.count() == edges.count() &&
-        small.exceptAll(edges).isEmpty
-      ckptStorage(edges).foreach(_.unpersist(blocking = false))
-      edges = small
-      it += 1
+    // fixed point: the round re-derived exactly the same edge set
+    val r = Rounds.run(init, maxIter, done = (prev, next) =>
+        next.count() == prev.count() && next.exceptAll(prev).isEmpty) {
+      (edges, _) =>
+        // large-star: group the symmetric neighborhood of u; every
+        // neighbor larger than u re-points at m = min(N(u) ∪ {u})
+        val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+        val withMin = sym
+          .join(sym.groupBy("u").agg(min("v").as("mn")), "u")
+          .select(col("u"), col("v"), least(col("u"), col("mn")).as("m"))
+        val large = withMin.where(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .where(col("u") =!= col("v"))
+          .distinct()
+        // small-star: per hub u (edges point (hi, lo)), every smaller
+        // neighbor and u itself re-point at m = min of the smaller neighbors
+        val mn = large.groupBy("u").agg(min("v").as("m"))
+        large.join(mn, "u")
+          .where(col("v") =!= col("m"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .union(mn.select(col("u"), col("m").as("v")))
+          .distinct()
     }
-    if (!converged) {
-      ckptStorage(edges).foreach(_.unpersist(blocking = false))
+    if (!r.done) {
+      Rounds.release(r.state)
       throw new IllegalStateException(
         s"starComponents did not converge in $maxIter rounds — with " +
           "O(log n) convergence this indicates a bug, not a large input")
     }
-    // converged state is a star per component: (member, min) edges. Labels
-    // = members plus the roots labeling themselves.
-    val labels = edges.select(col("u").as("id"), col("v").as("label"))
+    // a star per component: (member, root) edges, plus each root
+    // labeling itself
+    val edges = r.state
+    edges.select(col("u").as("id"), col("v").as("label"))
       .union(edges.select(col("v").as("id"), col("v").as("label")).distinct())
-    val out = labels.localCheckpoint(true)
-    ckptStorage(edges).foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** The dedup endgame: drop every non-canonical member of each near-dup

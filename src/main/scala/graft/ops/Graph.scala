@@ -3,120 +3,123 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Link-graph analysis for corpus curation: PageRank, the standard
-  * authority signal a web-scale training pipeline derives from its crawl
-  * graph (source/host quality weighting, canonical-document choice inside
-  * syndication clusters). Declarative and iterative like
-  * [[Dedup.components]] — per iteration ONE equi-shuffle of contributions
-  * plus a tiny global aggregate for the dangling mass; `localCheckpoint`
-  * holds plan size constant and each round releases the previous round's
-  * blocks. Rounds are fixed (power iteration), so cost is
-  * `iters × (|E| shuffle)` however large the graph.
+/** Link-graph analysis for corpus curation: PageRank, label propagation,
+  * co-citation, triangles, k-core peeling and k-hop distances. The
+  * iterative operators run their rounds through [[Rounds]]: one
+  * checkpoint per round, the round before it released, so a round's plan
+  * stays one step deep.
   */
 object Graph {
 
-  /** Power-iteration PageRank over directed `(src, dst)` edges (parallel
-    * edges collapse — the classic unweighted formulation). Every node
-    * starts at 1/N; each round
-    * `rank' = (1-d)/N + d * (Σ in-contribs + danglingMass/N)`,
-    * where nodes without out-edges spread their mass uniformly. Ranks sum
-    * to 1 every round (spec-pinned). Returns `(node, rank)`.
+  /** Power-iteration PageRank over directed `(src, dst)` edges; returns
+    * `(node: bigint, rank: double)` for every node with an edge. Parallel
+    * edges collapse (the classic unweighted formulation). With damping `d`
+    * each round sets `rank' = t + d·(Σ in-contributions + dangling)`,
+    * where nodes without out-edges hand their mass back like the teleport:
+    *  - global (`seeds = None`): ranks start at `1/N`, `t = (1−d)/N`, and
+    *    every node gets `dangling mass / N`;
+    *  - personalized: `seeds` is a one-column `node` relation. Each seed in
+    *    the graph has restart share `s = 1/|S|`, every other node 0; ranks
+    *    start at `s`, `t = (1−d)·s`, and every node gets
+    *    `dangling mass · s`, so nodes the seeds cannot reach end at 0. The
+    *    seed set must intersect the graph.
+    * Ranks sum to 1 every round in both modes.
+    *
+    * Runs Spark jobs while the plan is built: the edge and node
+    * checkpoints, the node (or seed) count and one checkpoint per round.
+    * The returned plan reads the final round's checkpoint, which stays
+    * cached for it; every other checkpoint is released before return.
     */
-  def pageRank(edges: DataFrame, iters: Int = 5,
-      damping: Double = 0.85): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
+      seeds: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     val uniq = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().localCheckpoint(true)
     val outDeg = uniq.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nodes = uniq.select(col("src").as("node"))
+    // degree rides the node relation, so a round needs no join on outDeg
+    val withDeg = uniq.select(col("src").as("node"))
       .union(uniq.select(col("dst").as("node"))).distinct()
-      // degree rides the rank relation so the per-iteration contribution
-      // needs no extra join against outDeg
       .join(outDeg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"))
-      .localCheckpoint(true)
-    val n = nodes.count().toDouble
-    var ranks = nodes.withColumn("rank", lit(1.0) / n)
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      // dangling mass rides the round's plan as a broadcast one-row
-      // aggregate instead of a driver `.head` action: one Spark job per
-      // round (the checkpoint materialization), not two — the scalar's
-      // value and the IEEE arithmetic consuming it are unchanged
+    val deg = coalesce(col("deg"), lit(0L)).as("deg")
+    val nodes = seeds.fold(withDeg.select(col("node"), deg)) { s =>
+      withDeg.join(s.select(col("node").cast("long")).distinct()
+          .withColumn("__seed", lit(1)), Seq("node"), "left")
+        .select(col("node"), deg,
+          coalesce(col("__seed"), lit(0)).as("is_seed"))
+    }.localCheckpoint(true)
+    // (node relation, teleport term, dangling share, starting rank)
+    val (base, teleport, share, start) = seeds match {
+      case None =>
+        val n = nodes.count().toDouble
+        (nodes, lit((1.0 - damping) / n), col("__dang") / lit(n),
+          lit(1.0) / n)
+      case Some(_) =>
+        val nSeeds = nodes.where(col("is_seed") === 1).count().toDouble
+        if (nSeeds == 0) Rounds.release(uniq, nodes)
+        require(nSeeds > 0, "seed set must intersect the graph")
+        (nodes.select(col("node"), col("deg"), when(col("is_seed") === 1,
+            lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("s")),
+          lit(1.0 - damping) * col("s"), col("__dang") * col("s"), col("s"))
+    }
+    val keep = base.columns.map(col).toSeq
+    Rounds.run(base.withColumn("rank", start), iters,
+        Seq(uniq, nodes)) { (ranks, _) =>
+      // the dangling mass is a broadcast one-row aggregate inside the
+      // round's plan, not a driver action: one job per round
       val dangling = ranks.where(col("deg") === 0)
         .agg(coalesce(sum("rank"), lit(0.0)).as("__dang"))
       val contribs = uniq
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("rank") / col("deg")).as("contrib"))
-      val next = nodes
-        .join(contribs, Seq("node"), "left")
+      base.join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
-        .select(col("node"), col("deg"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
-              col("__dang") / lit(n))).as("rank"))
-        .localCheckpoint(true)
-      ckptStorage(ranks).foreach(_.unpersist(blocking = false))
-      ranks = next
-    }
-    val out = ranks.select("node", "rank")
-    ckptStorage(uniq).foreach(_.unpersist(blocking = false))
-    ckptStorage(nodes).foreach(_.unpersist(blocking = false))
-    out
+        .select(keep :+ (teleport + lit(damping) *
+          (coalesce(col("contrib"), lit(0.0)) + share)).as("rank"): _*)
+    }.state.select("node", "rank")
   }
 
-  /** Semi-supervised label propagation (Zhu & Ghahramani 2002 majority
-    * variant): seed nodes are CLAMPED to their label; every round each
-    * unlabeled node adopts the most common label among its in-neighbors
-    * (ties to the smallest label — deterministic). Pass symmetrized edges
-    * for the undirected formulation. Returns `(node, label)` with `label`
-    * null for nodes no seed ever reached.
+  /** Semi-supervised label propagation (Zhu & Ghahramani 2002, majority
+    * variant) over `(src, dst)` edges and `(node, label)` seeds. Seed
+    * nodes are clamped to their label; every round each other node adopts
+    * the most common label among its in-neighbors, ties to the smallest
+    * label. Pass symmetrized edges for the undirected formulation.
+    * Returns `(node: bigint, label: bigint)`, `label` null for nodes no
+    * seed reached within `iters` rounds.
     *
-    * Shape at 100 TB: per round ONE `|E|` equi-shuffle (edges ⋈ current
-    * labels) + a vote aggregation whose grain is (node, label) — bounded
-    * by `|V| × |labels|` — + an argmax window on that collapsed relation.
-    * `localCheckpoint` pins plan growth exactly as [[pageRank]] does.
+    * Runs Spark jobs while the plan is built: the edge checkpoint and one
+    * checkpoint per round. The returned plan reads the final round's
+    * checkpoint, which stays cached for it; the edge checkpoint is
+    * released before return.
     */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
-    import org.apache.spark.sql.expressions.Window
     val uniq = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().localCheckpoint(true)
     val nodes = uniq.select(col("src").as("node"))
       .union(uniq.select(col("dst").as("node"))).distinct()
     val seed = seeds.select(col("node").cast("long"),
       col("label").cast("long").as("seed_label"))
-    var labels = nodes.join(seed, Seq("node"), "left")
-      .select(col("node"), col("seed_label"),
-        col("seed_label").as("label"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    val init = nodes.join(seed, Seq("node"), "left")
+      .select(col("node"), col("seed_label"), col("seed_label").as("label"))
+    Rounds.run(init, iters, Seq(uniq)) { (labels, _) =>
       val votes = uniq
         .join(labels.where(col("label").isNotNull)
           .select(col("node").as("src"), col("label").as("cand")), "src")
         .groupBy(col("dst").as("node"), col("cand"))
         .agg(count(lit(1)).as("votes"))
-      // argmax by (votes desc, cand asc) as ONE struct-max partial
-      // aggregation (the naiveBayes argmax trick) instead of a
-      // row_number window — same winner, but the exchange carries
-      // map-side-combined maxima and no per-partition sort runs
+      // argmax by (votes desc, cand asc) as one struct-max aggregation:
+      // the exchange carries map-side-combined maxima, no window sort
       val best = votes
         .groupBy("node")
         .agg(max(struct(col("votes"), (-col("cand")).as("nc"))).as("m"))
         .select(col("node"), (-col("m.nc")).as("cand"))
-      val next = labels.join(best, Seq("node"), "left")
+      labels.join(best, Seq("node"), "left")
         .select(col("node"), col("seed_label"),
           coalesce(col("seed_label"), col("cand"), col("label"))
             .as("label"))
-        .localCheckpoint(true)
-      ckptStorage(labels).foreach(_.unpersist(blocking = false))
-      labels = next
-    }
-    val out = labels.select("node", "label")
-    ckptStorage(uniq).foreach(_.unpersist(blocking = false))
-    out
+    }.state.select("node", "label")
   }
 
   /** Co-citation graph: weight(u, v) = number of documents that cite BOTH
@@ -211,93 +214,19 @@ object Graph {
           (col("deg") * (col("deg") - 1))).as("coeff"))
   }
 
-  /** Personalized (topic-sensitive) PageRank: teleport mass lands ONLY
-    * on the seed set (uniformly), so ranks measure proximity to the
-    * seeds instead of global authority — "related to these trusted
-    * hosts / this user's interests", the standard related-items and
-    * trust-propagation ranking. Dangling mass likewise returns to the
-    * seeds (the personalization vector IS the restart distribution),
-    * and ranks sum to 1 over the graph each round. Nodes unreachable
-    * from the seed set converge to rank 0.
+  /** Fixed-round k-core peeling: `rounds` times, delete the nodes whose
+    * degree in the current subgraph is below `k`, with their edges. At
+    * convergence every surviving node has degree ≥ k in the surviving
+    * subgraph; with a fixed budget the result is the round-`rounds` peel,
+    * deterministic and SQL-replayable. Edges may be duplicated or
+    * arbitrarily oriented; self-loops drop; node ids must be numeric
+    * (string ids would cast to NULL and empty the graph). Returns
+    * `(node: bigint, deg: bigint)`: the surviving nodes with their degree
+    * in the final peeled subgraph.
     *
-    * `seeds` is a one-column (`node`) relation; seeds absent from the
-    * graph are ignored, and the seed set must intersect the graph.
-    *
-    * Same shape as [[pageRank]] at 100 TB: per iteration one |E|
-    * equi-shuffle + a node-grain agg, localCheckpoint chain releasing
-    * superseded rounds; the restart vector rides the node relation as
-    * a 0/(1/|S|) column, costing no extra join per round.
-    */
-  def pageRankPersonalized(edges: DataFrame, seeds: DataFrame,
-      iters: Int = 5, damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"iters=$iters must be >= 1")
-    val uniq = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct().localCheckpoint(true)
-    val outDeg = uniq.groupBy("src").agg(count(lit(1)).as("deg"))
-    val seedSet = seeds.select(col("node").cast("long")).distinct()
-    val nodes0 = uniq.select(col("src").as("node"))
-      .union(uniq.select(col("dst").as("node"))).distinct()
-      .join(outDeg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .join(seedSet.withColumn("__seed", lit(1)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"),
-        coalesce(col("__seed"), lit(0)).as("is_seed"))
-      .localCheckpoint(true)
-    val nSeeds = nodes0.where(col("is_seed") === 1).count().toDouble
-    require(nSeeds > 0, "seed set must intersect the graph")
-    val nodes = nodes0.withColumn("s",
-      when(col("is_seed") === 1, lit(1.0 / nSeeds)).otherwise(lit(0.0)))
-    var ranks = nodes.withColumn("rank", col("s"))
-      .select("node", "deg", "s", "rank").localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      // in-plan broadcast dangling scalar — see [[pageRank]]'s round loop
-      val dangling = ranks.where(col("deg") === 0)
-        .agg(coalesce(sum("rank"), lit(0.0)).as("__dang"))
-      val contribs = uniq
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("deg")).as("contrib"))
-      val next = nodes
-        .join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("deg"), col("s"),
-          (lit(1.0 - damping) * col("s") +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
-              col("__dang") * col("s"))).as("rank"))
-        .localCheckpoint(true)
-      ckptStorage(ranks).foreach(_.unpersist(blocking = false))
-      ranks = next
-    }
-    val out = ranks.select("node", "rank")
-    ckptStorage(uniq).foreach(_.unpersist(blocking = false))
-    ckptStorage(nodes0).foreach(_.unpersist(blocking = false))
-    out
-  }
-
-  /** Fixed-round k-core peeling: repeatedly delete nodes whose degree in
-    * the CURRENT subgraph is < k (and their edges), `rounds` times — the
-    * standard density filter (the k-core is where spam rings, scraper
-    * farms, and genuinely dense communities live; the 1-core just drops
-    * leaves). At convergence (enough rounds) every surviving node has
-    * deg ≥ k in the surviving subgraph; with a fixed round budget the
-    * result is the round-`rounds` peel — deterministic and exactly
-    * SQL-replayable, like [[labelPropagation]]'s fixed-iteration
-    * contract. Peeling depth in practice is small (real graphs shed
-    * low-degree shells fast); callers needing certified convergence can
-    * compare two consecutive rounds' outputs.
-    *
-    * Input edges may be duplicated or arbitrarily oriented; self-loops
-    * drop; node ids must be numeric ([[triangles]]' contract — string
-    * ids would cast to NULL and silently empty the graph).
-    *
-    * Returns `(node, deg)` — the surviving nodes with their degree in
-    * the FINAL peeled subgraph.
-    *
-    * Shape at 100 TB: per round, one degree aggregation (|E| shuffle) +
-    * two semi-joins restricting edges to surviving endpoints — all
-    * hash-partitioned on node keys, nothing driver-side; each round's
-    * edge set localCheckpoints and the previous round's blocks release,
-    * so the plan does not grow with `rounds` (the [[pageRank]]
-    * discipline). Edge count is non-increasing every round.
+    * Runs Spark jobs while the plan is built: one checkpoint of the edge
+    * set and one per round. The returned plan reads the final round's
+    * checkpoint, which stays cached for it.
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
@@ -308,42 +237,34 @@ object Graph {
         s"kCorePeel: column '$c' must be numeric (got ${dt.simpleString}); " +
           "dictionary-encode string node ids before calling")
     }
-    var e = edges.select(least(col("src"), col("dst")).cast("long").as("u"),
+    val init = edges.select(least(col("src"), col("dst")).cast("long").as("u"),
         greatest(col("src"), col("dst")).cast("long").as("v"))
       .where(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val deg = e.select(col("u").as("n"))
+    val e = Rounds.run(init, rounds) { (e, _) =>
+      val keep = e.select(col("u").as("n"))
         .unionAll(e.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("deg"))
-      val keep = deg.where(col("deg") >= k).select("n")
-      val next = e
-        .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
+        .where(col("deg") >= k).select("n")
+      e.join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
-        .localCheckpoint(true)
-      ckptStorage(e).foreach(_.unpersist(blocking = false))
-      e = next
-    }
-    val out = e.select(col("u").as("node"))
+    }.state
+    e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-    out
   }
 
-  /** BFS shortest-path distances (in hops) from a seed set, out to
-    * `maxHops` — the influence-radius / contamination-blast-radius
-    * query ("everything within 3 links of a known-bad host"). Treats
-    * the graph as UNDIRECTED; returns `(node, dist)` for every node
-    * reached, dist 0 for the seeds themselves. Nodes beyond `maxHops`
-    * (or disconnected) are absent. Deterministic: a node's dist is its
-    * BFS layer — the minimum hop count — independent of traversal
-    * order.
+  /** BFS distances in hops from a seed set (`node`), out to `maxHops`,
+    * over `(src, dst)` edges read as undirected. Returns
+    * `(node: bigint, dist: int)` for every node reached, dist 0 for the
+    * seeds; nodes beyond `maxHops` or disconnected are absent. A node's
+    * dist is its BFS layer, independent of traversal order. Hop `h` joins
+    * the layer `dist = h − 1` against the adjacency and appends the
+    * unvisited endpoints, so its cost tracks the frontier, not the graph.
     *
-    * Shape at 100 TB: per hop, ONE equi-join of the FRONTIER (not the
-    * visited set, not the corpus) against the adjacency relation plus
-    * one anti-join against visited — cost tracks the frontier's edge
-    * boundary, the [[kCorePeel]] localCheckpoint chain caps lineage,
-    * and an exhausted frontier makes remaining rounds no-ops.
+    * Runs Spark jobs while the plan is built: the adjacency checkpoint
+    * and one checkpoint of `dist` per hop. The returned plan reads the
+    * final hop's checkpoint, which stays cached for it; the adjacency is
+    * released before return.
     */
   def kHopDistances(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
@@ -354,36 +275,14 @@ object Graph {
     val adj = dir
       .unionAll(dir.select(col("v").as("u"), col("u").as("v")))
       .distinct().localCheckpoint(true)
-    var dist = seeds.select(col("node").cast("long").as("node"))
+    val init = seeds.select(col("node").cast("long").as("node"))
       .distinct().withColumn("dist", lit(0))
-      .localCheckpoint(true)
-    var frontier = dist.select("node")
-    var prevNext: Option[org.apache.spark.sql.DataFrame] = None
-    for (h <- 1 to maxHops) {
-      val next = frontier
-        .join(adj, frontier("node") === adj("u"))
+    Rounds.run(init, maxHops, Seq(adj)) { (dist, h) =>
+      dist.unionAll(dist.where(col("dist") === h - 1)
+        .join(adj, col("node") === col("u"))
         .select(col("v").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
-        .withColumn("dist", lit(h))
-        .localCheckpoint(true)
-      val merged = dist.unionAll(next).localCheckpoint(true)
-      ckptStorage(dist).foreach(_.unpersist(blocking = false))
-      // the previous frontier layer is merged into dist by now
-      prevNext.flatMap(ckptStorage)
-        .foreach(_.unpersist(blocking = false))
-      prevNext = Some(next)
-      dist = merged
-      frontier = next.select("node")
-    }
-    // dist is an eager localCheckpoint: safe to release its inputs
-    ckptStorage(adj).foreach(_.unpersist(blocking = false))
-    prevNext.flatMap(ckptStorage).foreach(_.unpersist(blocking = false))
-    dist
+        .withColumn("dist", lit(h)))
+    }.state
   }
-
-  private def ckptStorage(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
 }

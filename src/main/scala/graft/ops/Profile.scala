@@ -548,7 +548,7 @@ object Profile {
     * Shape at 100 TB: ONE aggregation to the variant grain (a handful
     * of rows) + a broadcast of the control row. Nothing else. The
     * control-presence guard is one bounded job over that variant-grain
-    * aggregate (the [[graft.ops.Graph.pageRankPersonalized]] seed-guard
+    * aggregate (the seeded [[graft.ops.Graph.pageRank]] seed-guard
     * pattern): a typo'd control label fails LOUDLY instead of
     * cross-joining every arm against an empty control row and
     * returning "no variants".

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * [[cosineTopK]] is the exact brute-force top-k (queries × candidates,
   * one broadcast) that every approximate tier is tested against.
   * [[lshBuckets]]/[[lshTopK]] bucket the corpus by deterministic
-  * random-hyperplane signatures so scoring runs only within buckets. The
-  * IVF/PQ family is one [[VectorIndex]] value (an optional coarse
-  * quantizer, an optional product-quantizer code table), built by
+  * random-hyperplane signatures so scoring runs only within a query's
+  * bucket and its Hamming-1 neighbors. The IVF/PQ family is one
+  * [[VectorIndex]] value (an optional coarse quantizer, an optional
+  * product-quantizer code table), built by
   * [[ivfIndex]], [[pqIndex]], [[ivfPqIndex]] or [[ivfPqResidualIndex]] and
   * queried by the one [[search]]. All arithmetic is
   * cast-to-double-then-sum in array order, which is bit-identical across
@@ -148,41 +149,19 @@ object Similarity {
     corpus.withColumn("bucket", bucket)
   }
 
-  /** Approximate top-k: exact cosine ranking restricted to same-bucket
-    * candidates. Recall trades off against `numPlanes`. Both sides bucket
-    * narrowly ([[lshBuckets]] is a projection — the query side buckets
-    * just the query rows, never a second corpus pass), so the whole
-    * operator is one broadcast join + per-query ranking.
+  /** Multi-probe hyperplane-LSH top-k (Lv et al. 2007) of `queries`
+    * against `corpus`, both `(vec_id, embedding)`: each query probes its
+    * own sign-bucket ([[lshBuckets]]) plus every bucket one hyperplane sign
+    * away, so near misses one plane off are recovered without more hash
+    * tables. Candidates rank by exact cosine; returns
+    * `(query_id, neighbor_id, cos, rk)`, the `k` best per query, ties to
+    * the lowest neighbor_id, never the query itself. The `numPlanes + 1`
+    * probes per query expand on the broadcast query side; the corpus is
+    * bucketed once, by a narrow projection.
+    *
+    * Runs no Spark job while the plan is built and caches nothing.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      numPlanes: Int, dims: Int): DataFrame = {
-    val corpusB = lshBuckets(corpus, numPlanes, dims)
-    val queryB = lshBuckets(
-      queries.select(col("vec_id").as("query_id"), col("embedding")),
-      numPlanes, dims)
-      .select(col("query_id"), col("embedding").as("qv"),
-        col("bucket").as("qbucket"))
-    val scored = corpusB.join(broadcast(queryB),
-      col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("qv"), col("embedding")).as("cos"))
-    nearest(scored, k, "cos")
-  }
-
-  /** Multi-probe hyperplane LSH (Lv et al. 2007): each query probes its
-    * own sign-bucket PLUS every Hamming-1 neighbor bucket (one hyperplane
-    * sign flipped), so near-misses that landed one plane away are
-    * recovered — recall strictly dominates [[lshTopK]] (its candidate set
-    * is a superset; spec-pinned) at `numPlanes + 1` probes per query,
-    * WITHOUT adding hash tables or re-bucketing the corpus.
-    *
-    * Shape at 100 TB: the corpus is bucketed once (narrow projection —
-    * [[lshBuckets]]); probe expansion happens on the SMALL query side
-    * (`numPlanes + 1` rows per query, all distinct buckets by
-    * construction), which stays broadcast; one broadcast join + per-query
-    * ranking, identical to single-probe cost up to the probe fan-out.
-    */
-  def lshTopKMultiProbe(corpus: DataFrame, queries: DataFrame, k: Int,
       numPlanes: Int, dims: Int): DataFrame = {
     val corpusB = lshBuckets(corpus, numPlanes, dims)
     val queryB = lshBuckets(

@@ -43,19 +43,13 @@ object StreamingQuery {
     * switch, the conf the per-session one.
     */
   private def withStateStore[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
     val want = s.conf.getOption("spark.graft.stateStore")
       .orElse(sys.env.get("GRAFT_STATE_STORE"))
-    if (want.contains("rocksdb")) {
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-      try body
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    } else body
+    if (want.contains("rocksdb"))
+      withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider"))(body)
+    else body
   }
 
   private def captureState(sinkName: String,
@@ -69,100 +63,70 @@ object StreamingQuery {
   }
 
   /** Stage the events table as a file-stream directory, run `transform`
-    * over the stream to completion into a memory sink, materialize the
-    * result shaped and ordered by `shape` (emission order is not
-    * deterministic — every entry must end in an ORDER BY over a unique
-    * key), and clean up both the sink table and the staged directory
-    * (leaks would pollute every later battery entry).
+    * over the stream to completion into a memory sink in `outputMode`
+    * (`"append"`, or `"update"` for `mapGroupsWithState`, which append
+    * rejects), and return the sink shaped and ordered by `shape` as a
+    * local relation. Emission order is not deterministic, so every shape
+    * ends in an ORDER BY over a unique key. An update-mode sink holds one
+    * row per key per emitting micro-batch, so its shape must collapse to
+    * the final state per key.
+    *
+    * Runs the stream and collects the shaped result while the plan is
+    * built; the returned plan reads only those rows. The sink table, the
+    * staged directory and the session conf the run sets (parquet nanos
+    * as long, UTC session time, 4 shuffle partitions) are restored or
+    * removed before return.
     */
-  private def runStream(s: SparkSession, d: String, sinkName: String)(
-      transform: DataFrame => DataFrame)(
-      shape: DataFrame => DataFrame): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
+  private def runStream(s: SparkSession, d: String, sinkName: String,
+      outputMode: String = "append")(transform: DataFrame => DataFrame)(
+      shape: DataFrame => DataFrame): DataFrame =
     // stateful operators allocate state stores (a stream-stream join: four)
-    // PER shuffle partition PER micro-batch — at the battery's bounded
-    // input that's pure fixed overhead and the entry's cost degrades
-    // several-fold under host load. Pin the streaming query to a few
-    // partitions (locked in at query start) and restore the session value
-    // after; a production unbounded stream would size this to state volume
-    // instead.
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    // file streams need a directory: stage the single parquet file
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
-    try {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        dir.resolve("events.parquet"))
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      // encoding-adaptive event time (see QueryDef.eventsMicros): nanos
-      // int64 truncates DIV 1000; native µs timestamps cast in pinned UTC
-      val raw = s.readStream.schema(schema).parquet(dir.toString)
-      val stream = schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-        case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
-      }
-      val name = s"${sinkName}_${System.nanoTime()}"
-      withStateStore(s) {
-        val q = transform(stream)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try { q.processAllAvailable(); captureState(sinkName, q) }
-        finally q.stop()
-      }
-      val res = shape(s.table(name))
-      val rows = res.collect()
-      s.catalog.dropTempView(name)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      QueryDef.deleteRecursively(dir)
+    // per shuffle partition per micro-batch: at the battery's bounded input
+    // that is fixed overhead, so the stream runs on 4 partitions (locked in
+    // at query start); an unbounded stream would size this to its state
+    withConf(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.sql.shuffle.partitions" -> "4") {
+      // file streams need a directory: stage the single parquet file
+      val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+      try {
+        java.nio.file.Files.copy(
+          java.nio.file.Paths.get(s"$d/events.parquet"),
+          dir.resolve("events.parquet"))
+        val schema = s.read.parquet(s"$d/events.parquet").schema
+        // encoding-adaptive event time (see QueryDef.eventsMicros): nanos
+        // int64 truncates DIV 1000; native µs timestamps cast in pinned UTC
+        val raw = s.readStream.schema(schema).parquet(dir.toString)
+        val stream = schema("ts").dataType match {
+          case org.apache.spark.sql.types.LongType =>
+            raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+          case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
+        }
+        val name = s"${sinkName}_${System.nanoTime()}"
+        withStateStore(s) {
+          val q = transform(stream)
+            .writeStream.format("memory").queryName(name)
+            .outputMode(outputMode).start()
+          try { q.processAllAvailable(); captureState(sinkName, q) }
+          finally q.stop()
+        }
+        val res = shape(s.table(name))
+        val rows = res.collect()
+        s.catalog.dropTempView(name)
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+      } finally QueryDef.deleteRecursively(dir)
     }
-  }
 
-  /** [[runStream]] in UPDATE output mode — required by
-    * `mapGroupsWithState`, which append mode rejects. The memory sink
-    * then holds one row per key PER EMITTING MICRO-BATCH, so shapes
-    * over update-mode sinks must collapse to the final state per key
-    * (running counters are monotone — take the max-count row), never
-    * assume one row per key.
+  /** Run `body` with the session conf `settings` in force, then put each
+    * key back as it was: its previous value, or unset if it had none.
     */
-  private def runStreamUpdate(s: SparkSession, d: String,
-      sinkName: String)(transform: DataFrame => DataFrame)(
-      shape: DataFrame => DataFrame): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
-    try {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        dir.resolve("events.parquet"))
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      val raw = s.readStream.schema(schema).parquet(dir.toString)
-      val stream = schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-        case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
-      }
-      val name = s"${sinkName}_${System.nanoTime()}"
-      withStateStore(s) {
-        val q = transform(stream)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").start()
-        try { q.processAllAvailable(); captureState(sinkName, q) }
-        finally q.stop()
-      }
-      val res = shape(s.table(name))
-      val rows = res.collect()
-      s.catalog.dropTempView(name)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      QueryDef.deleteRecursively(dir)
+  private def withConf[A](s: SparkSession, settings: (String, String)*)(
+      body: => A): A = {
+    val prev = s.conf.getAll
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally settings.foreach { case (k, _) =>
+      prev.get(k).fold(s.conf.unset(k))(s.conf.set(k, _))
     }
   }
 
@@ -547,7 +511,7 @@ object StreamingQuery {
     // sums round to 4 dp (the q65 discipline: state-fold order is not
     // the oracle's sum order).
     QueryDef("q186_streaming_state",
-      (s, d) => runStreamUpdate(s, d, "stream_state")(df => {
+      (s, d) => runStream(s, d, "stream_state", "update")(df => {
         import s.implicits._
         Streams.runningUserTotals(
           df.select(col("event_id"), col("ts"), col("user_id"),
@@ -567,7 +531,7 @@ object StreamingQuery {
     // batch selection over the same events under ANY micro-batching;
     // the oracle ranks the same integer keys relationally.
     QueryDef("q247_streaming_weighted_sample",
-      (s, d) => runStreamUpdate(s, d, "stream_wor")(df =>
+      (s, d) => runStream(s, d, "stream_wor", "update")(df =>
         Streams.weightedSampleTopK(df, k = 10).toDF)(df => {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy("event_type")

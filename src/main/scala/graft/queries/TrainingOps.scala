@@ -2795,7 +2795,7 @@ object TrainingOps {
     QueryDef("q151_sim_lsh_multiprobe",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        Similarity.lshTopKMultiProbe(emb,
+        Similarity.lshTopK(emb,
             emb.where(col("vec_id") % 50 === 0), k = 5,
             numPlanes = 6, dims = 64)
           .select(col("query_id"), col("rk"), col("neighbor_id"),
@@ -4959,8 +4959,8 @@ object TrainingOps {
         val seeds = table(s, d, "customer")
           .where(col("c_custkey") % 50 === 0)
           .select(col("c_custkey").as("node"))
-        graft.ops.Graph.pageRankPersonalized(edges, seeds,
-            iters = 5, damping = 0.85)
+        graft.ops.Graph.pageRank(edges, iters = 5, damping = 0.85,
+            seeds = Some(seeds))
           .select(col("node"), round(col("rank"), 9).as("rank"))
           .orderBy("node")
       },

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Graph
@@ -8,7 +9,9 @@ import graft.ops.Graph
 /** PageRank pinned against an exact driver-side power iteration on small
   * fixtures (same formula, same IEEE ops — agreement is ~1e-15, asserted
   * at 1e-12), plus the invariants that catch formulation bugs: mass
-  * conservation with dangling nodes, and authority ordering.
+  * conservation with dangling nodes, and authority ordering. k-hop
+  * distances are pinned against a plain-Scala BFS, and every round-loop
+  * operator against the checkpoints it leaves cached.
   */
 class GraphSpec extends AnyFunSuite with SparkTestBase {
 
@@ -114,7 +117,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     // two disjoint 2-cycles; seeding {1} must leave {3,4} at rank 0
     val g = Seq((1L, 2L), (2L, 1L), (3L, 4L), (4L, 3L))
     val seeds = Seq(Tuple1(1L)).toDF("node")
-    val r = Graph.pageRankPersonalized(g.toDF("src", "dst"), seeds, 5)
+    val r = Graph.pageRank(g.toDF("src", "dst"), 5, seeds = Some(seeds))
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(math.abs(r.values.sum - 1.0) < 1e-12, r.toString)
     assert(r(3L) == 0.0 && r(4L) == 0.0, r.toString)
@@ -124,7 +127,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     assert(r(1L) > 0 && r(2L) > 0, r.toString)
     // seeding EVERY node with uniform restart equals classic pagerank
     val all = Seq(1L, 2L, 3L, 4L).map(Tuple1(_)).toDF("node")
-    val pers = Graph.pageRankPersonalized(g.toDF("src", "dst"), all, 5)
+    val pers = Graph.pageRank(g.toDF("src", "dst"), 5, seeds = Some(all))
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     val classic = Graph.pageRank(g.toDF("src", "dst"), 5)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
@@ -137,7 +140,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val s2 = spark; import s2.implicits._
     val g = Seq((1L, 2L)).toDF("src", "dst")
     val e = intercept[IllegalArgumentException](
-      Graph.pageRankPersonalized(g, Seq(Tuple1(99L)).toDF("node"), 2))
+      Graph.pageRank(g, 2, seeds = Some(Seq(Tuple1(99L)).toDF("node"))))
     assert(e.getMessage.contains("seed"))
   }
 
@@ -173,5 +176,68 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     val bad = Seq(("a", "b")).toDF("src", "dst")
     val e = intercept[IllegalArgumentException](Graph.kCorePeel(bad, 2, 1))
     assert(e.getMessage.contains("numeric"))
+  }
+
+  /** Plain-Scala BFS layers over the undirected edges, out to `maxHops`. */
+  private def refKHop(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      maxHops: Int): Map[Long, Int] = {
+    val adj = (edges ++ edges.map(_.swap)).filter { case (u, v) => u != v }
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    var dist = seeds.map(_ -> 0).toMap
+    var frontier = seeds.toSet
+    for (h <- 1 to maxHops) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)) -- dist.keySet
+      dist ++= frontier.map(_ -> h)
+    }
+    dist
+  }
+
+  test("k-hop distances equal a plain BFS, unreached nodes absent") {
+    val s2 = spark; import s2.implicits._
+    // a branching path from seed 1, a self-loop, a component no seed
+    // touches (7-8) and seed 9, which has no edge at all
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 6L), (6L, 2L),
+      (5L, 5L), (7L, 8L))
+    val seeds = Seq(1L, 9L)
+    for (hops <- 1 to 5) {
+      val got = Graph.kHopDistances(g.toDF("src", "dst"),
+          seeds.map(Tuple1(_)).toDF("node"), hops)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val want = refKHop(g, seeds, hops)
+      assert(got == want, s"maxHops=$hops")
+    }
+    assert(refKHop(g, seeds, 5) == Map(1L -> 0, 9L -> 0, 2L -> 1, 3L -> 2,
+      6L -> 2, 4L -> 3, 5L -> 4))
+  }
+
+  test("each round-loop operator leaves one checkpoint: the one it reads") {
+    val s2 = spark; import s2.implicits._
+    val sc = spark.sparkContext
+    val g = withIsland.toDF("src", "dst")
+    val seeds = Seq(Tuple1(1L), Tuple1(6L)).toDF("node")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (8L, 9L))
+      .toDF("id1", "id2")
+    val runs: Seq[(String, () => DataFrame)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(g, 3)),
+      "pageRank seeded" -> (() => Graph.pageRank(g, 3, seeds = Some(seeds))),
+      "labelPropagation" -> (() => Graph.labelPropagation(g,
+        Seq((1L, 10L)).toDF("node", "label"), 2)),
+      "kCorePeel" -> (() => Graph.kCorePeel(g, 2, 2)),
+      "kHopDistances" -> (() => Graph.kHopDistances(g, seeds, 3)),
+      "components" -> (() => ops.Dedup.components(pairs)),
+      "components via star" -> (() =>
+        ops.Dedup.components(pairs, propagationRounds = 1)),
+      "starComponents" -> (() => ops.Dedup.starComponents(pairs)))
+    for ((name, run) <- runs) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = run()
+      val added = sc.getPersistentRDDs.keySet -- before
+      val read = out.queryExecution.analyzed.collectLeaves()
+        .collect { case l: LogicalRDD => l.rdd.id }.toSet
+      assert(added.size == 1 && added == read,
+        s"$name cached $added, its result reads $read")
+      assert(out.count() > 0, name)
+      added.foreach(sc.getPersistentRDDs(_).unpersist())
+    }
   }
 }

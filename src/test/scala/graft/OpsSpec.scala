@@ -172,6 +172,26 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(groups.agg(sum("n_copies")).head().getLong(0) == n)
   }
 
+  /** Single-probe hyperplane-LSH reference: each query's `k` best
+    * same-bucket candidates ([[Similarity.lshBuckets]]) by exact cosine,
+    * ties to the lowest neighbor_id, never the query itself.
+    */
+  private def sameBucketTopK(queries: org.apache.spark.sql.DataFrame,
+      k: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val b = Similarity.lshBuckets(emb, 6, 64)
+    val q = b.join(queries.select("vec_id"), "vec_id")
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        col("bucket").as("qbucket"))
+    b.join(q, col("bucket") === col("qbucket") &&
+        col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        Similarity.cosine(col("qv"), col("embedding")).as("cos"))
+      .withColumn("rk", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("cos").desc, col("neighbor_id"))))
+      .where(col("rk") <= k)
+  }
+
   test("brute-force top-k is a valid ranking; lsh candidates respect buckets") {
     val queries = emb.where(col("vec_id") % 50 === 0)
     val topk = Similarity.cosineTopK(emb, queries, 5)
@@ -185,11 +205,11 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       assert(cs.zip(cs.tail).forall { case (a, b) => a >= b })
       assert(!rs.exists(_.getAs[Long]("neighbor_id") == q))
     }
-    // lsh top-k results only pair vectors from the same bucket
+    // single-probe lsh top-k results only pair vectors from the same bucket
     val buckets = Similarity.lshBuckets(emb, 6, 64)
       .select("vec_id", "bucket")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Similarity.lshTopK(emb, queries, 3, 6, 64).collect().foreach { r =>
+    sameBucketTopK(queries, 3).collect().foreach { r =>
       assert(buckets(r.getAs[Long]("query_id")) ==
         buckets(r.getAs[Long]("neighbor_id")))
     }
@@ -202,8 +222,8 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = hits(Similarity.cosineTopK(emb, queries, 5))
-    val single = hits(Similarity.lshTopK(emb, queries, 5, 6, 64))
-    val multi = hits(Similarity.lshTopKMultiProbe(emb, queries, 5, 6, 64))
+    val single = hits(sameBucketTopK(queries, 5))
+    val multi = hits(Similarity.lshTopK(emb, queries, 5, 6, 64))
     val rs = (single & exact).size.toDouble / exact.size
     val rm = (multi & exact).size.toDouble / exact.size
     assert(rm >= rs, s"multi-probe recall $rm < single-probe $rs")
@@ -214,7 +234,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     val buckets = Similarity.lshBuckets(emb, 6, 64)
       .select("vec_id", "bucket")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Similarity.lshTopKMultiProbe(emb, queries, 5, 6, 64).collect()
+    Similarity.lshTopK(emb, queries, 5, 6, 64).collect()
       .foreach { r =>
         val d = java.lang.Long.bitCount(
           buckets(r.getAs[Long]("query_id")) ^

@@ -749,4 +749,19 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       spark.catalog.dropTempView("wor_stream")
     }
   }
+
+  test("battery streams leave the session conf as they found it") {
+    val conf = spark.conf
+    val zone = conf.get("spark.sql.session.timeZone")
+    // a non-UTC caller: the runner pins UTC for the stream, then restores
+    conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      val before = conf.getAll.toSet
+      Harness.entries(Seq("q65_streaming_hourly", "q186_streaming_state"))
+        .foreach(q => assert(q.query(spark, "/root/testdata/sf0.001")
+          .collect().nonEmpty, q.name))
+      val after = conf.getAll.toSet
+      assert(((after diff before) ++ (before diff after)).isEmpty)
+    } finally conf.set("spark.sql.session.timeZone", zone)
+  }
 }
