@@ -51,9 +51,9 @@ object BenchScale {
     // decode-heavy perceptual-hash pair join, and the single-pass
     // expectations gate
     "q243_ndcg", "q249_image_dhash_pairs", "q252_expectations",
-    // round-9 additions: the bucket-offset global rank (the one new
-    // physical shape), sorted-neighborhood blocking over it, and the
-    // narrow per-pair text metrics
+    // round-9 additions: the global rank (a range sort plus
+    // per-partition offsets), sorted-neighborhood blocking over it, and
+    // the narrow per-pair text metrics
     "q260_global_rank", "q261_sorted_neighbors", "q262_rouge_l",
     "q263_bleu",
     // round-10 additions: the ML algebra trio, the spill certificate,
@@ -64,7 +64,7 @@ object BenchScale {
     "q269_context_windows", "q270_duplicated_spans",
     "q272_blocklist_scan", "q273_redact_blocklist", "q274_kn_perplexity",
     "q275_zorder_skipping",
-    // round-11 additions: the corpus-law fits (rank machinery at the
+    // round-11 additions: the corpus-law fits (global rank at the
     // vocab grain), the recall audit (exact + banded tiers composed),
     // rendezvous routing, and the resampler
     "q276_zipf_fit", "q277_heaps_law", "q278_lsh_plan",

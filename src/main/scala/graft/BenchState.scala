@@ -51,7 +51,6 @@ object BenchState {
           val t0 = System.nanoTime()
           val n = q.query(spark, sfDir).count()
           val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
           val ops = graft.queries.StreamingQuery.stateMetricsFor(sink).map {
             case (op, rows, bytes) => obj(Seq("op" -> str(op),
               "rows" -> rows.toString, "bytes" -> bytes.toString))

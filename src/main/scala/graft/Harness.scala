@@ -47,19 +47,37 @@ object Harness {
     if (names.isEmpty) all else names.map(byName)
   }
 
-  /** Runs `body` for one entry. A non-fatal failure is reported on stderr,
-    * the session's caches are cleared so it cannot distort the next
-    * entry, and it comes back as `Left`.
+  /** Runs `body` for one entry, [[releasing]] what it cached whether it
+    * succeeds or not. A non-fatal failure is reported on stderr and comes
+    * back as `Left`.
     */
   def attempt[T](spark: SparkSession, name: String)(
       body: => T): Either[Throwable, T] =
-    try Right(body)
+    try Right(releasing(spark)(body))
     catch { case NonFatal(e) =>
       System.err.println(
         s"[${spark.sparkContext.appName}] $name failed: ${e.getMessage}")
-      spark.catalog.clearCache()
       Left(e)
     }
+
+  /** Runs `body`, then drops every cached Dataset (`clearCache`) and
+    * unpersists each RDD persisted while it ran, so what one entry left
+    * cached cannot distort the next (leaked caches once inflated q62 by
+    * 8×). `clearCache` alone misses RDD-level storage: the round loops'
+    * final checkpoints and `globalRank`'s sorted checkpoint. An RDD the
+    * caller persisted before the call survives.
+    */
+  def releasing[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try body
+    finally {
+      spark.catalog.clearCache()
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id)) rdd.unpersist(blocking = true)
+      }
+    }
+  }
 
   /** Takes first-call JIT, codegen and class-loading off the first timed
     * entry: one run of `entry`, then a one-tree forest fit on 64 rows,
@@ -92,17 +110,15 @@ object Harness {
   def materialize(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
-  /** Seconds to build and materialize `query`, then clears the session's
-    * caches: a relation an entry persisted and failed to release must not
-    * distort the next sample (leaked caches once inflated q62 by 8×).
+  /** Seconds to build and materialize `query`, then [[releasing]] what it
+    * cached, outside the timed span.
     */
-  def timed(spark: SparkSession)(query: => DataFrame): Double = {
-    val t0 = System.nanoTime()
-    materialize(query)
-    val dt = (System.nanoTime() - t0) / 1e9
-    spark.catalog.clearCache()
-    dt
-  }
+  def timed(spark: SparkSession)(query: => DataFrame): Double =
+    releasing(spark) {
+      val t0 = System.nanoTime()
+      materialize(query)
+      (System.nanoTime() - t0) / 1e9
+    }
 
   /** The samples of one min-of-k measurement; report their `min`. A
     * contended scheduler can only inflate a sample, so the min is the

@@ -9,11 +9,10 @@ object Verify {
     // the driver always runs the full battery)
     val entries = Harness.entries(args.drop(2).toSeq)
     val spark = Harness.session("graft-verify")
+    // attempt releases what each entry cached before the next one runs
     entries.foreach { q =>
       Harness.attempt(spark, q.name)(q.query(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/${q.name}"))
-      // don't let one query's persisted relations distort the next
-      spark.catalog.clearCache()
     }
     Harness.write(s"$outDir/oracle_sql.json", Harness.obj(
       SparkEntry.oracleSql.map { case (k, v) => k -> Harness.str(v) }, ": "))

@@ -224,7 +224,8 @@ object Classify {
     * precision/recall/F1, and (when a `p_similar` column is present)
     * Weka's MAE/RMSE, computed from a (label, prediction[, p_similar])
     * relation in a single one-row DataFrame; a zero denominator gives 0.
-    * AUC is the one metric left to [[evaluate]] — it needs the rank pass.
+    * AUC is the one metric left to [[evaluate]]: it needs the scores in
+    * rank order, which [[evaluate]] sorts on the driver.
     */
   def evaluateDf(predictions: DataFrame): DataFrame = {
     val l = col("label").cast("double")
@@ -271,7 +272,8 @@ object Classify {
 
   /** Confusion-matrix evaluation of out-of-fold predictions ("similar" =
     * the positive class, as in `README.md:150-154`): [[evaluateDf]]'s one
-    * row plus the AUC. MAE/RMSE are Weka's for a classifier
+    * row plus the AUC, from the (score, label) pairs collected and sorted
+    * on the driver (one per prediction row). MAE/RMSE are Weka's for a classifier
     * (`README.md:114-115,143-144` of the reference; Weka
     * `Evaluation.updateNumericScores`): for two classes both per-class
     * differences have the magnitude |P(similar) − label|, so
@@ -288,57 +290,33 @@ object Classify {
   }
 
   /** ROC area for the positive class via the Mann-Whitney rank statistic
-    * over P(similar), with average ranks for ties — computed distributed
-    * with NO single-partition global window (the textbook scale-killer):
-    * a range-partitioned sort puts every tie group wholly inside one
-    * partition, pass 1 collects per-partition row counts (tiny: one long
-    * per partition), pass 2 turns those into rank offsets and accumulates
-    * the positive-class rank sum per partition.
+    * over P(similar), with average ranks for ties. The predictions hold
+    * one row per labeled pair, so their (score, label) pairs are sorted on
+    * the driver by `java.lang.Double.compare`: -0.0 ranks below +0.0 and
+    * NaN above every number, each forming its own tie group. Every
+    * rank-sum term is a multiple of 0.5 below 2^53, so the sums are exact.
     */
   private def aucFromScores(predictions: DataFrame): Double = {
     if (!predictions.columns.contains("p_similar")) return 0.0
-    val sc = predictions.sparkSession.sparkContext
     val scored = predictions
       .select(col("p_similar").cast("double"), col("label").cast("double"))
-      .rdd.map(r => (r.getDouble(0), r.getDouble(1) == 1.0))
-    if (scored.isEmpty()) return 0.0
-    // RangePartitioner keeps equal keys in one partition, so tie groups
-    // never straddle a boundary and average ranks stay exact.
-    val sorted = scored.sortByKey(ascending = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sizes = sorted
-        .mapPartitionsWithIndex((pid, it) => Iterator((pid, it.size.toLong)),
-          preservesPartitioning = true)
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = sc.broadcast(sizes.scanLeft(0L)(_ + _))
-      val (posRankSum, npos, nneg) = sorted.mapPartitionsWithIndex {
-        (pid, it) =>
-          var rank = offsets.value(pid) // rows in partitions before this one
-          var prs = 0.0; var np = 0L; var nn = 0L
-          val buf = it.buffered
-          while (buf.hasNext) {
-            val s = buf.head._1
-            var cnt = 0L; var pos = 0L
-            // bit-compare, not ==: a NaN score must form (and terminate)
-            // its own tie group — `NaN == NaN` is false and would spin
-            // this loop forever without consuming the element
-            while (buf.hasNext &&
-                java.lang.Double.compare(buf.head._1, s) == 0) {
-              if (buf.next()._2) pos += 1
-              cnt += 1
-            }
-            // ranks rank+1 .. rank+cnt share the average rank
-            prs += pos * (rank + (cnt + 1) / 2.0)
-            np += pos; nn += cnt - pos
-            rank += cnt
-          }
-          Iterator((prs, np, nn))
-      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
-      if (npos == 0 || nneg == 0) 0.0
-      else (posRankSum - npos.toDouble * (npos + 1) / 2) /
-        (npos.toDouble * nneg)
-    } finally sorted.unpersist(blocking = false)
+      .collect().map(r => (r.getDouble(0), r.getDouble(1) == 1.0))
+      .sortBy(_._1)(Ordering.Double.TotalOrdering)
+    var (i, posRankSum, npos) = (0, 0.0, 0L)
+    while (i < scored.length) {
+      val s = scored(i)._1
+      val end = scored.indexWhere(x => java.lang.Double.compare(x._1, s) != 0, i)
+      val j = if (end < 0) scored.length else end
+      val (cnt, pos) = ((j - i).toLong, scored.slice(i, j).count(_._2).toLong)
+      // ranks i+1 .. j share the average rank
+      posRankSum += pos * (i + (cnt + 1) / 2.0)
+      npos += pos
+      i = j
+    }
+    val nneg = scored.length - npos
+    if (npos == 0 || nneg == 0) 0.0
+    else (posRankSum - npos.toDouble * (npos + 1) / 2) /
+      (npos.toDouble * nneg)
   }
 
   /** End-to-end: vectors → CV → report (the engine's `classify` entry,

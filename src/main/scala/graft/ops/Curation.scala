@@ -800,10 +800,9 @@ object Curation {
     * slice.
     *
     * Shape at 100 TB: the stream positions come from
-    * [[graft.ops.Layout.globalCumsum]] (checkpointed single input
-    * execution, collected partial-agg
-    * passes + a group-parallel window — never a single-partition
-    * scan), and the slice explosion is a narrow per-row
+    * [[graft.ops.Layout.globalCumsum]] (one input execution, a range
+    * sort, one stats job and a partition-parallel window — never a
+    * single-partition scan), and the slice explosion is a narrow per-row
     * `sequence(first_window, last_window)` expansion bounded by
     * `1 + len/windowTokens` rows per document. Every output value is
     * closed-form integer arithmetic over (start, len, W), so an

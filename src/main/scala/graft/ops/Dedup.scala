@@ -96,7 +96,7 @@ object Dedup {
     * where a bucket is one group of `keys` (see [[bucketPairsOf]]). */
   private def bucketPairs(keyed: DataFrame, keys: Seq[String],
       maxBucket: Int = DefaultMaxBucket,
-      strict: Option[Boolean] = None): DataFrame =
+      strict: Boolean = false): DataFrame =
     bucketPairsOf(keyed, keys, col("id"), maxBucket, strict = strict)
       .select(col("a").as("id1"), col("b").as("id2"))
 
@@ -129,21 +129,17 @@ object Dedup {
     * empty; audits that read it keep a non-empty output or run with AQE
     * off (OpsSpec pins both).
     *
-    * Strict mode: `strict = Some(true)`, or the session conf
-    * `spark.graft.dedup.failOnSpill=true` when `strict` is None, fails
-    * the job at the first oversized bucket (its size and `failOnSpill`
-    * are in the message) instead of skipping and counting it. `strict`
-    * decides per plan, so building a strict plan never changes session
-    * state.
+    * Strict mode: `strict = true` fails the job at the first oversized
+    * bucket (its size and `failOnSpill` are in the message) instead of
+    * skipping and counting it. It decides per plan, so building a strict
+    * plan never changes session state.
     */
   private[ops] def bucketPairsOf(keyed: DataFrame, keys: Seq[String],
       payload: Column, maxBucket: Int = DefaultMaxBucket,
       obs: Option[org.apache.spark.sql.Observation] = None,
-      strict: Option[Boolean] = None,
+      strict: Boolean = false,
       aGate: Option[Column] = None): DataFrame = {
     require(maxBucket >= 2, s"maxBucket=$maxBucket must be >= 2")
-    val failOnSpill = strict.getOrElse(keyed.sparkSession.conf
-      .getOption("spark.graft.dedup.failOnSpill").exists(_.toBoolean))
     val rows = keyed
       .select(keys.map(col) :+ payload.as("__p") :+
         aGate.getOrElse(lit(true)).as("__g"): _*)
@@ -155,7 +151,7 @@ object Dedup {
     val expanded = rows.groupBy(keys.map(col): _*)
       .as[Row, Row](Encoders.row(keySchema), Encoders.row(rows.schema))
       .flatMapSortedGroups(col("__p"))(
-        expandBucket(keys.size, maxBucket, failOnSpill))(
+        expandBucket(keys.size, maxBucket, strict))(
         Encoders.row(outSchema))
     // one summary row (null, null, n) per bucket of n >= 2 rows
     val spillMetrics = Seq(
@@ -178,12 +174,12 @@ object Dedup {
     * to its output rows (a, b, __bn): at most `maxBucket` rows are held,
     * the rest only counted. */
   private def expandBucket(nKeys: Int, maxBucket: Int,
-      failOnSpill: Boolean)(key: Row, rows: Iterator[Row]): Iterator[Row] = {
+      strict: Boolean)(key: Row, rows: Iterator[Row]): Iterator[Row] = {
     val buf = new scala.collection.mutable.ArrayBuffer[Row]()
     var n = 0L
     rows.foreach { r => if (n < maxBucket) buf += r; n += 1 }
     if (n < 2) return Iterator.empty
-    if (n > maxBucket && failOnSpill) throw new IllegalStateException(
+    if (n > maxBucket && strict) throw new IllegalStateException(
       s"bucketPairsOf: bucket of $n ids exceeds maxBucket=$maxBucket " +
         "in strict spill mode (failOnSpill) — remove the degenerate key " +
         "(stop-gram / exact-duplicate prefix) or raise maxBucket")
@@ -247,7 +243,7 @@ object Dedup {
     */
   def jaccardPairs(docs: DataFrame, n: Int, minJaccard: Double,
       maxBucket: Int = DefaultMaxBucket,
-      strict: Option[Boolean] = None,
+      strict: Boolean = false,
       tokenizer: Tokenize.Mode = Tokenize.Whitespace): DataFrame = {
     val sh = shingles(docs, n, tokenizer = tokenizer)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
@@ -353,7 +349,7 @@ object Dedup {
     */
   def minhashCandidates(docs: DataFrame, n: Int, numHashes: Int,
       rowsPerBand: Int, maxBucket: Int = DefaultMaxBucket,
-      strict: Option[Boolean] = None,
+      strict: Boolean = false,
       tokenizer: Tokenize.Mode = Tokenize.Whitespace): DataFrame =
     bucketPairs(minhashBandKeys(docs, n, numHashes, rowsPerBand, tokenizer),
       Seq("band", "band_key"), maxBucket, strict)
@@ -1051,10 +1047,10 @@ object Dedup {
       rowsPerBand: Int, minJaccard: Double,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val truth = jaccardPairs(docs, n, minJaccard, maxBucket,
-        strict = Some(true))
+        strict = true)
       .select(col("id1"), col("id2")).localCheckpoint()
     val cands = minhashCandidates(docs, n, numHashes, rowsPerBand,
-        maxBucket, strict = Some(true))
+        maxBucket, strict = true)
       .localCheckpoint()
     val hits = truth.join(cands, Seq("id1", "id2"), "left_semi")
     truth.agg(count(lit(1)).as("n_true"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering, the
@@ -289,319 +290,106 @@ object Layout {
       .sortWithinPartitions("zvalue")
 
 
-  /** Dense 1-based GLOBAL rank over `(keyCol, idCol)` — exactly SQL's
-    * `ROW_NUMBER() OVER (ORDER BY key, id)` — WITHOUT the
-    * single-partition window that makes the naive spelling a driver-
-    * sized bottleneck (Spark executes an unpartitioned window on ONE
-    * task; at 100 TB that task never finishes). The classic
-    * distributed ranking, made single-execution-safe in round 11:
+  /** Dense 1-based GLOBAL rank over `(keyCol, idCol)`: exactly SQL's
+    * `ROW_NUMBER() OVER (ORDER BY key, id)`, without the unpartitioned
+    * window that runs such a rank on one task. The rank is a narrow
+    * projection over a range-sorted checkpoint: the partition's row
+    * offset plus the row's place in its partition, plus 1.
     *
-    *  0. the input plan executes exactly ONCE: `localCheckpoint`
-    *     materializes the rows up front and every later pass — group
-    *     stats, refinement, the final ranked plan — reads the
-    *     materialized blocks. A non-deterministic source (sampling,
-    *     `rand`, a table mutating between actions) therefore CANNOT
-    *     desync the collected offsets from the final pass, which was
-    *     the documented caller-beware footgun before this round.
-    *     Lineage is truncated, so a lost block fails the job loudly
-    *     instead of silently recomputing different rows.
-    *     `materializeInput = false` opts out for callers whose input
-    *     is a deterministic scan and who prefer re-execution to one
-    *     materialization;
-    *  1. order-preserving COARSE bucketing `bucket = (key >> s) +
-    *     2^(b−1)` (arithmetic shift; b = ⌈log₂ numBuckets⌉ capped at
-    *     20) needs NO bounds pre-pass, so global key bounds AND
-    *     per-bucket counts land in ONE partial-agg aggregation. Any
-    *     monotone bucket function yields exact ranks because the
-    *     offsets come from actual counts — the boundaries only need
-    *     to be deterministic, which a closed shift is. Coarse
-    *     imbalance (real keys usually occupy a narrow slice of the
-    *     long range) is repaired by the refinement rounds below;
-    *  2. groups holding more rows than the BALANCE TARGET
-    *     `min(maxBucketRows, ⌈total/numBuckets⌉)` are refined: a
-    *     multi-key group re-buckets by key range within its own
-    *     [min, max] (collected in the same stats pass), a pure-tie
-    *     group sub-buckets by ID range — monotone in `id`, and ranks
-    *     among equal keys are id-ordered, so the refinement is
-    *     exact, not approximate. Up to three refinement rounds (each
-    *     one more partial-agg pass over the checkpointed rows at the
-    *     refined grain); residual imbalance past that is ACCEPTED if
-    *     every group fits `maxBucketRows` (the correctness/memory
-    *     cap) and fails loudly otherwise — as does a tie group over
-    *     the cap whose ids don't cast to long, which id-range
-    *     refinement needs. Group assignment is expressed as one
-    *     projected column per round (each referencing the previous
-    *     round's column, never inlining it), so the plan grows
-    *     linearly in refined groups, not exponentially;
-    *  3. cumulative offsets are collected as ≤ |groups| rows (a
-    *     documented group-bounded collect), rebroadcast as a
-    *     plan-literal map, and `rank = offset(group) + row_number`
-    *     within the group — the window is PARTITIONED by group, so
-    *     the sort parallelizes |groups| ways and no task ever sees
-    *     more than one group.
+    * Jobs run while the plan is built (see [[rangeSorted]]): the input
+    * checkpoint, the range sort's sample, the sorted checkpoint and one
+    * stats job. The input plan executes once, so a source that yields
+    * different rows on each evaluation cannot desync the offsets from the
+    * ranks. The returned plan reads the sorted checkpoint.
     *
-    * Requirements (violations fail loudly, never corrupt ranks):
-    *  - `keyCol` must be integral (cast to long) and NON-NULL — a SQL
-    *    window would sort nulls first; this operator refuses them;
-    *  - `(key, id)` must be unique or ranks are nondeterministic
-    *    among ties.
-    *
-    * Appends `rankCol`; `rankCol` and the internal `__grk_*` names
-    * must not collide with existing columns.
+    * `keyCol` must cast to long and be non-null (null keys fail loudly;
+    * a SQL window would sort them first). `idCol` may be any orderable
+    * type; `(key, id)` must be unique, or ranks among ties are arbitrary.
+    * Appends `rankCol` (null on empty input); `rankCol` and the internal
+    * `__grk_*` names must not collide with existing columns.
     */
   def globalRank(df: DataFrame, keyCol: String, idCol: String,
-      rankCol: String = "rk", numBuckets: Int = 1024,
-      maxBucketRows: Long = 1L << 23,
-      materializeInput: Boolean = true): DataFrame = {
-    require(numBuckets >= 1, s"numBuckets=$numBuckets must be >= 1")
-    require(maxBucketRows >= 1, s"maxBucketRows=$maxBucketRows must be >= 1")
-    for (c <- df.columns)
-      require(c != rankCol && !c.startsWith("__grk_"),
-        s"globalRank: input already has a column named '$c' — rename it " +
-          "(the operator appends rankCol and uses __grk_* internally)")
-    val base = if (materializeInput) df.localCheckpoint() else df
-    val k = col(keyCol).cast("long")
-    val (addGroup, groups, _) = rankGroups(base, keyCol, idCol,
-      numBuckets, maxBucketRows, valCol = None)
-    if (groups.isEmpty) return base.withColumn(rankCol, lit(null))
-    // offsets in GLOBAL rank order = lexicographic refinement-path order
-    var acc = 0L
-    val offsets = groups.map { g =>
-      val o = g.gid -> acc
-      acc += g.rows
-      o
-    }.toMap
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__grk_g").orderBy(k.asc, col(idCol).asc)
-    addGroup(base)
-      .withColumn(rankCol,
-        element_at(typedLit(offsets), col("__grk_g")) +
-          row_number().over(w))
-      .drop("__grk_g")
-  }
+      rankCol: String = "rk"): DataFrame =
+    rangeSorted(df, keyCol, idCol, rankCol, lit(0L), "globalRank") {
+      (rowsBefore, _) =>
+        rowsBefore + col("__grk_i").bitwiseAND((1L << 33) - 1L) + 1L
+    }
 
   /** Exact EXCLUSIVE prefix sum of `valCol` over the global
-    * `(keyCol, idCol)` order — `cumCol` = the sum of every EARLIER
-    * row's value (0 for the first row), exactly SQL's
-    * `SUM(val) OVER (ORDER BY key, id ROWS UNBOUNDED PRECEDING) − val`
-    * — without the single-partition window, via [[globalRank]]'s
-    * bucket-offset machinery (same single input execution, same skew
-    * refinement, same loud-failure contract): per-group value SUMS
-    * piggyback on the SAME stats pass that counts rows (zero extra
-    * jobs vs rank), offsets accumulate with `Math.addExact` so a
-    * 100 TB token total overflows loudly, and the per-group window
-    * computes the local running sum in parallel.
+    * `(keyCol, idCol)` order: `cumCol` = the sum of every EARLIER row's
+    * value (0 for the first row), exactly SQL's
+    * `SUM(val) OVER (ORDER BY key, id ROWS UNBOUNDED PRECEDING) − val`.
+    * Over [[globalRank]]'s sorted checkpoint, `cumCol` is the value sum
+    * of the earlier partitions (accumulated with `Math.addExact`, so an
+    * overflowing total fails loudly) plus a running sum in a window
+    * partitioned by the sort's partition index.
     *
     * The prefix sum is THE primitive corpus assembly needs: token-
     * budget cuts ("the first N tokens in curriculum order"), GPT-style
     * concat-and-chunk context packing
     * ([[graft.ops.Curation.contextWindows]]), deterministic byte
-    * offsets for manifest/layout planning. Null values count as 0;
-    * `valCol` must cast to long.
+    * offsets for manifest/layout planning.
+    *
+    * Jobs, checkpoints, key and column contract as [[globalRank]]. Null
+    * values count as 0; `valCol` must cast to long.
     */
   def globalCumsum(df: DataFrame, keyCol: String, idCol: String,
-      valCol: String, cumCol: String = "cumsum", numBuckets: Int = 1024,
-      maxBucketRows: Long = 1L << 23,
-      materializeInput: Boolean = true): DataFrame = {
-    require(numBuckets >= 1, s"numBuckets=$numBuckets must be >= 1")
-    require(maxBucketRows >= 1, s"maxBucketRows=$maxBucketRows must be >= 1")
-    for (c <- df.columns)
-      require(c != cumCol && !c.startsWith("__grk_"),
-        s"globalCumsum: input already has a column named '$c' — rename " +
-          "it (the operator appends cumCol and uses __grk_* internally)")
-    val base = if (materializeInput) df.localCheckpoint() else df
-    val k = col(keyCol).cast("long")
+      valCol: String, cumCol: String = "cumsum"): DataFrame = {
     val v = coalesce(col(valCol).cast("long"), lit(0L))
-    val (addGroup, groups, sums) = rankGroups(base, keyCol, idCol,
-      numBuckets, maxBucketRows, valCol = Some(v), caller = "globalCumsum")
-    if (groups.isEmpty) return base.withColumn(cumCol, lit(null))
-    var acc = 0L
-    val offsets = groups.map { g =>
-      val o = g.gid -> acc
-      acc = Math.addExact(acc, sums.getOrElse(g.gid, 0L))
-      o
-    }.toMap
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__grk_g").orderBy(k.asc, col(idCol).asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    addGroup(base)
-      .withColumn(cumCol,
-        element_at(typedLit(offsets), col("__grk_g")) +
-          sum(v).over(w) - v)
-      .drop("__grk_g")
+    val w = Window.partitionBy(sortPartition).orderBy("__grk_i")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    rangeSorted(df, keyCol, idCol, cumCol, v, "globalCumsum") {
+      (_, sumBefore) => sumBefore + sum(v).over(w) - v
+    }
   }
 
-  /** One final rank group = one contiguous slab of the global
-    * (key, id) order: either a key range, or (for a refined tie
-    * group) a single key restricted to an id range. `path` is the
-    * refinement trail; `rows` the group's exact row count. Exposed
-    * private[graft] so specs can assert the skew guard's bound.
-    */
-  private[graft] final case class RankGroup(gid: Int, path: Vector[Int],
-      rows: Long)
+  /** The range-sort partition a `__grk_i` row number belongs to. */
+  private val sortPartition: Column = shiftright(col("__grk_i"), 33)
 
-  /** Balance-split floor: groups at or under this many rows are never
-    * refined for parallelism alone (the hard `maxBucketRows` cap still
-    * applies above it).
+  /** [[globalRank]] and [[globalCumsum]]'s one pass. Checkpoints `df`,
+    * range-sorts it by (key cast to long, id) over the session's shuffle
+    * partitions (the range partitioner splits a hot key by id), numbers
+    * the rows `__grk_i` with `monotonically_increasing_id` (the
+    * partition index in the upper 31 bits, the row's place in its
+    * partition in the lower 33), checkpoints that and releases the input checkpoint. One stats job
+    * then collects each partition's row count, value sum and null-key
+    * count. Appends `outCol = out(rowsBefore, sumBefore)`, where both are
+    * the totals of the partitions before the row's.
     */
-  private val minSplitTarget = 1024L
-
-  /** [[globalRank]]'s group assignment: returns (a function appending
-    * the final group id as `__grk_g`, the final groups in global rank
-    * order with exact row counts, and — when `valCol` is given — each
-    * final group's value sum, collected from the SAME stats pass).
-    * Every group's row count respects the balance target
-    * `min(maxBucketRows, ⌈total/numBuckets⌉)` after ≤ 3 refinement
-    * rounds, or at worst `maxBucketRows` (the hard cap — a loud
-    * failure past it). Group-id assignment is built as a CHAIN of
-    * projected columns (`__grk_l0`, `__grk_l1`, …), one per round,
-    * each referencing the previous round's COLUMN — never inlining
-    * its expression — so plan size stays linear in refined groups.
-    *
-    * Empty input returns no groups. Null keys are refused here (they
-    * surface as a null group id in the first stats pass).
-    */
-  private[graft] def rankGroups(df: DataFrame, keyCol: String,
-      idCol: String, numBuckets: Int, maxBucketRows: Long,
-      valCol: Option[Column], caller: String = "globalRank")
-      : (DataFrame => DataFrame, Seq[RankGroup], Map[Int, Long]) = {
+  private def rangeSorted(df: DataFrame, keyCol: String, idCol: String,
+      outCol: String, value: Column, caller: String)(
+      out: (Column, Column) => Column): DataFrame = {
+    for (c <- df.columns)
+      require(c != outCol && !c.startsWith("__grk_"),
+        s"$caller: input already has a column named '$c' — rename it " +
+          s"(the operator appends $outCol and uses __grk_* internally)")
     val k = col(keyCol).cast("long")
-    // try_cast, not cast: under ANSI a non-integral id must surface as
-    // the driver's actionable "cannot range-refine this tie group"
-    // error (and only when refinement actually needs ids), never as a
-    // task-level CAST_INVALID_INPUT from the stats pass
-    val idL = expr(s"try_cast(`$idCol` as bigint)")
-    val v = valCol.getOrElse(lit(0L))
-
-    // Range-normalized sub-bucket of `c` within [lo, hi] to `parts`
-    // cells: subtract in DOUBLE (a long c − lo could overflow for a
-    // span crossing the full long range; double stays monotone — and
-    // monotone + clamped is all a bucket function needs, because the
-    // offsets come from actual counts, not from the boundaries).
-    def rangeBucket(c: Column, lo: Long, hi: Long, parts: Int): Column =
-      least(floor((c.cast("double") - lo.toDouble) * parts /
-          (hi.toDouble - lo.toDouble + 1.0)),
-        lit((parts - 1).toDouble)).cast("int")
-
-    // coarse bucket: (key >> s) + 2^(b-1) — monotone, deterministic,
-    // bounds-free; null keys stay null so the stats pass can refuse
-    // them with a count
-    val b = if (numBuckets <= 1) 0
-      else math.min(20,
-        64 - java.lang.Long.numberOfLeadingZeros(numBuckets.toLong - 1L))
-    val coarse: Column =
-      if (b == 0) when(k.isNull, lit(null).cast("int")).otherwise(lit(0))
-      else (shiftright(k, 64 - b) + lit(1L << (b - 1))).cast("int")
-
-    def lvl(i: Int) = s"__grk_l$i"
-    // one projected column per round; level i references col(lvl(i-1))
-    var levels: Vector[Column] = Vector(coarse)
-    def addGroup(d: DataFrame): DataFrame = {
-      val withLevels = levels.zipWithIndex.foldLeft(d) {
-        case (acc, (e, i)) => acc.withColumn(lvl(i), e)
-      }
-      withLevels
-        .withColumn("__grk_g", col(lvl(levels.size - 1)))
-        .drop(levels.indices.map(lvl): _*)
+    val input = df.localCheckpoint()
+    val sorted = input.orderBy(k, col(idCol))
+      .withColumn("__grk_i", monotonically_increasing_id())
+      .localCheckpoint()
+    Rounds.release(input)
+    val stats = sorted.groupBy(sortPartition)
+      .agg(count(lit(1)), count(k), sum(value))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3)))
+      .sortBy(_._1)
+    val nullKeyRows = stats.map(s => s._2 - s._3).sum
+    if (nullKeyRows > 0L) {
+      Rounds.release(sorted)
+      throw new IllegalArgumentException(
+        s"$caller: keyCol '$keyCol' has $nullKeyRows null values — " +
+          "rank order over nulls is undefined here; filter them or " +
+          "coalesce to a sentinel first")
     }
-
-    var groups: Seq[RankGroup] = Nil
-    var sums = Map.empty[Int, Long]
-    var nextGid = if (b == 0) 1 else 1 << b
-    var total = 0L
-    var round = 0
-    var done = false
-    while (!done) {
-      // per-group stats in ONE partial-agg shuffle over the
-      // checkpointed rows: row count, the key/id bounds a refinement
-      // of this group would need, and (for globalCumsum) the value sum
-      val stats = addGroup(df).groupBy(col("__grk_g"))
-        .agg(count(lit(1)).as("n"), min(k).as("kmn"), max(k).as("kmx"),
-          min(idL).as("imn"), max(idL).as("imx"),
-          sum(when(idL.isNull, 1L).otherwise(0L)).as("inull"),
-          sum(v).as("vsum"))
-        .collect()
-      val nullKeyRows = stats.filter(_.isNullAt(0)).map(_.getLong(1)).sum
-      if (nullKeyRows > 0L)
-        throw new IllegalArgumentException(
-          s"$caller: keyCol '$keyCol' has $nullKeyRows null values — " +
-            "rank order over nulls is undefined here; filter them or " +
-            "coalesce to a sentinel first")
-      val byGid = stats.map(r => r.getInt(0) -> r).toMap
-      if (round == 0) {
-        // groups discovered from the coarse pass, in gid (= key) order
-        groups = byGid.keys.toSeq.sorted.map(g =>
-          RankGroup(g, Vector(g), 0L))
-        total = stats.map(_.getLong(1)).sum
-      }
-      groups = groups.map(g => g.copy(rows =
-        byGid.get(g.gid).map(_.getLong(1)).getOrElse(0L)))
-      sums = groups.map(g => g.gid ->
-        byGid.get(g.gid).map(r =>
-          if (r.isNullAt(7)) 0L else r.getLong(7)).getOrElse(0L)).toMap
-      // balance target: ~numBuckets groups for sort parallelism,
-      // hard-capped at maxBucketRows for correctness/memory, floored
-      // at minSplitTarget (a sort task under a few thousand rows is
-      // trivially cheap — splitting further would just burn refinement
-      // passes on small inputs). A tie group whose ids don't cast to
-      // long can't be id-split, so only the HARD cap applies to it
-      // (balance alone never fails loudly).
-      val splitLimit = math.min(maxBucketRows, math.max(minSplitTarget,
-        (total + numBuckets - 1L) / numBuckets.toLong))
-      def limitFor(r: org.apache.spark.sql.Row): Long = {
-        val pureTie = !r.isNullAt(2) && r.getLong(2) == r.getLong(3)
-        val idsOk = r.getLong(6) == 0L && !r.isNullAt(4)
-        if (pureTie && !idsOk) maxBucketRows else splitLimit
-      }
-      val oversized = groups.filter(g =>
-        byGid.get(g.gid).exists(r => g.rows > limitFor(r)))
-      if (oversized.isEmpty) done = true
-      else if (round >= 3) {
-        val hard = groups.filter(_.rows > maxBucketRows)
-        if (hard.nonEmpty) throw new IllegalStateException(
-          s"$caller: ${hard.size} bucket(s) still exceed " +
-            s"maxBucketRows=$maxBucketRows after $round refinement " +
-            s"rounds (worst: ${hard.map(_.rows).max} rows) " +
-            "— raise maxBucketRows or pre-aggregate the key")
-        done = true // residual imbalance within the hard cap: accept
-      } else {
-        round += 1
-        val prev = col(lvl(round - 1))
-        var level: Column = prev
-        val refined = oversized.flatMap { g =>
-          val r = byGid(g.gid)
-          val (kmn, kmx) = (r.getLong(2), r.getLong(3))
-          val parts = math.min(4096L, math.max(2L,
-            2L * ((g.rows + splitLimit - 1L) / splitLimit))).toInt
-          val sub: Column =
-            if (kmn < kmx) rangeBucket(k, kmn, kmx, parts) // split keys
-            else { // pure tie group: split the ids (monotone in id)
-              if (r.getLong(6) > 0L || r.isNullAt(4))
-                throw new IllegalStateException(
-                  s"$caller: key=$kmn is a tie group of ${g.rows} " +
-                    s"rows (> maxBucketRows=$maxBucketRows) and idCol " +
-                    s"'$idCol' does not cast to long, so the tie group " +
-                    "cannot be range-refined — use an integral id or " +
-                    "raise maxBucketRows")
-              rangeBucket(idL, r.getLong(4), r.getLong(5), parts)
-            }
-          val baseGid = nextGid
-          nextGid += parts
-          // rows of g land in g's children [baseGid, baseGid + parts)
-          level = when(prev === g.gid, lit(baseGid) + sub).otherwise(level)
-          (0 until parts).map(i => RankGroup(baseGid + i, g.path :+ i, 0L))
-        }
-        levels = levels :+ level
-        val dead = oversized.map(_.gid).toSet
-        groups = groups.filterNot(g => dead(g.gid)) ++ refined
-      }
+    val before = stats.scanLeft((0L, 0L)) { case ((n, s), (_, pn, _, ps)) =>
+      (n + pn, Math.addExact(s, ps))
     }
-    val ordered = groups.sortWith((a, b2) => {
-      val cmp = a.path.zip(b2.path).find { case (x, y) => x != y }
-      cmp.map { case (x, y) => x < y }
-        .getOrElse(a.path.length < b2.path.length)
-    })
-    (addGroup, ordered, sums)
+    def offsets(f: ((Long, Long)) => Long): Column = element_at(
+      typedLit(stats.map(_._1).zip(before.map(f)).toMap), sortPartition)
+    sorted
+      .withColumn(outCol,
+        if (stats.isEmpty) lit(null) else out(offsets(_._1), offsets(_._2)))
+      .drop("__grk_i")
   }
 }

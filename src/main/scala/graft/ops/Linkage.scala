@@ -283,24 +283,22 @@ object Linkage {
     * blow up, which is the property neither LSH nor key blocking can
     * promise.
     *
-    * Shape at 100 TB: [[graft.ops.Layout.globalRank]]'s bucket-offset
-    * distributed rank (single input execution since round 11; never a
-    * single-partition sort), then each rank
-    * lands in TWO width-`2·window` bands offset by `window` — any two
-    * ranks closer than `window` share at least one band (the shifted-
-    * band cover), so pair generation is [[graft.ops.Dedup]]'s capped
-    * in-bucket expansion over bands of ≤ 2·window rows. One rank pass,
-    * one band shuffle; candidates re-deduped by id pair.
+    * Shape at 100 TB: [[graft.ops.Layout.globalRank]]'s range-sorted
+    * rank (one input execution, never a single-partition sort), then
+    * each rank lands in TWO width-`2·window` bands offset by `window` —
+    * any two ranks closer than `window` share at least one band (the
+    * shifted-band cover), so pair generation is [[graft.ops.Dedup]]'s
+    * capped in-bucket expansion over bands of ≤ 2·window rows. One rank
+    * pass, one band shuffle; candidates re-deduped by id pair.
     *
     * `keyCol` must be integral (the [[graft.ops.Layout.globalRank]]
     * contract); returns (id1, id2, rank_dist) with 1 ≤ rank_dist <
     * window, ids ordered by rank.
     */
   def sortedNeighborPairs(df: DataFrame, keyCol: String, idCol: String,
-      window: Int, numBuckets: Int = 1024): DataFrame = {
+      window: Int): DataFrame = {
     require(window >= 2, s"window=$window must be >= 2")
-    val ranked = Layout.globalRank(df, keyCol, idCol, "__snb_r",
-        numBuckets)
+    val ranked = Layout.globalRank(df, keyCol, idCol, "__snb_r")
       .select(col(idCol).as("id"), col("__snb_r").as("r"))
     // two band schemes of width 2w, the second shifted by w: any two
     // ranks closer than w share a band in at least one scheme. Exact

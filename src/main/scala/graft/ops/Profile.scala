@@ -1421,8 +1421,9 @@ object Profile {
     * any engine may break ties its own way and reach identical sums.
     *
     * Shape at 100 TB: one token-grain partial-agg shuffle to the vocab
-    * grain, then the rank machinery's two vocab-grain passes; OLS is
-    * one global aggregate. Nothing driver-side beyond rank offsets.
+    * grain, then [[graft.ops.Layout.globalRank]]'s vocab-grain range sort
+    * and stats job; OLS is one global aggregate. Nothing driver-side
+    * beyond per-partition rank offsets.
     */
   def zipfFit(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val freqs = docs
@@ -1481,10 +1482,10 @@ object Profile {
       .select(col("doc_id"), col("ws"),
         size(col("ws")).cast("long").as("n_tokens"))
       .where(col("n_tokens") > 0)
-    // lens derives deterministically from the checkpoint above, so the
-    // rank machinery can safely skip its own (second) materialization
     val starts = graft.ops.Layout.globalCumsum(lens, "doc_id", "doc_id",
-      "n_tokens", cumCol = "start", materializeInput = false)
+      "n_tokens", cumCol = "start")
+    // starts reads globalCumsum's own checkpoint; nothing reads toks again
+    Rounds.release(toks)
     // each term's first global occurrence -> the doc where it debuts
     val firstDebut = starts
       .select(col("doc_id"), col("start"),

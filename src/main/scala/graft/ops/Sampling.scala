@@ -91,9 +91,9 @@ object Sampling {
     *     (restart-safe, resumable from a position);
     *   - different epochs are independent permutations (no fixed
     *     inter-document adjacency across epochs);
-    *   - no `rand()`, no `shuffle`-by-sort of raw data: positions come
-    *     from [[graft.ops.Layout.globalRank]]'s bucket-offset machinery
-    *     — no single-partition window at any corpus size.
+    *   - no `rand()`: positions come from
+    *     [[graft.ops.Layout.globalRank]]'s range sort and per-partition
+    *     offsets — no single-partition window at any corpus size.
     *
     * Feed `epoch_pos` to [[graft.ops.Curation.contextWindows]] as the
     * curriculum key to pack the epoch stream, or range-write by it for
@@ -123,19 +123,20 @@ object Sampling {
     * mix the two freely and a resumed run can re-derive any single
     * epoch cheaply.
     *
-    * Why this doesn't need [[graft.ops.Layout.globalRank]]'s refinement
-    * machinery: the rank key HERE is an md5 draw — uniform on [0, 2^60)
-    * by construction — so a fixed monotone bucket split (top `b` bits
-    * of the draw) is balanced within noise and per-(epoch, bucket)
-    * counts from ONE partial-agg pass give exact offsets directly; the
-    * general operator must refine because real keys are arbitrarily
-    * skewed. Shape: one narrow epoch-explode over the checkpointed
+    * Why this doesn't call [[graft.ops.Layout.globalRank]] once per
+    * epoch: the rank key HERE is an md5 draw — uniform on [0, 2^60) by
+    * construction — so a fixed monotone bucket split (top `b` bits of
+    * the draw) is balanced within noise, and per-(epoch, bucket) counts
+    * from ONE partial-agg pass give exact offsets for every epoch at
+    * once; the general operator samples range bounds and sorts because
+    * real keys are arbitrarily skewed, and it would do so E times.
+    * Shape: one narrow epoch-explode over the checkpointed
     * input (rows ×E), one partial-agg stats pass, one window
     * partitioned by (epoch, bucket) — never a global sort, no driver
-    * state beyond E·numBuckets offsets. The loud-failure contract
-    * matches globalRank: null ids are refused, and a bucket past
-    * `maxBucketRows` fails with the count (only reachable when
-    * corpus/numBuckets genuinely exceeds the cap — raise numBuckets).
+    * state beyond E·numBuckets offsets. Failures are loud: null ids are
+    * refused, and a bucket past `maxBucketRows` fails with the count
+    * (only reachable when corpus/numBuckets genuinely exceeds the cap —
+    * raise numBuckets).
     */
   def epochStreams(df: DataFrame, epochs: Seq[Int],
       idCol: String = "doc_id", numBuckets: Int = 1024,

@@ -53,8 +53,8 @@ object DocPipeline {
     edges(s, d).withColumn("count", lit(1L))
 
   /** Association measures by the engine's Steps 2-3. Runs the grand-total
-    * job and persists the pair counts, which the harness's `clearCache`
-    * releases after the entry.
+    * job and persists the pair counts, which `Harness.releasing` drops
+    * after the entry.
     */
   private[queries] def assoc(s: SparkSession, d: String): DataFrame =
     Associate.associate(Counts.fromEdges(bigrams(s, d)))

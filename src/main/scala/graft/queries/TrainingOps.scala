@@ -6508,14 +6508,14 @@ object TrainingOps {
              |SELECT COALESCE(shard, -1) AS shard, n, fingerprint
              |FROM s ORDER BY 1""".stripMargin)),
 
-    // Dense GLOBAL rank without the single-partition window: the
-    // two-pass bucket-offset ranking (deterministic integer buckets,
-    // B-bounded offset collect, per-bucket row_number). The oracle IS
-    // the naive global window - results identical, plan shape not.
+    // Dense GLOBAL rank without the single-partition window: a range
+    // sort, per-partition row offsets from one stats job, and a narrow
+    // offset + row-in-partition projection. The oracle IS the naive
+    // global window - results identical, plan shape not.
     QueryDef("q260_global_rank",
       (s, d) => graft.ops.Layout.globalRank(
           table(s, d, "documents").select(col("doc_id"), col("n_chars")),
-          "n_chars", "doc_id", numBuckets = 64)
+          "n_chars", "doc_id")
         .select(col("doc_id"), col("n_chars"), col("rk"))
         .orderBy("rk"),
       Some("""SELECT doc_id, n_chars,
@@ -6530,7 +6530,7 @@ object TrainingOps {
       (s, d) => graft.ops.Linkage.sortedNeighborPairs(
           table(s, d, "customer").select(col("c_custkey"),
             round(col("c_acctbal") * 100, 0).cast("long").as("bal_c")),
-          "bal_c", "c_custkey", window = 4, numBuckets = 64)
+          "bal_c", "c_custkey", window = 4)
         .orderBy("id1", "id2"),
       Some("""WITH r AS (SELECT c_custkey AS id,
              |    CAST(round(c_acctbal * 100, 0) AS BIGINT) AS k
@@ -6717,14 +6717,14 @@ object TrainingOps {
               |FROM b ORDER BY n_pairs""".stripMargin)),
 
     // Exact distributed prefix sum over the global (key, id) order -
-    // the bucket-offset two-pass (q260's machinery with per-group SUMS
-    // instead of counts), never a single-partition window. The oracle
-    // IS the naive global running sum.
+    // q260's range sort with per-partition value sums as offsets and a
+    // running sum in a window partitioned by the sort's partitions,
+    // never a single-partition window. The oracle IS the naive global
+    // running sum.
     QueryDef("q268_global_cumsum",
       (s, d) => graft.ops.Layout.globalCumsum(
           table(s, d, "documents").select(col("doc_id"), col("n_chars")),
-          "n_chars", "doc_id", "n_chars", cumCol = "start_pos",
-          numBuckets = 64)
+          "n_chars", "doc_id", "n_chars", cumCol = "start_pos")
         .select(col("doc_id"), col("n_chars"), col("start_pos"))
         .orderBy("doc_id"),
       Some("""SELECT doc_id, n_chars,
@@ -7123,7 +7123,7 @@ object TrainingOps {
 
     // Deterministic epoch shuffle: the reproducible per-epoch
     // pseudo-random permutation a training loader consumes, as dense
-    // 1-based positions from the bucket-offset rank machinery — no
+    // 1-based positions from the range-sorted global rank — no
     // rand(), no single-partition window. The oracle replays the
     // md5-draw + ROW_NUMBER ordering digit for digit.
     QueryDef("q283_epoch_shuffle",
@@ -7143,7 +7143,7 @@ object TrainingOps {
     // Zipf-law fit of the corpus unigram distribution, on the q213
     // bigram-token corpus (the raw 31-word synthetic vocabulary is too
     // small to profile; bigrams give ~10^3 terms with a real rank
-    // curve). Ranks come from the bucket-offset global rank — no
+    // curve). Ranks come from the range-sorted global rank — no
     // single-partition window at any vocabulary size; OLS sums are
     // permutation-invariant within frequency ties, so the oracle may
     // break ties its own way and reach identical numbers.

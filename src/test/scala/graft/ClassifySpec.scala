@@ -93,6 +93,24 @@ class ClassifySpec extends AnyFunSuite with SparkTestBase {
     assert(!report.accuracy.isNaN)
   }
 
+  test("AUC keeps its raw bits on tied scores, a NaN score, signed " +
+      "zeros and a one-class input") {
+    val s2 = spark; import s2.implicits._
+    // sorted by java.lang.Double.compare: -0.0 | 0.0 x3 | 0.2 | 0.4 x2 |
+    // 0.9 x3 | NaN, positives ranked 1, 3, 6.5, 9, 9, 11 (tie averages):
+    // (39.5 - 6 * 7 / 2) / (6 * 5)
+    val preds = Seq((1.0, 1.0, 0.9), (0.0, 1.0, 0.9), (1.0, 1.0, 0.9),
+      (0.0, 0.0, 0.0), (1.0, 0.0, -0.0), (0.0, 0.0, 0.0),
+      (1.0, 1.0, Double.NaN), (0.0, 0.0, 0.4), (1.0, 0.0, 0.4),
+      (0.0, 0.0, 0.2), (1.0, 0.0, 0.0))
+      .toDF("label", "prediction", "p_similar").repartition(3)
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      java.lang.Double.doubleToRawLongBits(
+        Classify.evaluate(df, folds = 2).aucSimilar)
+    assert(bits(preds) == 0x3fe3bbbbbbbbbbbcL, bits(preds).toHexString)
+    assert(bits(preds.where(col("label") === 1.0)) == 0L)
+  }
+
   test("CV survives a session whose ObservationManager is initialized " +
       "(Observation x MLlib trainingSummary serialization interaction)") {
     val s2 = spark; import s2.implicits._

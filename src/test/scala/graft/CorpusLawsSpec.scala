@@ -110,9 +110,6 @@ class CorpusLawsSpec extends AnyFunSuite with SparkTestBase {
       if (t == null) Seq.empty
       else String.valueOf(t.getMessage) +: msgs(t.getCause)
     assert(msgs(e).exists(_.contains("failOnSpill")), msgs(e).toString)
-    // and the strict conf is RESTORED after the audit builds its plans
-    assert(!spark.conf.getOption("spark.graft.dedup.failOnSpill")
-      .exists(_.toBoolean))
   }
 
   test("rendezvousAssign: deterministic, and MINIMAL MOVEMENT — adding " +

@@ -6,10 +6,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The measurement harness's pure parts — the JSON escape, the sampling
-  * rule, the entry selector — and `Bench`'s machine-parsed line. No Spark
-  * job runs here.
+  * rule, the entry selector — `Bench`'s machine-parsed line, and what a
+  * timed entry leaves cached.
   */
-class HarnessSpec extends AnyFunSuite {
+class HarnessSpec extends AnyFunSuite with SparkTestBase {
 
   private val json = new ObjectMapper()
 
@@ -56,5 +56,25 @@ class HarnessSpec extends AnyFunSuite {
     assert(tree.get("failed").elements.asScala.map(_.asText).toSeq == Seq("q_fail"))
     assert(tree.get("samples").fieldNames.asScala.toSeq == Seq("q_a"))
     assert(tree.get("sf").asText == "/data/sf0.01")
+  }
+
+  test("timed releases every RDD the entry persisted; the caller's own survive") {
+    val sc = spark.sparkContext
+    val mine = sc.parallelize(1 to 10).persist()
+    mine.count()
+    val edges = spark.range(0, 20).selectExpr("id AS src", "(id + 1) % 20 AS dst")
+    val keyed = spark.range(0, 50).selectExpr("id", "id % 7 AS k")
+    for ((name, entry) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "pageRank" -> (() => graft.ops.Graph.pageRank(edges, 3)),
+        "globalRank" -> (() => graft.ops.Layout.globalRank(keyed, "k", "id")))) {
+      // clearCache also drops earlier cached Datasets, so compare the
+      // RDDs added, not the whole set
+      val before = sc.getPersistentRDDs.keySet
+      Harness.timed(spark)(entry())
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.isEmpty, s"$name left RDDs cached: $added")
+    }
+    assert(sc.getPersistentRDDs.contains(mine.id))
+    mine.unpersist()
   }
 }

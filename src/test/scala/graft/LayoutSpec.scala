@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -140,9 +141,9 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     val acc = spark.sparkContext.longAccumulator("grk_evals")
     val src = spark.range(0, 500, 1, 8)
       .map { i => acc.add(1); (i.toLong, 7L) }.toDF("id", "k")
-    // constant key + tiny cap forces tie refinement: >= 2 stats passes
-    // plus the final ranked pass. Pre-round-11 each pass re-ran the map.
-    val got = Layout.globalRank(src, "k", "id", maxBucketRows = 40L)
+    // the range sort's sample, the sort, the stats job and the final
+    // ranked pass all read one checkpoint of the input
+    val got = Layout.globalRank(src, "k", "id")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert((1L to 500L).forall(id => got(id - 1) == id), got.toString)
     assert(acc.value == 500L,
@@ -159,7 +160,7 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     val src = spark.range(0, 400, 1, 8)
       .map { i => (i.toLong, LayoutSpec.mutatingKey.getAndIncrement()) }
       .toDF("id", "k")
-    val got = Layout.globalRank(src, "k", "id", maxBucketRows = 30L)
+    val got = Layout.globalRank(src, "k", "id")
       .collect()
     // sorting the RESULT by (k, id) must walk ranks 1..n exactly — a
     // desync between collected offsets and the final pass would show
@@ -175,12 +176,28 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     val acc = spark.sparkContext.longAccumulator("gcs_evals")
     val src = spark.range(0, 300, 1, 8)
       .map { i => acc.add(1); (i.toLong, 5L, 2L) }.toDF("id", "k", "v")
-    val got = Layout.globalCumsum(src, "k", "id", "v",
-        maxBucketRows = 40L)
+    val got = Layout.globalCumsum(src, "k", "id", "v")
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert((0L until 300L).forall(id => got(id) == 2L * id), got.toString)
     assert(acc.value == 300L,
       s"input plan executed ${acc.value / 300.0} times, expected once")
+  }
+
+  test("global rank and cumsum on 1.1M xxhash64-spread keys equal the " +
+      "single-partition ROW_NUMBER and running sum") {
+    val n = 1100000L
+    val src = spark.range(0, n, 1, 8).select(col("id"),
+      xxhash64(col("id")).as("k"), (col("id") % 97).as("v"))
+    val w = Window.orderBy("k", "id")
+    val naive = src.select(col("id"), row_number().over(w).cast("long"),
+      sum("v").over(w.rowsBetween(Window.unboundedPreceding,
+        Window.currentRow)) - col("v"))
+    val got = Layout.globalRank(src, "k", "id")
+      .join(Layout.globalCumsum(src, "k", "id", "v"), "id")
+      .select(col("id"), col("rk"), col("cumsum"))
+    assert(got.count() == n)
+    val diff = got.exceptAll(naive).limit(5).collect()
+    assert(diff.isEmpty, diff.toSeq.toString)
   }
 
   test("hilbert index: bijection onto [0, n^2) and UNIT-STEP adjacency " +

@@ -1973,29 +1973,28 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(ct == Map(1L -> "", 2L -> ""))
   }
 
-  test("strict spill mode: spark.graft.dedup.failOnSpill=true turns a " +
-      "refused bucket into a loud job failure; normal data unaffected") {
+  test("strict spill mode: strict = true turns a refused bucket into a " +
+      "loud job failure; normal data unaffected") {
     val s2 = spark; import s2.implicits._
     val dense = (1L to 60L).map(id =>
       (id, s"c1 c2 c3 c4 c5 tail$id")).toDF("doc_id", "text")
-    spark.conf.set("spark.graft.dedup.failOnSpill", "true")
-    try {
-      // the pathological corpus now FAILS instead of silently yielding
-      // zero pairs with only an observed metric to notice
-      val e = intercept[Exception](
-        Dedup.jaccardPairs(dense, 3, 0.1, maxBucket = 16).count())
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Seq.empty
-        else String.valueOf(t.getMessage) +: msgs(t.getCause)
-      assert(msgs(e).exists(_.contains("failOnSpill")),
-        s"want the strict-mode message, got: ${msgs(e)}")
-      // no bucket over the cap -> strict mode changes nothing
-      assert(Dedup.jaccardPairs(dense, 3, 0.1).count() == 60L * 59 / 2)
-    } finally spark.conf.unset("spark.graft.dedup.failOnSpill")
+    // the pathological corpus now FAILS instead of silently yielding
+    // zero pairs with only an observed metric to notice
+    val e = intercept[Exception](
+      Dedup.jaccardPairs(dense, 3, 0.1, maxBucket = 16, strict = true)
+        .count())
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else String.valueOf(t.getMessage) +: msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("failOnSpill")),
+      s"want the strict-mode message, got: ${msgs(e)}")
+    // no bucket over the cap -> strict mode changes nothing
+    assert(Dedup.jaccardPairs(dense, 3, 0.1, strict = true).count() ==
+      60L * 59 / 2)
   }
 
-  test("strict spill mode on minhash candidates: strict = Some(true) " +
-      "fails an oversized band bucket; Some(false) wins over the conf") {
+  test("strict spill mode on minhash candidates: strict = true fails " +
+      "an oversized band bucket; the default skips it") {
     val s2 = spark; import s2.implicits._
     val dense = (1L to 60L).map(id =>
       (id, s"c1 c2 c3 c4 c5 tail$id")).toDF("doc_id", "text")
@@ -2003,20 +2002,12 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
       if (t == null) Seq.empty
       else String.valueOf(t.getMessage) +: msgs(t.getCause)
     val e = intercept[Exception](Dedup.minhashCandidates(dense, 3, 8, 2,
-      maxBucket = 16, strict = Some(true)).count())
+      maxBucket = 16, strict = true).count())
     assert(msgs(e).exists(_.contains("failOnSpill")),
       s"want the strict-mode message, got: ${msgs(e)}")
-    val saved = spark.conf.getOption("spark.graft.dedup.failOnSpill")
-    spark.conf.set("spark.graft.dedup.failOnSpill", "true")
-    try {
-      val lenient = Dedup.minhashCandidates(dense, 3, 8, 2, maxBucket = 16,
-        strict = Some(false)).count()
-      assert(lenient < Dedup.minhashCandidates(dense, 3, 8, 2,
-        strict = Some(false)).count())
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.graft.dedup.failOnSpill", v)
-      case None => spark.conf.unset("spark.graft.dedup.failOnSpill")
-    }
+    val lenient = Dedup.minhashCandidates(dense, 3, 8, 2, maxBucket = 16)
+      .count()
+    assert(lenient < Dedup.minhashCandidates(dense, 3, 8, 2).count())
   }
 
   test("spillCertificate: the driver-visible certificate matches the " +
@@ -4290,12 +4281,14 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
         org.apache.spark.sql.expressions.Window
           .orderBy(col("k"), col("id"))))
       .collect().map(r => r.getLong(0) -> r.getInt(2).toLong).toMap
-    for (parts <- Seq(1, 7); buckets <- Seq(1, 4, 64)) {
-      val got = graft.ops.Layout
-        .globalRank(fx.repartition(parts), "k", "id",
-          numBuckets = buckets)
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      assert(got == naive, s"parts=$parts buckets=$buckets")
+    // with AQE off the range sort keeps all 4 shuffle partitions, so the
+    // per-partition offsets are exercised on this small fixture too
+    for (parts <- Seq(1, 7); aqe <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val got = try graft.ops.Layout.globalRank(fx.repartition(parts),
+          "k", "id").collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+        finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      assert(got == naive, s"parts=$parts aqe=$aqe")
     }
     // constant key: every row in one bucket, ranks still total by id
     val const = (1L to 50L).map(id => (id, 5L)).toDF("id", "k")
@@ -4304,26 +4297,15 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert((1L to 50L).forall(id => gotC(id) == id), gotC.toString)
   }
 
-  test("global rank skew guard: a constant key refines into bounded " +
-      "groups (never one sort task), ranks unchanged; hot-key mixes " +
-      "refine too; violations fail loudly") {
+  test("global rank on skewed keys: a constant key and an 80%-hot key " +
+      "rank exactly, any orderable id ranks; violations fail loudly") {
     val s2 = spark; import s2.implicits._
-    // constant key, 500 rows, cap 40: without the guard this is ONE
-    // 500-row sort task; the guard must split the tie group by id range
+    // constant key: the range sort splits the one tie group by id
     val const = (1L to 500L).map(id => (id, 7L)).toDF("id", "k")
-    val (_, groupsC, _) = graft.ops.Layout.rankGroups(
-      const, "k", "id", numBuckets = 8, maxBucketRows = 40L,
-      valCol = None)
-    assert(groupsC.map(_.rows).sum == 500L)
-    assert(groupsC.forall(_.rows <= 40L),
-      s"unbounded group survived: ${groupsC.filter(_.rows > 40L)}")
-    val gotC = graft.ops.Layout.globalRank(const, "k", "id",
-        maxBucketRows = 40L)
+    val gotC = graft.ops.Layout.globalRank(const, "k", "id")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert((1L to 500L).forall(id => gotC(id) == id), "exact ranks")
-    // hot key (80% of rows on k=0) among a spread of cold keys: the
-    // multi-key bucket refines by key range, then the residual pure-tie
-    // child by id range — still bounded, still exact
+    // hot key (80% of rows on k=0) among a spread of cold keys
     val rnd = new scala.util.Random(3)
     val hot = (1L to 500L).map(id =>
       (id, if (id % 5 != 0L) 0L else rnd.nextInt(1000).toLong))
@@ -4332,21 +4314,16 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
         org.apache.spark.sql.expressions.Window
           .orderBy(col("k"), col("id"))))
       .collect().map(r => r.getLong(0) -> r.getInt(2).toLong).toMap
-    val (_, groupsH, _) = graft.ops.Layout.rankGroups(
-      hot, "k", "id", numBuckets = 8, maxBucketRows = 50L,
-      valCol = None)
-    assert(groupsH.forall(_.rows <= 50L),
-      s"unbounded group survived: ${groupsH.filter(_.rows > 50L)}")
-    val gotH = graft.ops.Layout.globalRank(hot, "k", "id",
-        numBuckets = 8, maxBucketRows = 50L)
+    val gotH = graft.ops.Layout.globalRank(hot, "k", "id")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(gotH == naive, "skew refinement must not change ranks")
-    // a tie group whose ids do not cast to long cannot be refined:
-    // loud failure, not a silent mega-task
-    val badIds = (1L to 100L).map(id => (s"doc-$id", 7L)).toDF("id", "k")
-    val e = intercept[IllegalStateException](graft.ops.Layout
-      .globalRank(badIds, "k", "id", maxBucketRows = 10L).collect())
-    assert(e.getMessage.contains("does not cast to long"))
+    assert(gotH == naive, "a hot key must not change ranks")
+    // string ids on a constant key rank in string order
+    val strIds = (1L to 100L).map(id => (f"doc-$id%03d", 7L))
+      .toDF("id", "k")
+    val gotS = graft.ops.Layout.globalRank(strIds, "k", "id")
+      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert((1L to 100L).forall(id => gotS(f"doc-$id%03d") == id),
+      gotS.toString)
     // null keys refused (a SQL window would sort them first; this
     // operator's contract is non-null keys)
     val withNull = Seq((1L, Some(3L)), (2L, None), (3L, Some(1L)))
@@ -4373,16 +4350,17 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
           .orderBy(col("k"), col("id"))
           .rowsBetween(Long.MinValue, 0)) - col("v"))
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    for (parts <- Seq(1, 7); buckets <- Seq(1, 4, 64)) {
-      val got = graft.ops.Layout.globalCumsum(fx.repartition(parts),
-          "k", "id", "v", numBuckets = buckets)
-        .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-      assert(got == naive, s"parts=$parts buckets=$buckets")
+    for (parts <- Seq(1, 7); aqe <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val got = try graft.ops.Layout.globalCumsum(fx.repartition(parts),
+          "k", "id", "v").collect().map(r => r.getLong(0) -> r.getLong(3))
+          .toMap
+        finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      assert(got == naive, s"parts=$parts aqe=$aqe")
     }
-    // constant key: the tie group refines by id range, cumsum exact
+    // constant key: the range sort splits the tie group by id, cumsum exact
     val const = (1L to 300L).map(id => (id, 5L, 2L)).toDF("id", "k", "v")
-    val gotC = graft.ops.Layout.globalCumsum(const, "k", "id", "v",
-        maxBucketRows = 40L)
+    val gotC = graft.ops.Layout.globalCumsum(const, "k", "id", "v")
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert((1L to 300L).forall(id => gotC(id) == 2L * (id - 1)), "exact")
     // null values count as 0
@@ -4451,7 +4429,7 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
         (col("b.r") - col("a.r")).cast("int"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val got = graft.ops.Linkage
-      .sortedNeighborPairs(fx, "k", "id", w, numBuckets = 16)
+      .sortedNeighborPairs(fx, "k", "id", w)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == naive,
       s"missing=${naive -- got} extra=${got -- naive}")

@@ -806,14 +806,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   test("global rank: every window is bucket-PARTITIONED — the " +
       "single-partition global sort never appears") {
     val df = Layout.globalRank(
-      docs.select(col("doc_id"), col("n_chars")),
-      "n_chars", "doc_id", numBuckets = 64)
+      docs.select(col("doc_id"), col("n_chars")), "n_chars", "doc_id")
+    // the rank is a narrow projection over the sorted checkpoint: no
+    // window at all, so no unpartitioned one
     val windows = df.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
-    assert(windows.nonEmpty)
-    assert(windows.forall(_.partitionSpec.nonEmpty),
-      "an empty partitionSpec is the one-task global sort this op exists to avoid")
+    assert(windows.isEmpty, df.queryExecution.optimizedPlan.toString)
     // rank still exactly matches the naive global window
     val got = df.orderBy("rk").limit(3).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
@@ -838,7 +837,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val lens = docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"))
     partitionedWindows(Layout.globalCumsum(lens, "doc_id", "doc_id",
-      "n_tokens", numBuckets = 64))
+      "n_tokens"))
     partitionedWindows(graft.ops.Curation.contextWindows(lens, 256L))
     partitionedWindows(graft.ops.Dedup.duplicateSpans(docs, 8))
     partitionedWindows(graft.ops.Dedup.removeDuplicateSpans(docs, 8))
@@ -876,13 +875,15 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
         "transform(sequence(1, size(l) - 1), i -> " +
           "concat(element_at(l, i), '_', element_at(l, i + 1)))"),
         " ").as("text"))
-    for (df <- Seq(Profile.zipfFit(bigrams), Profile.heapsFit(bigrams))) {
-      val ws = df.queryExecution.optimizedPlan.collect {
+    def windows(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
       }
-      assert(ws.nonEmpty && ws.forall(_.partitionSpec.nonEmpty),
-        "the fit's rank/cumsum windows must stay bucket-partitioned")
-    }
+    // zipfFit's global rank is a narrow projection: no window at all
+    assert(windows(Profile.zipfFit(bigrams)).isEmpty)
+    val ws = windows(Profile.heapsFit(bigrams))
+    assert(ws.nonEmpty && ws.forall(_.partitionSpec.nonEmpty),
+      "the fit's cumsum windows must stay partitioned")
     assert(exchanges(Sampling.rendezvousAssign(docs.select("doc_id"),
       (0 until 8).map(i => s"s$i"))) == 0,
       "rendezvous assignment must be a pure narrow projection")
