@@ -58,16 +58,25 @@ object Dedup {
   def shingles(docs: DataFrame, n: Int, idCol: String = "doc_id",
       textCol: String = "text", dedup: Boolean = true,
       tokenizer: Tokenize.Mode = Tokenize.Whitespace): DataFrame = {
+    val raw = gramArrays(docs, n, idCol, textCol, tokenizer)
+      .select(col("id"), explode(col("grams")).as("shingle"))
+    if (dedup) raw.distinct() else raw
+  }
+
+  /** `(id, grams)`: each row's word n-grams in text order, repeats kept;
+    * a null text or one shorter than `n` tokens yields no row. */
+  private def gramArrays(docs: DataFrame, n: Int, idCol: String = "doc_id",
+      textCol: String = "text",
+      tokenizer: Tokenize.Mode = Tokenize.Whitespace): DataFrame = {
     // n = 0 would make "" every document's only shingle: any two
     // documents would then look identical to every Jaccard tier
     require(n >= 1, s"n=$n must be >= 1")
-    val raw = docs.select(col(idCol).as("id"),
+    docs.select(col(idCol).as("id"),
         Tokenize.tokens(col(textCol), tokenizer).as("l"))
       .where(size(col("l")) >= n)
-      .select(col("id"), explode(expr(
-        s"transform(sequence(1, size(l) - ${n - 1}), i -> concat_ws(' ', slice(l, i, $n)))"))
-        .as("shingle"))
-    if (dedup) raw.distinct() else raw
+      .select(col("id"), expr(
+        s"transform(sequence(1, size(l) - ${n - 1}), i -> concat_ws(' ', slice(l, i, $n)))")
+        .as("grams"))
   }
 
   /** Hard ceiling on the quadratic bucket expansion (the enforced form
@@ -888,9 +897,22 @@ object Dedup {
     * (Vernica, Carey & Li, SIGMOD 2010), so each document is one sorted
     * token array: its prefix is a slice, and verification joins the
     * candidate list twice against those arrays (linear in the corpus)
-    * and intersects integer sets per pair — candidates move with two
-    * narrow equi-joins; the gram strings never cross a shuffle after the
-    * numbering join.
+    * and intersects integer sets per pair.
+    *
+    * The token sets ([[tokenSets]]) take five steps: each row's grams
+    * deduplicated inside the row (`array_distinct`, narrow), a count per
+    * gram as `df`, a range sort on `(df, gram)` numbered in that order,
+    * a join of the row grams to their numbers, and a regroup by id into
+    * one sorted distinct array. Gram strings cross three exchanges: the
+    * count's, the range sort's and the numbering join's (AQE may
+    * broadcast one side instead). The regroup ships bigint tokens, and
+    * nothing after it carries a gram.
+    *
+    * Rows that share an id union into one set. Their `df` then counts
+    * rows, not ids, which only changes the global gram order. The
+    * prefix lemma above holds for ANY fixed global order, and every
+    * candidate is re-scored exactly, so the pairs are the same.
+    *
     * Candidate volume itself is a DATA property: it scales with
     * Σ per-gram prefix-bucket C(df,2), i.e. linearly in docs when
     * near-dup density per doc is bounded (measured: 10× docs with ~10
@@ -914,21 +936,10 @@ object Dedup {
     require(minJaccard > 0.0 && minJaccard <= 1.0,
       s"minJaccard=$minJaccard must be in (0, 1]")
     val t = minJaccard
-    val sh = shingles(docs, n)
-    // grams numbered once in ascending (df, gram) order: `orderBy` is a
-    // distributed range sort whose partitions are contiguous and
-    // ascending, so monotonically_increasing_id rises in that order too
-    val dict = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .orderBy("df", "shingle")
-      .select(col("shingle"), monotonically_increasing_id().as("tok"))
     // three consumers read the token sets (the prefix and both
-    // verification sides); left as lineage each re-runs the shingling
-    // and the numbering (q223 at sf0.1 on 4 cores: 4.2-4.7 s with this
-    // checkpoint, 5.0-5.6 s without it)
-    val sets = sh.join(dict, "shingle")
-      .groupBy("id").agg(array_sort(collect_list("tok")).as("toks"))
-      .withColumn("n_sh", size(col("toks")))
-      .localCheckpoint(true)
+    // verification sides); left as lineage each would re-run the
+    // shingling and the numbering
+    val sets = tokenSets(docs, n).localCheckpoint(true)
     // ascending tokens ARE the df order, so the prefix is a slice
     val prefix = sets.select(col("id"), col("n_sh"), posexplode(slice(
         col("toks"), lit(1), (col("n_sh") - ceil(lit(t) * col("n_sh") - 1e-9)
@@ -962,6 +973,25 @@ object Dedup {
         (col("n_common").cast("double") /
           (col("nsum") - col("n_common"))).as("jaccard"))
       .where(col("jaccard") >= t)
+  }
+
+  /** [[prefixFilterPairs]]' token sets before their checkpoint:
+    * `(id, toks, n_sh)`, `toks` the id's distinct gram numbers in
+    * ascending (df, gram) order. */
+  private[graft] def tokenSets(docs: DataFrame, n: Int): DataFrame = {
+    val sh = gramArrays(docs, n)
+      .select(col("id"), explode(array_distinct(col("grams"))).as("shingle"))
+    // `orderBy` is a distributed range sort whose partitions are
+    // contiguous and ascending, so monotonically_increasing_id rises in
+    // (df, gram) order too
+    val dict = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .orderBy("df", "shingle")
+      .select(col("shingle"), monotonically_increasing_id().as("tok"))
+    // array_distinct merges the grams of rows that share an id
+    sh.join(dict, "shingle")
+      .groupBy("id")
+      .agg(array_sort(array_distinct(collect_list("tok"))).as("toks"))
+      .withColumn("n_sh", size(col("toks")))
   }
 
   def fuzzyJoin(left: DataFrame, right: DataFrame,

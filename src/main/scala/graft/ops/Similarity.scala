@@ -899,12 +899,12 @@ object Similarity {
     * geometry degrades to it; spread data takes close to k/batch
     * passes.
     *
-    * Shape at 100 TB: ≈ k/batch rounds, each ONE corpus pass against
-    * the ≤ k broadcast chosen centers, whose min-per-vector aggregation
-    * hash-shuffles every vector (embedding included) once, plus a
-    * global TakeOrdered(batch) (no sort shuffle); the driver holds
-    * ≤ k + batch rows. Deterministic end-to-end: float dot products in
-    * index order, integer tie-breaks, no RNG.
+    * Shape at 100 TB: ≈ k/batch rounds, each ONE narrow corpus pass
+    * that folds the min distance over the ≤ k chosen centers (a literal
+    * array) inside each row, plus a global TakeOrdered(batch) (no
+    * shuffle of the corpus); the driver holds ≤ k + batch rows.
+    * Deterministic end-to-end: float dot products in index order,
+    * integer tie-breaks, no RNG.
     */
   def kCenters(corpus: DataFrame, k: Int, batch: Int = 16): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
@@ -931,15 +931,14 @@ object Similarity {
       seed.getDouble(2)))
     var exhausted = false
     while (chosen.length < k && !exhausted) {
-      val centers = chosen.map { case (id, e, _, n2) => (id, e, n2) }
-        .toDF("c_id", "c_emb", "c_n2")
+      // (c_n2, c_emb) in chosen order; array_min keeps the first of
+      // equal values, as `min`'s `least` update does
+      val centers = typedLit(chosen.map { case (_, e, _, n2) => (n2, e) })
       val cand = base
-        .crossJoin(broadcast(centers))
         .where(!col("vec_id").isin(chosen.map(_._1): _*))
-        .withColumn("d2", col("n2") + col("c_n2") -
-          lit(2.0) * dot(col("embedding"), col("c_emb")))
-        .groupBy("vec_id").agg(min("d2").as("d2"),
-          first("n2").as("n2"), first("embedding").as("embedding"))
+        .select(col("vec_id"), array_min(transform(centers, c =>
+            col("n2") + c("_1") - lit(2.0) * dot(col("embedding"), c("_2"))))
+          .as("d2"), col("n2"), col("embedding"))
         .orderBy(col("d2").desc, col("vec_id").asc)
         .limit(batch).collect()
       if (cand.isEmpty) exhausted = true

@@ -1769,17 +1769,21 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(j.isEmpty, s"jaccard should miss the containment pair: ${j.toSeq}")
   }
 
-  test("prefix-filter join equals quadratic jaccard at every threshold") {
-    val s2 = spark; import s2.implicits._
-    // seeded corpus of token-overlapping docs: shared base vocabulary
-    // plus per-doc noise, so qualifying pairs exist at several bars
+  /** Seeded corpus of token-overlapping docs: shared base vocabulary
+    * plus per-doc noise, so qualifying pairs exist at several bars. */
+  private def overlapCorpus: Seq[(Long, String)] = {
     val rnd = new scala.util.Random(42)
     val base = (0 until 30).map(i => s"w$i")
-    val docs = (1L to 40L).map { id =>
+    (1L to 40L).map { id =>
       val keep = base.filter(_ => rnd.nextDouble() < 0.8)
       val noise = (0 until rnd.nextInt(4)).map(j => s"n${id}_$j")
       (id, (keep ++ noise).mkString(" "))
-    }.toDF("doc_id", "text")
+    }
+  }
+
+  test("prefix-filter join equals quadratic jaccard at every threshold") {
+    val s2 = spark; import s2.implicits._
+    val docs = overlapCorpus.toDF("doc_id", "text")
     for (tau <- Seq(0.3, 0.5, 0.7, 0.9)) {
       val exact = Dedup.jaccardPairs(docs, 3, tau).collect()
         .map(r => (r.getLong(0), r.getLong(1),
@@ -1799,6 +1803,37 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     val kept = Dedup.prefixFilterPairs(bd, 3, 0.5).collect()
     assert(kept.length == 1 && kept.head.getDouble(2) == 0.5,
       s"boundary pair must survive: ${kept.toSeq}")
+  }
+
+  test("prefix-filter token sets: repeated grams, short and null " +
+      "texts and rows sharing an id score as quadratic jaccard does") {
+    val s2 = spark; import s2.implicits._
+    val seeded = overlapCorpus
+    val edge = Seq(
+      // "a b c" twice inside one row: 4 distinct trigrams, not 5
+      (41L, "a b c a b c d"),
+      (42L, "a b c a b c d a"),
+      (43L, "a b c d a b"),
+      // shorter than n = 3, and a null text: no grams, no pairs
+      (44L, "x y"), (45L, "x"), (46L, null),
+      // two rows of id 47 union into the 5 trigrams of id 48, and
+      // both rows hold "r s t"
+      (47L, "p q r s t"), (47L, "r s t u v"),
+      (48L, "p q r s t u v"),
+      // a second row for seeded id 7: id 8's text plus a tail
+      (7L, seeded(7)._2 + " z1 z2"))
+    val docs = (seeded ++ edge).toDF("doc_id", "text")
+    for (tau <- Seq(0.3, 0.5, 0.7, 0.9)) {
+      val exact = Dedup.jaccardPairs(docs, 3, tau).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val fast = Dedup.prefixFilterPairs(docs, 3, tau).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(fast == exact,
+        s"tau=$tau: missing=${exact -- fast} extra=${fast -- exact}")
+      assert(exact.contains((47L, 48L, 1.0)), s"tau=$tau: $exact")
+      assert(exact.contains((41L, 42L, 0.8)) == tau <= 0.8,
+        s"tau=$tau: $exact")
+    }
   }
 
   test("shingles, jaccardPairs and prefixFilterPairs reject n < 1") {

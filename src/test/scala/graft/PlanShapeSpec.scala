@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -753,6 +754,15 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     // a per-document rank window
     assert("Generate posexplode".r.findAllIn(p).nonEmpty, p)
     assert(!"(?i)window".r.findAllIn(p).hasNext, p)
+  }
+
+  test("prefix filter token sets: grams deduplicated inside each row " +
+      "— no (id, shingle) aggregate, one count keyed by the gram") {
+    val plan = Dedup.tokenSets(docs, 3).queryExecution.optimizedPlan
+    val keys = plan.collect { case a: Aggregate =>
+      a.groupingExpressions.flatMap(_.references.map(_.name)).toSet }
+    assert(!keys.exists(k => k("id") && k("shingle")), plan)
+    assert(keys.count(_ == Set("shingle")) == 1, plan)
   }
 
   test("time-weighted avg: one key window + one key-grain agg") {
