@@ -1,11 +1,13 @@
 package graft.ml
 
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.ParamMap
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.PairVectors
 
@@ -65,9 +67,30 @@ object Classify {
     * → out-of-fold predictions for every instance, via seeded 10-fold CV.
     * Non-finite features (the reference's Infinity sentinels surviving in
     * faithful mode) are clipped to ±1e15 — MLlib trees reject NaN/Inf.
+    *
+    * Jobs: one count sizes the input; one `reduceByKey` gives each fold
+    * its (rows, max label) and materializes the cached `(fold, label,
+    * features)` rows; each live fold's forest fit (dozens of small jobs,
+    * up to four folds at once); one count materializes the result. A
+    * fold is live when it has rows to test and rows to train on; with no
+    * live fold the result is empty and one warning naming the fold sizes
+    * goes to stderr. Everything it caches (the prepared and the labeled
+    * input, the rows, the broadcast models) is released before it returns,
+    * except the result, which is returned cached: callers unpersist it
+    * (run() does).
+    *
+    * The fold loop runs on the cached RDD, not on Catalyst plans: a fold
+    * number in a plan is an int literal inlined into the generated Java,
+    * so per-fold plans would give each fold its own classes, more than the
+    * 100-entry codegen cache holds, and every warm call would compile them
+    * all again. The plan prefix (clip, label, folds, `repartition(parts)`)
+    * fixes the row order and partitioning, which decide each forest's
+    * bagging; training sets keep that layout, and the scores come out
+    * fold-major, so the report's float sums add in a fixed order.
     */
   def crossValPredictions(vectors: DataFrame, folds: Int = 10,
       seed: Long = 42L, numTrees: Int = 100): DataFrame = {
+    val spark = vectors.sparkSession
     val cols = PairVectors.vectorColumns
     val clipped = cols.foldLeft(vectors) { (df, c) =>
       df.withColumn(c,
@@ -84,8 +107,7 @@ object Classify {
     // partitions multiplies task-scheduling overhead ~20x (observed: 63s →
     // 3s for the battery's 8-row smoke). Size partitions to the data.
     val n = prepared.count()
-    val parts = math.max(1, math.min(
-      vectors.sparkSession.sparkContext.defaultParallelism,
+    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (n / 5000L).toInt + 1))
     // Stratified fold assignment (as Weka's CV does): within each label,
     // spread rows round-robin over folds in a seeded order. The order is
@@ -101,54 +123,66 @@ object Classify {
         (row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy("label").orderBy(rand(seed))) % folds).cast("int")))
       .repartition(parts)
+      // cached whole: the round-robin exchange sorts rows by their hash
+      // before dealing them, so a column-pruned select of this plan would
+      // deal them differently and change every forest's bagging
       .cache()
-    val assembler = new VectorAssembler()
-      .setInputCols(cols.toArray).setOutputCol("features")
+    val assembled = new VectorAssembler().setInputCols(cols.toArray)
+      .setOutputCol("features").transform(labeled)
+    val rows = assembled.select("fold", "label", "features").rdd
+      .map(r => (r.getInt(0), r.getDouble(1), r.getAs[Vector](2))).cache()
+    val sizes = rows.map(r => r._1 -> (1L, r._2))
+      .reduceByKey((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      .collectAsMap()
+    prepared.unpersist()
+    labeled.unpersist()
+    val live = (0 until folds).filter(k => sizes.get(k).exists(_._1 < n))
+    if (live.isEmpty) System.err.println(s"warning: Classify: no live fold " +
+      s"(fold sizes ${(0 until folds).map(sizes.get(_).fold(0L)(_._1)).mkString(
+        "[", ", ", "]")} of $n rows): no fold has rows to test and to train on")
+    // A training set keeps the assembler's `features` field; its `label`
+    // field names the class count (the training folds' max label + 1), as
+    // the fit would otherwise compute with a job of its own.
+    def training(k: Int) = spark.createDataFrame(
+      rows.filter(_._1 != k).map(r => Row(r._2, r._3)),
+      StructType(Seq(NominalAttribute.defaultAttr.withName("label").withNumValues(
+        sizes.collect { case (j, (_, m)) if j != k => m.toInt + 1 }.max)
+        .toStructField(), assembled.schema("features"))))
     val rf = new RandomForestClassifier()
       .setNumTrees(numTrees).setMaxDepth(30)
       .setFeatureSubsetStrategy("sqrt").setSeed(seed)
       .setLabelCol("label").setFeaturesCol("features")
-    // One job sizes the folds; a fold is live when it has rows to test
-    // and rows to train on. Live folds fit concurrently (each fit is
-    // dozens of small jobs, so overlapping folds reclaims scheduling
-    // latency), each on its own estimator copy. The model copy drops the
-    // trainingSummary, which pins the SparkSession: a session whose
-    // ObservationManager is initialized is not java-serializable, so the
-    // broadcast below would fail (ClassifySpec pins the interaction).
-    val sizes = labeled.groupBy("fold").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val live = (0 until folds).filter(k => sizes.get(k).exists(_ < n))
+    // Live folds fit concurrently (each fit is dozens of small jobs, so
+    // overlapping folds reclaims scheduling latency), each on its own
+    // estimator copy. The model copy drops the trainingSummary, which pins
+    // the SparkSession: a session whose ObservationManager is initialized
+    // is not java-serializable, so the broadcast below would fail
+    // (ClassifySpec pins the interaction).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(live.size, 4)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val models = try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(live.map(k => scala.concurrent.Future(
-        k -> rf.copy(ParamMap.empty)
-          .fit(assembler.transform(labeled.where(col("fold") =!= k)))
-          .copy(ParamMap.empty)))),
+        k -> rf.copy(ParamMap.empty).fit(training(k)).copy(ParamMap.empty)))),
       scala.concurrent.duration.Duration.Inf).toMap
     finally pool.shutdown()
     // Every out-of-fold row is scored by its own fold's model through one
-    // broadcast lookup; the union keeps the fold-major row layout, so the
-    // report's float sums add in a fixed order.
-    val bc = vectors.sparkSession.sparkContext.broadcast(models)
-    val score = udf((k: Int, v: Vector) => scoreRow(bc.value(k), v))
-    val scored = assembler.transform(labeled)
-      .select(col("fold"), col("label"), score(col("fold"), col("features")).as("s"))
-      .select(col("fold"), col("label"), col("s._1").as("prediction"),
-        col("s._2").as("p_similar"))
-    // Materialize the out-of-fold predictions (gold-bounded: one row per
-    // labeled pair) while the fold caches are still warm, then release
-    // them — otherwise every battery/bench run leaks two cached relations
-    // for the session's lifetime. Callers that keep the result past one
-    // evaluation should unpersist it (run() does).
-    val out = live.map(k => scored.where(col("fold") === k))
-      .reduceOption(_ union _).getOrElse(scored.where(lit(false)))
-      .drop("fold").cache()
+    // broadcast lookup. Scores come out fold-major: one partition per fold
+    // and input partition, or, from a single input partition, one
+    // partition holding the folds in order. The report's MAE and RMSE sums
+    // add in that order, so it fixes their bits (ClassifySpec pins both).
+    val bc = spark.sparkContext.broadcast(models)
+    def scored(k: Int)(it: Iterator[(Int, Double, Vector)]) = it.collect {
+      case (`k`, l, v) => val (pr, p) = scoreRow(bc.value(k), v); (l, pr, p) }
+    val out = spark.createDataFrame(
+      if (parts > 1) spark.sparkContext.union(live.map(k =>
+        rows.mapPartitions(scored(k))))
+      else rows.mapPartitions { it =>
+        val a = it.toArray; live.iterator.flatMap(k => scored(k)(a.iterator)) })
+      .toDF("label", "prediction", "p_similar").cache()
     out.count()
-    prepared.unpersist()
-    labeled.unpersist()
+    rows.unpersist()
     bc.unpersist()
     out
   }

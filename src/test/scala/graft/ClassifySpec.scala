@@ -179,6 +179,74 @@ class ClassifySpec extends AnyFunSuite with SparkTestBase {
     assert(r1 == r2)
   }
 
+  test("a warm cross-validation compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a fold number inlined into a plan gives every fold its own classes,
+    // more than the 100-entry codegen cache holds, so each call would
+    // compile them all again
+    val v = noisyVectors(400)
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Classify.crossValPredictions(v, folds = 10, seed = 42L, numTrees = 2)
+        .unpersist()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles()
+    assert(compiles() == 0L)
+  }
+
+  test("CV pins confusion counts, raw AUC/MAE/RMSE bits and the " +
+      "out-of-fold rows in output order, on one and on two partitions") {
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d).toHexString
+    // 1,200 rows train on one partition; 6,000 on two (parts = n/5000 + 1),
+    // whose round-robin layout decides each forest's bagging
+    for ((n, folds, want) <- Seq(
+        (1200, 10, (386L, 14L, 11L, 789L, "3fefa016f0068db9", "3fa69d0369d036a6",
+          "3fc31eee5923ee37", "c4751dbb7885c3cf", 1)),
+        (6000, 5, (1974L, 26L, 4L, 3996L, "3fefe3c7f77af640", "3f85e4c9e49832e5",
+          "3fb36612039e6be4", "70a46b44c4660475", 10)))) {
+      val preds = Classify.crossValPredictions(noisyVectors(n), folds,
+        42L, numTrees = 3)
+      try {
+        val r = Classify.evaluate(preds, folds)
+        val got = (r.tp, r.fn, r.fp, r.tn, bits(r.aucSimilar), bits(r.mae),
+          bits(r.rmse), rowsDigest(preds), preds.rdd.getNumPartitions)
+        assert(got == want, s"n=$n")
+      } finally preds.unpersist()
+    }
+  }
+
+  test("CV warns on stderr, naming the fold sizes, when no fold is live") {
+    // one row per label over 2 folds: both rows deal into fold 0, so no
+    // fold has both rows to test and rows to train on
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val preds = try Classify.crossValPredictions(
+      syntheticVectors(2, posEvery = 2), 2, 42L, 5)
+    finally System.setErr(saved)
+    try assert(preds.count() == 0L) finally preds.unpersist()
+    val warned = err.toString("UTF-8").linesIterator
+      .filter(_.contains("no live fold")).toSeq
+    assert(warned.size == 1 && warned.head.contains("fold sizes [2, 0]"),
+      warned)
+  }
+
+  /** SHA-256 prefix over the raw bits of (label, prediction, p_similar),
+    * row by row in the order the predictions are collected.
+    */
+  private def rowsDigest(preds: org.apache.spark.sql.DataFrame): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(24)
+    for (r <- preds.select("label", "prediction", "p_similar").collect()) {
+      buf.clear()
+      (0 until 3).foreach(i =>
+        buf.putLong(java.lang.Double.doubleToRawLongBits(r.getDouble(i))))
+      md.update(buf.array())
+    }
+    md.digest().take(8).map("%02x".format(_)).mkString
+  }
+
   test("evaluateDf computes exactly evaluate's report algebra (1e-12), " +
       "including the zero-denominator conventions") {
     val s2 = spark; import s2.implicits._
