@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** FULL (unrestricted) Damerau–Levenshtein edit distance of two string
@@ -24,38 +20,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * compare byte-by-byte (a swap of two 3-byte CJK chars costs 6, not
   * 1). Empty vs s → |s| bytes.
   *
-  * The generated code calls the same static kernel `eval` uses (the
-  * [[JaroWinkler]] pattern): no UDF serialization, inline null
-  * handling, stays inside whole-stage codegen. Cost is O(|a|·|b|)
+  * The kernel of the SQL function `damerau_levenshtein` (a [[Native]]
+  * row): generated code calls `dist` directly. Cost is O(|a|·|b|)
   * time and O(|a|·|b|) space per row — intended for short keys/names,
   * gated by blocking joins, exactly like the `levenshtein` built-in.
   */
-case class DamerauLevenshtein(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"damerau_levenshtein requires two string arguments, got " +
-        s"${left.dataType} and ${right.dataType}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DamerauLevenshtein.dist(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.DamerauLevenshtein.dist($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DamerauLevenshtein =
-    copy(left = newLeft, right = newRight)
-}
-
 object DamerauLevenshtein {
 
   /** Lowrance–Wagner needs the FULL (|a|+2)×(|b|+2) matrix (the

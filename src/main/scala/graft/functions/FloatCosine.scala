@@ -31,6 +31,7 @@ case class FloatCosine(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  override def prettyName: String = "float_cosine"
 
   override def nullable: Boolean = true
 

@@ -25,6 +25,7 @@ case class FloatDot(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  override def prettyName: String = "float_dot"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(t: DataType) = t match {

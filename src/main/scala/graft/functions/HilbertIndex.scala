@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, LongType}
-
 /** 2-D Hilbert curve index of two ALREADY-NORMALIZED long coordinates in
   * [0, 2^bits) — the locality-superior clustering key next to the Morton
   * interleave (every contiguous Hilbert range is one CONNECTED grid
@@ -18,45 +13,16 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * oracle replays it CTE-for-level (`TrainingOps.hilbertSkippingOracleSql`)
   * and every intermediate stays in [0, s).
   *
-  * A native expression, not a 5·bits-column projection chain: the
-  * chained-`withColumn` spelling fell out of whole-stage codegen at
-  * bits = 8 (measured 11 s for the q282 audit at sf0.1; this kernel
-  * form re-measured after landing). Generated code calls the same
-  * static kernel `eval` uses — no UDF serialization, inline null
-  * handling, stays inside whole-stage codegen.
+  * The kernel of the SQL function `hilbert_index` (a [[Native]] row),
+  * not a 5·bits-column projection chain: the chained-`withColumn`
+  * spelling fell out of whole-stage codegen at bits = 8 (measured 11 s
+  * for the q282 audit at sf0.1). Generated code calls `compute`
+  * directly inside whole-stage codegen.
   *
   * Inputs OUT OF RANGE (negative, or ≥ 2^bits) fail loudly with an
   * IllegalArgumentException naming the value — a silently wrapped index
   * would corrupt a 100 TB layout.
   */
-case class HilbertIndex(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType &&
-      bits > 0 && 2 * bits < 63)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hilbert_index requires two bigint arguments and 0 < 2*bits < 63, " +
-        s"got ${left.dataType}, ${right.dataType}, bits=$bits")
-
-  override def prettyName: String = "hilbert_index"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HilbertIndex.compute(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.HilbertIndex.compute($a, $b, $bits)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HilbertIndex =
-    copy(left = newLeft, right = newRight)
-}
-
 object HilbertIndex {
 
   /** The shared interpreted/codegen kernel. */

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro–Winkler similarity of two string columns in [0, 1] — the string
@@ -23,35 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - comparison is by UTF-16 code unit (ASCII-identical to byte
   *     implementations; astral-plane text compares surrogate-wise).
   *
-  * The generated code calls the same static kernel `eval` uses (the
-  * `levenshtein` built-in's pattern): no UDF serialization, inline null
-  * handling, stays inside whole-stage codegen.
+  * The kernel of the SQL function `jaro_winkler` (a [[Native]] row):
+  * generated code calls `sim` directly, with no UDF serialization, and
+  * stays inside whole-stage codegen.
   */
-case class JaroWinkler(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jaro_winkler requires two string arguments, got " +
-        s"${left.dataType} and ${right.dataType}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    JaroWinkler.sim(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.JaroWinkler.sim($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinkler =
-    copy(left = newLeft, right = newRight)
-}
-
 object JaroWinkler {
 
   /** The shared interpreted/codegen kernel. */

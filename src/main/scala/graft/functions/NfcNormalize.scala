@@ -2,44 +2,18 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for Unicode NFC normalization
+/** Unicode NFC normalization
   * (`java.text.Normalizer`, canonical composition): the canonicalization
   * pass a multilingual corpus needs BEFORE any hash-keyed operator —
   * "é" as one codepoint and "e" + combining acute are the same text to a
   * reader but different bytes to md5/minhash/exact-dedup, so an
   * unnormalized corpus under-deduplicates and leaks near-identical eval
-  * rows across splits. Codegen'd, null-safe, constant-folding; the common
-  * all-ASCII row short-circuits on `Normalizer.isNormalized` (a cheap
-  * scan) without allocating.
+  * rows across splits. The kernel of the SQL function `nfc_normalize` (a
+  * [[Native]] row); the common all-ASCII row short-circuits on
+  * `Normalizer.isNormalized` (a cheap scan) without allocating.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def foldable: Boolean = child.foldable
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "nfc_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    NfcNormalize.normalizeUTF8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.NfcNormalize.normalizeUTF8($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NfcNormalize = copy(child = newChild)
-}
-
 object NfcNormalize {
 
   /** Called from generated code — must stay public + static-forwarded. */

@@ -1,40 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.text.PorterStemmer
 
-/** Native Catalyst expression for Porter stemming: participates in
-  * whole-stage codegen (unlike a Scala UDF, which forces an extra
-  * serialization boundary), is null-safe, and constant-folds when its child
-  * is foldable. Semantics per reference `Stemmer.java:367-379` (see
+/** The kernel of the SQL function `porter_stem` (a [[Native]] row):
+  * generated code calls `stemUTF8` directly inside whole-stage codegen
+  * (unlike a Scala UDF, which forces an extra serialization boundary).
+  * Semantics per reference `Stemmer.java:367-379` (see
   * [[graft.text.PorterStemmer.stem]]).
   */
-case class PorterStem(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"porter_stem requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def foldable: Boolean = child.foldable
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "porter_stem"
-
-  override def nullSafeEval(input: Any): Any =
-    PorterStem.stemUTF8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PorterStem.stemUTF8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PorterStem =
-    copy(child = newChild)
-}
-
 object PorterStem {
 
   /** Per-thread LRU memo: token streams are Zipf-distributed, so almost

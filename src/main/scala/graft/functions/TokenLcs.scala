@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Length of the longest common TOKEN subsequence of two string
@@ -22,35 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[DamerauLevenshtein.MaxCells]] discipline) instead of letting two
   * book-length texts monopolize a task. Empty/blank sides give 0.
   *
-  * The generated code calls the same static kernel `eval` uses: no
-  * UDF serialization, inline null handling, stays inside whole-stage
-  * codegen.
+  * The kernel of the SQL function `token_lcs` (a [[Native]] row):
+  * generated code calls `lcs` directly inside whole-stage codegen.
   */
-case class TokenLcs(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_lcs requires two string arguments, got " +
-        s"${left.dataType} and ${right.dataType}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TokenLcs.lcs(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.TokenLcs.lcs($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TokenLcs =
-    copy(left = newLeft, right = newRight)
-}
-
 object TokenLcs {
 
   /** DP cell cap, the [[DamerauLevenshtein.MaxCells]] discipline: LCS

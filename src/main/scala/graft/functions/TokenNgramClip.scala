@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** BLEU's clipped n-gram match count `Σ_g min(count_cand(g),
@@ -20,37 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * space-joined gram, identical to SQL `=` on `concat_ws(' ', slice)`,
   * so the DuckDB oracle replay is unchanged.
   *
-  * The generated code calls the same static kernel `eval` uses: no UDF
-  * serialization, inline null handling, stays inside whole-stage
-  * codegen.
+  * The kernel of the SQL function `token_ngram_clip` (a [[Native]]
+  * row): generated code calls `clip` directly inside whole-stage codegen.
   */
-case class TokenNgramClip(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType == StringType && second.dataType == StringType &&
-      third.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "token_ngram_clip requires (string, string, int) arguments, got " +
-        s"(${first.dataType}, ${second.dataType}, ${third.dataType})")
-
-  override def nullSafeEval(a: Any, b: Any, n: Any): Any =
-    TokenNgramClip.clip(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, n) =>
-      s"graft.functions.TokenNgramClip.clip($a, $b, $n)")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): TokenNgramClip =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object TokenNgramClip {
 
   private val Space = UTF8String.fromString(" ")

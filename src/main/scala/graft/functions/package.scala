@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.sql.graftshim.Bridge
 
 /** Column-level entry points for graft's native expressions. */
@@ -10,15 +13,61 @@ package object functions {
   private[graft] def toColumn(e: Expression): Column = Bridge.column(e)
   private[graft] def toExpr(c: Column): Expression = Bridge.expression(c)
 
+  // The SQL functions over static kernels, one [[Native]] row each.
+  private val porterStem = Native("porter_stem", PorterStem, "stemUTF8",
+    StringType, Seq(StringType))
+  private val nfcNormalize = Native("nfc_normalize", NfcNormalize,
+    "normalizeUTF8", StringType, Seq(StringType))
+  private val jaroWinkler = Native("jaro_winkler", JaroWinkler, "sim",
+    DoubleType, Seq(StringType, StringType))
+  private val damerauLevenshtein = Native("damerau_levenshtein",
+    DamerauLevenshtein, "dist", IntegerType, Seq(StringType, StringType))
+  private val tokenLcs = Native("token_lcs", TokenLcs, "lcs", IntegerType,
+    Seq(StringType, StringType))
+  private val tokenNgramClip = Native("token_ngram_clip", TokenNgramClip,
+    "clip", LongType, Seq(StringType, StringType, IntegerType))
+  private val hilbertIndex = Native("hilbert_index", HilbertIndex,
+    "compute", LongType, Seq(LongType, LongType, IntegerType),
+    args => args(2) match {
+      case b if b.foldable && (b.eval() match {
+          case n: Int => n > 0 && 2 * n < 63
+          case _ => false
+        }) => None
+      case b => Some("hilbert_index: bits must be an int literal with " +
+        s"0 < 2*bits < 63, got ${b.sql}")
+    })
+
+  /** Every graft SQL function as a function registry takes it: name, info
+    * and an arity-checked builder. [[registerAll]] and
+    * [[graft.GraftExtensions]] both register exactly this list.
+    */
+  private[graft] val sqlFunctions
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def row(name: String, cls: Class[_], arity: Int)(
+        build: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => {
+          require(args.length == arity,
+            s"$name requires exactly $arity argument(s), got ${args.length}")
+          build(args)
+        })
+    Seq(porterStem, nfcNormalize, jaroWinkler, damerauLevenshtein, tokenLcs,
+      tokenNgramClip, hilbertIndex).map(k => row(k.name, classOf[NativeCall],
+        k.inputTypes.length)(NativeCall(k, _))) ++ Seq(
+      row("float_dot", classOf[FloatDot], 2)(a => FloatDot(a(0), a(1))),
+      row("float_cosine", classOf[FloatCosine], 2)(
+        a => FloatCosine(a(0), a(1))))
+  }
+
   /** Porter-stem a string column (lowercases; non-`[a-z]+` pass through). */
-  def porter_stem(c: Column): Column = toColumn(PorterStem(toExpr(c)))
+  def porter_stem(c: Column): Column = porterStem(c)
 
   /** Native codegen'd dot product of two `array<float>` columns. */
   def float_dot(a: Column, b: Column): Column =
     toColumn(FloatDot(toExpr(a), toExpr(b)))
 
   /** Unicode NFC canonical composition of a string column. */
-  def nfc_normalize(c: Column): Column = toColumn(NfcNormalize(toExpr(c)))
+  def nfc_normalize(c: Column): Column = nfcNormalize(c)
 
   /** Fused cosine of two `array<float>` columns: one array pass for
     * dot + both norms; bit-identical to
@@ -30,34 +79,32 @@ package object functions {
   /** Jaro-Winkler similarity of two string columns (RapidFuzz/DuckDB
     * semantics; see [[JaroWinkler]]).
     */
-  def jaro_winkler(a: Column, b: Column): Column =
-    toColumn(JaroWinkler(toExpr(a), toExpr(b)))
+  def jaro_winkler(a: Column, b: Column): Column = jaroWinkler(a, b)
 
   /** Full (unrestricted) Damerau-Levenshtein distance of two string
     * columns (byte-wise DuckDB semantics; see [[DamerauLevenshtein]]).
     */
   def damerau_levenshtein(a: Column, b: Column): Column =
-    toColumn(DamerauLevenshtein(toExpr(a), toExpr(b)))
+    damerauLevenshtein(a, b)
 
   /** Longest common TOKEN subsequence length of two string columns
     * (whitespace tokens; the ROUGE-L core — see [[TokenLcs]]).
     */
-  def token_lcs(a: Column, b: Column): Column =
-    toColumn(TokenLcs(toExpr(a), toExpr(b)))
+  def token_lcs(a: Column, b: Column): Column = tokenLcs(a, b)
 
   /** Clipped n-gram match count Σ min(count_cand, count_ref) over
     * whitespace-token n-grams (the BLEU numerator — see
     * [[TokenNgramClip]]).
     */
   def token_ngram_clip(cand: Column, ref: Column, n: Column): Column =
-    toColumn(TokenNgramClip(toExpr(cand), toExpr(ref), toExpr(n)))
+    tokenNgramClip(cand, ref, n)
 
   /** 2-D Hilbert curve index of two already-normalized long columns in
     * [0, 2^bits) (the locality-superior clustering key — see
     * [[HilbertIndex]]).
     */
   def hilbert_index(x: Column, y: Column, bits: Int): Column =
-    toColumn(HilbertIndex(toExpr(x), toExpr(y), bits))
+    hilbertIndex(x, y, lit(bits))
 
   /** Apply a trained BPE merge table to a word column (sequential
     * greedy passes in table order — see [[BpeEncode]]). The table is a
@@ -87,90 +134,8 @@ package object functions {
   /** Register graft SQL functions on a session (idempotent), enabling
     * `SELECT porter_stem(col)` in `spark.sql`.
     */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "porter_stem", exprs => buildPorterStem(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => buildFloatDot(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => buildNfcNormalize(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_cosine", exprs => buildFloatCosine(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => buildJaroWinkler(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "damerau_levenshtein",
-      exprs => buildDamerauLevenshtein(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_lcs", exprs => buildTokenLcs(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_ngram_clip", exprs => buildTokenNgramClip(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_index", exprs => buildHilbertIndex(exprs), "scala_udf")
-  }
-
-  private[graft] def buildHilbertIndex(
-      exprs: Seq[Expression]): HilbertIndex = {
-    require(exprs.length == 3,
-      s"hilbert_index requires exactly 3 arguments, got ${exprs.length}")
-    val bits = exprs(2) match {
-      case e if e.foldable &&
-          e.dataType == org.apache.spark.sql.types.IntegerType =>
-        e.eval().asInstanceOf[Int]
-      case e => throw new IllegalArgumentException(
-        s"hilbert_index: bits must be an int literal, got $e")
+  def registerAll(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
     }
-    HilbertIndex(exprs(0), exprs(1), bits)
-  }
-
-  private[graft] def buildPorterStem(exprs: Seq[Expression]): PorterStem = {
-    require(exprs.length == 1,
-      s"porter_stem requires exactly 1 argument, got ${exprs.length}")
-    PorterStem(exprs.head)
-  }
-
-  private[graft] def buildFloatDot(exprs: Seq[Expression]): FloatDot = {
-    require(exprs.length == 2,
-      s"float_dot requires exactly 2 arguments, got ${exprs.length}")
-    FloatDot(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildNfcNormalize(exprs: Seq[Expression]): NfcNormalize = {
-    require(exprs.length == 1,
-      s"nfc_normalize requires exactly 1 argument, got ${exprs.length}")
-    NfcNormalize(exprs.head)
-  }
-
-  private[graft] def buildFloatCosine(exprs: Seq[Expression]): FloatCosine = {
-    require(exprs.length == 2,
-      s"float_cosine requires exactly 2 arguments, got ${exprs.length}")
-    FloatCosine(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildJaroWinkler(exprs: Seq[Expression]): JaroWinkler = {
-    require(exprs.length == 2,
-      s"jaro_winkler requires exactly 2 arguments, got ${exprs.length}")
-    JaroWinkler(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildDamerauLevenshtein(
-      exprs: Seq[Expression]): DamerauLevenshtein = {
-    require(exprs.length == 2,
-      s"damerau_levenshtein requires exactly 2 arguments, got " +
-        s"${exprs.length}")
-    DamerauLevenshtein(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildTokenLcs(exprs: Seq[Expression]): TokenLcs = {
-    require(exprs.length == 2,
-      s"token_lcs requires exactly 2 arguments, got ${exprs.length}")
-    TokenLcs(exprs(0), exprs(1))
-  }
-
-  private[graft] def buildTokenNgramClip(
-      exprs: Seq[Expression]): TokenNgramClip = {
-    require(exprs.length == 3,
-      s"token_ngram_clip requires exactly 3 arguments, got ${exprs.length}")
-    TokenNgramClip(exprs(0), exprs(1), exprs(2))
-  }
 }

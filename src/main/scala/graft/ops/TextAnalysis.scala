@@ -1457,8 +1457,8 @@ object TextAnalysis {
     * collapses. `r = LCS/|ref|`, `p = LCS/|cand|`,
     * `f1 = 2pr/(p+r)` (0 when either side is empty or LCS is 0).
     *
-    * The LCS itself is the native codegen'd
-    * [[graft.functions.TokenLcs]] expression (whitespace tokens, exact
+    * The LCS itself is the native codegen'd `token_lcs`
+    * ([[graft.functions.TokenLcs]] kernel) (whitespace tokens, exact
     * byte equality — SQL-replayable): one narrow projection per row,
     * no shuffle, no UDF, O(|cand|·|ref|) per pair under the
     * expression's loud cell cap. Returns

@@ -31,26 +31,28 @@ object QueryDef {
     * `ts` — the harness has shipped it both as nanosecond int64 (Spark
     * refuses nanos by default; read raw via
     * `spark.sql.legacy.parquet.nanosAsLong` and truncate `DIV 1000`) and
-    * as native microsecond timestamps (read as TIMESTAMP_NTZ; re-based in
-    * a pinned-UTC session so `unix_micros` is the identity on the stored
-    * value). Either way `ts_us` equals DuckDB's `epoch_us(ts)` on the same
-    * file, so event-time arithmetic compares bit-exactly with no
-    * float/boundary/timezone fuzz.
+    * as native microsecond timestamps (read as TIMESTAMP_NTZ: microseconds
+    * since the epoch's wall clock, which no session time zone enters).
+    * Either way `ts_us` equals DuckDB's `epoch_us(ts)` on the same file,
+    * so event-time arithmetic compares bit-exactly with no
+    * float/boundary/timezone fuzz. The nanos flag stays set on the
+    * caller's session: the returned plan is lazy and reads the file when
+    * it runs.
     */
   def eventsMicros(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(spark, dir, "events")
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts_us", expr("ts DIV 1000"))
-      case _ =>
-        // NTZ→instant goes through the session zone: pin it so the cast
-        // is the identity on the stored microsecond value (UTC everywhere
-        // in this project, but a caller's session must not change results)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df.withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
-    }
+    df.withColumn("ts_us", df.schema("ts").dataType match {
+      case LongType => expr("ts DIV 1000")
+      // NTZ minus NTZ is a zone-free interval; `timestampdiff` would cast
+      // both sides to session-zone instants and lose an hour in a DST gap
+      case TimestampNTZType => expr("CAST(CAST(ts - " +
+        "TIMESTAMP_NTZ'1970-01-01 00:00:00' AS DECIMAL(38, 6)) * 1000000 " +
+        "AS BIGINT)")
+      case _ => unix_micros(col("ts"))
+    })
   }
 
   /** Delete a staging directory a query created under java.io.tmpdir —

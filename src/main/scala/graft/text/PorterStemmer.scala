@@ -15,7 +15,7 @@ import java.util.Locale
   *
   * The implementation is allocation-light and thread-safe (one small char
   * buffer per call) so it can sit in Spark's codegen hot path via the
-  * [[graft.functions.PorterStem]] expression.
+  * `porter_stem` SQL function ([[graft.functions.PorterStem]]).
   */
 object PorterStemmer {
 

@@ -764,4 +764,29 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       assert(((after diff before) ++ (before diff after)).isEmpty)
     } finally conf.set("spark.sql.session.timeZone", zone)
   }
+
+  test("events' ts_us does not depend on, or change, the session zone") {
+    val s2 = spark; import s2.implicits._
+    val conf = spark.conf
+    val zone = conf.get("spark.sql.session.timeZone")
+    // wall clocks a zone would move: before the epoch, a gap and an
+    // overlap of America/Los_Angeles' DST switches
+    val ts = Seq("1969-12-31T23:59:59.999999", "1970-01-01T00:00:00",
+      "2024-03-10T02:30:00.5", "2024-11-03T01:30:00")
+      .map(java.time.LocalDateTime.parse)
+    val want = ts.map(t => java.time.temporal.ChronoUnit.MICROS.between(
+      java.time.LocalDateTime.of(1970, 1, 1, 0, 0), t))
+    val dir = java.nio.file.Files.createTempDirectory("graft_events")
+    ts.toDF("ts").write.parquet(s"$dir/events.parquet")
+    conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val ev = graft.queries.QueryDef.eventsMicros(spark, dir.toString)
+      assert(ev.schema("ts").dataType.typeName == "timestamp_ntz")
+      assert(ev.select("ts_us").as[Long].collect().sorted.toSeq == want)
+      assert(conf.get("spark.sql.session.timeZone") == "America/Los_Angeles")
+    } finally {
+      conf.set("spark.sql.session.timeZone", zone)
+      graft.queries.QueryDef.deleteRecursively(dir)
+    }
+  }
 }
