@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.sql.graftshim.Bridge
 
 /** Column-level entry points for graft's native expressions. */
@@ -36,6 +36,11 @@ package object functions {
       case b => Some("hilbert_index: bits must be an int literal with " +
         s"0 < 2*bits < 63, got ${b.sql}")
     })
+  private val sortedOverlap = Native("sorted_overlap", SortedOverlap,
+    "count", IntegerType, Seq(ArrayType(LongType), ArrayType(LongType)))
+  private val wordNgrams = Native("word_ngrams", WordNgrams, "grams",
+    ArrayType(StringType, containsNull = false),
+    Seq(ArrayType(StringType), IntegerType))
 
   /** Every graft SQL function as a function registry takes it: name, info
     * and an arity-checked builder. [[registerAll]] and
@@ -52,8 +57,9 @@ package object functions {
           build(args)
         })
     Seq(porterStem, nfcNormalize, jaroWinkler, damerauLevenshtein, tokenLcs,
-      tokenNgramClip, hilbertIndex).map(k => row(k.name, classOf[NativeCall],
-        k.inputTypes.length)(NativeCall(k, _))) ++ Seq(
+      tokenNgramClip, hilbertIndex, sortedOverlap, wordNgrams).map(k =>
+        row(k.name, classOf[NativeCall], k.inputTypes.length)(
+          NativeCall(k, _))) ++ Seq(
       row("float_dot", classOf[FloatDot], 2)(a => FloatDot(a(0), a(1))),
       row("float_cosine", classOf[FloatCosine], 2)(
         a => FloatCosine(a(0), a(1))))
@@ -105,6 +111,17 @@ package object functions {
     */
   def hilbert_index(x: Column, y: Column, bits: Int): Column =
     hilbertIndex(x, y, lit(bits))
+
+  /** Size of the intersection of two strictly ascending `array<bigint>`
+    * sets, counted in one merge; fails on an input that is not strictly
+    * ascending (see [[SortedOverlap]]).
+    */
+  def sorted_overlap(a: Column, b: Column): Column = sortedOverlap(a, b)
+
+  /** The space-joined word `n`-grams of a token array column, in order
+    * (see [[WordNgrams]]).
+    */
+  def word_ngrams(tokens: Column, n: Column): Column = wordNgrams(tokens, n)
 
   /** Apply a trained BPE merge table to a word column (sequential
     * greedy passes in table order — see [[BpeEncode]]). The table is a

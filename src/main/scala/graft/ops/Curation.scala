@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.word_ngrams
+
 /** End-to-end corpus curation: the composition a training-data pipeline
   * actually runs over raw documents — exact dedup, quality gating,
   * stratified re-balancing, and leakage-safe splitting — as ONE logical
@@ -502,9 +504,8 @@ object Curation {
   }
 
   /** Distinct word `n`-grams of the pre-split token array column `t`. */
-  private def distinctGrams(n: Int) = expr(
-    s"""array_distinct(transform(sequence(1, size(t) - ${n - 1}),
-       |  i -> concat_ws(' ', slice(t, i, $n))))""".stripMargin)
+  private def distinctGrams(n: Int) =
+    array_distinct(word_ngrams(col("t"), lit(n)))
 
   /** One row per (document, distinct n-gram) with the per-doc distinct-gram
     * total riding the same projection (single corpus scan — see

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.functions.{sorted_overlap, word_ngrams}
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * Scale design: exact dedup and MinHash-LSH are the 100 TB paths (one
@@ -74,9 +76,7 @@ object Dedup {
     docs.select(col(idCol).as("id"),
         Tokenize.tokens(col(textCol), tokenizer).as("l"))
       .where(size(col("l")) >= n)
-      .select(col("id"), expr(
-        s"transform(sequence(1, size(l) - ${n - 1}), i -> concat_ws(' ', slice(l, i, $n)))")
-        .as("grams"))
+      .select(col("id"), word_ngrams(col("l"), lit(n)).as("grams"))
   }
 
   /** Hard ceiling on the quadratic bucket expansion (the enforced form
@@ -710,12 +710,10 @@ object Dedup {
     val grams = docs
       .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("t"))
       .where(size(col("t")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(1, size(t) - ${k - 1}),
-           |  i -> struct(i AS pos, concat_ws(' ', slice(t, i, $k)) AS gram))"""
-          .stripMargin)).as("g"))
-      .select(col("doc_id"), col("g.pos").cast("long").as("pos"),
-        md5(col("g.gram")).as("gh"))
+      .select(col("doc_id"),
+        posexplode(word_ngrams(col("t"), lit(k))).as(Seq("i", "gram")))
+      .select(col("doc_id"), (col("i") + 1).cast("long").as("pos"),
+        md5(col("gram")).as("gh"))
     // duplicated = gram occurs >= dupThreshold times: a gram-partitioned
     // window count, NOT a count-aggregate + join-back — the join shape
     // evaluates the positional explode twice (Spark does not reuse the
@@ -897,15 +895,22 @@ object Dedup {
     * (Vernica, Carey & Li, SIGMOD 2010), so each document is one sorted
     * token array: its prefix is a slice, and verification joins the
     * candidate list twice against those arrays (linear in the corpus)
-    * and intersects integer sets per pair.
+    * and counts each pair's overlap with one merge of the two arrays
+    * (`sorted_overlap`, see [[graft.functions.SortedOverlap]]).
+    *
+    * Contract of the token sets: each `toks` is strictly ascending with
+    * no duplicates and no nulls. The prefix slice needs the order, and
+    * the merge needs both; `sorted_overlap` fails the job on an array
+    * that breaks the contract instead of undercounting.
     *
     * The token sets ([[tokenSets]]) take five steps: each row's grams
     * deduplicated inside the row (`array_distinct`, narrow), a count per
     * gram as `df`, a range sort on `(df, gram)` numbered in that order,
     * a join of the row grams to their numbers, and a regroup by id into
-    * one sorted distinct array. Gram strings cross three exchanges: the
-    * count's, the range sort's and the numbering join's (AQE may
-    * broadcast one side instead). The regroup ships bigint tokens, and
+    * one sorted distinct array (`sort_array`, not `array_sort`, whose
+    * default comparator is an interpreted lambda). Gram strings cross
+    * three exchanges: the count's, the range sort's and the numbering
+    * join's (AQE may broadcast one side instead). The regroup ships bigint tokens, and
     * nothing after it carries a gram.
     *
     * Rows that share an id union into one set. Their `df` then counts
@@ -968,7 +973,7 @@ object Dedup {
       .join(sets.select(col("id").as("id1"), col("toks").as("g1")), "id1")
       .join(sets.select(col("id").as("id2"), col("toks").as("g2")), "id2")
       .withColumn("n_common",
-        size(array_intersect(col("g1"), col("g2"))).cast("long"))
+        sorted_overlap(col("g1"), col("g2")).cast("long"))
       .select(col("id1"), col("id2"),
         (col("n_common").cast("double") /
           (col("nsum") - col("n_common"))).as("jaccard"))
@@ -990,7 +995,7 @@ object Dedup {
     // array_distinct merges the grams of rows that share an id
     sh.join(dict, "shingle")
       .groupBy("id")
-      .agg(array_sort(array_distinct(collect_list("tok"))).as("toks"))
+      .agg(sort_array(array_distinct(collect_list("tok"))).as("toks"))
       .withColumn("n_sh", size(col("toks")))
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.word_ngrams
+
 /** Text-analysis operators for training-data curation: language ID,
   * quality scoring, token statistics, document fingerprinting. All pure
   * column expressions — per-document narrow stages plus one aggregation,
@@ -156,10 +158,8 @@ object TextAnalysis {
     * aggregation on both.
     */
   def repetitionStats(docs: DataFrame): DataFrame = {
-    def gramsOf(n: Int) = expr(
-      s"""transform(sequence(1, size(t) - ${n - 1}),
-         |  i -> struct($n AS n, concat_ws(' ', slice(t, i, $n)) AS g))"""
-        .stripMargin)
+    def gramsOf(n: Int) = transform(word_ngrams(col("t"), lit(n)),
+      g => struct(lit(n).as("n"), g.as("g")))
     val grams = docs
       .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"),
         split(col("text"), " ").as("t"))
@@ -202,10 +202,8 @@ object TextAnalysis {
     docs
       .select(col("doc_id") +: kept :+ split(col("text"), " ").as("t"): _*)
       .where(size(col("t")) >= k + w - 1)
-      .select(col("doc_id") +: kept :+ expr(
-        s"""transform(sequence(1, size(t) - ${k - 1}),
-           |  i -> md5(concat_ws(' ', slice(t, i, $k))))""".stripMargin)
-        .as("g"): _*)
+      .select(col("doc_id") +: kept :+
+        transform(word_ngrams(col("t"), lit(k)), md5(_)).as("g"): _*)
       .select(col("doc_id") +: kept :+ explode(expr(
         s"""array_distinct(transform(sequence(1, size(g) - ${w - 1}),
            |  j -> array_min(slice(g, j, $w))))""".stripMargin))
@@ -262,9 +260,8 @@ object TextAnalysis {
     val bigrams = docs
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .where(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(t) - 1)," +
-          " i -> concat_ws(' ', slice(t, i, 2))))")).as("bg"))
+      .select(col("doc_id"),
+        explode(array_distinct(word_ngrams(col("t"), lit(2)))).as("bg"))
       .localCheckpoint(true)
     val docFreq = bigrams.groupBy("bg")
       .agg(count(lit(1)).as("n_docs_with"))
@@ -851,12 +848,13 @@ object TextAnalysis {
     val prep = docs
       .select(col(idCol), split(col(textCol), " ").as("toks"))
       .withColumn("n", size(col("toks")))
+      .withColumn("wg", word_ngrams(col("toks"), lit(w)))
+      // the w-gram ending at token i = j + w is wg[j] (0-based j)
       .withColumn("cuts", expr(
-        s"""filter(CASE WHEN n >= $w THEN sequence($w, n)
-           |       ELSE CAST(array() AS array<int>) END,
-           |  i -> i < n AND pmod(CAST(conv(substring(md5(
-           |    concat_ws(' ', slice(toks, i - ${w - 1}, $w))), 1, 8),
-           |    16, 10) AS BIGINT), $divisor) = 0)""".stripMargin))
+        s"""CASE WHEN n >= $w THEN filter(transform(wg, (g, j) ->
+           |  IF(pmod(CAST(conv(substring(md5(g), 1, 8), 16, 10) AS BIGINT),
+           |    $divisor) = 0, j + $w, 0)), i -> i > 0 AND i < n)
+           |ELSE CAST(array() AS array<int>) END""".stripMargin))
       .withColumn("ac", expr("concat(array(0), cuts, array(n))"))
     prep
       .select(col(idCol), expr(
@@ -1160,9 +1158,8 @@ object TextAnalysis {
     val grams = docs
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .where(size(col("t")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(1, size(t) - ${n - 1}), " +
-          s"i -> concat_ws(' ', slice(t, i, $n))))")).as("gram"))
+      .select(col("doc_id"),
+        explode(array_distinct(word_ngrams(col("t"), lit(n)))).as("gram"))
       .localCheckpoint(true)
     val df = grams.groupBy("gram").agg(count(lit(1)).as("df"))
     grams.join(df, "gram")
@@ -1263,9 +1260,8 @@ object TextAnalysis {
     val toks = docs
       .select(col("doc_id").as("id"), split(col("text"), " ").as("t"))
       .where(size(col("t")) >= n)
-    val tf = toks.select(col("id"), explode(expr(
-        s"transform(sequence(1, size(t) - ${n - 1}), " +
-          s"i -> concat_ws(' ', slice(t, i, $n)))")).as("term"))
+    val tf = toks.select(col("id"),
+        explode(word_ngrams(col("t"), lit(n))).as("term"))
       .groupBy("id", "term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
       .where(col("df") <= maxDf)

@@ -48,8 +48,11 @@ object Counts {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val lexemes = pairs.groupBy("lexeme").agg(sum("lf").as("l"))
     val features = pairs.groupBy("feature").agg(sum("lf").as("f"))
-    // coalesce: sum over an empty relation is NULL, not 0
-    val total = pairs.agg(coalesce(sum("lf"), lit(0L))).head().getLong(0)
+    // coalesce: sum over an empty relation is NULL, not 0. A failed total
+    // job releases the cache: no handle would reach the caller
+    val total =
+      try pairs.agg(coalesce(sum("lf"), lit(0L))).head().getLong(0)
+      catch { case e: Throwable => pairs.unpersist(); throw e }
     CorpusCounts(pairs, lexemes, features, total)
   }
 

@@ -60,6 +60,22 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(featGot == featWant)
   }
 
+  test("counts release their cached pairs when the total job fails") {
+    import org.apache.spark.sql.functions.{col, lit, sum, udf}
+    val boom = udf((x: Long) =>
+      if (x >= 0L) throw new IllegalStateException("boom") else x)
+    val edges = spark.range(3).select(lit("x").as("lexeme"),
+      col("id").cast("string").as("feature"), boom(col("id")).as("count"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](Counts.fromEdges(edges))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "boom"), e)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    // the pair relation as fromEdges builds it is no longer cached
+    val pairs = edges.groupBy("lexeme", "feature").agg(sum("count").as("lf"))
+    assert(pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   private def checkAssoc(corpus: String): Unit = {
     val (assoc, counts) = SemanticPipeline.associationsManaged(spark, corpus)
     val gotMap = try assoc.collect()

@@ -765,6 +765,29 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(keys.count(_ == Set("shingle")) == 1, plan)
   }
 
+  test("prefix filter join: verification merges the sorted token sets " +
+      "and the grams come from the n-gram kernel — no array_intersect, " +
+      "no lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Expression, LambdaFunction}
+    def exprs(df: DataFrame): Seq[Expression] =
+      df.queryExecution.optimizedPlan.flatMap(
+        _.expressions.flatMap(_.collect { case e => e }))
+    def code(df: DataFrame): String = org.apache.spark.sql.execution.debug
+      .codegenString(df.queryExecution.executedPlan)
+    // q223's call; the join reads the token sets from their checkpoint,
+    // so their own plan is checked separately. Without AQE the physical
+    // plan holds its whole-stage subtrees before it runs
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val join = Dedup.prefixFilterPairs(docs, 3, 0.7)
+      assert(!exprs(join).exists(_.isInstanceOf[ArrayIntersect]))
+      assert(code(join).contains("graft.functions.SortedOverlap.count("))
+      val sets = Dedup.tokenSets(docs, 3)
+      assert(!exprs(sets).exists(_.isInstanceOf[LambdaFunction]))
+      assert(code(sets).contains("graft.functions.WordNgrams.grams("))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("time-weighted avg: one key window + one key-grain agg") {
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
