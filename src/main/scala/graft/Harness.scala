@@ -16,13 +16,15 @@ import graft.queries.QueryDef
   */
 object Harness {
 
+  /** The session's core count: `SPARK_GRAFT_CPUS`, or every core. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** A `local[cpus]` session, `cpus` = `SPARK_GRAFT_CPUS` or else every
     * core of this host, with one shuffle partition per core, AQE on, UTC
     * session time and no UI.
     */
   def session(app: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(app)

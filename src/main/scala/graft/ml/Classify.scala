@@ -2,12 +2,12 @@ package graft.ml
 
 import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
-import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.pipeline.PairVectors
 
@@ -70,14 +70,14 @@ object Classify {
     *
     * Jobs: one count sizes the input; one `reduceByKey` gives each fold
     * its (rows, max label) and materializes the cached `(fold, label,
-    * features)` rows; each live fold's forest fit (dozens of small jobs,
-    * up to four folds at once); one count materializes the result. A
-    * fold is live when it has rows to test and rows to train on; with no
-    * live fold the result is empty and one warning naming the fold sizes
-    * goes to stderr. Everything it caches (the prepared and the labeled
-    * input, the rows, the broadcast models) is released before it returns,
-    * except the result, which is returned cached: callers unpersist it
-    * (run() does).
+    * features)` rows, reading the input a second time; each live fold's
+    * forest fit (dozens of small jobs, up to four folds at once); one
+    * count materializes the result. A fold is live when it has rows to
+    * test and rows to train on; with no live fold the result is empty and
+    * one warning naming the fold sizes goes to stderr. Everything it
+    * caches (the rows, the broadcast models) is released before it
+    * returns, except the result, which is returned cached: callers
+    * unpersist it (run() does).
     *
     * The fold loop runs on the cached RDD, not on Catalyst plans: a fold
     * number in a plan is an int literal inlined into the generated Java,
@@ -86,7 +86,10 @@ object Classify {
     * all again. The plan prefix (clip, label, folds, `repartition(parts)`)
     * fixes the row order and partitioning, which decide each forest's
     * bagging; training sets keep that layout, and the scores come out
-    * fold-major, so the report's float sums add in a fixed order.
+    * fold-major, so the report's float sums add in a fixed order. The
+    * rows are read from that plan's own output and assembled here, with
+    * no cached copy, assembler or row decoder in between, so a warm call
+    * needs no classes beyond those of the plan.
     */
   def crossValPredictions(vectors: DataFrame, folds: Int = 10,
       seed: Long = 42L, numTrees: Int = 100): DataFrame = {
@@ -101,12 +104,11 @@ object Classify {
     }
     val prepared = clipped
       .withColumn("label", col("related").cast("double"))
-      .cache()
     // MLlib tree fitting launches dozens of jobs per forest; leaving a
     // small training set scattered over shuffle-partition-count mostly-empty
     // partitions multiplies task-scheduling overhead ~20x (observed: 63s →
     // 3s for the battery's 8-row smoke). Size partitions to the data.
-    val n = prepared.count()
+    val n = vectors.count()
     val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (n / 5000L).toInt + 1))
     // Stratified fold assignment (as Weka's CV does): within each label,
@@ -123,19 +125,18 @@ object Classify {
         (row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy("label").orderBy(rand(seed))) % folds).cast("int")))
       .repartition(parts)
-      // cached whole: the round-robin exchange sorts rows by their hash
-      // before dealing them, so a column-pruned select of this plan would
-      // deal them differently and change every forest's bagging
+    // The round-robin exchange sorts rows by their hash before dealing
+    // them, so the deal depends on every column: the rows are read from
+    // labeled's own plan, which no column pruning can narrow, and each
+    // features vector is assembled as VectorAssembler assembles it.
+    val at = labeled.schema.fieldIndex _
+    val (fold, label, features) = (at("fold"), at("label"), cols.map(at).toArray)
+    val rows = labeled.queryExecution.toRdd
+      .map(r => (r.getInt(fold), r.getDouble(label), assemble(r, features)))
       .cache()
-    val assembled = new VectorAssembler().setInputCols(cols.toArray)
-      .setOutputCol("features").transform(labeled)
-    val rows = assembled.select("fold", "label", "features").rdd
-      .map(r => (r.getInt(0), r.getDouble(1), r.getAs[Vector](2))).cache()
     val sizes = rows.map(r => r._1 -> (1L, r._2))
       .reduceByKey((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
       .collectAsMap()
-    prepared.unpersist()
-    labeled.unpersist()
     val live = (0 until folds).filter(k => sizes.get(k).exists(_._1 < n))
     if (live.isEmpty) System.err.println(s"warning: Classify: no live fold " +
       s"(fold sizes ${(0 until folds).map(sizes.get(_).fold(0L)(_._1)).mkString(
@@ -147,7 +148,7 @@ object Classify {
       rows.filter(_._1 != k).map(r => Row(r._2, r._3)),
       StructType(Seq(NominalAttribute.defaultAttr.withName("label").withNumValues(
         sizes.collect { case (j, (_, m)) if j != k => m.toInt + 1 }.max)
-        .toStructField(), assembled.schema("features"))))
+        .toStructField(), StructField("features", SQLDataTypes.VectorType))))
     val rf = new RandomForestClassifier()
       .setNumTrees(numTrees).setMaxDepth(30)
       .setFeatureSubsetStrategy("sqrt").setSeed(seed)
@@ -185,6 +186,22 @@ object Classify {
     rows.unpersist()
     bc.unpersist()
     out
+  }
+
+  /** The features of one row as `VectorAssembler` builds them: the
+    * nonzero values as a sparse vector, compressed to the smaller form.
+    */
+  private def assemble(r: InternalRow, at: Array[Int]): Vector = {
+    val (idx, vals) = (Array.newBuilder[Int], Array.newBuilder[Double])
+    var i = 0
+    while (i < at.length) {
+      require(!r.isNullAt(at(i)),
+        s"Classify: feature ${PairVectors.vectorColumns(i)} is null")
+      val v = r.getDouble(at(i))
+      if (v != 0.0) { idx += i; vals += v }
+      i += 1
+    }
+    Vectors.sparse(at.length, idx.result(), vals.result()).compressed
   }
 
   /** (prediction, P(similar)) of one row exactly as `model.transform`
@@ -332,9 +349,11 @@ object Classify {
     */
   private def aucFromScores(predictions: DataFrame): Double = {
     if (!predictions.columns.contains("p_similar")) return 0.0
+    // the columns evaluateDf reads, so both scans share one generated reader
     val scored = predictions
-      .select(col("p_similar").cast("double"), col("label").cast("double"))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1) == 1.0))
+      .select(col("label").cast("double"), col("prediction").cast("double"),
+        col("p_similar").cast("double"))
+      .collect().map(r => (r.getDouble(2), r.getDouble(0) == 1.0))
       .sortBy(_._1)(Ordering.Double.TotalOrdering)
     var (i, posRankSum, npos) = (0, 0.0, 0L)
     while (i < scored.length) {

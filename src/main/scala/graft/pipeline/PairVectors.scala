@@ -19,8 +19,9 @@ import graft.functions.porter_stem
   *   - gold file → `broadcast()` hint: one torrent broadcast instead of one
   *     S3 read per map task;
   *   - the two-sided fan-out (each gold pair listens on both words,
-  *     `Step4.java:113-114`) → a union of the two orientations, deduped as
-  *     the reference's per-key HashSet does;
+  *     `Step4.java:113-114`) → both orientations exploded from one scan;
+  *     a gold pair listed twice collapses in the pivot's `max()`, as the
+  *     reference's per-key HashSet dedups it;
   *   - the feature-sorted merge with ZEROS padding (`Step4.java:209-247`)
   *     → ONE hash aggregation pivoting the ≤2 side-rows per (pair, feature)
   *     into `v1`/`v2` columns with `coalesce(_, 0)` — no ordering, no
@@ -88,14 +89,17 @@ object PairVectors {
     * (pair, feature) with `<measure>_1` / `<measure>_2` columns.
     */
   private def perFeature(assoc: DataFrame, gold: DataFrame): DataFrame = {
-    // Both orientations of every gold pair, keyed by the word whose feature
-    // rows they consume; distinct = the reference's per-key HashSet dedup.
+    // Both orientations of every gold pair from one scan, keyed by the word
+    // whose feature rows they consume. A gold pair listed twice matches the
+    // same rows twice; the pivot's max() takes each value once, which is
+    // the reference's per-key HashSet dedup.
+    def side(word: String, partner: String, isw1: Boolean) =
+      struct(col(word).as("word"), col(partner).as("partner"),
+        lit(isw1).as("isw1"), col("related"))
     val sides = gold
-      .select(col("w1").as("word"), col("w2").as("partner"),
-        lit(true).as("isw1"), col("related"))
-      .unionByName(gold.select(col("w2").as("word"), col("w1").as("partner"),
-        lit(false).as("isw1"), col("related")))
-      .distinct()
+      .select(explode(array(side("w1", "w2", true), side("w2", "w1", false)))
+        .as("s"))
+      .select("s.*")
 
     val matched = assoc
       .join(broadcast(sides), col("lexeme") === col("word"))

@@ -145,6 +145,19 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       NaiveSemanticOracle.vectors(corpus, gold, faithful = false)(pair)(ttestJs))
   }
 
+  test("warm Steps 1-4 compile no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a plan that changes from call to call (an inlined literal, stage ids
+    // AQE hands out in a different order) compiles new classes every call
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SemanticPipeline.vectors(spark, inRepoCorpus, inRepoGold)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles()
+    assert(compiles() == 0L)
+  }
+
   test("vectors on a word-relatedness slice produce sane similarity identities") {
     // gold pairs of a word with itself: cosine == 1, jaccard == 1, js == 0
     // for every measure (corrected mode), provided the word has features.

@@ -129,6 +129,25 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     } finally counts.unpersist()
   }
 
+  test("the Step-4 plan scans the gold text once") {
+    // both orientations of every gold pair come from one scan of the file
+    def fixture(name: String) = java.nio.file.Paths.get(
+      getClass.getResource(s"/golden/oracle/$name").toURI).toString
+    val counts = graft.pipeline.Counts.fromEdges(
+      graft.pipeline.Biarcs.readEdges(spark, fixture("corpus.txt")))
+    try {
+      val gold = graft.pipeline.PairVectors.parseGold(
+        spark.read.text(fixture("gold.txt")))
+      val vecs = graft.pipeline.PairVectors.vectors(
+        graft.pipeline.Associate.associate(counts), gold)
+      val scans = vecs.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == "gold.txt") => s
+      }
+      assert(scans.size == 1, s"expected 1 gold scan:\n${plan(vecs)}")
+    } finally counts.unpersist()
+  }
+
   test("weighted sample, chunking, and markup stripping are narrow") {
     assert(exchanges(Sampling.weightedSample(
       docs.withColumn("w", size(split(col("text"), " ")).cast("long")),

@@ -7,8 +7,14 @@ Usage: python3 tools/compare_dumps.py <beforeDir> <afterDir> [queryName...]
 Every entry present in <beforeDir> (or just the named ones) must exist in
 <afterDir> with identical schema, row count, and values — bit-exact for
 floats (no tolerance: the optimization contract is "same results").
+
+Each dump's meta.json (git sha, core count, Spark version, scale-factor
+directory, as Verify writes it) is printed first. Dumps taken at different
+core counts are compared all the same, with a warning: q62's freq_js is a
+floating-point sum whose order follows the shuffle partition count, which
+the harness sets to the core count.
 """
-import sys, glob, os
+import sys, glob, os, json
 import duckdb
 
 before, after = sys.argv[1], sys.argv[2]
@@ -17,6 +23,23 @@ only = set(sys.argv[3:])
 names = sorted(os.path.basename(p) for p in glob.glob(f"{before}/q*"))
 if only:
     names = [n for n in names if n in only]
+
+
+def meta(d):
+    try:
+        with open(f"{d}/meta.json") as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+metas = [meta(before), meta(after)]
+for d, m in zip((before, after), metas):
+    print(f"META {d}: {json.dumps(m) if m else 'no meta.json'}")
+if all(metas) and metas[0].get("cpus") != metas[1].get("cpus"):
+    print(f"WARNING: the dumps ran on {metas[0].get('cpus')} and "
+          f"{metas[1].get('cpus')} cores; q62's freq_js depends on the core "
+          "count, so it may differ")
 
 con = duckdb.connect()
 bad = 0
