@@ -7,6 +7,14 @@ trailing comments on a code line still count as code).
 Usage: python3 tools/ncloc.py PATH... prints one `count path` line per
 file, then a `total` line when more than one file is counted. A
 directory PATH counts every `*.scala` file under it, in path order.
+
+python3 tools/ncloc.py --repeats PATH... counts pasted string text
+instead: the `|`-margin lines (the lines of a `stripMargin` string,
+such as the DuckDB oracle SQL) that lie in a repeated window. A window
+is 5 consecutive lines of the file, each of which, stripped, starts
+with `|`; it is repeated when the same 5 stripped lines occur as a
+window earlier in the same file. A line counts once however many
+repeated windows cover it.
 """
 import os
 import sys
@@ -19,6 +27,20 @@ def ncloc(path):
                    and not s.startswith(("//", "/*", "*")))
 
 
+def repeats(path, width=5):
+    with open(path, encoding="utf-8") as f:
+        lines = [line.strip() for line in f]
+    seen, covered = set(), set()
+    for i in range(len(lines) - width + 1):
+        window = tuple(lines[i:i + width])
+        if not all(s.startswith("|") for s in window):
+            continue
+        if window in seen:
+            covered.update(range(i, i + width))
+        seen.add(window)
+    return len(covered)
+
+
 def files(path):
     if not os.path.isdir(path):
         return [path]
@@ -26,10 +48,13 @@ def files(path):
                   for f in fs if f.endswith(".scala"))
 
 
-def main(paths):
-    if not paths:
+def main(args):
+    count = ncloc
+    if args[:1] == ["--repeats"]:
+        count, args = repeats, args[1:]
+    if not args:
         sys.exit(__doc__.strip())
-    counts = [(ncloc(f), f) for p in paths for f in files(p)]
+    counts = [(count(f), f) for p in args for f in files(p)]
     for n, p in counts:
         print(f"{n} {p}")
     if len(counts) > 1:
