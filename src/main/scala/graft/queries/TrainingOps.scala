@@ -89,6 +89,42 @@ object TrainingOps {
       |sh AS (SELECT DISTINCT id, array_to_string(l[i:i+2], ' ') AS shingle
       |       FROM toks, UNNEST(generate_series(1, len(l) - 2)) t(i))""".stripMargin
 
+  /** DuckDB mirror of [[graft.ops.Dedup.minhashCandidates]] at 8 hashes
+    * in 4 bands of 2: the `sigs` and `bands` CTEs over the shingles of
+    * `sh`. `wrapKey` breaks the band key's line before `'|'` rather than
+    * before `AS`, the layout half the copies were written in.
+    */
+  private def minhashSql(sh: String = "sh", sigs: String = "sigs",
+      bands: String = "bands", wrapKey: Boolean = false) = {
+    val key = if (wrapKey) "),\n      '|')) AS band_key"
+      else "), '|'))\n      AS band_key"
+    s"""$sigs AS (SELECT id, h,
+      |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
+      |  FROM $sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
+      |$bands AS (SELECT id, h // 2 AS band,
+      |    md5(array_to_string(list_sort(
+      |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)$key
+      |  FROM $sigs GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** `reach(a, b)`: the transitive closure of the MinHash candidate
+    * pairs, in both directions (q72, q83 and q154 label components from
+    * it).
+    */
+  private def minhashReachSql =
+    s"""WITH RECURSIVE ${shinglesSql()},
+      |${minhashSql()},
+      |cand AS (SELECT DISTINCT a.id AS id1, b.id AS id2
+      |  FROM bands a JOIN bands b
+      |    ON a.band = b.band AND a.band_key = b.band_key
+      |      AND a.id < b.id),
+      |edges AS (SELECT id1 AS src, id2 AS dst FROM cand
+      |  UNION ALL SELECT id2, id1 FROM cand),
+      |reach(a, b) AS (
+      |  SELECT src, dst FROM edges
+      |  UNION
+      |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)""".stripMargin
+
   val all: Seq[QueryDef] = Seq(
 
     QueryDef("q40_dedup_exact",
@@ -131,14 +167,7 @@ object TrainingOps {
       (s, d) => Dedup.minhashCandidates(table(s, d, "documents"), 3, 8, 2)
         .orderBy("id1", "id2"),
       Some(s"""WITH ${shinglesSql()},
-              |sigs AS (SELECT id, h,
-              |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-              |  FROM sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-              |bands AS (SELECT id, h // 2 AS band,
-              |    md5(array_to_string(list_sort(
-              |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)), '|'))
-              |      AS band_key
-              |  FROM sigs GROUP BY 1, 2)
+              |${minhashSql()}
               |SELECT DISTINCT a.id AS id1, b.id AS id2
               |FROM bands a JOIN bands b
               |  ON a.band = b.band AND a.band_key = b.band_key AND a.id < b.id
@@ -1224,25 +1253,7 @@ object TrainingOps {
         .groupBy(col("label").as("component"))
         .agg(count(lit(1)).as("n_members"), max("id").as("max_id"))
         .orderBy("component"),
-      Some(s"""WITH RECURSIVE ${shinglesSql()},
-              |sigs AS (SELECT id, h,
-              |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-              |  FROM sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-              |bands AS (SELECT id, h // 2 AS band,
-              |    md5(array_to_string(list_sort(
-              |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)), '|'))
-              |      AS band_key
-              |  FROM sigs GROUP BY 1, 2),
-              |cand AS (SELECT DISTINCT a.id AS id1, b.id AS id2
-              |  FROM bands a JOIN bands b
-              |    ON a.band = b.band AND a.band_key = b.band_key
-              |      AND a.id < b.id),
-              |edges AS (SELECT id1 AS src, id2 AS dst FROM cand
-              |  UNION ALL SELECT id2, id1 FROM cand),
-              |reach(a, b) AS (
-              |  SELECT src, dst FROM edges
-              |  UNION
-              |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
+      Some(s"""$minhashReachSql,
               |lab AS (SELECT a AS id, LEAST(a, MIN(b)) AS component
               |  FROM reach GROUP BY a)
               |SELECT component, COUNT(*) AS n_members,
@@ -1485,25 +1496,7 @@ object TrainingOps {
           .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
           .orderBy("lang")
       },
-      Some(s"""WITH RECURSIVE ${shinglesSql()},
-              |sigs AS (SELECT id, h,
-              |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-              |  FROM sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-              |bands AS (SELECT id, h // 2 AS band,
-              |    md5(array_to_string(list_sort(
-              |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)), '|'))
-              |      AS band_key
-              |  FROM sigs GROUP BY 1, 2),
-              |cand AS (SELECT DISTINCT a.id AS id1, b.id AS id2
-              |  FROM bands a JOIN bands b
-              |    ON a.band = b.band AND a.band_key = b.band_key
-              |      AND a.id < b.id),
-              |edges AS (SELECT id1 AS src, id2 AS dst FROM cand
-              |  UNION ALL SELECT id2, id1 FROM cand),
-              |reach(a, b) AS (
-              |  SELECT src, dst FROM edges
-              |  UNION
-              |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
+      Some(s"""$minhashReachSql,
               |losers AS (SELECT a AS id FROM reach
               |  GROUP BY a HAVING LEAST(a, MIN(b)) <> a)
               |SELECT lang, COUNT(*) AS n_docs,
@@ -2184,14 +2177,7 @@ object TrainingOps {
           .orderBy("id", "ref_id")
       },
       Some(s"""WITH ${shinglesSql()},
-              |sigs AS (SELECT id, h,
-              |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-              |  FROM sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-              |bands AS (SELECT id, h // 2 AS band,
-              |    md5(array_to_string(list_sort(
-              |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)), '|'))
-              |      AS band_key
-              |  FROM sigs GROUP BY 1, 2)
+              |${minhashSql()}
               |SELECT DISTINCT a.id AS id, b.id AS ref_id
               |FROM bands a JOIN bands b
               |  ON a.band = b.band AND a.band_key = b.band_key
@@ -2914,25 +2900,7 @@ object TrainingOps {
           "quality")
         .select(col("doc_id"), round(col("quality"), 9).as("quality"))
         .orderBy("doc_id"),
-      Some(s"""WITH RECURSIVE ${shinglesSql()},
-              |sigs AS (SELECT id, h,
-              |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-              |  FROM sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-              |bands AS (SELECT id, h // 2 AS band,
-              |    md5(array_to_string(list_sort(
-              |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)), '|'))
-              |      AS band_key
-              |  FROM sigs GROUP BY 1, 2),
-              |cand AS (SELECT DISTINCT a.id AS id1, b.id AS id2
-              |  FROM bands a JOIN bands b
-              |    ON a.band = b.band AND a.band_key = b.band_key
-              |      AND a.id < b.id),
-              |edges AS (SELECT id1 AS src, id2 AS dst FROM cand
-              |  UNION ALL SELECT id2, id1 FROM cand),
-              |reach(a, b) AS (
-              |  SELECT src, dst FROM edges
-              |  UNION
-              |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
+      Some(s"""$minhashReachSql,
               |lab AS (SELECT a AS id, LEAST(a, MIN(b)) AS component
               |  FROM reach GROUP BY a),
               |q AS (SELECT doc_id,
@@ -3830,14 +3798,7 @@ object TrainingOps {
           3, 8, 2, maxDist = 50)
         .orderBy("id1", "id2"),
       Some(s"""WITH ${shinglesSql("doc_id < 2000")},
-              |sigs AS (SELECT id, h,
-              |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-              |  FROM sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-              |bands AS (SELECT id, h // 2 AS band,
-              |    md5(array_to_string(list_sort(
-              |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)), '|'))
-              |      AS band_key
-              |  FROM sigs GROUP BY 1, 2),
+              |${minhashSql()},
               |cand AS (SELECT DISTINCT a.id AS id1, b.id AS id2
               |  FROM bands a JOIN bands b
               |    ON a.band = b.band AND a.band_key = b.band_key
@@ -4172,71 +4133,57 @@ object TrainingOps {
             rowsPerBand = 2, maxDist = 20)
           .orderBy("doc_id")
       },
-      Some("""WITH corpus AS (SELECT doc_id, text FROM documents
-             |  WHERE doc_id < 300),
-             |delta AS (
-             |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-             |  WHERE doc_id < 50
-             |  UNION ALL
-             |  SELECT doc_id + 2000000 AS doc_id, text || ' xtra' AS text
-             |  FROM documents WHERE doc_id < 30
-             |  UNION ALL
-             |  SELECT doc_id, text FROM documents
-             |  WHERE doc_id >= 300 AND doc_id < 400),
-             |ex AS (SELECT d.doc_id, MIN(c.doc_id) AS exact_match
-             |  FROM delta d JOIN corpus c ON md5(c.text) = md5(d.text)
-             |  GROUP BY 1),
-             |ctoks AS (SELECT doc_id id, string_split(text, ' ') l
-             |  FROM corpus WHERE len(string_split(text, ' ')) >= 3),
-             |csh AS (SELECT DISTINCT id,
-             |    array_to_string(l[i:i+2], ' ') AS shingle
-             |  FROM ctoks, UNNEST(generate_series(1, len(l) - 2)) t(i)),
-             |csig AS (SELECT id, h,
-             |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-             |  FROM csh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-             |cband AS (SELECT id, h // 2 AS band,
-             |    md5(array_to_string(list_sort(
-             |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)),
-             |      '|')) AS band_key
-             |  FROM csig GROUP BY 1, 2),
-             |dtoks AS (SELECT doc_id id, string_split(text, ' ') l
-             |  FROM delta WHERE len(string_split(text, ' ')) >= 3),
-             |dsh AS (SELECT DISTINCT id,
-             |    array_to_string(l[i:i+2], ' ') AS shingle
-             |  FROM dtoks, UNNEST(generate_series(1, len(l) - 2)) t(i)),
-             |dsig AS (SELECT id, h,
-             |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-             |  FROM dsh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-             |dband AS (SELECT id, h // 2 AS band,
-             |    md5(array_to_string(list_sort(
-             |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)),
-             |      '|')) AS band_key
-             |  FROM dsig GROUP BY 1, 2),
-             |cand AS (SELECT DISTINCT d.id AS doc_id, c.id AS c_id
-             |  FROM dband d JOIN cband c
-             |    ON d.band = c.band AND d.band_key = c.band_key),
-             |ver AS (SELECT doc_id, c_id AS near_match,
-             |    dist AS near_dist FROM (
-             |  SELECT v.doc_id, v.c_id, v.dist,
-             |    ROW_NUMBER() OVER (PARTITION BY v.doc_id
-             |      ORDER BY v.dist, v.c_id) AS rn
-             |  FROM (SELECT cand.doc_id, cand.c_id,
-             |      levenshtein(dt.text, ct.text) AS dist
-             |    FROM cand
-             |    JOIN delta dt ON dt.doc_id = cand.doc_id
-             |    JOIN corpus ct ON ct.doc_id = cand.c_id) v
-             |  WHERE v.dist <= 20) WHERE rn = 1)
-             |SELECT d.doc_id,
-             |  CASE WHEN ex.exact_match IS NOT NULL THEN 'exact_dup'
-             |       WHEN ver.near_match IS NOT NULL THEN 'near_dup'
-             |       ELSE 'new' END AS status,
-             |  COALESCE(ex.exact_match, ver.near_match) AS match_id,
-             |  CASE WHEN ex.exact_match IS NOT NULL THEN 0
-             |       ELSE ver.near_dist END AS dist
-             |FROM delta d
-             |LEFT JOIN ex ON ex.doc_id = d.doc_id
-             |LEFT JOIN ver ON ver.doc_id = d.doc_id
-             |ORDER BY d.doc_id""".stripMargin)),
+      Some(s"""WITH corpus AS (SELECT doc_id, text FROM documents
+              |  WHERE doc_id < 300),
+              |delta AS (
+              |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
+              |  WHERE doc_id < 50
+              |  UNION ALL
+              |  SELECT doc_id + 2000000 AS doc_id, text || ' xtra' AS text
+              |  FROM documents WHERE doc_id < 30
+              |  UNION ALL
+              |  SELECT doc_id, text FROM documents
+              |  WHERE doc_id >= 300 AND doc_id < 400),
+              |ex AS (SELECT d.doc_id, MIN(c.doc_id) AS exact_match
+              |  FROM delta d JOIN corpus c ON md5(c.text) = md5(d.text)
+              |  GROUP BY 1),
+              |ctoks AS (SELECT doc_id id, string_split(text, ' ') l
+              |  FROM corpus WHERE len(string_split(text, ' ')) >= 3),
+              |csh AS (SELECT DISTINCT id,
+              |    array_to_string(l[i:i+2], ' ') AS shingle
+              |  FROM ctoks, UNNEST(generate_series(1, len(l) - 2)) t(i)),
+              |${minhashSql("csh", "csig", "cband", wrapKey = true)},
+              |dtoks AS (SELECT doc_id id, string_split(text, ' ') l
+              |  FROM delta WHERE len(string_split(text, ' ')) >= 3),
+              |dsh AS (SELECT DISTINCT id,
+              |    array_to_string(l[i:i+2], ' ') AS shingle
+              |  FROM dtoks, UNNEST(generate_series(1, len(l) - 2)) t(i)),
+              |${minhashSql("dsh", "dsig", "dband", wrapKey = true)},
+              |cand AS (SELECT DISTINCT d.id AS doc_id, c.id AS c_id
+              |  FROM dband d JOIN cband c
+              |    ON d.band = c.band AND d.band_key = c.band_key),
+              |ver AS (SELECT doc_id, c_id AS near_match,
+              |    dist AS near_dist FROM (
+              |  SELECT v.doc_id, v.c_id, v.dist,
+              |    ROW_NUMBER() OVER (PARTITION BY v.doc_id
+              |      ORDER BY v.dist, v.c_id) AS rn
+              |  FROM (SELECT cand.doc_id, cand.c_id,
+              |      levenshtein(dt.text, ct.text) AS dist
+              |    FROM cand
+              |    JOIN delta dt ON dt.doc_id = cand.doc_id
+              |    JOIN corpus ct ON ct.doc_id = cand.c_id) v
+              |  WHERE v.dist <= 20) WHERE rn = 1)
+              |SELECT d.doc_id,
+              |  CASE WHEN ex.exact_match IS NOT NULL THEN 'exact_dup'
+              |       WHEN ver.near_match IS NOT NULL THEN 'near_dup'
+              |       ELSE 'new' END AS status,
+              |  COALESCE(ex.exact_match, ver.near_match) AS match_id,
+              |  CASE WHEN ex.exact_match IS NOT NULL THEN 0
+              |       ELSE ver.near_dist END AS dist
+              |FROM delta d
+              |LEFT JOIN ex ON ex.doc_id = d.doc_id
+              |LEFT JOIN ver ON ver.doc_id = d.doc_id
+              |ORDER BY d.doc_id""".stripMargin)),
 
     // Position-based (U-shaped) multi-touch attribution: each purchase
     // splits its value 0.4/0.4/middle across the same-user clicks in
@@ -7311,14 +7258,7 @@ object TrainingOps {
               |  JOIN sizes na ON na.id = id1 JOIN sizes nb ON nb.id = id2
               |  WHERE CAST(n_common AS DOUBLE)
               |    / (na.n_sh + nb.n_sh - n_common) >= 0.5),
-              |sigs AS (SELECT id, h,
-              |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-              |  FROM sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-              |bands AS (SELECT id, h // 2 AS band,
-              |    md5(array_to_string(list_sort(
-              |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)),
-              |      '|')) AS band_key
-              |  FROM sigs GROUP BY 1, 2),
+              |${minhashSql(wrapKey = true)},
               |cand AS (SELECT DISTINCT a.id AS id1, b.id AS id2
               |  FROM bands a JOIN bands b ON a.band = b.band
               |    AND a.band_key = b.band_key AND a.id < b.id),
@@ -7411,14 +7351,7 @@ object TrainingOps {
               |sh AS (SELECT DISTINCT id,
               |    array_to_string(l[i:i+2], ' ') AS shingle
               |  FROM t3, UNNEST(generate_series(1, len(l) - 2)) t(i)),
-              |sigs AS (SELECT id, h,
-              |    MIN(md5(CAST(h AS VARCHAR) || ':' || shingle)) AS mh
-              |  FROM sh, UNNEST(generate_series(0, 7)) t(h) GROUP BY 1, 2),
-              |bands AS (SELECT id, h // 2 AS band,
-              |    md5(array_to_string(list_sort(
-              |      list(lpad(CAST(h AS VARCHAR), 2, '0') || '=' || mh)),
-              |      '|')) AS band_key
-              |  FROM sigs GROUP BY 1, 2)
+              |${minhashSql(wrapKey = true)}
               |SELECT DISTINCT a.id AS id1, b.id AS id2
               |FROM bands a JOIN bands b ON a.band = b.band
               |  AND a.band_key = b.band_key AND a.id < b.id
