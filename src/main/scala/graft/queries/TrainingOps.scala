@@ -22,6 +22,18 @@ object TrainingOps {
     s"(SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE)) " +
       s"FROM (SELECT UNNEST($t.embedding) v) x)"
 
+  /** Cosine of the `a` and `b` embeddings, its denominator wrapped onto
+    * a line of its own, indented `indent` columns.
+    */
+  private def cosSql(a: String, b: String, indent: Int) =
+    s"${dot64.format(a, b)} /\n${" " * indent}" +
+      s"(SQRT(${norm2(a)}) * SQRT(${norm2(b)}))"
+
+  /** The product quantizer q106, q107 and q112 replay: `pqM` subspaces of
+    * `pqSub` dimensions, `pqKsub` centroids each.
+    */
+  private val (pqM, pqSub, pqKsub) = (8, 8, 16)
+
   /** The [[graft.ops.Tokenize.NoSpaceScriptClass]] codepoint-range
     * class, verbatim — `\\x{...}` spelling is valid in BOTH Java regex
     * and RE2, so the oracle's segmentation is character-for-character
@@ -124,6 +136,124 @@ object TrainingOps {
       |  SELECT src, dst FROM edges
       |  UNION
       |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)""".stripMargin
+
+  /** DuckDB mirror of the deterministic IVF coarse quantizer
+    * ([[graft.ops.Similarity.ivfIndex]], zero Lloyd iterations): `cents`,
+    * the first `nlist` rows of `src` in vec_id order, and `assign`, each
+    * row's best-cosine centroid (ties to the lower cid) with the `keep`
+    * columns. `wideRn` keeps `embedding` on the `rn` line of `cents`, the
+    * layout the search entries were written in.
+    */
+  private def ivfSql(nlist: Int, src: String = "embeddings",
+      keep: Seq[String] = Nil, materialized: Boolean = false,
+      wideRn: Boolean = false) = {
+    val rn = if (wideRn) s"rn, embedding\n    FROM $src) t"
+      else s"rn,\n      embedding FROM $src) t"
+    s"""cents AS (
+      |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
+      |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS $rn
+      |  WHERE rn <= $nlist),
+      |assign AS${if (materialized) " MATERIALIZED" else ""} (
+      |  SELECT vec_id, ${keep.map(_ + ", ").mkString}cid FROM (
+      |    SELECT e.vec_id, ${keep.map("e." + _ + ", ").mkString}c.cid,
+      |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+      |        ${cosSql("e", "c", 10)} DESC,
+      |        c.cid ASC) AS ark
+      |    FROM $src e CROSS JOIN cents c) t WHERE ark = 1)""".stripMargin
+  }
+
+  /** The `nprobe` best-cosine centroids of every 50th vector, the IVF
+    * search's probe lists. `withDot` also carries the query-centroid dot
+    * product as `qdotc`.
+    */
+  private def probesSql(nprobe: Int, materialized: Boolean = false,
+      withDot: Boolean = false) = {
+    val dot = if (withDot) s"\n      ${dot64.format("q", "c")} AS qdotc," else ""
+    s"""probes AS${if (materialized) " MATERIALIZED" else ""} (
+      |  SELECT query_id, cid${if (withDot) ", qdotc" else ""} FROM (
+      |    SELECT q.vec_id AS query_id, c.cid,$dot
+      |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
+      |        ${cosSql("q", "c", 10)} DESC,
+      |        c.cid ASC) AS crk
+      |    FROM embeddings q CROSS JOIN cents c
+      |    WHERE q.vec_id % 50 = 0) t WHERE crk <= $nprobe)""".stripMargin
+  }
+
+  /** The top-5 tail of the vector-search oracles: `scored`'s neighbors
+    * ranked per query by `score`, ties to the lower neighbor_id.
+    */
+  private def topKSql(score: String) =
+    s"""r AS (SELECT query_id, neighbor_id, $score,
+      |    ROW_NUMBER() OVER (PARTITION BY query_id
+      |      ORDER BY $score DESC, neighbor_id ASC) AS rk
+      |  FROM scored)
+      |SELECT query_id, rk, neighbor_id, ROUND($score, 5) AS $score
+      |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
+
+  /** The PQ codebook (`codebook`, the first `pqKsub` vectors cut into
+    * subvectors) and every vector's subvectors (`sliced`).
+    */
+  private def pqCodebookSql =
+    s"""cb_src AS (
+      |  SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c
+      |  FROM embeddings ORDER BY vec_id LIMIT $pqKsub),
+      |codebook AS MATERIALIZED (
+      |  SELECT c, u.j,
+      |    list_slice(embedding, u.j * $pqSub + 1, u.j * $pqSub + $pqSub)
+      |      AS centroid
+      |  FROM cb_src, UNNEST(generate_series(0, ${pqM - 1})) AS u(j)),
+      |sliced AS (
+      |  SELECT vec_id, u.j,
+      |    list_slice(embedding, u.j * $pqSub + 1, u.j * $pqSub + $pqSub) AS subv
+      |  FROM embeddings, UNNEST(generate_series(0, ${pqM - 1})) AS u(j))""".stripMargin
+
+  /** Every `sliced` subvector's nearest `codebook` centroid, ties to the
+    * lower code: the PQ `codes`.
+    */
+  private def pqCodesSql =
+    """d2 AS (
+      |  SELECT s.vec_id, s.j, cb.c,
+      |    (SELECT SUM((CAST(x.xa AS DOUBLE) - CAST(x.xb AS DOUBLE))
+      |              * (CAST(x.xa AS DOUBLE) - CAST(x.xb AS DOUBLE)))
+      |     FROM (SELECT UNNEST(s.subv) xa, UNNEST(cb.centroid) xb) x)
+      |      AS d2
+      |  FROM sliced s JOIN codebook cb ON s.j = cb.j),
+      |codes AS MATERIALIZED (
+      |  SELECT vec_id, j, c FROM (
+      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, j
+      |      ORDER BY d2 ASC, c ASC) AS rk FROM d2)
+      |  WHERE rk = 1)""".stripMargin
+
+  /** The queries (every 50th vector, with its norm `qn`) and their PQ
+    * lookup table `lut`: each query subvector's dot product `pd` with
+    * every centroid, and the centroid's squared norm `c2`.
+    */
+  private def pqLutSql =
+    s"""q AS (
+      |  SELECT vec_id AS query_id, embedding AS qv,
+      |    SQRT((SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE))
+      |          FROM (SELECT UNNEST(embedding) v) x)) AS qn
+      |  FROM embeddings WHERE vec_id % 50 = 0),
+      |qsliced AS (
+      |  SELECT query_id, qn, u.j,
+      |    list_slice(qv, u.j * $pqSub + 1, u.j * $pqSub + $pqSub) AS qsub
+      |  FROM q, UNNEST(generate_series(0, ${pqM - 1})) AS u(j)),
+      |lut AS MATERIALIZED (
+      |  SELECT query_id, qn, cb.j, cb.c,
+      |    (SELECT SUM(CAST(x.xa AS DOUBLE) * CAST(x.xb AS DOUBLE))
+      |     FROM (SELECT UNNEST(qsub) xa, UNNEST(cb.centroid) xb) x)
+      |      AS pd,
+      |    (SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE))
+      |     FROM (SELECT UNNEST(cb.centroid) v) x) AS c2
+      |  FROM qsliced JOIN codebook cb ON qsliced.j = cb.j)""".stripMargin
+
+  /** Column `v` pivoted to one `as<j>` column per subspace (`lut`'s `pd`
+    * and `c2` in [[pqLutCols]]), and the j-ordered sum of the `as<j>`.
+    */
+  private def pqPivot(v: String, as: String) = (0 until pqM)
+    .map(j => s"MIN(CASE WHEN co.j = $j THEN $v END) AS $as$j").mkString(", ")
+  private def pqLutCols = s"${pqPivot("pd", "pd")}, ${pqPivot("c2", "c2")}"
+  private def pqSum(as: String) = (0 until pqM).map(j => s"$as$j").mkString(" + ")
 
   val all: Seq[QueryDef] = Seq(
 
@@ -228,15 +358,9 @@ object TrainingOps {
       Some(s"""WITH q AS (SELECT vec_id query_id, embedding FROM embeddings
               |           WHERE vec_id % 50 = 0),
               |scored AS (SELECT q.query_id, e.vec_id neighbor_id,
-              |    ${dot64.format("q", "e")} /
-              |      (SQRT(${norm2("q")}) * SQRT(${norm2("e")})) AS cos
+              |    ${cosSql("q", "e", 6)} AS cos
               |  FROM embeddings e JOIN q ON e.vec_id <> q.query_id),
-              |r AS (SELECT query_id, neighbor_id, cos,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY cos DESC, neighbor_id ASC) AS rk
-              |  FROM scored)
-              |SELECT query_id, rk, neighbor_id, ROUND(cos, 5) AS cos
-              |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin)),
+              |${topKSql("cos")}""".stripMargin)),
 
     QueryDef("q46_sim_lsh_buckets",
       (s, d) => {
@@ -288,43 +412,17 @@ object TrainingOps {
             round(col("cos"), 5).as("cos"))
           .orderBy("query_id", "rk")
       },
-      Some(s"""WITH cents AS (
-              |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
-              |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS rn, embedding
-              |    FROM embeddings) t
-              |  WHERE rn <= 8),
-              |assign AS (
-              |  SELECT vec_id, cid FROM (
-              |    SELECT e.vec_id, c.cid,
-              |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              |        ${dot64.format("e", "c")} /
-              |          (SQRT(${norm2("e")}) * SQRT(${norm2("c")})) DESC,
-              |        c.cid ASC) AS ark
-              |    FROM embeddings e CROSS JOIN cents c) t WHERE ark = 1),
-              |probes AS (
-              |  SELECT query_id, cid FROM (
-              |    SELECT q.vec_id AS query_id, c.cid,
-              |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-              |        ${dot64.format("q", "c")} /
-              |          (SQRT(${norm2("q")}) * SQRT(${norm2("c")})) DESC,
-              |        c.cid ASC) AS crk
-              |    FROM embeddings q CROSS JOIN cents c
-              |    WHERE q.vec_id % 50 = 0) t WHERE crk <= 3),
+      Some(s"""WITH ${ivfSql(8, wideRn = true)},
+              |${probesSql(3)},
               |scored AS (
               |  SELECT p.query_id, e.vec_id AS neighbor_id,
-              |    ${dot64.format("q", "e")} /
-              |      (SQRT(${norm2("q")}) * SQRT(${norm2("e")})) AS cos
+              |    ${cosSql("q", "e", 6)} AS cos
               |  FROM probes p
               |  JOIN assign a ON a.cid = p.cid
               |  JOIN embeddings e ON e.vec_id = a.vec_id
               |    AND e.vec_id <> p.query_id
               |  JOIN embeddings q ON q.vec_id = p.query_id),
-              |r AS (SELECT query_id, neighbor_id, cos,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY cos DESC, neighbor_id ASC) AS rk
-              |  FROM scored)
-              |SELECT query_id, rk, neighbor_id, ROUND(cos, 5) AS cos
-              |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin)),
+              |${topKSql("cos")}""".stripMargin)),
 
     QueryDef("q47_text_langid",
       (s, d) => TextAnalysis.langId(table(s, d, "documents"))
@@ -748,70 +846,18 @@ object TrainingOps {
             round(col("acos"), 5).as("acos"))
           .orderBy("query_id", "rk")
       },
-      Some {
-        val m = 8; val sub = 8; val ksub = 16
-        val pdCols = (0 until m).map(j =>
-          s"MIN(CASE WHEN co.j = $j THEN pd END) AS pd$j").mkString(", ")
-        val c2Cols = (0 until m).map(j =>
-          s"MIN(CASE WHEN co.j = $j THEN c2 END) AS c2$j").mkString(", ")
-        val adot = (0 until m).map(j => s"pd$j").mkString(" + ")
-        val cn2 = (0 until m).map(j => s"c2$j").mkString(" + ")
-        s"""WITH cb_src AS (
-           |  SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c
-           |  FROM embeddings ORDER BY vec_id LIMIT $ksub),
-           |codebook AS MATERIALIZED (
-           |  SELECT c, u.j,
-           |    list_slice(embedding, u.j * $sub + 1, u.j * $sub + $sub)
-           |      AS centroid
-           |  FROM cb_src, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-           |sliced AS (
-           |  SELECT vec_id, u.j,
-           |    list_slice(embedding, u.j * $sub + 1, u.j * $sub + $sub) AS subv
-           |  FROM embeddings, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-           |d2 AS (
-           |  SELECT s.vec_id, s.j, cb.c,
-           |    (SELECT SUM((CAST(x.xa AS DOUBLE) - CAST(x.xb AS DOUBLE))
-           |              * (CAST(x.xa AS DOUBLE) - CAST(x.xb AS DOUBLE)))
-           |     FROM (SELECT UNNEST(s.subv) xa, UNNEST(cb.centroid) xb) x)
-           |      AS d2
-           |  FROM sliced s JOIN codebook cb ON s.j = cb.j),
-           |codes AS MATERIALIZED (
-           |  SELECT vec_id, j, c FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, j
-           |      ORDER BY d2 ASC, c ASC) AS rk FROM d2)
-           |  WHERE rk = 1),
-           |q AS (
-           |  SELECT vec_id AS query_id, embedding AS qv,
-           |    SQRT((SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE))
-           |          FROM (SELECT UNNEST(embedding) v) x)) AS qn
-           |  FROM embeddings WHERE vec_id % 50 = 0),
-           |qsliced AS (
-           |  SELECT query_id, qn, u.j,
-           |    list_slice(qv, u.j * $sub + 1, u.j * $sub + $sub) AS qsub
-           |  FROM q, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-           |lut AS MATERIALIZED (
-           |  SELECT query_id, qn, cb.j, cb.c,
-           |    (SELECT SUM(CAST(x.xa AS DOUBLE) * CAST(x.xb AS DOUBLE))
-           |     FROM (SELECT UNNEST(qsub) xa, UNNEST(cb.centroid) xb) x)
-           |      AS pd,
-           |    (SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE))
-           |     FROM (SELECT UNNEST(cb.centroid) v) x) AS c2
-           |  FROM qsliced JOIN codebook cb ON qsliced.j = cb.j),
-           |wide AS (
-           |  SELECT l.query_id, l.qn, co.vec_id, $pdCols, $c2Cols
-           |  FROM codes co JOIN lut l ON co.j = l.j AND co.c = l.c
-           |  GROUP BY 1, 2, 3),
-           |scored AS (
-           |  SELECT query_id, vec_id AS neighbor_id,
-           |    ($adot) / (qn * SQRT($cn2)) AS acos
-           |  FROM wide WHERE vec_id <> query_id),
-           |r AS (SELECT query_id, neighbor_id, acos,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id
-           |      ORDER BY acos DESC, neighbor_id ASC) AS rk
-           |  FROM scored)
-           |SELECT query_id, rk, neighbor_id, ROUND(acos, 5) AS acos
-           |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-      }),
+      Some(s"""WITH $pqCodebookSql,
+              |$pqCodesSql,
+              |$pqLutSql,
+              |wide AS (
+              |  SELECT l.query_id, l.qn, co.vec_id, $pqLutCols
+              |  FROM codes co JOIN lut l ON co.j = l.j AND co.c = l.c
+              |  GROUP BY 1, 2, 3),
+              |scored AS (
+              |  SELECT query_id, vec_id AS neighbor_id,
+              |    (${pqSum("pd")}) / (qn * SQRT(${pqSum("c2")})) AS acos
+              |  FROM wide WHERE vec_id <> query_id),
+              |${topKSql("acos")}""".stripMargin)),
 
     // IVF-PQ — the composed 100 TB ANN path at a NON-degenerate setting
     // (nlist=16, nprobe=4: each query scans a quarter of the coarse
@@ -829,99 +875,26 @@ object TrainingOps {
             round(col("acos"), 5).as("acos"))
           .orderBy("query_id", "rk")
       },
-      Some {
-        val m = 8; val sub = 8; val ksub = 16
-        val nlist = 16; val nprobe = 4
-        val pdCols = (0 until m).map(j =>
-          s"MIN(CASE WHEN co.j = $j THEN pd END) AS pd$j").mkString(", ")
-        val c2Cols = (0 until m).map(j =>
-          s"MIN(CASE WHEN co.j = $j THEN c2 END) AS c2$j").mkString(", ")
-        val adot = (0 until m).map(j => s"pd$j").mkString(" + ")
-        val cn2 = (0 until m).map(j => s"c2$j").mkString(" + ")
-        s"""WITH cents AS (
-           |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
-           |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS rn, embedding
-           |    FROM embeddings) t
-           |  WHERE rn <= $nlist),
-           |assign AS MATERIALIZED (
-           |  SELECT vec_id, cid FROM (
-           |    SELECT e.vec_id, c.cid,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${dot64.format("e", "c")} /
-           |          (SQRT(${norm2("e")}) * SQRT(${norm2("c")})) DESC,
-           |        c.cid ASC) AS ark
-           |    FROM embeddings e CROSS JOIN cents c) t WHERE ark = 1),
-           |probes AS MATERIALIZED (
-           |  SELECT query_id, cid FROM (
-           |    SELECT q.vec_id AS query_id, c.cid,
-           |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-           |        ${dot64.format("q", "c")} /
-           |          (SQRT(${norm2("q")}) * SQRT(${norm2("c")})) DESC,
-           |        c.cid ASC) AS crk
-           |    FROM embeddings q CROSS JOIN cents c
-           |    WHERE q.vec_id % 50 = 0) t WHERE crk <= $nprobe),
-           |cb_src AS (
-           |  SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c
-           |  FROM embeddings ORDER BY vec_id LIMIT $ksub),
-           |codebook AS MATERIALIZED (
-           |  SELECT c, u.j,
-           |    list_slice(embedding, u.j * $sub + 1, u.j * $sub + $sub)
-           |      AS centroid
-           |  FROM cb_src, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-           |sliced AS (
-           |  SELECT vec_id, u.j,
-           |    list_slice(embedding, u.j * $sub + 1, u.j * $sub + $sub) AS subv
-           |  FROM embeddings, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-           |d2 AS (
-           |  SELECT s.vec_id, s.j, cb.c,
-           |    (SELECT SUM((CAST(x.xa AS DOUBLE) - CAST(x.xb AS DOUBLE))
-           |              * (CAST(x.xa AS DOUBLE) - CAST(x.xb AS DOUBLE)))
-           |     FROM (SELECT UNNEST(s.subv) xa, UNNEST(cb.centroid) xb) x)
-           |      AS d2
-           |  FROM sliced s JOIN codebook cb ON s.j = cb.j),
-           |codes AS MATERIALIZED (
-           |  SELECT vec_id, j, c FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, j
-           |      ORDER BY d2 ASC, c ASC) AS rk FROM d2)
-           |  WHERE rk = 1),
-           |q AS (
-           |  SELECT vec_id AS query_id, embedding AS qv,
-           |    SQRT((SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE))
-           |          FROM (SELECT UNNEST(embedding) v) x)) AS qn
-           |  FROM embeddings WHERE vec_id % 50 = 0),
-           |qsliced AS (
-           |  SELECT query_id, qn, u.j,
-           |    list_slice(qv, u.j * $sub + 1, u.j * $sub + $sub) AS qsub
-           |  FROM q, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-           |lut AS MATERIALIZED (
-           |  SELECT query_id, qn, cb.j, cb.c,
-           |    (SELECT SUM(CAST(x.xa AS DOUBLE) * CAST(x.xb AS DOUBLE))
-           |     FROM (SELECT UNNEST(qsub) xa, UNNEST(cb.centroid) xb) x)
-           |      AS pd,
-           |    (SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE))
-           |     FROM (SELECT UNNEST(cb.centroid) v) x) AS c2
-           |  FROM qsliced JOIN codebook cb ON qsliced.j = cb.j),
-           |gate AS (
-           |  SELECT p.query_id, a.vec_id
-           |  FROM probes p JOIN assign a ON a.cid = p.cid),
-           |wide AS (
-           |  SELECT l.query_id, l.qn, co.vec_id, $pdCols, $c2Cols
-           |  FROM codes co
-           |  JOIN gate g ON g.vec_id = co.vec_id
-           |  JOIN lut l ON co.j = l.j AND co.c = l.c
-           |    AND l.query_id = g.query_id
-           |  GROUP BY 1, 2, 3),
-           |scored AS (
-           |  SELECT query_id, vec_id AS neighbor_id,
-           |    ($adot) / (qn * SQRT($cn2)) AS acos
-           |  FROM wide WHERE vec_id <> query_id),
-           |r AS (SELECT query_id, neighbor_id, acos,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id
-           |      ORDER BY acos DESC, neighbor_id ASC) AS rk
-           |  FROM scored)
-           |SELECT query_id, rk, neighbor_id, ROUND(acos, 5) AS acos
-           |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-      }),
+      Some(s"""WITH ${ivfSql(16, materialized = true, wideRn = true)},
+              |${probesSql(4, materialized = true)},
+              |$pqCodebookSql,
+              |$pqCodesSql,
+              |$pqLutSql,
+              |gate AS (
+              |  SELECT p.query_id, a.vec_id
+              |  FROM probes p JOIN assign a ON a.cid = p.cid),
+              |wide AS (
+              |  SELECT l.query_id, l.qn, co.vec_id, $pqLutCols
+              |  FROM codes co
+              |  JOIN gate g ON g.vec_id = co.vec_id
+              |  JOIN lut l ON co.j = l.j AND co.c = l.c
+              |    AND l.query_id = g.query_id
+              |  GROUP BY 1, 2, 3),
+              |scored AS (
+              |  SELECT query_id, vec_id AS neighbor_id,
+              |    (${pqSum("pd")}) / (qn * SQRT(${pqSum("c2")})) AS acos
+              |  FROM wide WHERE vec_id <> query_id),
+              |${topKSql("acos")}""".stripMargin)),
 
     // RESIDUAL-encoded IVF-PQ (the FAISS IndexIVFPQ design): PQ codes the
     // residual v − centroid(v), the ADC score reconstructs v̂ = c + r̂
@@ -940,30 +913,8 @@ object TrainingOps {
           .orderBy("query_id", "rk")
       },
       Some {
-        val m = 8; val sub = 8; val ksub = 16
-        val nlist = 16; val nprobe = 4
-        val pdCols = (0 until m).map(j =>
-          s"MIN(CASE WHEN co.j = $j THEN pd END) AS pd$j").mkString(", ")
-        val c2Cols = (0 until m).map(j =>
-          s"MIN(CASE WHEN co.j = $j THEN c2 END) AS c2$j").mkString(", ")
-        val crCols = (0 until m).map(j =>
-          s"MIN(CASE WHEN co.j = $j THEN crv END) AS cr$j").mkString(", ")
-        val adot = (0 until m).map(j => s"pd$j").mkString(" + ")
-        val cn2 = (0 until m).map(j => s"c2$j").mkString(" + ")
-        val crsum = (0 until m).map(j => s"cr$j").mkString(" + ")
-        s"""WITH cents AS (
-           |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
-           |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS rn, embedding
-           |    FROM embeddings) t
-           |  WHERE rn <= $nlist),
-           |assign AS MATERIALIZED (
-           |  SELECT vec_id, cid FROM (
-           |    SELECT e.vec_id, c.cid,
-           |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-           |        ${dot64.format("e", "c")} /
-           |          (SQRT(${norm2("e")}) * SQRT(${norm2("c")})) DESC,
-           |        c.cid ASC) AS ark
-           |    FROM embeddings e CROSS JOIN cents c) t WHERE ark = 1),
+        val nlist = 16
+        s"""WITH ${ivfSql(nlist, materialized = true, wideRn = true)},
            |resid AS MATERIALIZED (
            |  SELECT e.vec_id, a.cid,
            |    list_transform(generate_series(1, 64),
@@ -975,60 +926,24 @@ object TrainingOps {
            |cb_src AS (
            |  SELECT r, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c FROM (
            |    SELECT vec_id, r FROM resid
-           |    ORDER BY vec_id LIMIT $ksub OFFSET $nlist) t),
+           |    ORDER BY vec_id LIMIT $pqKsub OFFSET $nlist) t),
            |codebook AS MATERIALIZED (
            |  SELECT c, u.j,
-           |    list_slice(r, u.j * $sub + 1, u.j * $sub + $sub) AS centroid
-           |  FROM cb_src, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
+           |    list_slice(r, u.j * $pqSub + 1, u.j * $pqSub + $pqSub) AS centroid
+           |  FROM cb_src, UNNEST(generate_series(0, ${pqM - 1})) AS u(j)),
            |sliced AS (
            |  SELECT vec_id, u.j,
-           |    list_slice(r, u.j * $sub + 1, u.j * $sub + $sub) AS subv
-           |  FROM resid, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-           |d2 AS (
-           |  SELECT s.vec_id, s.j, cb.c,
-           |    (SELECT SUM((CAST(x.xa AS DOUBLE) - CAST(x.xb AS DOUBLE))
-           |              * (CAST(x.xa AS DOUBLE) - CAST(x.xb AS DOUBLE)))
-           |     FROM (SELECT UNNEST(s.subv) xa, UNNEST(cb.centroid) xb) x)
-           |      AS d2
-           |  FROM sliced s JOIN codebook cb ON s.j = cb.j),
-           |codes AS MATERIALIZED (
-           |  SELECT vec_id, j, c FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, j
-           |      ORDER BY d2 ASC, c ASC) AS rk FROM d2)
-           |  WHERE rk = 1),
-           |probes AS MATERIALIZED (
-           |  SELECT query_id, cid, qdotc FROM (
-           |    SELECT q.vec_id AS query_id, c.cid,
-           |      ${dot64.format("q", "c")} AS qdotc,
-           |      ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-           |        ${dot64.format("q", "c")} /
-           |          (SQRT(${norm2("q")}) * SQRT(${norm2("c")})) DESC,
-           |        c.cid ASC) AS crk
-           |    FROM embeddings q CROSS JOIN cents c
-           |    WHERE q.vec_id % 50 = 0) t WHERE crk <= $nprobe),
-           |q AS (
-           |  SELECT vec_id AS query_id, embedding AS qv,
-           |    SQRT((SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE))
-           |          FROM (SELECT UNNEST(embedding) v) x)) AS qn
-           |  FROM embeddings WHERE vec_id % 50 = 0),
-           |qsliced AS (
-           |  SELECT query_id, qn, u.j,
-           |    list_slice(qv, u.j * $sub + 1, u.j * $sub + $sub) AS qsub
-           |  FROM q, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-           |lut AS MATERIALIZED (
-           |  SELECT query_id, qn, cb.j, cb.c,
-           |    (SELECT SUM(CAST(x.xa AS DOUBLE) * CAST(x.xb AS DOUBLE))
-           |     FROM (SELECT UNNEST(qsub) xa, UNNEST(cb.centroid) xb) x)
-           |      AS pd,
-           |    (SELECT SUM(CAST(x.v AS DOUBLE) * CAST(x.v AS DOUBLE))
-           |     FROM (SELECT UNNEST(cb.centroid) v) x) AS c2
-           |  FROM qsliced JOIN codebook cb ON qsliced.j = cb.j),
+           |    list_slice(r, u.j * $pqSub + 1, u.j * $pqSub + $pqSub) AS subv
+           |  FROM resid, UNNEST(generate_series(0, ${pqM - 1})) AS u(j)),
+           |$pqCodesSql,
+           |${probesSql(4, materialized = true, withDot = true)},
+           |$pqLutSql,
            |crosses AS MATERIALIZED (
            |  SELECT ce.cid, cb.j, cb.c,
            |    (SELECT SUM(CAST(x.xa AS DOUBLE) * CAST(x.xb AS DOUBLE))
            |     FROM (SELECT
            |        UNNEST(list_slice(ce.embedding,
-           |          cb.j * $sub + 1, cb.j * $sub + $sub)) xa,
+           |          cb.j * $pqSub + 1, cb.j * $pqSub + $pqSub)) xa,
            |        UNNEST(cb.centroid) xb) x) AS crv
            |  FROM cents ce CROSS JOIN codebook cb),
            |coarse2 AS (
@@ -1041,7 +956,7 @@ object TrainingOps {
            |  FROM probes p JOIN assign a ON a.cid = p.cid),
            |wide AS (
            |  SELECT l.query_id, l.qn, g.qdotc, co.vec_id, g.cid,
-           |    $pdCols, $c2Cols, $crCols
+           |    $pqLutCols, ${pqPivot("crv", "cr")}
            |  FROM codes co
            |  JOIN gate g ON g.vec_id = co.vec_id
            |  JOIN lut l ON co.j = l.j AND co.c = l.c
@@ -1051,16 +966,11 @@ object TrainingOps {
            |  GROUP BY 1, 2, 3, 4, 5),
            |scored AS (
            |  SELECT query_id, vec_id AS neighbor_id,
-           |    (qdotc + ($adot)) /
-           |      (qn * SQRT(c2c + 2.0 * ($crsum) + ($cn2))) AS acos
+           |    (qdotc + (${pqSum("pd")})) /
+           |      (qn * SQRT(c2c + 2.0 * (${pqSum("cr")}) + (${pqSum("c2")}))) AS acos
            |  FROM wide JOIN coarse2 USING (cid)
            |  WHERE vec_id <> query_id),
-           |r AS (SELECT query_id, neighbor_id, acos,
-           |    ROW_NUMBER() OVER (PARTITION BY query_id
-           |      ORDER BY acos DESC, neighbor_id ASC) AS rk
-           |  FROM scored)
-           |SELECT query_id, rk, neighbor_id, ROUND(acos, 5) AS acos
-           |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
+           |${topKSql("acos")}""".stripMargin
       }),
 
     // Unicode NFC canonicalization (native codegen'd expression): every
@@ -1774,24 +1684,11 @@ object TrainingOps {
         .orderBy("vec_id"),
       Some(s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings e
               |  WHERE vec_id < 4000 AND ${norm2("e")} > 0),
-              |cents AS (
-              |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
-              |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
-              |      embedding FROM emb) t
-              |  WHERE rn <= 8),
-              |assign AS (
-              |  SELECT vec_id, embedding, cid FROM (
-              |    SELECT e.vec_id, e.embedding, c.cid,
-              |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              |        ${dot64.format("e", "c")} /
-              |          (SQRT(${norm2("e")}) * SQRT(${norm2("c")})) DESC,
-              |        c.cid ASC) AS ark
-              |    FROM emb e CROSS JOIN cents c) t WHERE ark = 1),
+              |${ivfSql(8, "emb", Seq("embedding"))},
               |dropped AS (SELECT DISTINCT b.vec_id
               |  FROM assign a JOIN assign b
               |    ON a.cid = b.cid AND a.vec_id < b.vec_id
-              |  WHERE ${dot64.format("a", "b")} /
-              |    (SQRT(${norm2("a")}) * SQRT(${norm2("b")})) >= 0.3)
+              |  WHERE ${cosSql("a", "b", 4)} >= 0.3)
               |SELECT vec_id, cid FROM assign
               |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
               |ORDER BY vec_id""".stripMargin)),
@@ -1962,8 +1859,7 @@ object TrainingOps {
               |    embedding FROM embeddings WHERE vec_id % 50 = 0),
               |scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
               |    e.label AS neg_label,
-              |    ${dot64.format("q", "e")} /
-              |      (SQRT(${norm2("q")}) * SQRT(${norm2("e")})) AS cos
+              |    ${cosSql("q", "e", 6)} AS cos
               |  FROM embeddings e JOIN q ON e.label <> q.q_label),
               |r AS (SELECT query_id, neighbor_id, neg_label, cos,
               |    ROW_NUMBER() OVER (PARTITION BY query_id
@@ -1984,19 +1880,7 @@ object TrainingOps {
         .orderBy("vec_id"),
       Some(s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings e
               |  WHERE vec_id < 4000 AND ${norm2("e")} > 0),
-              |cents AS (
-              |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
-              |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
-              |      embedding FROM emb) t
-              |  WHERE rn <= 16),
-              |assign AS (
-              |  SELECT vec_id, cid FROM (
-              |    SELECT e.vec_id, c.cid,
-              |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              |        ${dot64.format("e", "c")} /
-              |          (SQRT(${norm2("e")}) * SQRT(${norm2("c")})) DESC,
-              |        c.cid ASC) AS ark
-              |    FROM emb e CROSS JOIN cents c) t WHERE ark = 1),
+              |${ivfSql(16, "emb")},
               |sel AS (SELECT vec_id, cid, ROW_NUMBER() OVER (
               |    PARTITION BY cid
               |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
@@ -2393,23 +2277,10 @@ object TrainingOps {
         .orderBy("vec_id", "rk"),
       Some(s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings e
               |  WHERE vec_id < 4000 AND ${norm2("e")} > 0),
-              |cents AS (
-              |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
-              |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
-              |      embedding FROM emb) t
-              |  WHERE rn <= 8),
-              |assign AS (
-              |  SELECT vec_id, embedding, cid FROM (
-              |    SELECT e.vec_id, e.embedding, c.cid,
-              |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              |        ${dot64.format("e", "c")} /
-              |          (SQRT(${norm2("e")}) * SQRT(${norm2("c")})) DESC,
-              |        c.cid ASC) AS ark
-              |    FROM emb e CROSS JOIN cents c) t WHERE ark = 1),
+              |${ivfSql(8, "emb", Seq("embedding"))},
               |edges AS (
               |  SELECT a.vec_id, b.vec_id AS neighbor_id, a.cid,
-              |    ${dot64.format("a", "b")} /
-              |      (SQRT(${norm2("a")}) * SQRT(${norm2("b")})) AS cos
+              |    ${cosSql("a", "b", 6)} AS cos
               |  FROM assign a JOIN assign b
               |    ON a.cid = b.cid AND a.vec_id <> b.vec_id),
               |rk AS (SELECT vec_id, neighbor_id, cid, cos,
@@ -2814,17 +2685,11 @@ object TrainingOps {
               |  FROM probes p JOIN bucket b
               |    ON b.bucket = p.probe AND b.vec_id <> p.query_id),
               |scored AS (SELECT c.query_id, c.neighbor_id,
-              |    ${dot64.format("q", "e")} /
-              |      (SQRT(${norm2("q")}) * SQRT(${norm2("e")})) AS cos
+              |    ${cosSql("q", "e", 6)} AS cos
               |  FROM cand c
               |  JOIN embeddings q ON q.vec_id = c.query_id
               |  JOIN embeddings e ON e.vec_id = c.neighbor_id),
-              |r AS (SELECT query_id, neighbor_id, cos,
-              |    ROW_NUMBER() OVER (PARTITION BY query_id
-              |      ORDER BY cos DESC, neighbor_id ASC) AS rk
-              |  FROM scored)
-              |SELECT query_id, rk, neighbor_id, ROUND(cos, 5) AS cos
-              |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin)),
+              |${topKSql("cos")}""".stripMargin)),
 
     // Gopher rule filter (Rae et al. 2021 A.1.1): named-reason heuristic
     // rules — word-count / mean-word-length bounds, alpha-word ratio,
@@ -3197,19 +3062,7 @@ object TrainingOps {
         .select(col("cid"), col("rk"), col("term"), col("tf"),
           round(col("score"), 6).as("score"))
         .orderBy("cid", "rk"),
-      Some(s"""WITH cents AS (
-              |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
-              |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
-              |      embedding FROM embeddings) t
-              |  WHERE rn <= 8),
-              |assign AS (
-              |  SELECT vec_id, cid FROM (
-              |    SELECT e.vec_id, c.cid,
-              |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              |        ${dot64.format("e", "c")} /
-              |          (SQRT(${norm2("e")}) * SQRT(${norm2("c")})) DESC,
-              |        c.cid ASC) AS ark
-              |    FROM embeddings e CROSS JOIN cents c) t WHERE ark = 1),
+      Some(s"""WITH ${ivfSql(8)},
               |toks AS (SELECT a.cid,
               |    UNNEST(string_split(dd.text, ' ')) AS term
               |  FROM documents dd JOIN assign a ON a.vec_id = dd.doc_id),
@@ -3548,23 +3401,10 @@ object TrainingOps {
       Some(s"""WITH emb AS (SELECT vec_id, embedding, label
               |  FROM embeddings e
               |  WHERE vec_id < 4000 AND ${norm2("e")} > 0),
-              |cents AS (
-              |  SELECT CAST(rn - 1 AS INT) AS cid, embedding FROM (
-              |    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
-              |      embedding FROM emb) t
-              |  WHERE rn <= 8),
-              |assign AS (
-              |  SELECT vec_id, embedding, label, cid FROM (
-              |    SELECT e.vec_id, e.embedding, e.label, c.cid,
-              |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              |        ${dot64.format("e", "c")} /
-              |          (SQRT(${norm2("e")}) * SQRT(${norm2("c")})) DESC,
-              |        c.cid ASC) AS ark
-              |    FROM emb e CROSS JOIN cents c) t WHERE ark = 1),
+              |${ivfSql(8, "emb", Seq("embedding", "label"))},
               |edges AS (
               |  SELECT a.vec_id, a.label, b.label AS n_label,
-              |    ${dot64.format("a", "b")} /
-              |      (SQRT(${norm2("a")}) * SQRT(${norm2("b")})) AS cos,
+              |    ${cosSql("a", "b", 6)} AS cos,
               |    b.vec_id AS neighbor_id
               |  FROM assign a JOIN assign b
               |    ON a.cid = b.cid AND a.vec_id <> b.vec_id),
