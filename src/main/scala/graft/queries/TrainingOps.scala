@@ -81,18 +81,14 @@ object TrainingOps {
        |      + strpos('0123456789abcdef', substr(md5('$salt' || ($e)), 4, 1)) - 1)
        |      / 65536.0""".stripMargin
 
-  /** DuckDB mirror of the 8-hex-digit md5 prefix as an int64 (the
-    * [[graft.ops.Sketch.bucket]] / Bloom-position convention).
+  /** The first `digits` hex digits of the md5 hex string `x` as an int64
+    * (8 digits: the [[graft.ops.Sketch.bucket]] / Bloom-position
+    * convention; 15, < 2^60: the [[graft.ops.Profile.datasetManifest]]
+    * row-hash convention). `pos` spells the 1-based position of digit i.
     */
-  private def hex8Sql(x: String): String = (1 to 8)
-    .map(i => s"(strpos('0123456789abcdef', substr($x, $i, 1)) - 1)")
-    .reduceLeft((a, b) => s"($a * 16 + $b)")
-
-  /** 15-hex-digit md5 prefix as an int64 (< 2^60 — the
-    * [[graft.ops.Profile.datasetManifest]] row-hash convention).
-    */
-  private def hex15Sql(x: String): String = (1 to 15)
-    .map(i => s"(strpos('0123456789abcdef', substr($x, $i, 1)) - 1)")
+  private def hexSql(x: String, digits: Int,
+      pos: Int => String = _.toString): String = (1 to digits)
+    .map(i => s"(strpos('0123456789abcdef', substr($x, ${pos(i)}, 1)) - 1)")
     .reduceLeft((a, b) => s"($a * 16 + $b)")
 
   private def shinglesSql(cond: String = "TRUE") =
@@ -1307,11 +1303,8 @@ object TrainingOps {
           .orderBy("term")
       },
       Some {
-        def hex8(x: String) = (1 to 8)
-          .map(i => s"(strpos('0123456789abcdef', substr($x, $i, 1)) - 1)")
-          .reduceLeft((a, b) => s"($a * 16 + $b)")
         val bucket =
-          hex8("md5(CAST(d AS VARCHAR) || ':' || term)") + " % 256"
+          hexSql("md5(CAST(d AS VARCHAR) || ':' || term)", 8) + " % 256"
         s"""WITH toks AS (SELECT UNNEST(string_split(text, ' ')) AS term
            |  FROM documents),
            |top AS (SELECT term, COUNT(*) AS exact_cnt FROM toks
@@ -1615,10 +1608,8 @@ object TrainingOps {
       Some {
         // digest-chunking double hashing: position h = hex digits
         // [h*6+1, h*6+6] of ONE md5(gram), mod 2^20 (bloomPos's form)
-        val pos = "(" + (1 to 6)
-          .map(k => "(strpos('0123456789abcdef', substr(md5(gram), " +
-            s"CAST(h * 6 + $k AS INT), 1)) - 1)")
-          .reduceLeft((a, b) => s"($a * 16 + $b)") + ") % 1048576"
+        val pos = "(" + hexSql("md5(gram)", 6,
+          k => s"CAST(h * 6 + $k AS INT)") + ") % 1048576"
         s"""WITH g AS (SELECT doc_id, UNNEST(list_distinct(
            |      [array_to_string(t[i:i+4], ' ')
            |       FOR i IN generate_series(1, len(t) - 4)])) AS gram
@@ -2110,8 +2101,8 @@ object TrainingOps {
               |c AS (SELECT doc_id, toks, n,
               |    [0] || [CAST(i AS INT) FOR i IN generate_series(4, n)
               |            IF i < n AND
-              |              ${hex8Sql("md5(array_to_string(" +
-                               "toks[i-3:i], ' '))")} % 8 = 0] || [n] AS ac
+              |              ${hexSql("md5(array_to_string(" +
+                               "toks[i-3:i], ' '))", 8)} % 8 = 0] || [n] AS ac
               |  FROM t),
               |ch AS (SELECT doc_id, CAST(u.j - 1 AS INT) AS chunk_id,
               |    array_to_string(toks[ac[u.j] + 1:ac[u.j + 1]], ' ')
@@ -2133,7 +2124,7 @@ object TrainingOps {
           round(col("log_w"), 5).as("log_w"))
         .orderBy("doc_id"),
       Some {
-        val bucket = s"(${hex8Sql("md5('dsir:' || gram)")} % 256)"
+        val bucket = s"(${hexSql("md5('dsir:' || gram)", 8)} % 256)"
         s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts,
            |    len(string_split(text, ' ')) AS n FROM documents),
            |g AS (SELECT doc_id, i AS pos,
@@ -6286,7 +6277,7 @@ object TrainingOps {
              |    COALESCE(source, chr(0)),
              |    COALESCE(CAST(n_chars AS VARCHAR), chr(0)))) AS hx
              |  FROM documents),
-             |r AS (SELECT ${hex15Sql("hx")} AS h FROM m),
+             |r AS (SELECT ${hexSql("hx", 15)} AS h FROM m),
              |s AS (SELECT CAST(h % 8 AS INT) AS shard,
              |    COUNT(*) AS n,
              |    CAST(SUM(CAST(h AS HUGEINT)) % 2305843009213693951
@@ -6918,10 +6909,7 @@ object TrainingOps {
           table(s, d, "documents").select("doc_id"), epoch = 1)
         .orderBy("doc_id"),
       Some {
-        val draw = (1 to 15)
-          .map(i => "(strpos('0123456789abcdef', substr(" +
-            s"md5('epoch:1:' || CAST(doc_id AS VARCHAR)), $i, 1)) - 1)")
-          .reduceLeft((a, b) => s"($a * 16 + $b)")
+        val draw = hexSql("md5('epoch:1:' || CAST(doc_id AS VARCHAR))", 15)
         s"""SELECT doc_id, ROW_NUMBER() OVER (ORDER BY $draw, doc_id)
            |  AS epoch_pos
            |FROM documents ORDER BY doc_id""".stripMargin
@@ -7065,11 +7053,8 @@ object TrainingOps {
           (0 until 8).map(i => s"s$i"))
         .orderBy("doc_id"),
       Some {
-        val draw = (1 to 8)
-          .map(i => "(strpos('0123456789abcdef', substr(" +
-            s"md5('rdv:' || CAST(doc_id AS VARCHAR) || ':' || shard), " +
-            s"$i, 1)) - 1)")
-          .reduceLeft((a, b) => s"($a * 16 + $b)")
+        val draw = hexSql(
+          "md5('rdv:' || CAST(doc_id AS VARCHAR) || ':' || shard)", 8)
         s"""WITH sh AS (SELECT UNNEST([${(0 until 8)
               .map(i => s"'s$i'").mkString(", ")}]) AS shard),
            |w AS (SELECT doc_id, shard, $draw AS w
@@ -7207,9 +7192,9 @@ object TrainingOps {
           table(s, d, "documents").select("doc_id"), epochs = Seq(1, 2, 3, 4))
         .orderBy("epoch", "doc_id"),
       Some {
-        val draw = hex15Sql(
+        val draw = hexSql(
           "md5('epoch:' || CAST(epoch AS VARCHAR) || ':' || " +
-            "CAST(doc_id AS VARCHAR))")
+            "CAST(doc_id AS VARCHAR))", 15)
         s"""WITH ep AS (SELECT d.doc_id, e.epoch FROM documents d
            |  CROSS JOIN (VALUES (1), (2), (3), (4)) e(epoch))
            |SELECT doc_id, epoch, ROW_NUMBER() OVER (PARTITION BY epoch
