@@ -1776,34 +1776,7 @@ object TrainingOps {
         .select(col("query_id"), col("rk"), col("doc_id"),
           round(col("rrf"), 6).as("rrf"))
         .orderBy("query_id", "rk"),
-      Some("""WITH toks AS MATERIALIZED (SELECT doc_id,
-             |    CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl,
-             |    UNNEST(string_split(text, ' ')) AS term FROM documents),
-             |tf AS MATERIALIZED (SELECT doc_id, dl, term,
-             |    CAST(COUNT(*) AS DOUBLE) AS tf
-             |  FROM toks GROUP BY 1, 2, 3),
-             |qt AS MATERIALIZED (SELECT doc_id AS query_id,
-             |    UNNEST(list_distinct(string_split(text, ' '))) AS term
-             |  FROM documents
-             |  WHERE doc_id % 250 = 0 AND doc_id < 100000),
-             |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-             |    AVG(CAST(len(string_split(text, ' ')) AS DOUBLE)) AS avgdl
-             |  FROM documents),
-             |posts AS MATERIALIZED (SELECT * FROM tf
-             |  WHERE term IN (SELECT term FROM qt)),
-             |df AS MATERIALIZED (SELECT term, CAST(COUNT(*) AS DOUBLE)
-             |    AS df
-             |  FROM posts GROUP BY 1),
-             |w AS (SELECT q.query_id, p.doc_id, p.term,
-             |    ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)) *
-             |      (p.tf * 2.2) /
-             |      (p.tf + 1.2 * (0.25 + 0.75 * p.dl / s.avgdl)) AS w
-             |  FROM posts p JOIN df d USING (term) JOIN qt q USING (term)
-             |  CROSS JOIN stats s),
-             |sc AS (SELECT query_id, doc_id,
-             |    list_reduce(list(w ORDER BY term), (a, b) -> a + b)
-             |      AS score
-             |  FROM w GROUP BY 1, 2),
+      Some(bm25ScoreCtes + """,
              |bmk AS MATERIALIZED (SELECT query_id, doc_id, rk FROM (
              |    SELECT query_id, doc_id, ROW_NUMBER() OVER (
              |      PARTITION BY query_id ORDER BY score DESC, doc_id ASC)
@@ -3688,51 +3661,24 @@ object TrainingOps {
         .select(col("doc_id"), col("actual"), col("pred"),
           round(col("score"), 6).as("score"))
         .orderBy("doc_id"),
-      Some("""WITH docs AS (SELECT * FROM documents
-             |  WHERE doc_id < 20000),
-             |toks AS (SELECT doc_id, source AS cls,
-             |    len(string_split(text, ' ')) AS dl,
-             |    UNNEST(string_split(text, ' ')) AS term
-             |  FROM docs),
-             |tf AS (SELECT doc_id, cls, dl, term, COUNT(*) AS tf
-             |  FROM toks GROUP BY 1, 2, 3, 4),
-             |cells AS (SELECT cls AS m_cls, term,
-             |    CAST(SUM(tf) AS BIGINT) AS n_tc
-             |  FROM tf GROUP BY 1, 2),
-             |ct AS (SELECT m_cls, CAST(SUM(n_tc) AS BIGINT) AS n_c
-             |  FROM cells GROUP BY 1),
-             |vv AS (SELECT COUNT(DISTINCT term) AS v FROM cells),
-             |pri AS (SELECT source AS m_cls, COUNT(*) AS n_docs
-             |  FROM docs GROUP BY 1),
-             |na AS (SELECT COUNT(*) AS n_all FROM docs),
-             |model AS (SELECT m_cls, term,
-             |    ln((n_tc + 1.0) / (n_c + v)) AS logp
-             |  FROM cells JOIN ct USING (m_cls) CROSS JOIN vv),
-             |seen AS (SELECT tf.doc_id, m.m_cls,
-             |    list_reduce(list(tf * logp ORDER BY term),
-             |      (a, b) -> a + b) AS seen_sum,
-             |    CAST(SUM(tf) AS BIGINT) AS seen_tf
-             |  FROM tf JOIN model m USING (term) GROUP BY 1, 2),
-             |grid AS (SELECT d.doc_id, d.cls, d.dl, c.m_cls
-             |  FROM (SELECT DISTINCT doc_id, cls, dl FROM tf) d
-             |  CROSS JOIN ct c),
-             |scored AS (SELECT g.doc_id, g.cls, g.m_cls,
-             |    ln(CAST(n_docs AS DOUBLE) / n_all)
-             |      + COALESCE(seen_sum, 0.0)
-             |      + (g.dl - COALESCE(seen_tf, 0))
-             |        * ln(1.0 / (n_c + v)) AS score
-             |  FROM grid g
-             |  LEFT JOIN seen s
-             |    ON s.doc_id = g.doc_id AND s.m_cls = g.m_cls
-             |  JOIN ct ON ct.m_cls = g.m_cls
-             |  CROSS JOIN vv
-             |  JOIN pri ON pri.m_cls = g.m_cls
-             |  CROSS JOIN na)
-             |SELECT doc_id, cls AS actual, m_cls AS pred,
-             |  ROUND(score, 6) AS score
-             |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-             |    ORDER BY score DESC, m_cls) AS rk FROM scored)
-             |WHERE rk = 1 ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH docs AS (SELECT * FROM documents
+              |  WHERE doc_id < 20000),
+              |toks AS (SELECT doc_id, source AS cls,
+              |    len(string_split(text, ' ')) AS dl,
+              |    UNNEST(string_split(text, ' ')) AS term
+              |  FROM docs),
+              |tf AS (SELECT doc_id, cls, dl, term, COUNT(*) AS tf
+              |  FROM toks GROUP BY 1, 2, 3, 4),
+              |${nbModelSql("tf", "docs")},
+              |seen AS (SELECT tf.doc_id, m.m_cls,
+              |    list_reduce(list(tf * logp ORDER BY term),
+              |      (a, b) -> a + b) AS seen_sum,
+              |    CAST(SUM(tf) AS BIGINT) AS seen_tf
+              |  FROM tf JOIN model m USING (term) GROUP BY 1, 2),
+              |grid AS (SELECT d.doc_id, d.cls, d.dl, c.m_cls
+              |  FROM (SELECT DISTINCT doc_id, cls, dl FROM tf) d
+              |  CROSS JOIN ct c),
+              |$nbPredictSql""".stripMargin)),
 
     // Chi-square feature selection: top-5 class-characterizing terms
     // per source by the 2x2 doc-frequency statistic; exact integer
@@ -3829,18 +3775,7 @@ object TrainingOps {
              |      len(string_split(text, ' ')) AS dl,
              |      UNNEST(string_split(text, ' ')) AS term
              |    FROM tr) GROUP BY 1, 2, 3, 4),
-             |cells AS (SELECT cls AS m_cls, term,
-             |    CAST(SUM(tf) AS BIGINT) AS n_tc
-             |  FROM tf_tr GROUP BY 1, 2),
-             |ct AS (SELECT m_cls, CAST(SUM(n_tc) AS BIGINT) AS n_c
-             |  FROM cells GROUP BY 1),
-             |vv AS (SELECT COUNT(DISTINCT term) AS v FROM cells),
-             |pri AS (SELECT source AS m_cls, COUNT(*) AS n_docs
-             |  FROM tr GROUP BY 1),
-             |na AS (SELECT COUNT(*) AS n_all FROM tr),
-             |model AS (SELECT m_cls, term,
-             |    ln((n_tc + 1.0) / (n_c + v)) AS logp
-             |  FROM cells JOIN ct USING (m_cls) CROSS JOIN vv),
+             |${nbModelSql("tf_tr", "tr")},
              |tf_te AS (SELECT doc_id, cls, dl, term, COUNT(*) AS tf
              |  FROM (SELECT doc_id, source AS cls,
              |      len(string_split(text, ' ')) AS dl,
@@ -3854,23 +3789,7 @@ object TrainingOps {
              |grid AS (SELECT d.doc_id, d.cls, d.dl, c.m_cls
              |  FROM (SELECT DISTINCT doc_id, cls, dl FROM tf_te) d
              |  CROSS JOIN ct c),
-             |scored AS (SELECT g.doc_id, g.cls, g.m_cls,
-             |    ln(CAST(n_docs AS DOUBLE) / n_all)
-             |      + COALESCE(seen_sum, 0.0)
-             |      + (g.dl - COALESCE(seen_tf, 0))
-             |        * ln(1.0 / (n_c + v)) AS score
-             |  FROM grid g
-             |  LEFT JOIN seen s
-             |    ON s.doc_id = g.doc_id AND s.m_cls = g.m_cls
-             |  JOIN ct ON ct.m_cls = g.m_cls
-             |  CROSS JOIN vv
-             |  JOIN pri ON pri.m_cls = g.m_cls
-             |  CROSS JOIN na)
-             |SELECT doc_id, cls AS actual, m_cls AS pred,
-             |  ROUND(score, 6) AS score
-             |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-             |    ORDER BY score DESC, m_cls) AS rk FROM scored)
-             |WHERE rk = 1 ORDER BY doc_id""".stripMargin)),
+             |$nbPredictSql""".stripMargin)),
 
     // Pareto at an explicit bucket count: customer revenue
     // concentration with the rank space value-radix bucketed 64 ways —
@@ -4081,26 +4000,7 @@ object TrainingOps {
             round(col("score"), 6).as("score"))
           .orderBy("id_l", "id_r")
       },
-      Some("""WITH c AS (SELECT c_custkey, c_nationkey,
-             |    c_mktsegment AS seg,
-             |    CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS bal_k,
-             |    right(c_name, 1) AS nd
-             |  FROM customer),
-             |l AS (SELECT * FROM c WHERE c_custkey <= 500),
-             |r AS (SELECT * FROM c
-             |  WHERE c_custkey > 500 AND c_custkey <= 1000),
-             |u1 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-             |    / (SUM(cnt) * SUM(cnt)) AS u
-             |  FROM (SELECT COUNT(*) AS cnt FROM r
-             |        WHERE seg IS NOT NULL GROUP BY seg)),
-             |u2 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-             |    / (SUM(cnt) * SUM(cnt)) AS u
-             |  FROM (SELECT COUNT(*) AS cnt FROM r
-             |        WHERE bal_k IS NOT NULL GROUP BY bal_k)),
-             |u3 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-             |    / (SUM(cnt) * SUM(cnt)) AS u
-             |  FROM (SELECT COUNT(*) AS cnt FROM r
-             |        WHERE nd IS NOT NULL GROUP BY nd)),
+      Some(linkagePairSql + """,
              |p AS (SELECT l.c_custkey AS id_l, r.c_custkey AS id_r,
              |    l.seg = r.seg AS a1, l.bal_k = r.bal_k AS a2,
              |    l.nd = r.nd AS a3
@@ -6679,55 +6579,21 @@ object TrainingOps {
           bits = 8, numFiles = 64,
           probes = Seq(("l_partkey", 100L, 150L), ("l_suppkey", 5L, 8L)))
         .orderBy("layout", "probe_col"),
-      Some {
-        val terms = (0 until 8).flatMap(i => Seq(
-          s"(((np >> $i) & 1) << ${2 * i})",
-          s"(((ns >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
-        s"""WITH b AS (
-           |  SELECT MIN(l_partkey) pmin0, MAX(l_partkey) pmax0,
-           |         MIN(l_suppkey) smin0, MAX(l_suppkey) smax0
-           |  FROM lineitem),
-           |n AS (
-           |  SELECT l_partkey, l_suppkey, pmin0, pmax0, smin0, smax0,
-           |    (l_partkey - pmin0) * 256 // (pmax0 - pmin0 + 1) AS np,
-           |    (l_suppkey - smin0) * 256 // (smax0 - smin0 + 1) AS ns
-           |  FROM lineitem, b),
-           |z AS (SELECT *, $terms AS zvalue FROM n),
-           |zb AS (SELECT MIN(zvalue) zmn, MAX(zvalue) zmx FROM z),
-           |f AS (
-           |  SELECT 'zorder' AS layout, l_partkey, l_suppkey,
-           |    (zvalue - zmn) * 64 // (zmx - zmn + 1) AS file
-           |  FROM z, zb
-           |  UNION ALL
-           |  SELECT 'sort_l_partkey', l_partkey, l_suppkey,
-           |    (l_partkey - pmin0) * 64 // (pmax0 - pmin0 + 1)
-           |  FROM z
-           |  UNION ALL
-           |  SELECT 'sort_l_suppkey', l_partkey, l_suppkey,
-           |    (l_suppkey - smin0) * 64 // (smax0 - smin0 + 1)
-           |  FROM z),
-           |st AS (SELECT layout, file, COUNT(*) AS n_rows,
-           |    MIN(l_partkey) AS mn_p, MAX(l_partkey) AS mx_p,
-           |    MIN(l_suppkey) AS mn_s, MAX(l_suppkey) AS mx_s
-           |  FROM f GROUP BY 1, 2),
-           |pr AS (SELECT * FROM (VALUES
-           |    ('l_partkey', CAST(100 AS BIGINT), CAST(150 AS BIGINT)),
-           |    ('l_suppkey', CAST(5 AS BIGINT), CAST(8 AS BIGINT)))
-           |  p(probe_col, lo, hi)),
-           |j AS (SELECT st.*, pr.probe_col, pr.lo, pr.hi,
-           |    CASE WHEN pr.probe_col = 'l_suppkey'
-           |      THEN NOT (mx_s < lo OR mn_s > hi)
-           |      ELSE NOT (mx_p < lo OR mn_p > hi) END AS scanned
-           |  FROM st CROSS JOIN pr)
-           |SELECT layout, probe_col, lo, hi,
-           |  CAST(COUNT(*) AS BIGINT) AS files_nonempty,
-           |  CAST(SUM(CASE WHEN scanned THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS files_scanned,
-           |  CAST(SUM(CASE WHEN scanned THEN n_rows ELSE 0 END)
-           |    AS BIGINT) AS rows_scanned
-           |FROM j GROUP BY 1, 2, 3, 4
-           |ORDER BY layout, probe_col""".stripMargin
-      }),
+      Some(s"""WITH ${zGridSql(8)},
+              |zb AS (SELECT MIN(zvalue) zmn, MAX(zvalue) zmx FROM z),
+              |f AS (
+              |  SELECT 'zorder' AS layout, l_partkey, l_suppkey,
+              |    (zvalue - zmn) * 64 // (zmx - zmn + 1) AS file
+              |  FROM z, zb
+              |  UNION ALL
+              |  SELECT 'sort_l_partkey', l_partkey, l_suppkey,
+              |    (l_partkey - pmin0) * 64 // (pmax0 - pmin0 + 1)
+              |  FROM z
+              |  UNION ALL
+              |  SELECT 'sort_l_suppkey', l_partkey, l_suppkey,
+              |    (l_suppkey - smin0) * 64 // (smax0 - smin0 + 1)
+              |  FROM z),
+              |$skippingScanSql""".stripMargin)),
 
 
     // Hilbert vs Z-order skipping audit: the MEASURED comparison of the
@@ -7208,10 +7074,6 @@ object TrainingOps {
     * one CTE per level computing (hx, hy, hd) by div/mod arithmetic.
     */
   private def hilbertSkippingOracleSql(bits: Int, numFiles: Int): String = {
-    val zterms = (0 until bits).flatMap(i => Seq(
-      s"(((np >> $i) & 1) << ${2 * i})",
-      s"(((ns >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
-    val side = 1L << bits
     val levels = ((bits - 1) to 0 by -1).zipWithIndex.map {
       case (k, li) =>
         val sL = 1L << k
@@ -7228,16 +7090,7 @@ object TrainingOps {
            |  FROM $prev)""".stripMargin
     }.mkString(",\n")
     val gN = s"g$bits"
-    s"""WITH b AS (
-       |  SELECT MIN(l_partkey) pmin0, MAX(l_partkey) pmax0,
-       |         MIN(l_suppkey) smin0, MAX(l_suppkey) smax0
-       |  FROM lineitem),
-       |n AS (
-       |  SELECT l_partkey, l_suppkey, pmin0, pmax0, smin0, smax0,
-       |    (l_partkey - pmin0) * $side // (pmax0 - pmin0 + 1) AS np,
-       |    (l_suppkey - smin0) * $side // (smax0 - smin0 + 1) AS ns
-       |  FROM lineitem, b),
-       |z AS (SELECT *, $zterms AS zvalue FROM n),
+    s"""WITH ${zGridSql(bits)},
        |g0 AS (SELECT l_partkey, l_suppkey, np, ns, zvalue,
        |    np AS hx, ns AS hy, CAST(0 AS BIGINT) AS hd FROM z),
        |$levels,
@@ -7260,28 +7113,57 @@ object TrainingOps {
        |  SELECT 'sort_l_suppkey', l_partkey, l_suppkey,
        |    (l_suppkey - smin0) * $numFiles // (smax0 - smin0 + 1)
        |  FROM $gN, bb),
-       |st AS (SELECT layout, file, COUNT(*) AS n_rows,
-       |    MIN(l_partkey) AS mn_p, MAX(l_partkey) AS mx_p,
-       |    MIN(l_suppkey) AS mn_s, MAX(l_suppkey) AS mx_s
-       |  FROM f GROUP BY 1, 2),
-       |pr AS (SELECT * FROM (VALUES
-       |    ('l_partkey', CAST(100 AS BIGINT), CAST(150 AS BIGINT)),
-       |    ('l_suppkey', CAST(5 AS BIGINT), CAST(8 AS BIGINT)))
-       |  p(probe_col, lo, hi)),
-       |j AS (SELECT st.*, pr.probe_col, pr.lo, pr.hi,
-       |    CASE WHEN pr.probe_col = 'l_suppkey'
-       |      THEN NOT (mx_s < lo OR mn_s > hi)
-       |      ELSE NOT (mx_p < lo OR mn_p > hi) END AS scanned
-       |  FROM st CROSS JOIN pr)
-       |SELECT layout, probe_col, lo, hi,
-       |  CAST(COUNT(*) AS BIGINT) AS files_nonempty,
-       |  CAST(SUM(CASE WHEN scanned THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS files_scanned,
-       |  CAST(SUM(CASE WHEN scanned THEN n_rows ELSE 0 END)
-       |    AS BIGINT) AS rows_scanned
-       |FROM j GROUP BY 1, 2, 3, 4
-       |ORDER BY layout, probe_col""".stripMargin
+       |$skippingScanSql""".stripMargin
   }
+
+  /** The grid both skipping oracles cut `lineitem` on: `b` (the key
+    * ranges), `n` (l_partkey and l_suppkey scaled to `bits`-bit cells
+    * `np` and `ns`) and `z` (their bit-interleaved Z-order `zvalue`).
+    */
+  private def zGridSql(bits: Int): String = {
+    val zterms = (0 until bits).flatMap(i => Seq(
+      s"(((np >> $i) & 1) << ${2 * i})",
+      s"(((ns >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
+    val side = 1L << bits
+    s"""b AS (
+       |  SELECT MIN(l_partkey) pmin0, MAX(l_partkey) pmax0,
+       |         MIN(l_suppkey) smin0, MAX(l_suppkey) smax0
+       |  FROM lineitem),
+       |n AS (
+       |  SELECT l_partkey, l_suppkey, pmin0, pmax0, smin0, smax0,
+       |    (l_partkey - pmin0) * $side // (pmax0 - pmin0 + 1) AS np,
+       |    (l_suppkey - smin0) * $side // (smax0 - smin0 + 1) AS ns
+       |  FROM lineitem, b),
+       |z AS (SELECT *, $zterms AS zvalue FROM n)""".stripMargin
+  }
+
+  /** The skipping oracles' pruning arithmetic over
+    * `f(layout, l_partkey, l_suppkey, file)`: each file's key ranges
+    * (`st`), then per layout and probe the files a min/max reader
+    * scans, and their rows.
+    */
+  private def skippingScanSql: String =
+    """st AS (SELECT layout, file, COUNT(*) AS n_rows,
+      |    MIN(l_partkey) AS mn_p, MAX(l_partkey) AS mx_p,
+      |    MIN(l_suppkey) AS mn_s, MAX(l_suppkey) AS mx_s
+      |  FROM f GROUP BY 1, 2),
+      |pr AS (SELECT * FROM (VALUES
+      |    ('l_partkey', CAST(100 AS BIGINT), CAST(150 AS BIGINT)),
+      |    ('l_suppkey', CAST(5 AS BIGINT), CAST(8 AS BIGINT)))
+      |  p(probe_col, lo, hi)),
+      |j AS (SELECT st.*, pr.probe_col, pr.lo, pr.hi,
+      |    CASE WHEN pr.probe_col = 'l_suppkey'
+      |      THEN NOT (mx_s < lo OR mn_s > hi)
+      |      ELSE NOT (mx_p < lo OR mn_p > hi) END AS scanned
+      |  FROM st CROSS JOIN pr)
+      |SELECT layout, probe_col, lo, hi,
+      |  CAST(COUNT(*) AS BIGINT) AS files_nonempty,
+      |  CAST(SUM(CASE WHEN scanned THEN 1 ELSE 0 END) AS BIGINT)
+      |    AS files_scanned,
+      |  CAST(SUM(CASE WHEN scanned THEN n_rows ELSE 0 END)
+      |    AS BIGINT) AS rows_scanned
+      |FROM j GROUP BY 1, 2, 3, 4
+      |ORDER BY layout, probe_col""".stripMargin
 
   /** The q213/q276/q277 bigram-token corpus: adjacent-word pairs joined
     * with '_' — turns the 31-word synthetic vocabulary into ~10^3
@@ -7509,6 +7391,73 @@ object TrainingOps {
     sb.toString
   }
 
+  /** The multinomial Naive Bayes model both NB oracles train on the
+    * term counts `tf` of the documents `docs`: per-class cell counts
+    * (`cells`, `ct`, `vv`), class priors (`pri`, `na`) and the
+    * Laplace-smoothed `model`.
+    */
+  private def nbModelSql(tf: String, docs: String): String =
+    s"""cells AS (SELECT cls AS m_cls, term,
+      |    CAST(SUM(tf) AS BIGINT) AS n_tc
+      |  FROM $tf GROUP BY 1, 2),
+      |ct AS (SELECT m_cls, CAST(SUM(n_tc) AS BIGINT) AS n_c
+      |  FROM cells GROUP BY 1),
+      |vv AS (SELECT COUNT(DISTINCT term) AS v FROM cells),
+      |pri AS (SELECT source AS m_cls, COUNT(*) AS n_docs
+      |  FROM $docs GROUP BY 1),
+      |na AS (SELECT COUNT(*) AS n_all FROM $docs),
+      |model AS (SELECT m_cls, term,
+      |    ln((n_tc + 1.0) / (n_c + v)) AS logp
+      |  FROM cells JOIN ct USING (m_cls) CROSS JOIN vv)""".stripMargin
+
+  /** Each document's best class under [[nbModelSql]], from its seen
+    * terms (`seen`) and the unseen-term floor over `grid`.
+    */
+  private def nbPredictSql: String =
+    """scored AS (SELECT g.doc_id, g.cls, g.m_cls,
+      |    ln(CAST(n_docs AS DOUBLE) / n_all)
+      |      + COALESCE(seen_sum, 0.0)
+      |      + (g.dl - COALESCE(seen_tf, 0))
+      |        * ln(1.0 / (n_c + v)) AS score
+      |  FROM grid g
+      |  LEFT JOIN seen s
+      |    ON s.doc_id = g.doc_id AND s.m_cls = g.m_cls
+      |  JOIN ct ON ct.m_cls = g.m_cls
+      |  CROSS JOIN vv
+      |  JOIN pri ON pri.m_cls = g.m_cls
+      |  CROSS JOIN na)
+      |SELECT doc_id, cls AS actual, m_cls AS pred,
+      |  ROUND(score, 6) AS score
+      |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+      |    ORDER BY score DESC, m_cls) AS rk FROM scored)
+      |WHERE rk = 1 ORDER BY doc_id""".stripMargin
+
+  /** The q196 register pair: `c` (the customer fields compared), the
+    * registers `l` and `r`, and `u1`..`u3`, each field's chance
+    * agreement on `r`.
+    */
+  private def linkagePairSql: String =
+    """WITH c AS (SELECT c_custkey, c_nationkey,
+      |    c_mktsegment AS seg,
+      |    CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS bal_k,
+      |    right(c_name, 1) AS nd
+      |  FROM customer),
+      |l AS (SELECT * FROM c WHERE c_custkey <= 500),
+      |r AS (SELECT * FROM c
+      |  WHERE c_custkey > 500 AND c_custkey <= 1000),
+      |u1 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
+      |    / (SUM(cnt) * SUM(cnt)) AS u
+      |  FROM (SELECT COUNT(*) AS cnt FROM r
+      |        WHERE seg IS NOT NULL GROUP BY seg)),
+      |u2 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
+      |    / (SUM(cnt) * SUM(cnt)) AS u
+      |  FROM (SELECT COUNT(*) AS cnt FROM r
+      |        WHERE bal_k IS NOT NULL GROUP BY bal_k)),
+      |u3 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
+      |    / (SUM(cnt) * SUM(cnt)) AS u
+      |  FROM (SELECT COUNT(*) AS cnt FROM r
+      |        WHERE nd IS NOT NULL GROUP BY nd))""".stripMargin
+
   /** Unrolled DuckDB replay of [[graft.ops.Linkage.linkageEm]] on the
     * q196 register pair: the blocked pairs collapse to the ordered
     * agreement-pattern list once, then each EM iteration is one
@@ -7519,26 +7468,7 @@ object TrainingOps {
     */
   private def linkageEmOracleSql(iters: Int): String = {
     val sb = new StringBuilder
-    sb ++= """WITH c AS (SELECT c_custkey, c_nationkey,
-             |    c_mktsegment AS seg,
-             |    CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS bal_k,
-             |    right(c_name, 1) AS nd
-             |  FROM customer),
-             |l AS (SELECT * FROM c WHERE c_custkey <= 500),
-             |r AS (SELECT * FROM c
-             |  WHERE c_custkey > 500 AND c_custkey <= 1000),
-             |u1 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-             |    / (SUM(cnt) * SUM(cnt)) AS u
-             |  FROM (SELECT COUNT(*) AS cnt FROM r
-             |        WHERE seg IS NOT NULL GROUP BY seg)),
-             |u2 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-             |    / (SUM(cnt) * SUM(cnt)) AS u
-             |  FROM (SELECT COUNT(*) AS cnt FROM r
-             |        WHERE bal_k IS NOT NULL GROUP BY bal_k)),
-             |u3 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-             |    / (SUM(cnt) * SUM(cnt)) AS u
-             |  FROM (SELECT COUNT(*) AS cnt FROM r
-             |        WHERE nd IS NOT NULL GROUP BY nd)),
+    sb ++= linkagePairSql + """,
              |pats AS MATERIALIZED (SELECT
              |    CASE WHEN l.seg = r.seg THEN 1 ELSE 0 END AS g1,
              |    CASE WHEN l.bal_k = r.bal_k THEN 1 ELSE 0 END AS g2,
@@ -7752,11 +7682,11 @@ object TrainingOps {
       |      ORDER BY score DESC, lang ASC) rk
       |  FROM scored)""".stripMargin
 
-  /** Shared BM25 oracle chain (q116 + the q243 NDCG evaluation): the
-    * full tokenize → tf → postings → idf → per-term weight → ordered
-    * score fold → ranked relation `r(query_id, doc_id, score, rk)`.
+  /** The BM25 oracle chain q116, q118 and q243 share: tokenize → tf →
+    * postings → idf → per-term weight → ordered score fold, ending at
+    * `sc(query_id, doc_id, score)`.
     */
-  private def bm25OracleCtes: String =
+  private def bm25ScoreCtes: String =
     """WITH toks AS MATERIALIZED (SELECT doc_id,
       |    CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl,
       |    UNNEST(string_split(text, ' ')) AS term FROM documents),
@@ -7784,7 +7714,13 @@ object TrainingOps {
       |sc AS (SELECT query_id, doc_id,
       |    list_reduce(list(w ORDER BY term), (a, b) -> a + b)
       |      AS score
-      |  FROM w GROUP BY 1, 2),
+      |  FROM w GROUP BY 1, 2)""".stripMargin
+
+  /** [[bm25ScoreCtes]] ranked: `r(query_id, doc_id, score, rk)` (q116 and
+    * the q243 NDCG evaluation).
+    */
+  private def bm25OracleCtes: String =
+    bm25ScoreCtes + """,
       |r AS (SELECT query_id, doc_id, score, ROW_NUMBER() OVER (
       |    PARTITION BY query_id ORDER BY score DESC, doc_id ASC)
       |    AS rk FROM sc)""".stripMargin
