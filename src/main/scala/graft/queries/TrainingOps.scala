@@ -5170,37 +5170,13 @@ object TrainingOps {
         .select(col("group").as("event_type"), col("present"),
           round(col("estimate"), 4).as("estimate"))
         .orderBy("event_type"),
-      Some("""WITH h AS (SELECT event_type AS grp,
-             |    md5('hll:' || CAST(user_id AS VARCHAR)) AS hx
-             |  FROM events),
-             |ranked AS (SELECT grp,
-             |    (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-             |      + strpos('0123456789abcdef', substr(hx, 2, 1)) - 1
-             |      AS bucket,
-             |    CASE WHEN s = '' THEN 65
-             |      ELSE (16 - LENGTH(s)) * 4 +
-             |        CASE WHEN substr(s, 1, 1) = '1' THEN 3
-             |          WHEN substr(s, 1, 1) IN ('2', '3') THEN 2
-             |          WHEN substr(s, 1, 1) IN ('4', '5', '6', '7')
-             |            THEN 1
-             |          ELSE 0 END + 1 END AS rank
-             |  FROM (SELECT grp, hx,
-             |      REGEXP_REPLACE(substr(hx, 3, 16), '^0+', '') AS s
-             |    FROM h)),
-             |regs AS (SELECT grp, bucket, MAX(rank) AS reg
-             |  FROM ranked GROUP BY 1, 2),
-             |est AS (SELECT grp, COUNT(*) AS present,
-             |    CAST(SUM(CAST(POW(2, 65 - reg) AS HUGEINT)) AS DOUBLE)
-             |      + (256 - COUNT(*)) * POW(2, 65) AS denom
-             |  FROM regs GROUP BY 1)
-             |SELECT grp AS event_type, present,
-             |  ROUND(CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-             |        * POW(2, 65) / denom <= 2.5 * 256
-             |      AND (256 - present) > 0
-             |    THEN 256.0 * LN(256.0 / (256 - present))
-             |    ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-             |      * POW(2, 65) / denom END, 4) AS estimate
-             |FROM est ORDER BY 1""".stripMargin)),
+      Some(s"""WITH ${hllRegsSql("event_type", "grp")},
+              |est AS (SELECT grp, COUNT(*) AS present,
+              |    CAST(SUM(CAST(POW(2, 65 - reg) AS HUGEINT)) AS DOUBLE)
+              |      + (256 - COUNT(*)) * POW(2, 65) AS denom
+              |  FROM regs GROUP BY 1)
+              |SELECT grp AS event_type, present,
+              |$hllEstimateSql""".stripMargin)),
 
     // Rolling 7-day distinct users from the SAME deterministic sketch:
     // raw keys shuffle once to the (day, bucket) register grain, every
@@ -5214,41 +5190,17 @@ object TrainingOps {
         .select(col("period").as("day"), col("present"),
           round(col("estimate"), 4).as("estimate"))
         .orderBy("day"),
-      Some("""WITH h AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |    md5('hll:' || CAST(user_id AS VARCHAR)) AS hx
-             |  FROM events),
-             |ranked AS (SELECT day,
-             |    (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-             |      + strpos('0123456789abcdef', substr(hx, 2, 1)) - 1
-             |      AS bucket,
-             |    CASE WHEN s = '' THEN 65
-             |      ELSE (16 - LENGTH(s)) * 4 +
-             |        CASE WHEN substr(s, 1, 1) = '1' THEN 3
-             |          WHEN substr(s, 1, 1) IN ('2', '3') THEN 2
-             |          WHEN substr(s, 1, 1) IN ('4', '5', '6', '7')
-             |            THEN 1
-             |          ELSE 0 END + 1 END AS rank
-             |  FROM (SELECT day, hx,
-             |      REGEXP_REPLACE(substr(hx, 3, 16), '^0+', '') AS s
-             |    FROM h)),
-             |regs AS (SELECT day, bucket, MAX(rank) AS reg
-             |  FROM ranked GROUP BY 1, 2),
-             |merged AS (SELECT a.day, r.bucket, MAX(r.reg) AS reg
-             |  FROM (SELECT DISTINCT day FROM regs) a
-             |  JOIN regs r ON r.day BETWEEN a.day - 6 AND a.day
-             |  GROUP BY 1, 2),
-             |est AS (SELECT day, COUNT(*) AS present,
-             |    CAST(SUM(CAST(POW(2, 65 - reg) AS HUGEINT)) AS DOUBLE)
-             |      + (256 - COUNT(*)) * POW(2, 65) AS denom
-             |  FROM merged GROUP BY 1)
-             |SELECT day, present,
-             |  ROUND(CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-             |        * POW(2, 65) / denom <= 2.5 * 256
-             |      AND (256 - present) > 0
-             |    THEN 256.0 * LN(256.0 / (256 - present))
-             |    ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-             |      * POW(2, 65) / denom END, 4) AS estimate
-             |FROM est ORDER BY 1""".stripMargin)),
+      Some(s"""WITH ${hllRegsSql("epoch_us(ts) // 86400000000", "day")},
+              |merged AS (SELECT a.day, r.bucket, MAX(r.reg) AS reg
+              |  FROM (SELECT DISTINCT day FROM regs) a
+              |  JOIN regs r ON r.day BETWEEN a.day - 6 AND a.day
+              |  GROUP BY 1, 2),
+              |est AS (SELECT day, COUNT(*) AS present,
+              |    CAST(SUM(CAST(POW(2, 65 - reg) AS HUGEINT)) AS DOUBLE)
+              |      + (256 - COUNT(*)) * POW(2, 65) AS denom
+              |  FROM merged GROUP BY 1)
+              |SELECT day, present,
+              |$hllEstimateSql""".stripMargin)),
 
     // Exact-size weighted sample WITHOUT replacement per source
     // (Efraimidis-Spirakis log keys through the partial top-k
@@ -5788,64 +5740,46 @@ object TrainingOps {
           round(col("est_intersect"), 4).as("est_intersect"),
           round(col("jaccard_est"), 6).as("jaccard_est"))
         .orderBy("ga", "gb"),
-      Some("""WITH h AS (SELECT event_type AS grp,
-             |    md5('hll:' || CAST(user_id AS VARCHAR)) AS hx
-             |  FROM events),
-             |ranked AS (SELECT grp,
-             |    (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-             |      + strpos('0123456789abcdef', substr(hx, 2, 1)) - 1
-             |      AS bucket,
-             |    CASE WHEN s = '' THEN 65
-             |      ELSE (16 - LENGTH(s)) * 4 +
-             |        CASE WHEN substr(s, 1, 1) = '1' THEN 3
-             |          WHEN substr(s, 1, 1) IN ('2', '3') THEN 2
-             |          WHEN substr(s, 1, 1) IN ('4', '5', '6', '7')
-             |            THEN 1
-             |          ELSE 0 END + 1 END AS rank
-             |  FROM (SELECT grp, hx,
-             |      REGEXP_REPLACE(substr(hx, 3, 16), '^0+', '') AS s
-             |    FROM h)),
-             |regs AS (SELECT grp, bucket, MAX(rank) AS reg
-             |  FROM ranked GROUP BY 1, 2),
-             |e1 AS (SELECT grp, COUNT(*) AS present,
-             |    CAST(SUM(CAST(POW(2, 65 - reg) AS HUGEINT)) AS DOUBLE)
-             |      + (256 - COUNT(*)) * POW(2, 65) AS denom
-             |  FROM regs GROUP BY 1),
-             |est AS (SELECT grp,
-             |    CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-             |          * POW(2, 65) / denom <= 2.5 * 256
-             |        AND (256 - present) > 0
-             |      THEN 256.0 * LN(256.0 / (256 - present))
-             |      ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-             |        * POW(2, 65) / denom END AS e
-             |  FROM e1),
-             |pairs AS (SELECT a.grp AS ga, b.grp AS gb
-             |  FROM (SELECT DISTINCT grp FROM regs) a,
-             |    (SELECT DISTINCT grp FROM regs) b WHERE a.grp < b.grp),
-             |uregs AS (SELECT p.ga, p.gb, r.bucket, MAX(r.reg) AS reg
-             |  FROM pairs p JOIN regs r ON r.grp = p.ga OR r.grp = p.gb
-             |  GROUP BY 1, 2, 3),
-             |u1 AS (SELECT ga, gb, COUNT(*) AS present,
-             |    CAST(SUM(CAST(POW(2, 65 - reg) AS HUGEINT)) AS DOUBLE)
-             |      + (256 - COUNT(*)) * POW(2, 65) AS denom
-             |  FROM uregs GROUP BY 1, 2),
-             |uest AS (SELECT ga, gb,
-             |    CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-             |          * POW(2, 65) / denom <= 2.5 * 256
-             |        AND (256 - present) > 0
-             |      THEN 256.0 * LN(256.0 / (256 - present))
-             |      ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-             |        * POW(2, 65) / denom END AS eu
-             |  FROM u1)
-             |SELECT u.ga, u.gb, ROUND(a.e, 4) AS est_a,
-             |  ROUND(b.e, 4) AS est_b, ROUND(u.eu, 4) AS est_union,
-             |  ROUND(GREATEST(0.0, a.e + b.e - u.eu), 4)
-             |    AS est_intersect,
-             |  ROUND(GREATEST(0.0, a.e + b.e - u.eu) / u.eu, 6)
-             |    AS jaccard_est
-             |FROM uest u JOIN est a ON a.grp = u.ga
-             |JOIN est b ON b.grp = u.gb
-             |ORDER BY 1, 2""".stripMargin)),
+      Some(s"""WITH ${hllRegsSql("event_type", "grp")},
+              |e1 AS (SELECT grp, COUNT(*) AS present,
+              |    CAST(SUM(CAST(POW(2, 65 - reg) AS HUGEINT)) AS DOUBLE)
+              |      + (256 - COUNT(*)) * POW(2, 65) AS denom
+              |  FROM regs GROUP BY 1),
+              |est AS (SELECT grp,
+              |    CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
+              |          * POW(2, 65) / denom <= 2.5 * 256
+              |        AND (256 - present) > 0
+              |      THEN 256.0 * LN(256.0 / (256 - present))
+              |      ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
+              |        * POW(2, 65) / denom END AS e
+              |  FROM e1),
+              |pairs AS (SELECT a.grp AS ga, b.grp AS gb
+              |  FROM (SELECT DISTINCT grp FROM regs) a,
+              |    (SELECT DISTINCT grp FROM regs) b WHERE a.grp < b.grp),
+              |uregs AS (SELECT p.ga, p.gb, r.bucket, MAX(r.reg) AS reg
+              |  FROM pairs p JOIN regs r ON r.grp = p.ga OR r.grp = p.gb
+              |  GROUP BY 1, 2, 3),
+              |u1 AS (SELECT ga, gb, COUNT(*) AS present,
+              |    CAST(SUM(CAST(POW(2, 65 - reg) AS HUGEINT)) AS DOUBLE)
+              |      + (256 - COUNT(*)) * POW(2, 65) AS denom
+              |  FROM uregs GROUP BY 1, 2),
+              |uest AS (SELECT ga, gb,
+              |    CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
+              |          * POW(2, 65) / denom <= 2.5 * 256
+              |        AND (256 - present) > 0
+              |      THEN 256.0 * LN(256.0 / (256 - present))
+              |      ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
+              |        * POW(2, 65) / denom END AS eu
+              |  FROM u1)
+              |SELECT u.ga, u.gb, ROUND(a.e, 4) AS est_a,
+              |  ROUND(b.e, 4) AS est_b, ROUND(u.eu, 4) AS est_union,
+              |  ROUND(GREATEST(0.0, a.e + b.e - u.eu), 4)
+              |    AS est_intersect,
+              |  ROUND(GREATEST(0.0, a.e + b.e - u.eu) / u.eu, 6)
+              |    AS jaccard_est
+              |FROM uest u JOIN est a ON a.grp = u.ga
+              |JOIN est b ON b.grp = u.gb
+              |ORDER BY 1, 2""".stripMargin)),
 
     // Perceptual-hash (dHash) image near-dup pairs over REAL decoded
     // 16x16 PPMs (q74's synthesis, plus planted one-byte-perturbed
@@ -7390,6 +7324,43 @@ object TrainingOps {
       .mkString("\n", "\nUNION ALL\n", "\nORDER BY step")
     sb.toString
   }
+
+  /** The deterministic HLL registers (256 md5 buckets) of `user_id`
+    * per `key`, spelled `keyExpr` over `events`: `h`, `ranked` and
+    * `regs(key, bucket, reg)` (q229, q230 and q248).
+    */
+  private def hllRegsSql(keyExpr: String, key: String): String =
+    s"""h AS (SELECT $keyExpr AS $key,
+      |    md5('hll:' || CAST(user_id AS VARCHAR)) AS hx
+      |  FROM events),
+      |ranked AS (SELECT $key,
+      |    (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
+      |      + strpos('0123456789abcdef', substr(hx, 2, 1)) - 1
+      |      AS bucket,
+      |    CASE WHEN s = '' THEN 65
+      |      ELSE (16 - LENGTH(s)) * 4 +
+      |        CASE WHEN substr(s, 1, 1) = '1' THEN 3
+      |          WHEN substr(s, 1, 1) IN ('2', '3') THEN 2
+      |          WHEN substr(s, 1, 1) IN ('4', '5', '6', '7')
+      |            THEN 1
+      |          ELSE 0 END + 1 END AS rank
+      |  FROM (SELECT $key, hx,
+      |      REGEXP_REPLACE(substr(hx, 3, 16), '^0+', '') AS s
+      |    FROM h)),
+      |regs AS (SELECT $key, bucket, MAX(rank) AS reg
+      |  FROM ranked GROUP BY 1, 2)""".stripMargin
+
+  /** The HLL estimate (small-range linear counting below 2.5 m) from
+    * `est(present, denom)`, rounded to 4 places, closing q229 and q230.
+    */
+  private def hllEstimateSql: String =
+    """  ROUND(CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
+      |        * POW(2, 65) / denom <= 2.5 * 256
+      |      AND (256 - present) > 0
+      |    THEN 256.0 * LN(256.0 / (256 - present))
+      |    ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
+      |      * POW(2, 65) / denom END, 4) AS estimate
+      |FROM est ORDER BY 1""".stripMargin
 
   /** The multinomial Naive Bayes model both NB oracles train on the
     * term counts `tf` of the documents `docs`: per-class cell counts
