@@ -1723,44 +1723,24 @@ object TrainingOps {
         .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
           round(col("ppl"), 5).as("ppl"))
         .orderBy("doc_id"),
-      Some("""WITH refu AS MATERIALIZED (SELECT
-             |    UNNEST(string_split(text, ' ')) AS term
-             |  FROM documents WHERE doc_id % 10 = 0),
-             |uni AS MATERIALIZED (SELECT term,
-             |    CAST(COUNT(*) AS BIGINT) AS c1 FROM refu GROUP BY 1),
-             |stats AS (SELECT CAST(SUM(c1) AS DOUBLE) AS ref_tokens,
-             |    CAST(COUNT(*) AS DOUBLE) AS vocab FROM uni),
-             |refb AS (SELECT t[i] AS prev, t[i+1] AS cur
-             |  FROM (SELECT string_split(text, ' ') AS t FROM documents
-             |        WHERE doc_id % 10 = 0) s,
-             |       UNNEST(generate_series(1, len(t) - 1)) g(i)),
-             |big AS MATERIALIZED (SELECT prev, cur,
-             |    CAST(COUNT(*) AS BIGINT) AS c2 FROM refb GROUP BY 1, 2),
-             |toks AS MATERIALIZED (SELECT doc_id, len(t) AS n_tokens,
-             |    i AS pos, CASE WHEN i = 1 THEN NULL ELSE t[i-1] END AS prev,
-             |    t[i] AS cur
-             |  FROM (SELECT doc_id, string_split(text, ' ') AS t
-             |        FROM documents WHERE doc_id % 10 <> 0) s,
-             |       UNNEST(generate_series(1, len(t))) g(i)),
-             |lp AS (SELECT t.doc_id, t.n_tokens, t.pos,
-             |    CASE WHEN t.pos = 1 THEN
-             |      ln((COALESCE(u2.c1, 0) + CAST(1 AS DOUBLE)) /
-             |         (s.ref_tokens + s.vocab))
-             |    ELSE
-             |      ln((COALESCE(b.c2, 0) + CAST(1 AS DOUBLE)) /
-             |         (COALESCE(u1.c1, 0) + s.vocab)) END AS logp
-             |  FROM toks t
-             |  LEFT JOIN big b ON t.prev = b.prev AND t.cur = b.cur
-             |  LEFT JOIN uni u1 ON t.prev = u1.term
-             |  LEFT JOIN uni u2 ON t.cur = u2.term
-             |  CROSS JOIN stats s),
-             |agg AS (SELECT doc_id, n_tokens,
-             |    list_reduce(list(logp ORDER BY pos), (a, b) -> a + b)
-             |      AS sum_logp
-             |  FROM lp GROUP BY 1, 2)
-             |SELECT doc_id, n_tokens,
-             |  ROUND(exp(-sum_logp / n_tokens), 5) AS ppl
-             |FROM agg ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $lmUnigramSql,
+              |stats AS (SELECT CAST(SUM(c1) AS DOUBLE) AS ref_tokens,
+              |    CAST(COUNT(*) AS DOUBLE) AS vocab FROM uni),
+              |$lmBigramSql,
+              |$lmToksSql,
+              |lp AS (SELECT t.doc_id, t.n_tokens, t.pos,
+              |    CASE WHEN t.pos = 1 THEN
+              |      ln((COALESCE(u2.c1, 0) + CAST(1 AS DOUBLE)) /
+              |         (s.ref_tokens + s.vocab))
+              |    ELSE
+              |      ln((COALESCE(b.c2, 0) + CAST(1 AS DOUBLE)) /
+              |         (COALESCE(u1.c1, 0) + s.vocab)) END AS logp
+              |  FROM toks t
+              |  LEFT JOIN big b ON t.prev = b.prev AND t.cur = b.cur
+              |  LEFT JOIN uni u1 ON t.prev = u1.term
+              |  LEFT JOIN uni u2 ON t.cur = u2.term
+              |  CROSS JOIN stats s),
+              |$lmPerplexitySql""".stripMargin)),
 
     // Reciprocal-rank fusion of BM25 and token-set Jaccard rankings over
     // q116's query set (same fixed-id gate, same MATERIALIZED pins — the
@@ -6442,65 +6422,45 @@ object TrainingOps {
         .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
           round(col("ppl"), 5).as("ppl"))
         .orderBy("doc_id"),
-      Some("""WITH refu AS MATERIALIZED (SELECT
-             |    UNNEST(string_split(text, ' ')) AS term
-             |  FROM documents WHERE doc_id % 10 = 0),
-             |uni AS MATERIALIZED (SELECT term,
-             |    CAST(COUNT(*) AS BIGINT) AS c1 FROM refu GROUP BY 1),
-             |refb AS (SELECT t[i] AS prev, t[i+1] AS cur
-             |  FROM (SELECT string_split(text, ' ') AS t FROM documents
-             |        WHERE doc_id % 10 = 0) s,
-             |       UNNEST(generate_series(1, len(t) - 1)) g(i)),
-             |big AS MATERIALIZED (SELECT prev, cur,
-             |    CAST(COUNT(*) AS BIGINT) AS c2 FROM refb GROUP BY 1, 2),
-             |fwd AS MATERIALIZED (SELECT prev,
-             |    CAST(COUNT(*) AS BIGINT) AS n1p_fwd FROM big GROUP BY 1),
-             |bwd AS MATERIALIZED (SELECT cur,
-             |    CAST(COUNT(*) AS BIGINT) AS n1p_bwd FROM big GROUP BY 1),
-             |stats AS (SELECT
-             |    (SELECT CAST(SUM(c1) AS DOUBLE) FROM uni) AS ref_tokens,
-             |    (SELECT CAST(COUNT(*) AS DOUBLE) FROM uni) AS vocab,
-             |    (SELECT CAST(COUNT(*) AS DOUBLE) FROM big) AS n_bigrams),
-             |toks AS MATERIALIZED (SELECT doc_id, len(t) AS n_tokens,
-             |    i AS pos, CASE WHEN i = 1 THEN NULL ELSE t[i-1] END AS prev,
-             |    t[i] AS cur
-             |  FROM (SELECT doc_id, string_split(text, ' ') AS t
-             |        FROM documents WHERE doc_id % 10 <> 0) s,
-             |       UNNEST(generate_series(1, len(t))) g(i)),
-             |lp AS (SELECT t.doc_id, t.n_tokens, t.pos,
-             |    CASE WHEN t.pos = 1 THEN
-             |      ln((COALESCE(u2.c1, 0) + CAST(1 AS DOUBLE)) /
-             |         (s.ref_tokens + s.vocab))
-             |    ELSE ln(
-             |      CASE WHEN u1.c1 IS NULL THEN
-             |        (COALESCE(w.n1p_bwd, 0) + CAST(1 AS DOUBLE)) /
-             |          (s.n_bigrams + s.vocab + 1)
-             |      WHEN GREATEST(COALESCE(b.c2, 0) - 0.75, 0) / u1.c1
-             |          + 0.75 * COALESCE(f.n1p_fwd, 0) / u1.c1
-             |            * ((COALESCE(w.n1p_bwd, 0) + CAST(1 AS DOUBLE)) /
-             |               (s.n_bigrams + s.vocab + 1)) > 0 THEN
-             |        GREATEST(COALESCE(b.c2, 0) - 0.75, 0) / u1.c1
-             |          + 0.75 * COALESCE(f.n1p_fwd, 0) / u1.c1
-             |            * ((COALESCE(w.n1p_bwd, 0) + CAST(1 AS DOUBLE)) /
-             |               (s.n_bigrams + s.vocab + 1))
-             |      ELSE
-             |        (COALESCE(w.n1p_bwd, 0) + CAST(1 AS DOUBLE)) /
-             |          (s.n_bigrams + s.vocab + 1)
-             |      END) END AS logp
-             |  FROM toks t
-             |  LEFT JOIN big b ON t.prev = b.prev AND t.cur = b.cur
-             |  LEFT JOIN uni u1 ON t.prev = u1.term
-             |  LEFT JOIN uni u2 ON t.cur = u2.term
-             |  LEFT JOIN fwd f ON t.prev = f.prev
-             |  LEFT JOIN bwd w ON t.cur = w.cur
-             |  CROSS JOIN stats s),
-             |agg AS (SELECT doc_id, n_tokens,
-             |    list_reduce(list(logp ORDER BY pos), (a, b) -> a + b)
-             |      AS sum_logp
-             |  FROM lp GROUP BY 1, 2)
-             |SELECT doc_id, n_tokens,
-             |  ROUND(exp(-sum_logp / n_tokens), 5) AS ppl
-             |FROM agg ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $lmUnigramSql,
+              |$lmBigramSql,
+              |fwd AS MATERIALIZED (SELECT prev,
+              |    CAST(COUNT(*) AS BIGINT) AS n1p_fwd FROM big GROUP BY 1),
+              |bwd AS MATERIALIZED (SELECT cur,
+              |    CAST(COUNT(*) AS BIGINT) AS n1p_bwd FROM big GROUP BY 1),
+              |stats AS (SELECT
+              |    (SELECT CAST(SUM(c1) AS DOUBLE) FROM uni) AS ref_tokens,
+              |    (SELECT CAST(COUNT(*) AS DOUBLE) FROM uni) AS vocab,
+              |    (SELECT CAST(COUNT(*) AS DOUBLE) FROM big) AS n_bigrams),
+              |$lmToksSql,
+              |lp AS (SELECT t.doc_id, t.n_tokens, t.pos,
+              |    CASE WHEN t.pos = 1 THEN
+              |      ln((COALESCE(u2.c1, 0) + CAST(1 AS DOUBLE)) /
+              |         (s.ref_tokens + s.vocab))
+              |    ELSE ln(
+              |      CASE WHEN u1.c1 IS NULL THEN
+              |        (COALESCE(w.n1p_bwd, 0) + CAST(1 AS DOUBLE)) /
+              |          (s.n_bigrams + s.vocab + 1)
+              |      WHEN GREATEST(COALESCE(b.c2, 0) - 0.75, 0) / u1.c1
+              |          + 0.75 * COALESCE(f.n1p_fwd, 0) / u1.c1
+              |            * ((COALESCE(w.n1p_bwd, 0) + CAST(1 AS DOUBLE)) /
+              |               (s.n_bigrams + s.vocab + 1)) > 0 THEN
+              |        GREATEST(COALESCE(b.c2, 0) - 0.75, 0) / u1.c1
+              |          + 0.75 * COALESCE(f.n1p_fwd, 0) / u1.c1
+              |            * ((COALESCE(w.n1p_bwd, 0) + CAST(1 AS DOUBLE)) /
+              |               (s.n_bigrams + s.vocab + 1))
+              |      ELSE
+              |        (COALESCE(w.n1p_bwd, 0) + CAST(1 AS DOUBLE)) /
+              |          (s.n_bigrams + s.vocab + 1)
+              |      END) END AS logp
+              |  FROM toks t
+              |  LEFT JOIN big b ON t.prev = b.prev AND t.cur = b.cur
+              |  LEFT JOIN uni u1 ON t.prev = u1.term
+              |  LEFT JOIN uni u2 ON t.cur = u2.term
+              |  LEFT JOIN fwd f ON t.prev = f.prev
+              |  LEFT JOIN bwd w ON t.cur = w.cur
+              |  CROSS JOIN stats s),
+              |$lmPerplexitySql""".stripMargin)),
 
     // The measured form of q97's layout claim: files a min/max reader
     // scans per probe under the Z-order layout vs a plain sort by each
@@ -7324,6 +7284,48 @@ object TrainingOps {
       .mkString("\n", "\nUNION ALL\n", "\nORDER BY step")
     sb.toString
   }
+
+  /** The bigram-LM oracles' (q117, q274) reference unigram counts: the
+    * tokens of every 10th document (`refu`) and their counts `uni`.
+    */
+  private def lmUnigramSql: String =
+    """refu AS MATERIALIZED (SELECT
+      |    UNNEST(string_split(text, ' ')) AS term
+      |  FROM documents WHERE doc_id % 10 = 0),
+      |uni AS MATERIALIZED (SELECT term,
+      |    CAST(COUNT(*) AS BIGINT) AS c1 FROM refu GROUP BY 1)""".stripMargin
+
+  /** The reference slice's bigram counts `big(prev, cur, c2)`. */
+  private def lmBigramSql: String =
+    """refb AS (SELECT t[i] AS prev, t[i+1] AS cur
+      |  FROM (SELECT string_split(text, ' ') AS t FROM documents
+      |        WHERE doc_id % 10 = 0) s,
+      |       UNNEST(generate_series(1, len(t) - 1)) g(i)),
+      |big AS MATERIALIZED (SELECT prev, cur,
+      |    CAST(COUNT(*) AS BIGINT) AS c2 FROM refb GROUP BY 1, 2)""".stripMargin
+
+  /** The scored documents' tokens with their predecessors:
+    * `toks(doc_id, n_tokens, pos, prev, cur)`.
+    */
+  private def lmToksSql: String =
+    """toks AS MATERIALIZED (SELECT doc_id, len(t) AS n_tokens,
+      |    i AS pos, CASE WHEN i = 1 THEN NULL ELSE t[i-1] END AS prev,
+      |    t[i] AS cur
+      |  FROM (SELECT doc_id, string_split(text, ' ') AS t
+      |        FROM documents WHERE doc_id % 10 <> 0) s,
+      |       UNNEST(generate_series(1, len(t))) g(i))""".stripMargin
+
+  /** Per-document perplexity from the token log-probabilities `lp`,
+    * summed in position order.
+    */
+  private def lmPerplexitySql: String =
+    """agg AS (SELECT doc_id, n_tokens,
+      |    list_reduce(list(logp ORDER BY pos), (a, b) -> a + b)
+      |      AS sum_logp
+      |  FROM lp GROUP BY 1, 2)
+      |SELECT doc_id, n_tokens,
+      |  ROUND(exp(-sum_logp / n_tokens), 5) AS ppl
+      |FROM agg ORDER BY doc_id""".stripMargin
 
   /** The deterministic HLL registers (256 md5 buckets) of `user_id`
     * per `key`, spelled `keyExpr` over `events`: `h`, `ranked` and
