@@ -7253,30 +7253,10 @@ object TrainingOps {
     */
   private def bpeOracleSql(k: Int): String = {
     val sb = new StringBuilder
-    sb ++= """WITH v0 AS MATERIALIZED (
-             |  SELECT w, COUNT(*) AS freq
-             |  FROM (SELECT UNNEST(string_split(text, ' ')) AS w
-             |        FROM documents)
-             |  WHERE len(w) > 0 GROUP BY w),
-             |s0 AS MATERIALIZED (SELECT freq,
-             |  [substr(w, g, 1) FOR g IN generate_series(1, len(w))] AS syms
-             |  FROM v0)""".stripMargin
+    sb ++= bpeVocabSql("freq")
     for (i <- 1 to k) {
-      sb ++= s""",
-               |p$i AS (SELECT syms[t.g] AS a, syms[t.g + 1] AS b,
-               |    SUM(freq) AS cnt
-               |  FROM s${i - 1},
-               |       UNNEST(generate_series(1, len(syms) - 1)) t(g)
-               |  GROUP BY 1, 2),
-               |m$i AS MATERIALIZED (SELECT a, b, cnt FROM p$i
-               |  ORDER BY cnt DESC, a, b LIMIT 1)""".stripMargin
-      if (i < k) sb ++= s""",
-               |s$i AS MATERIALIZED (SELECT freq,
-               |  list_reduce(list_transform(syms, x -> [x]), (acc, x) ->
-               |    CASE WHEN acc[-1] = m.a AND x[1] = m.b
-               |      THEN acc[:-2] || [m.a || m.b]
-               |      ELSE acc || x END) AS syms
-               |  FROM s${i - 1}, m$i m)""".stripMargin
+      sb ++= ",\n" + bpePairSql(i)
+      if (i < k) sb ++= ",\n" + bpeMergeSql("s", i, "freq")
     }
     sb ++= (1 to k)
       .map(i => s"SELECT $i AS step, a, b, CAST(cnt AS BIGINT) AS cnt " +
@@ -7566,31 +7546,11 @@ object TrainingOps {
     */
   private def bpeSampledOracleSql(k: Int, frac: Double): String = {
     val sb = new StringBuilder
-    sb ++= s"""WITH v0 AS MATERIALIZED (
-              |  SELECT w, COUNT(*) AS freq
-              |  FROM (SELECT UNNEST(string_split(text, ' ')) AS w
-              |        FROM documents
-              |        WHERE ${drawSql("bpe:")} < $frac)
-              |  WHERE len(w) > 0 GROUP BY w),
-              |s0 AS MATERIALIZED (SELECT freq,
-              |  [substr(w, g, 1) FOR g IN generate_series(1, len(w))] AS syms
-              |  FROM v0)""".stripMargin
+    sb ++= bpeVocabSql("freq",
+      s"\n        WHERE ${drawSql("bpe:")} < $frac")
     for (i <- 1 to k) {
-      sb ++= s""",
-               |p$i AS (SELECT syms[t.g] AS a, syms[t.g + 1] AS b,
-               |    SUM(freq) AS cnt
-               |  FROM s${i - 1},
-               |       UNNEST(generate_series(1, len(syms) - 1)) t(g)
-               |  GROUP BY 1, 2),
-               |m$i AS MATERIALIZED (SELECT a, b, cnt FROM p$i
-               |  ORDER BY cnt DESC, a, b LIMIT 1)""".stripMargin
-      if (i < k) sb ++= s""",
-               |s$i AS MATERIALIZED (SELECT freq,
-               |  list_reduce(list_transform(syms, x -> [x]), (acc, x) ->
-               |    CASE WHEN acc[-1] = m.a AND x[1] = m.b
-               |      THEN acc[:-2] || [m.a || m.b]
-               |      ELSE acc || x END) AS syms
-               |  FROM s${i - 1}, m$i m)""".stripMargin
+      sb ++= ",\n" + bpePairSql(i)
+      if (i < k) sb ++= ",\n" + bpeMergeSql("s", i, "freq")
     }
     // apply: fold every learned merge over the FULL distinct-word vocab
     sb ++= """,
@@ -7599,26 +7559,8 @@ object TrainingOps {
              |  FROM (SELECT DISTINCT UNNEST(string_split(text, ' ')) AS w
              |        FROM documents)
              |  WHERE len(w) > 0)""".stripMargin
-    for (i <- 1 to k) {
-      sb ++= s""",
-               |a$i AS MATERIALIZED (SELECT w,
-               |  list_reduce(list_transform(syms, x -> [x]), (acc, x) ->
-               |    CASE WHEN acc[-1] = m.a AND x[1] = m.b
-               |      THEN acc[:-2] || [m.a || m.b]
-               |      ELSE acc || x END) AS syms
-               |  FROM a${i - 1}, m$i m)""".stripMargin
-    }
-    sb ++= s"""
-              |, dw AS (SELECT doc_id, ws[t.g] AS w, t.g AS pos
-              |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
-              |        FROM documents) dd,
-              |       UNNEST(generate_series(1, len(ws))) t(g)
-              |  WHERE len(ws[t.g]) > 0)
-              |SELECT doc_id, CAST(SUM(len(s.syms)) AS BIGINT) AS n_tokens,
-              |  array_to_string(flatten(list(s.syms ORDER BY pos)), ' ')
-              |    AS tokens
-              |FROM dw JOIN a$k s USING (w)
-              |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    for (i <- 1 to k) sb ++= ",\n" + bpeMergeSql("a", i, "w")
+    sb ++= bpeTokensSql(s"a$k")
     sb.toString
   }
 
@@ -7704,45 +7646,67 @@ object TrainingOps {
     */
   private def bpeOracleCtes(k: Int): String = {
     val sb = new StringBuilder
-    sb ++= """WITH v0 AS MATERIALIZED (
-             |  SELECT w, COUNT(*) AS freq
-             |  FROM (SELECT UNNEST(string_split(text, ' ')) AS w
-             |        FROM documents)
-             |  WHERE len(w) > 0 GROUP BY w),
-             |s0 AS MATERIALIZED (SELECT w, freq,
-             |  [substr(w, g, 1) FOR g IN generate_series(1, len(w))] AS syms
-             |  FROM v0)""".stripMargin
-    for (i <- 1 to k) {
-      sb ++= s""",
-               |p$i AS (SELECT syms[t.g] AS a, syms[t.g + 1] AS b,
-               |    SUM(freq) AS cnt
-               |  FROM s${i - 1},
-               |       UNNEST(generate_series(1, len(syms) - 1)) t(g)
-               |  GROUP BY 1, 2),
-               |m$i AS MATERIALIZED (SELECT a, b, cnt FROM p$i
-               |  ORDER BY cnt DESC, a, b LIMIT 1),
-               |s$i AS MATERIALIZED (SELECT w, freq,
-               |  list_reduce(list_transform(syms, x -> [x]), (acc, x) ->
-               |    CASE WHEN acc[-1] = m.a AND x[1] = m.b
-               |      THEN acc[:-2] || [m.a || m.b]
-               |      ELSE acc || x END) AS syms
-               |  FROM s${i - 1}, m$i m)""".stripMargin
-    }
+    sb ++= bpeVocabSql("w, freq")
+    for (i <- 1 to k)
+      sb ++= ",\n" + bpePairSql(i) + ",\n" + bpeMergeSql("s", i, "w, freq")
     sb.toString
   }
 
   private def bpeApplyOracleSql(k: Int): String =
-    bpeOracleCtes(k) + s"""
-      |, dw AS (SELECT doc_id, ws[t.g] AS w, t.g AS pos
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
-      |        FROM documents) dd,
-      |       UNNEST(generate_series(1, len(ws))) t(g)
-      |  WHERE len(ws[t.g]) > 0)
-      |SELECT doc_id, CAST(SUM(len(s.syms)) AS BIGINT) AS n_tokens,
-      |  array_to_string(flatten(list(s.syms ORDER BY pos)), ' ')
-      |    AS tokens
-      |FROM dw JOIN s$k s USING (w)
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    bpeOracleCtes(k) + bpeTokensSql(s"s$k")
+
+  /** The unrolled BPE oracles' start: the word vocabulary `v0` of the
+    * documents (passing `where`, when given) and `s0`, each word split
+    * into characters, carrying `cols`.
+    */
+  private def bpeVocabSql(cols: String, where: String = ""): String =
+    s"""WITH v0 AS MATERIALIZED (
+       |  SELECT w, COUNT(*) AS freq
+       |  FROM (SELECT UNNEST(string_split(text, ' ')) AS w
+       |        FROM documents$where)
+       |  WHERE len(w) > 0 GROUP BY w),
+       |s0 AS MATERIALIZED (SELECT $cols,
+       |  [substr(w, g, 1) FOR g IN generate_series(1, len(w))] AS syms
+       |  FROM v0)""".stripMargin
+
+  /** Merge round `i`: `p<i>`, the adjacent symbol-pair counts over
+    * `s<i-1>`, and `m<i>`, the pair to merge (count desc, pair asc).
+    */
+  private def bpePairSql(i: Int): String =
+    s"""p$i AS (SELECT syms[t.g] AS a, syms[t.g + 1] AS b,
+       |    SUM(freq) AS cnt
+       |  FROM s${i - 1},
+       |       UNNEST(generate_series(1, len(syms) - 1)) t(g)
+       |  GROUP BY 1, 2),
+       |m$i AS MATERIALIZED (SELECT a, b, cnt FROM p$i
+       |  ORDER BY cnt DESC, a, b LIMIT 1)""".stripMargin
+
+  /** `<rel><i>`: the symbol lists of `<rel><i-1>` with merge `m<i>`
+    * folded in greedily left to right, carrying `cols`.
+    */
+  private def bpeMergeSql(rel: String, i: Int, cols: String): String =
+    s"""$rel$i AS MATERIALIZED (SELECT $cols,
+       |  list_reduce(list_transform(syms, x -> [x]), (acc, x) ->
+       |    CASE WHEN acc[-1] = m.a AND x[1] = m.b
+       |      THEN acc[:-2] || [m.a || m.b]
+       |      ELSE acc || x END) AS syms
+       |  FROM $rel${i - 1}, m$i m)""".stripMargin
+
+  /** Every document's subword tokens under the merged vocabulary
+    * `vocab(w, syms)`, in word order.
+    */
+  private def bpeTokensSql(vocab: String): String =
+    s"""
+       |, dw AS (SELECT doc_id, ws[t.g] AS w, t.g AS pos
+       |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
+       |        FROM documents) dd,
+       |       UNNEST(generate_series(1, len(ws))) t(g)
+       |  WHERE len(ws[t.g]) > 0)
+       |SELECT doc_id, CAST(SUM(len(s.syms)) AS BIGINT) AS n_tokens,
+       |  array_to_string(flatten(list(s.syms ORDER BY pos)), ' ')
+       |    AS tokens
+       |FROM dw JOIN $vocab s USING (w)
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** Per-language fertility (subword tokens per whitespace word) under
     * the same `k`-merge tokenizer — the q241 oracle.
