@@ -371,28 +371,13 @@ object TrainingOps {
           .agg(count(col("b.vec_id")).as("n_mates"))
           .orderBy("query_id")
       },
-      Some("""WITH planes AS (SELECT p, i,
-             |    (strpos('0123456789abcdef',
-             |       substr(md5(CAST(p AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1))
-             |     - 1 - 7.5) / 7.5 AS w
-             |  FROM UNNEST(generate_series(0, 5)) tp(p),
-             |       UNNEST(generate_series(0, 63)) ti(i)),
-             |comps AS (SELECT vec_id, i - 1 AS i, CAST(e AS DOUBLE) AS x
-             |  FROM (SELECT vec_id, UNNEST(embedding) e,
-             |          generate_subscripts(embedding, 1) i FROM embeddings) t),
-             |proj AS (SELECT vec_id, p, SUM(x * w) AS proj
-             |  FROM comps JOIN planes USING (i) GROUP BY 1, 2),
-             |bucket AS (SELECT vec_id,
-             |    CAST(SUM(CASE WHEN proj > 0
-             |      THEN (CAST(1 AS BIGINT) << CAST(p AS INT)) ELSE 0 END) AS BIGINT)
-             |      AS bucket
-             |  FROM proj GROUP BY 1)
-             |SELECT q.vec_id AS query_id, q.bucket,
-             |  CAST(COUNT(b.vec_id) AS BIGINT) AS n_mates
-             |FROM bucket q LEFT JOIN bucket b
-             |  ON b.bucket = q.bucket AND b.vec_id <> q.vec_id
-             |WHERE q.vec_id % 50 = 0
-             |GROUP BY 1, 2 ORDER BY 1""".stripMargin)),
+      Some(s"""WITH ${lshBucketSql()}
+              |SELECT q.vec_id AS query_id, q.bucket,
+              |  CAST(COUNT(b.vec_id) AS BIGINT) AS n_mates
+              |FROM bucket q LEFT JOIN bucket b
+              |  ON b.bucket = q.bucket AND b.vec_id <> q.vec_id
+              |WHERE q.vec_id % 50 = 0
+              |GROUP BY 1, 2 ORDER BY 1""".stripMargin)),
 
     // IVF ANN over the deterministic data-point quantizer (zero Lloyd
     // iterations, no RNG/partitioning dependence) — fully oracle-checked:
@@ -1330,20 +1315,10 @@ object TrainingOps {
         .agg(count(lit(1)).as("n_fp"), min("fp").as("min_fp"),
           max("fp").as("max_fp"))
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS t
-             |  FROM documents WHERE len(string_split(text, ' ')) >= 6),
-             |g AS (SELECT doc_id,
-             |    [md5(array_to_string(t[i:i+2], ' '))
-             |     FOR i IN generate_series(1, len(t) - 2)] AS g
-             |  FROM t),
-             |fp AS (SELECT doc_id,
-             |    UNNEST(list_distinct(
-             |      [list_min(g[j:j+3]) FOR j IN generate_series(1, len(g) - 3)]))
-             |      AS fp
-             |  FROM g)
-             |SELECT doc_id, COUNT(*) AS n_fp, MIN(fp) AS min_fp,
-             |  MAX(fp) AS max_fp
-             |FROM fp GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Some(s"""WITH $winnowSql
+              |SELECT doc_id, COUNT(*) AS n_fp, MIN(fp) AS min_fp,
+              |  MAX(fp) AS max_fp
+              |FROM fp GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Shared-fingerprint candidate pairs: guaranteed hits for >= w+k-1
     // token runs — the contiguous-run member of the candidate-generator
@@ -1351,20 +1326,10 @@ object TrainingOps {
     QueryDef("q80_winnow_candidates",
       (s, d) => Dedup.winnowCandidates(table(s, d, "documents"), k = 3, w = 4)
         .orderBy("id1", "id2"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS t
-             |  FROM documents WHERE len(string_split(text, ' ')) >= 6),
-             |g AS (SELECT doc_id,
-             |    [md5(array_to_string(t[i:i+2], ' '))
-             |     FOR i IN generate_series(1, len(t) - 2)] AS g
-             |  FROM t),
-             |fp AS (SELECT doc_id,
-             |    UNNEST(list_distinct(
-             |      [list_min(g[j:j+3]) FOR j IN generate_series(1, len(g) - 3)]))
-             |      AS fp
-             |  FROM g)
-             |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-             |FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-             |ORDER BY 1, 2""".stripMargin)),
+      Some(s"""WITH $winnowSql
+              |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+              |FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
+              |ORDER BY 1, 2""".stripMargin)),
 
     // Token-budget shard packing: greedy prefix-sum cuts per hash-bucket
     // stream — the oracle replays the bucket hash and the running window
@@ -1644,22 +1609,11 @@ object TrainingOps {
     QueryDef("q114_duplicate_spans",
       (s, d) => Dedup.duplicateSpans(table(s, d, "documents"), k = 5)
         .orderBy("doc_id", "start_tok"),
-      Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS t
-             |  FROM documents WHERE len(string_split(text, ' ')) >= 5),
-             |g AS (SELECT doc_id, i AS pos,
-             |    md5(array_to_string(t[i:i+4], ' ')) AS gh
-             |  FROM d, UNNEST(generate_series(1, len(t) - 4)) s(i)),
-             |c AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
-             |m AS (SELECT doc_id, pos FROM g JOIN c USING (gh)),
-             |b AS (SELECT doc_id, pos, CASE WHEN pos - LAG(pos) OVER (
-             |    PARTITION BY doc_id ORDER BY pos) > 5 THEN 1 ELSE 0 END
-             |    AS brk FROM m),
-             |i AS (SELECT doc_id, pos, SUM(brk) OVER (
-             |    PARTITION BY doc_id ORDER BY pos) AS island FROM b)
-             |SELECT doc_id, MIN(pos) AS start_tok, MAX(pos) + 4 AS end_tok,
-             |  COUNT(*) AS n_dup_grams
-             |FROM i GROUP BY doc_id, island
-             |ORDER BY doc_id, start_tok""".stripMargin)),
+      Some(s"""WITH $dupSpanIslandsSql
+              |SELECT doc_id, MIN(pos) AS start_tok, MAX(pos) + 4 AS end_tok,
+              |  COUNT(*) AS n_dup_grams
+              |FROM i GROUP BY doc_id, island
+              |ORDER BY doc_id, start_tok""".stripMargin)),
 
     // SemDeDup over the embeddings: deterministic 8-list coarse clustering,
     // then within-cluster cosine >= 0.3 drops the higher id; survivors
@@ -2267,40 +2221,29 @@ object TrainingOps {
         .select(col("doc_id"), col("n_removed_tokens"),
           md5(col("clean_text")).as("clean_hash"))
         .orderBy("doc_id"),
-      Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS t
-             |  FROM documents WHERE len(string_split(text, ' ')) >= 5),
-             |g AS (SELECT doc_id, i AS pos,
-             |    md5(array_to_string(t[i:i+4], ' ')) AS gh
-             |  FROM d, UNNEST(generate_series(1, len(t) - 4)) s(i)),
-             |c AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
-             |m AS (SELECT doc_id, pos FROM g JOIN c USING (gh)),
-             |b AS (SELECT doc_id, pos, CASE WHEN pos - LAG(pos) OVER (
-             |    PARTITION BY doc_id ORDER BY pos) > 5 THEN 1 ELSE 0 END
-             |    AS brk FROM m),
-             |i AS (SELECT doc_id, pos, SUM(brk) OVER (
-             |    PARTITION BY doc_id ORDER BY pos) AS island FROM b),
-             |sp AS (SELECT doc_id, MIN(pos) AS st, MAX(pos) + 4 AS en
-             |  FROM i GROUP BY doc_id, island),
-             |spl AS (SELECT doc_id,
-             |    list(struct_pack(st := st, en := en)) AS spans
-             |  FROM sp GROUP BY 1),
-             |alltoks AS (SELECT doc_id, string_split(text, ' ') AS t
-             |  FROM documents),
-             |r AS (SELECT a.doc_id, t,
-             |    coalesce(spans, CAST([] AS STRUCT(st BIGINT, en BIGINT)[]))
-             |      AS spans
-             |  FROM alltoks a LEFT JOIN spl USING (doc_id)),
-             |k2 AS (SELECT doc_id, t,
-             |    list_filter(generate_series(1, len(t)), i ->
-             |      len(list_filter(spans, x ->
-             |        i >= x.st AND i <= x.en)) = 0) AS kept
-             |  FROM r)
-             |SELECT doc_id, CAST(len(t) - len(kept) AS BIGINT)
-             |    AS n_removed_tokens,
-             |  md5(coalesce(array_to_string(
-             |    list_transform(kept, i -> t[i]), ' '), ''))
-             |    AS clean_hash
-             |FROM k2 ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $dupSpanIslandsSql,
+              |sp AS (SELECT doc_id, MIN(pos) AS st, MAX(pos) + 4 AS en
+              |  FROM i GROUP BY doc_id, island),
+              |spl AS (SELECT doc_id,
+              |    list(struct_pack(st := st, en := en)) AS spans
+              |  FROM sp GROUP BY 1),
+              |alltoks AS (SELECT doc_id, string_split(text, ' ') AS t
+              |  FROM documents),
+              |r AS (SELECT a.doc_id, t,
+              |    coalesce(spans, CAST([] AS STRUCT(st BIGINT, en BIGINT)[]))
+              |      AS spans
+              |  FROM alltoks a LEFT JOIN spl USING (doc_id)),
+              |k2 AS (SELECT doc_id, t,
+              |    list_filter(generate_series(1, len(t)), i ->
+              |      len(list_filter(spans, x ->
+              |        i >= x.st AND i <= x.en)) = 0) AS kept
+              |  FROM r)
+              |SELECT doc_id, CAST(len(t) - len(kept) AS BIGINT)
+              |    AS n_removed_tokens,
+              |  md5(coalesce(array_to_string(
+              |    list_transform(kept, i -> t[i]), ' '), ''))
+              |    AS clean_hash
+              |FROM k2 ORDER BY doc_id""".stripMargin)),
 
     // partial top-k per key: the Aggregator form shuffles <= k rows per
     // (key, partition) where the window form shuffles the corpus —
@@ -2603,22 +2546,7 @@ object TrainingOps {
             round(col("cos"), 5).as("cos"))
           .orderBy("query_id", "rk")
       },
-      Some(s"""WITH planes AS (SELECT p, i,
-              |    (strpos('0123456789abcdef',
-              |       substr(md5(CAST(p AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1))
-              |     - 1 - 7.5) / 7.5 AS w
-              |  FROM UNNEST(generate_series(0, 5)) tp(p),
-              |       UNNEST(generate_series(0, 63)) ti(i)),
-              |comps AS (SELECT vec_id, i - 1 AS i, CAST(e AS DOUBLE) AS x
-              |  FROM (SELECT vec_id, UNNEST(embedding) e,
-              |          generate_subscripts(embedding, 1) i FROM embeddings) t),
-              |proj AS (SELECT vec_id, p, SUM(x * w) AS proj
-              |  FROM comps JOIN planes USING (i) GROUP BY 1, 2),
-              |bucket AS MATERIALIZED (SELECT vec_id,
-              |    CAST(SUM(CASE WHEN proj > 0
-              |      THEN (CAST(1 AS BIGINT) << CAST(p AS INT)) ELSE 0 END) AS BIGINT)
-              |      AS bucket
-              |  FROM proj GROUP BY 1),
+      Some(s"""WITH ${lshBucketSql(materialized = true)},
               |probes AS (SELECT q.vec_id AS query_id,
               |    CASE WHEN u.p = -1 THEN q.bucket
               |      ELSE xor(q.bucket, CAST(1 AS BIGINT) << CAST(u.p AS INT))
@@ -7264,6 +7192,62 @@ object TrainingOps {
       .mkString("\n", "\nUNION ALL\n", "\nORDER BY step")
     sb.toString
   }
+
+  /** DuckDB mirror of [[graft.ops.Similarity.lshBuckets]] at 6 planes
+    * over 64 dims: md5-drawn hyperplanes (`planes`), each vector's
+    * projections (`comps`, `proj`) and its 6-bit sign `bucket`.
+    */
+  private def lshBucketSql(materialized: Boolean = false): String =
+    s"""planes AS (SELECT p, i,
+      |    (strpos('0123456789abcdef',
+      |       substr(md5(CAST(p AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1))
+      |     - 1 - 7.5) / 7.5 AS w
+      |  FROM UNNEST(generate_series(0, 5)) tp(p),
+      |       UNNEST(generate_series(0, 63)) ti(i)),
+      |comps AS (SELECT vec_id, i - 1 AS i, CAST(e AS DOUBLE) AS x
+      |  FROM (SELECT vec_id, UNNEST(embedding) e,
+      |          generate_subscripts(embedding, 1) i FROM embeddings) t),
+      |proj AS (SELECT vec_id, p, SUM(x * w) AS proj
+      |  FROM comps JOIN planes USING (i) GROUP BY 1, 2),
+      |bucket AS${if (materialized) " MATERIALIZED" else ""} (SELECT vec_id,
+      |    CAST(SUM(CASE WHEN proj > 0
+      |      THEN (CAST(1 AS BIGINT) << CAST(p AS INT)) ELSE 0 END) AS BIGINT)
+      |      AS bucket
+      |  FROM proj GROUP BY 1)""".stripMargin
+
+  /** q114's duplicate-span islands: the 5-gram hashes `g` of documents
+    * of 5+ tokens, the corpus-repeated ones `m`, and their positions
+    * grouped into `island`s (a gap over 5 starts a new one).
+    */
+  private def dupSpanIslandsSql: String =
+    """d AS (SELECT doc_id, string_split(text, ' ') AS t
+      |  FROM documents WHERE len(string_split(text, ' ')) >= 5),
+      |g AS (SELECT doc_id, i AS pos,
+      |    md5(array_to_string(t[i:i+4], ' ')) AS gh
+      |  FROM d, UNNEST(generate_series(1, len(t) - 4)) s(i)),
+      |c AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
+      |m AS (SELECT doc_id, pos FROM g JOIN c USING (gh)),
+      |b AS (SELECT doc_id, pos, CASE WHEN pos - LAG(pos) OVER (
+      |    PARTITION BY doc_id ORDER BY pos) > 5 THEN 1 ELSE 0 END
+      |    AS brk FROM m),
+      |i AS (SELECT doc_id, pos, SUM(brk) OVER (
+      |    PARTITION BY doc_id ORDER BY pos) AS island FROM b)""".stripMargin
+
+  /** Winnowing fingerprints `fp(doc_id, fp)` at k = 3, w = 4: the
+    * distinct window minima of each 6+-token document's 3-gram hashes.
+    */
+  private def winnowSql: String =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS t
+      |  FROM documents WHERE len(string_split(text, ' ')) >= 6),
+      |g AS (SELECT doc_id,
+      |    [md5(array_to_string(t[i:i+2], ' '))
+      |     FOR i IN generate_series(1, len(t) - 2)] AS g
+      |  FROM t),
+      |fp AS (SELECT doc_id,
+      |    UNNEST(list_distinct(
+      |      [list_min(g[j:j+3]) FOR j IN generate_series(1, len(g) - 3)]))
+      |      AS fp
+      |  FROM g)""".stripMargin
 
   /** The bigram-LM oracles' (q117, q274) reference unigram counts: the
     * tokens of every 10th document (`refu`) and their counts `uni`.
