@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.word_ngrams
+
 /** Deterministic sampling/splitting for training-data pipelines.
   *
   * Everything here is keyed on a CONTENT hash, not an RNG: the same
@@ -542,15 +544,14 @@ object Sampling {
     * the downstream log-weight fold bit-reproducible across engines.
     *
     * `ts` must be a MATERIALIZED token-array column (not an inline
-    * `split(...)`): the bigrams come from `zip_with` over two slices of
-    * it, and an inline split would be re-evaluated per slice — worse, a
+    * `split(...)`), which `concat` and the `word_ngrams` kernel read
+    * separately: an inline split would be re-evaluated per read — worse, a
     * per-element `element_at(split(...))` lambda form measured O(n²) per
-    * document (q131 at sf1: 39 s before, ~4 s after this shape).
+    * document (q131 at sf1: 39 s before, ~4 s after a materialized
+    * column).
     */
   private def dsirGrams(ts: Column): Column =
-    concat(ts,
-      zip_with(slice(ts, lit(1), size(ts) - 1), slice(ts, lit(2), size(ts) - 1),
-        (a, b) => concat_ws(" ", a, b)))
+    concat(ts, word_ngrams(ts, lit(2)))
 
   /** Importance weights for data selection via importance resampling
     * (DSIR, Xie et al. 2023): score every raw-corpus document by how much

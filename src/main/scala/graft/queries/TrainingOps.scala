@@ -251,6 +251,257 @@ object TrainingOps {
   private def pqLutCols = s"${pqPivot("pd", "pd")}, ${pqPivot("c2", "c2")}"
   private def pqSum(as: String) = (0 until pqM).map(j => s"$as$j").mkString(" + ")
 
+  /** The grid both skipping oracles cut `lineitem` on: `b` (the key
+    * ranges), `n` (l_partkey and l_suppkey scaled to `bits`-bit cells
+    * `np` and `ns`) and `z` (their bit-interleaved Z-order `zvalue`).
+    */
+  private def zGridSql(bits: Int): String = {
+    val zterms = (0 until bits).flatMap(i => Seq(
+      s"(((np >> $i) & 1) << ${2 * i})",
+      s"(((ns >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
+    val side = 1L << bits
+    s"""b AS (
+       |  SELECT MIN(l_partkey) pmin0, MAX(l_partkey) pmax0,
+       |         MIN(l_suppkey) smin0, MAX(l_suppkey) smax0
+       |  FROM lineitem),
+       |n AS (
+       |  SELECT l_partkey, l_suppkey, pmin0, pmax0, smin0, smax0,
+       |    (l_partkey - pmin0) * $side // (pmax0 - pmin0 + 1) AS np,
+       |    (l_suppkey - smin0) * $side // (smax0 - smin0 + 1) AS ns
+       |  FROM lineitem, b),
+       |z AS (SELECT *, $zterms AS zvalue FROM n)""".stripMargin
+  }
+
+  /** The skipping oracles' pruning arithmetic over
+    * `f(layout, l_partkey, l_suppkey, file)`: each file's key ranges
+    * (`st`), then per layout and probe the files a min/max reader
+    * scans, and their rows.
+    */
+  private def skippingScanSql: String =
+    """st AS (SELECT layout, file, COUNT(*) AS n_rows,
+      |    MIN(l_partkey) AS mn_p, MAX(l_partkey) AS mx_p,
+      |    MIN(l_suppkey) AS mn_s, MAX(l_suppkey) AS mx_s
+      |  FROM f GROUP BY 1, 2),
+      |pr AS (SELECT * FROM (VALUES
+      |    ('l_partkey', CAST(100 AS BIGINT), CAST(150 AS BIGINT)),
+      |    ('l_suppkey', CAST(5 AS BIGINT), CAST(8 AS BIGINT)))
+      |  p(probe_col, lo, hi)),
+      |j AS (SELECT st.*, pr.probe_col, pr.lo, pr.hi,
+      |    CASE WHEN pr.probe_col = 'l_suppkey'
+      |      THEN NOT (mx_s < lo OR mn_s > hi)
+      |      ELSE NOT (mx_p < lo OR mn_p > hi) END AS scanned
+      |  FROM st CROSS JOIN pr)
+      |SELECT layout, probe_col, lo, hi,
+      |  CAST(COUNT(*) AS BIGINT) AS files_nonempty,
+      |  CAST(SUM(CASE WHEN scanned THEN 1 ELSE 0 END) AS BIGINT)
+      |    AS files_scanned,
+      |  CAST(SUM(CASE WHEN scanned THEN n_rows ELSE 0 END)
+      |    AS BIGINT) AS rows_scanned
+      |FROM j GROUP BY 1, 2, 3, 4
+      |ORDER BY layout, probe_col""".stripMargin
+
+  /** DuckDB mirror of [[graft.ops.Similarity.lshBuckets]] at 6 planes
+    * over 64 dims: md5-drawn hyperplanes (`planes`), each vector's
+    * projections (`comps`, `proj`) and its 6-bit sign `bucket`.
+    */
+  private def lshBucketSql(materialized: Boolean = false): String =
+    s"""planes AS (SELECT p, i,
+      |    (strpos('0123456789abcdef',
+      |       substr(md5(CAST(p AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1))
+      |     - 1 - 7.5) / 7.5 AS w
+      |  FROM UNNEST(generate_series(0, 5)) tp(p),
+      |       UNNEST(generate_series(0, 63)) ti(i)),
+      |comps AS (SELECT vec_id, i - 1 AS i, CAST(e AS DOUBLE) AS x
+      |  FROM (SELECT vec_id, UNNEST(embedding) e,
+      |          generate_subscripts(embedding, 1) i FROM embeddings) t),
+      |proj AS (SELECT vec_id, p, SUM(x * w) AS proj
+      |  FROM comps JOIN planes USING (i) GROUP BY 1, 2),
+      |bucket AS${if (materialized) " MATERIALIZED" else ""} (SELECT vec_id,
+      |    CAST(SUM(CASE WHEN proj > 0
+      |      THEN (CAST(1 AS BIGINT) << CAST(p AS INT)) ELSE 0 END) AS BIGINT)
+      |      AS bucket
+      |  FROM proj GROUP BY 1)""".stripMargin
+
+  /** q114's duplicate-span islands: the 5-gram hashes `g` of documents
+    * of 5+ tokens, the corpus-repeated ones `m`, and their positions
+    * grouped into `island`s (a gap over 5 starts a new one).
+    */
+  private def dupSpanIslandsSql: String =
+    """d AS (SELECT doc_id, string_split(text, ' ') AS t
+      |  FROM documents WHERE len(string_split(text, ' ')) >= 5),
+      |g AS (SELECT doc_id, i AS pos,
+      |    md5(array_to_string(t[i:i+4], ' ')) AS gh
+      |  FROM d, UNNEST(generate_series(1, len(t) - 4)) s(i)),
+      |c AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
+      |m AS (SELECT doc_id, pos FROM g JOIN c USING (gh)),
+      |b AS (SELECT doc_id, pos, CASE WHEN pos - LAG(pos) OVER (
+      |    PARTITION BY doc_id ORDER BY pos) > 5 THEN 1 ELSE 0 END
+      |    AS brk FROM m),
+      |i AS (SELECT doc_id, pos, SUM(brk) OVER (
+      |    PARTITION BY doc_id ORDER BY pos) AS island FROM b)""".stripMargin
+
+  /** Winnowing fingerprints `fp(doc_id, fp)` at k = 3, w = 4: the
+    * distinct window minima of each 6+-token document's 3-gram hashes.
+    */
+  private def winnowSql: String =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS t
+      |  FROM documents WHERE len(string_split(text, ' ')) >= 6),
+      |g AS (SELECT doc_id,
+      |    [md5(array_to_string(t[i:i+2], ' '))
+      |     FOR i IN generate_series(1, len(t) - 2)] AS g
+      |  FROM t),
+      |fp AS (SELECT doc_id,
+      |    UNNEST(list_distinct(
+      |      [list_min(g[j:j+3]) FOR j IN generate_series(1, len(g) - 3)]))
+      |      AS fp
+      |  FROM g)""".stripMargin
+
+  /** The bigram-LM oracles' (q117, q274) reference unigram counts: the
+    * tokens of every 10th document (`refu`) and their counts `uni`.
+    */
+  private def lmUnigramSql: String =
+    """refu AS MATERIALIZED (SELECT
+      |    UNNEST(string_split(text, ' ')) AS term
+      |  FROM documents WHERE doc_id % 10 = 0),
+      |uni AS MATERIALIZED (SELECT term,
+      |    CAST(COUNT(*) AS BIGINT) AS c1 FROM refu GROUP BY 1)""".stripMargin
+
+  /** The reference slice's bigram counts `big(prev, cur, c2)`. */
+  private def lmBigramSql: String =
+    """refb AS (SELECT t[i] AS prev, t[i+1] AS cur
+      |  FROM (SELECT string_split(text, ' ') AS t FROM documents
+      |        WHERE doc_id % 10 = 0) s,
+      |       UNNEST(generate_series(1, len(t) - 1)) g(i)),
+      |big AS MATERIALIZED (SELECT prev, cur,
+      |    CAST(COUNT(*) AS BIGINT) AS c2 FROM refb GROUP BY 1, 2)""".stripMargin
+
+  /** The scored documents' tokens with their predecessors:
+    * `toks(doc_id, n_tokens, pos, prev, cur)`.
+    */
+  private def lmToksSql: String =
+    """toks AS MATERIALIZED (SELECT doc_id, len(t) AS n_tokens,
+      |    i AS pos, CASE WHEN i = 1 THEN NULL ELSE t[i-1] END AS prev,
+      |    t[i] AS cur
+      |  FROM (SELECT doc_id, string_split(text, ' ') AS t
+      |        FROM documents WHERE doc_id % 10 <> 0) s,
+      |       UNNEST(generate_series(1, len(t))) g(i))""".stripMargin
+
+  /** Per-document perplexity from the token log-probabilities `lp`,
+    * summed in position order.
+    */
+  private def lmPerplexitySql: String =
+    """agg AS (SELECT doc_id, n_tokens,
+      |    list_reduce(list(logp ORDER BY pos), (a, b) -> a + b)
+      |      AS sum_logp
+      |  FROM lp GROUP BY 1, 2)
+      |SELECT doc_id, n_tokens,
+      |  ROUND(exp(-sum_logp / n_tokens), 5) AS ppl
+      |FROM agg ORDER BY doc_id""".stripMargin
+
+  /** The deterministic HLL registers (256 md5 buckets) of `user_id`
+    * per `key`, spelled `keyExpr` over `events`: `h`, `ranked` and
+    * `regs(key, bucket, reg)` (q229, q230 and q248).
+    */
+  private def hllRegsSql(keyExpr: String, key: String): String =
+    s"""h AS (SELECT $keyExpr AS $key,
+      |    md5('hll:' || CAST(user_id AS VARCHAR)) AS hx
+      |  FROM events),
+      |ranked AS (SELECT $key,
+      |    (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
+      |      + strpos('0123456789abcdef', substr(hx, 2, 1)) - 1
+      |      AS bucket,
+      |    CASE WHEN s = '' THEN 65
+      |      ELSE (16 - LENGTH(s)) * 4 +
+      |        CASE WHEN substr(s, 1, 1) = '1' THEN 3
+      |          WHEN substr(s, 1, 1) IN ('2', '3') THEN 2
+      |          WHEN substr(s, 1, 1) IN ('4', '5', '6', '7')
+      |            THEN 1
+      |          ELSE 0 END + 1 END AS rank
+      |  FROM (SELECT $key, hx,
+      |      REGEXP_REPLACE(substr(hx, 3, 16), '^0+', '') AS s
+      |    FROM h)),
+      |regs AS (SELECT $key, bucket, MAX(rank) AS reg
+      |  FROM ranked GROUP BY 1, 2)""".stripMargin
+
+  /** The HLL estimate (small-range linear counting below 2.5 m) from
+    * `est(present, denom)`, rounded to 4 places, closing q229 and q230.
+    */
+  private def hllEstimateSql: String =
+    """  ROUND(CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
+      |        * POW(2, 65) / denom <= 2.5 * 256
+      |      AND (256 - present) > 0
+      |    THEN 256.0 * LN(256.0 / (256 - present))
+      |    ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
+      |      * POW(2, 65) / denom END, 4) AS estimate
+      |FROM est ORDER BY 1""".stripMargin
+
+  /** The multinomial Naive Bayes model both NB oracles train on the
+    * term counts `tf` of the documents `docs`: per-class cell counts
+    * (`cells`, `ct`, `vv`), class priors (`pri`, `na`) and the
+    * Laplace-smoothed `model`.
+    */
+  private def nbModelSql(tf: String, docs: String): String =
+    s"""cells AS (SELECT cls AS m_cls, term,
+      |    CAST(SUM(tf) AS BIGINT) AS n_tc
+      |  FROM $tf GROUP BY 1, 2),
+      |ct AS (SELECT m_cls, CAST(SUM(n_tc) AS BIGINT) AS n_c
+      |  FROM cells GROUP BY 1),
+      |vv AS (SELECT COUNT(DISTINCT term) AS v FROM cells),
+      |pri AS (SELECT source AS m_cls, COUNT(*) AS n_docs
+      |  FROM $docs GROUP BY 1),
+      |na AS (SELECT COUNT(*) AS n_all FROM $docs),
+      |model AS (SELECT m_cls, term,
+      |    ln((n_tc + 1.0) / (n_c + v)) AS logp
+      |  FROM cells JOIN ct USING (m_cls) CROSS JOIN vv)""".stripMargin
+
+  /** Each document's best class under [[nbModelSql]], from its seen
+    * terms (`seen`) and the unseen-term floor over `grid`.
+    */
+  private def nbPredictSql: String =
+    """scored AS (SELECT g.doc_id, g.cls, g.m_cls,
+      |    ln(CAST(n_docs AS DOUBLE) / n_all)
+      |      + COALESCE(seen_sum, 0.0)
+      |      + (g.dl - COALESCE(seen_tf, 0))
+      |        * ln(1.0 / (n_c + v)) AS score
+      |  FROM grid g
+      |  LEFT JOIN seen s
+      |    ON s.doc_id = g.doc_id AND s.m_cls = g.m_cls
+      |  JOIN ct ON ct.m_cls = g.m_cls
+      |  CROSS JOIN vv
+      |  JOIN pri ON pri.m_cls = g.m_cls
+      |  CROSS JOIN na)
+      |SELECT doc_id, cls AS actual, m_cls AS pred,
+      |  ROUND(score, 6) AS score
+      |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+      |    ORDER BY score DESC, m_cls) AS rk FROM scored)
+      |WHERE rk = 1 ORDER BY doc_id""".stripMargin
+
+  /** The q196 register pair: `c` (the customer fields compared), the
+    * registers `l` and `r`, and `u1`..`u3`, each field's chance
+    * agreement on `r`.
+    */
+  private def linkagePairSql: String =
+    """WITH c AS (SELECT c_custkey, c_nationkey,
+      |    c_mktsegment AS seg,
+      |    CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS bal_k,
+      |    right(c_name, 1) AS nd
+      |  FROM customer),
+      |l AS (SELECT * FROM c WHERE c_custkey <= 500),
+      |r AS (SELECT * FROM c
+      |  WHERE c_custkey > 500 AND c_custkey <= 1000),
+      |u1 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
+      |    / (SUM(cnt) * SUM(cnt)) AS u
+      |  FROM (SELECT COUNT(*) AS cnt FROM r
+      |        WHERE seg IS NOT NULL GROUP BY seg)),
+      |u2 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
+      |    / (SUM(cnt) * SUM(cnt)) AS u
+      |  FROM (SELECT COUNT(*) AS cnt FROM r
+      |        WHERE bal_k IS NOT NULL GROUP BY bal_k)),
+      |u3 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
+      |    / (SUM(cnt) * SUM(cnt)) AS u
+      |  FROM (SELECT COUNT(*) AS cnt FROM r
+      |        WHERE nd IS NOT NULL GROUP BY nd))""".stripMargin
+
   val all: Seq[QueryDef] = Seq(
 
     QueryDef("q40_dedup_exact",
@@ -562,18 +813,8 @@ object TrainingOps {
     // the source byte and the oracle replays the histogram from the text.
     QueryDef("q86_multimodal_png",
       (s, d) => {
-        val s2 = s; import s2.implicits._
-        val media = table(s, d, "documents")
-          .where(expr("octet_length(text) = length(text)"))
-          .select(col("doc_id"),
-            rpad(substring(col("text"), 1, 192), 192, "x").as("px"))
-          .as[(Long, String)]
-          .map { case (id, px) =>
-            (id, Multimodal.encodeGrayAsRgbPng(
-              px.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
-              16, 12))
-          }
-          .toDF("doc_id", "media")
+        val media = mediaFixture(s, d, 192)(
+          Multimodal.encodeGrayAsRgbPng(_, 16, 12))
         Multimodal.decodeFeatures(media).toDF()
           .select(col("doc_id"), col("width"), col("height"), col("channels"),
             element_at(col("histogram"), 1).as("hist_0"),
@@ -600,18 +841,8 @@ object TrainingOps {
     // histogram from the document text alone.
     QueryDef("q109_multimodal_resize",
       (s, d) => {
-        val s2 = s; import s2.implicits._
-        val media = table(s, d, "documents")
-          .where(expr("octet_length(text) = length(text)"))
-          .select(col("doc_id"),
-            rpad(substring(col("text"), 1, 192), 192, "x").as("px"))
-          .as[(Long, String)]
-          .map { case (id, px) =>
-            (id, Multimodal.encodeGrayAsRgbPng(
-              px.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
-              16, 12))
-          }
-          .toDF("doc_id", "media")
+        val media = mediaFixture(s, d, 192)(
+          Multimodal.encodeGrayAsRgbPng(_, 16, 12))
         Multimodal.resize(media, maxSide = 8).toDF()
           .select(col("doc_id"), col("width"), col("height"), col("channels"),
             element_at(col("histogram"), 1).as("hist_0"),
@@ -639,19 +870,9 @@ object TrainingOps {
     // slice of the text
     QueryDef("q110_multimodal_gif_frames",
       (s, d) => {
-        val s2 = s; import s2.implicits._
-        val media = table(s, d, "documents")
-          .where(expr("octet_length(text) = length(text)"))
-          .select(col("doc_id"),
-            rpad(substring(col("text"), 1, 384), 384, "x").as("px"))
-          .as[(Long, String)]
-          .map { case (id, px) =>
-            val bytes =
-              px.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-            (id, Multimodal.encodeGrayFramesAsGif(
-              Seq(bytes.slice(0, 192), bytes.slice(192, 384)), 16, 12))
-          }
-          .toDF("doc_id", "media")
+        val media = mediaFixture(s, d, 384)(bytes =>
+          Multimodal.encodeGrayFramesAsGif(
+            Seq(bytes.slice(0, 192), bytes.slice(192, 384)), 16, 12))
         Multimodal.decodeFrames(media, everyN = 1).toDF()
           .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
             element_at(col("histogram"), 1).as("hist_0"),
@@ -679,18 +900,7 @@ object TrainingOps {
     // replays it from the text like q74/q86.
     QueryDef("q90_multimodal_wav",
       (s, d) => {
-        val s2 = s; import s2.implicits._
-        val media = table(s, d, "documents")
-          .where(expr("octet_length(text) = length(text)"))
-          .select(col("doc_id"),
-            rpad(substring(col("text"), 1, 192), 192, "x").as("px"))
-          .as[(Long, String)]
-          .map { case (id, px) =>
-            (id, Multimodal.encodePcmWav(
-              px.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
-              8000))
-          }
-          .toDF("doc_id", "media")
+        val media = mediaFixture(s, d, 192)(Multimodal.encodePcmWav(_, 8000))
         Multimodal.decodeAudioFeatures(media).toDF()
           .select(col("doc_id"), col("sample_rate"), col("channels"),
             col("n_frames"),
@@ -5777,18 +5987,7 @@ object TrainingOps {
     // same arithmetic on the same source bytes.
     QueryDef("q251_audio_blocks",
       (s, d) => {
-        val s2 = s; import s2.implicits._
-        val media = table(s, d, "documents")
-          .where(expr("octet_length(text) = length(text)"))
-          .select(col("doc_id"),
-            rpad(substring(col("text"), 1, 192), 192, "x").as("px"))
-          .as[(Long, String)]
-          .map { case (id, px) =>
-            (id, Multimodal.encodePcmWav(
-              px.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
-              8000))
-          }
-          .toDF("doc_id", "media")
+        val media = mediaFixture(s, d, 192)(Multimodal.encodePcmWav(_, 8000))
         Multimodal.audioBlockFeatures(media, blockLen = 64).toDF()
           .orderBy("doc_id", "block")
       },
@@ -6699,18 +6898,7 @@ object TrainingOps {
     // fingerprinting. 192 samples -> 128, two full 64-sample blocks.
     QueryDef("q279_audio_resample",
       (s, d) => {
-        val s2 = s; import s2.implicits._
-        val media = table(s, d, "documents")
-          .where(expr("octet_length(text) = length(text)"))
-          .select(col("doc_id"),
-            rpad(substring(col("text"), 1, 192), 192, "x").as("px"))
-          .as[(Long, String)]
-          .map { case (id, px) =>
-            (id, graft.ops.Multimodal.encodePcmWav(
-              px.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
-              8000))
-          }
-          .toDF("doc_id", "media")
+        val media = mediaFixture(s, d, 192)(Multimodal.encodePcmWav(_, 8000))
         graft.ops.Multimodal
           .audioResampleBlocks(media, up = 2, down = 3, blockLen = 64)
           .toDF().orderBy("doc_id", "block")
@@ -6938,55 +7126,6 @@ object TrainingOps {
        |$skippingScanSql""".stripMargin
   }
 
-  /** The grid both skipping oracles cut `lineitem` on: `b` (the key
-    * ranges), `n` (l_partkey and l_suppkey scaled to `bits`-bit cells
-    * `np` and `ns`) and `z` (their bit-interleaved Z-order `zvalue`).
-    */
-  private def zGridSql(bits: Int): String = {
-    val zterms = (0 until bits).flatMap(i => Seq(
-      s"(((np >> $i) & 1) << ${2 * i})",
-      s"(((ns >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
-    val side = 1L << bits
-    s"""b AS (
-       |  SELECT MIN(l_partkey) pmin0, MAX(l_partkey) pmax0,
-       |         MIN(l_suppkey) smin0, MAX(l_suppkey) smax0
-       |  FROM lineitem),
-       |n AS (
-       |  SELECT l_partkey, l_suppkey, pmin0, pmax0, smin0, smax0,
-       |    (l_partkey - pmin0) * $side // (pmax0 - pmin0 + 1) AS np,
-       |    (l_suppkey - smin0) * $side // (smax0 - smin0 + 1) AS ns
-       |  FROM lineitem, b),
-       |z AS (SELECT *, $zterms AS zvalue FROM n)""".stripMargin
-  }
-
-  /** The skipping oracles' pruning arithmetic over
-    * `f(layout, l_partkey, l_suppkey, file)`: each file's key ranges
-    * (`st`), then per layout and probe the files a min/max reader
-    * scans, and their rows.
-    */
-  private def skippingScanSql: String =
-    """st AS (SELECT layout, file, COUNT(*) AS n_rows,
-      |    MIN(l_partkey) AS mn_p, MAX(l_partkey) AS mx_p,
-      |    MIN(l_suppkey) AS mn_s, MAX(l_suppkey) AS mx_s
-      |  FROM f GROUP BY 1, 2),
-      |pr AS (SELECT * FROM (VALUES
-      |    ('l_partkey', CAST(100 AS BIGINT), CAST(150 AS BIGINT)),
-      |    ('l_suppkey', CAST(5 AS BIGINT), CAST(8 AS BIGINT)))
-      |  p(probe_col, lo, hi)),
-      |j AS (SELECT st.*, pr.probe_col, pr.lo, pr.hi,
-      |    CASE WHEN pr.probe_col = 'l_suppkey'
-      |      THEN NOT (mx_s < lo OR mn_s > hi)
-      |      ELSE NOT (mx_p < lo OR mn_p > hi) END AS scanned
-      |  FROM st CROSS JOIN pr)
-      |SELECT layout, probe_col, lo, hi,
-      |  CAST(COUNT(*) AS BIGINT) AS files_nonempty,
-      |  CAST(SUM(CASE WHEN scanned THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS files_scanned,
-      |  CAST(SUM(CASE WHEN scanned THEN n_rows ELSE 0 END)
-      |    AS BIGINT) AS rows_scanned
-      |FROM j GROUP BY 1, 2, 3, 4
-      |ORDER BY layout, probe_col""".stripMargin
-
   /** The q213/q276/q277 bigram-token corpus: adjacent-word pairs joined
     * with '_' — turns the 31-word synthetic vocabulary into ~10^3
     * terms with a real rank-frequency curve.
@@ -7001,6 +7140,25 @@ object TrainingOps {
         "transform(sequence(1, size(l) - 1), i -> " +
           "concat(element_at(l, i), '_', element_at(l, i + 1)))"),
         " ").as("text"))
+
+  /** The multimodal entries' media fixture: every ASCII document's
+    * first `width` characters, padded with 'x', as ISO-8859-1 bytes that
+    * `encode` turns into the `media` blob.
+    */
+  private def mediaFixture(s: org.apache.spark.sql.SparkSession, d: String,
+      width: Int)(encode: Array[Byte] => Array[Byte])
+      : org.apache.spark.sql.DataFrame = {
+    val s2 = s; import s2.implicits._
+    table(s, d, "documents")
+      .where(expr("octet_length(text) = length(text)"))
+      .select(col("doc_id"),
+        rpad(substring(col("text"), 1, width), width, "x").as("px"))
+      .as[(Long, String)]
+      .map { case (id, px) =>
+        (id, encode(px.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)))
+      }
+      .toDF("doc_id", "media")
+  }
 
   /** DuckDB mirrors of [[bigramDocs]]: `bd(doc_id, bl)` (the bigram
     * token list per doc) and `w(term)` (the flattened term stream).
@@ -7192,208 +7350,6 @@ object TrainingOps {
       .mkString("\n", "\nUNION ALL\n", "\nORDER BY step")
     sb.toString
   }
-
-  /** DuckDB mirror of [[graft.ops.Similarity.lshBuckets]] at 6 planes
-    * over 64 dims: md5-drawn hyperplanes (`planes`), each vector's
-    * projections (`comps`, `proj`) and its 6-bit sign `bucket`.
-    */
-  private def lshBucketSql(materialized: Boolean = false): String =
-    s"""planes AS (SELECT p, i,
-      |    (strpos('0123456789abcdef',
-      |       substr(md5(CAST(p AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 1))
-      |     - 1 - 7.5) / 7.5 AS w
-      |  FROM UNNEST(generate_series(0, 5)) tp(p),
-      |       UNNEST(generate_series(0, 63)) ti(i)),
-      |comps AS (SELECT vec_id, i - 1 AS i, CAST(e AS DOUBLE) AS x
-      |  FROM (SELECT vec_id, UNNEST(embedding) e,
-      |          generate_subscripts(embedding, 1) i FROM embeddings) t),
-      |proj AS (SELECT vec_id, p, SUM(x * w) AS proj
-      |  FROM comps JOIN planes USING (i) GROUP BY 1, 2),
-      |bucket AS${if (materialized) " MATERIALIZED" else ""} (SELECT vec_id,
-      |    CAST(SUM(CASE WHEN proj > 0
-      |      THEN (CAST(1 AS BIGINT) << CAST(p AS INT)) ELSE 0 END) AS BIGINT)
-      |      AS bucket
-      |  FROM proj GROUP BY 1)""".stripMargin
-
-  /** q114's duplicate-span islands: the 5-gram hashes `g` of documents
-    * of 5+ tokens, the corpus-repeated ones `m`, and their positions
-    * grouped into `island`s (a gap over 5 starts a new one).
-    */
-  private def dupSpanIslandsSql: String =
-    """d AS (SELECT doc_id, string_split(text, ' ') AS t
-      |  FROM documents WHERE len(string_split(text, ' ')) >= 5),
-      |g AS (SELECT doc_id, i AS pos,
-      |    md5(array_to_string(t[i:i+4], ' ')) AS gh
-      |  FROM d, UNNEST(generate_series(1, len(t) - 4)) s(i)),
-      |c AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
-      |m AS (SELECT doc_id, pos FROM g JOIN c USING (gh)),
-      |b AS (SELECT doc_id, pos, CASE WHEN pos - LAG(pos) OVER (
-      |    PARTITION BY doc_id ORDER BY pos) > 5 THEN 1 ELSE 0 END
-      |    AS brk FROM m),
-      |i AS (SELECT doc_id, pos, SUM(brk) OVER (
-      |    PARTITION BY doc_id ORDER BY pos) AS island FROM b)""".stripMargin
-
-  /** Winnowing fingerprints `fp(doc_id, fp)` at k = 3, w = 4: the
-    * distinct window minima of each 6+-token document's 3-gram hashes.
-    */
-  private def winnowSql: String =
-    """t AS (SELECT doc_id, string_split(text, ' ') AS t
-      |  FROM documents WHERE len(string_split(text, ' ')) >= 6),
-      |g AS (SELECT doc_id,
-      |    [md5(array_to_string(t[i:i+2], ' '))
-      |     FOR i IN generate_series(1, len(t) - 2)] AS g
-      |  FROM t),
-      |fp AS (SELECT doc_id,
-      |    UNNEST(list_distinct(
-      |      [list_min(g[j:j+3]) FOR j IN generate_series(1, len(g) - 3)]))
-      |      AS fp
-      |  FROM g)""".stripMargin
-
-  /** The bigram-LM oracles' (q117, q274) reference unigram counts: the
-    * tokens of every 10th document (`refu`) and their counts `uni`.
-    */
-  private def lmUnigramSql: String =
-    """refu AS MATERIALIZED (SELECT
-      |    UNNEST(string_split(text, ' ')) AS term
-      |  FROM documents WHERE doc_id % 10 = 0),
-      |uni AS MATERIALIZED (SELECT term,
-      |    CAST(COUNT(*) AS BIGINT) AS c1 FROM refu GROUP BY 1)""".stripMargin
-
-  /** The reference slice's bigram counts `big(prev, cur, c2)`. */
-  private def lmBigramSql: String =
-    """refb AS (SELECT t[i] AS prev, t[i+1] AS cur
-      |  FROM (SELECT string_split(text, ' ') AS t FROM documents
-      |        WHERE doc_id % 10 = 0) s,
-      |       UNNEST(generate_series(1, len(t) - 1)) g(i)),
-      |big AS MATERIALIZED (SELECT prev, cur,
-      |    CAST(COUNT(*) AS BIGINT) AS c2 FROM refb GROUP BY 1, 2)""".stripMargin
-
-  /** The scored documents' tokens with their predecessors:
-    * `toks(doc_id, n_tokens, pos, prev, cur)`.
-    */
-  private def lmToksSql: String =
-    """toks AS MATERIALIZED (SELECT doc_id, len(t) AS n_tokens,
-      |    i AS pos, CASE WHEN i = 1 THEN NULL ELSE t[i-1] END AS prev,
-      |    t[i] AS cur
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS t
-      |        FROM documents WHERE doc_id % 10 <> 0) s,
-      |       UNNEST(generate_series(1, len(t))) g(i))""".stripMargin
-
-  /** Per-document perplexity from the token log-probabilities `lp`,
-    * summed in position order.
-    */
-  private def lmPerplexitySql: String =
-    """agg AS (SELECT doc_id, n_tokens,
-      |    list_reduce(list(logp ORDER BY pos), (a, b) -> a + b)
-      |      AS sum_logp
-      |  FROM lp GROUP BY 1, 2)
-      |SELECT doc_id, n_tokens,
-      |  ROUND(exp(-sum_logp / n_tokens), 5) AS ppl
-      |FROM agg ORDER BY doc_id""".stripMargin
-
-  /** The deterministic HLL registers (256 md5 buckets) of `user_id`
-    * per `key`, spelled `keyExpr` over `events`: `h`, `ranked` and
-    * `regs(key, bucket, reg)` (q229, q230 and q248).
-    */
-  private def hllRegsSql(keyExpr: String, key: String): String =
-    s"""h AS (SELECT $keyExpr AS $key,
-      |    md5('hll:' || CAST(user_id AS VARCHAR)) AS hx
-      |  FROM events),
-      |ranked AS (SELECT $key,
-      |    (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-      |      + strpos('0123456789abcdef', substr(hx, 2, 1)) - 1
-      |      AS bucket,
-      |    CASE WHEN s = '' THEN 65
-      |      ELSE (16 - LENGTH(s)) * 4 +
-      |        CASE WHEN substr(s, 1, 1) = '1' THEN 3
-      |          WHEN substr(s, 1, 1) IN ('2', '3') THEN 2
-      |          WHEN substr(s, 1, 1) IN ('4', '5', '6', '7')
-      |            THEN 1
-      |          ELSE 0 END + 1 END AS rank
-      |  FROM (SELECT $key, hx,
-      |      REGEXP_REPLACE(substr(hx, 3, 16), '^0+', '') AS s
-      |    FROM h)),
-      |regs AS (SELECT $key, bucket, MAX(rank) AS reg
-      |  FROM ranked GROUP BY 1, 2)""".stripMargin
-
-  /** The HLL estimate (small-range linear counting below 2.5 m) from
-    * `est(present, denom)`, rounded to 4 places, closing q229 and q230.
-    */
-  private def hllEstimateSql: String =
-    """  ROUND(CASE WHEN (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-      |        * POW(2, 65) / denom <= 2.5 * 256
-      |      AND (256 - present) > 0
-      |    THEN 256.0 * LN(256.0 / (256 - present))
-      |    ELSE (0.7213 / (1 + 1.079 / 256)) * 256 * 256
-      |      * POW(2, 65) / denom END, 4) AS estimate
-      |FROM est ORDER BY 1""".stripMargin
-
-  /** The multinomial Naive Bayes model both NB oracles train on the
-    * term counts `tf` of the documents `docs`: per-class cell counts
-    * (`cells`, `ct`, `vv`), class priors (`pri`, `na`) and the
-    * Laplace-smoothed `model`.
-    */
-  private def nbModelSql(tf: String, docs: String): String =
-    s"""cells AS (SELECT cls AS m_cls, term,
-      |    CAST(SUM(tf) AS BIGINT) AS n_tc
-      |  FROM $tf GROUP BY 1, 2),
-      |ct AS (SELECT m_cls, CAST(SUM(n_tc) AS BIGINT) AS n_c
-      |  FROM cells GROUP BY 1),
-      |vv AS (SELECT COUNT(DISTINCT term) AS v FROM cells),
-      |pri AS (SELECT source AS m_cls, COUNT(*) AS n_docs
-      |  FROM $docs GROUP BY 1),
-      |na AS (SELECT COUNT(*) AS n_all FROM $docs),
-      |model AS (SELECT m_cls, term,
-      |    ln((n_tc + 1.0) / (n_c + v)) AS logp
-      |  FROM cells JOIN ct USING (m_cls) CROSS JOIN vv)""".stripMargin
-
-  /** Each document's best class under [[nbModelSql]], from its seen
-    * terms (`seen`) and the unseen-term floor over `grid`.
-    */
-  private def nbPredictSql: String =
-    """scored AS (SELECT g.doc_id, g.cls, g.m_cls,
-      |    ln(CAST(n_docs AS DOUBLE) / n_all)
-      |      + COALESCE(seen_sum, 0.0)
-      |      + (g.dl - COALESCE(seen_tf, 0))
-      |        * ln(1.0 / (n_c + v)) AS score
-      |  FROM grid g
-      |  LEFT JOIN seen s
-      |    ON s.doc_id = g.doc_id AND s.m_cls = g.m_cls
-      |  JOIN ct ON ct.m_cls = g.m_cls
-      |  CROSS JOIN vv
-      |  JOIN pri ON pri.m_cls = g.m_cls
-      |  CROSS JOIN na)
-      |SELECT doc_id, cls AS actual, m_cls AS pred,
-      |  ROUND(score, 6) AS score
-      |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-      |    ORDER BY score DESC, m_cls) AS rk FROM scored)
-      |WHERE rk = 1 ORDER BY doc_id""".stripMargin
-
-  /** The q196 register pair: `c` (the customer fields compared), the
-    * registers `l` and `r`, and `u1`..`u3`, each field's chance
-    * agreement on `r`.
-    */
-  private def linkagePairSql: String =
-    """WITH c AS (SELECT c_custkey, c_nationkey,
-      |    c_mktsegment AS seg,
-      |    CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS bal_k,
-      |    right(c_name, 1) AS nd
-      |  FROM customer),
-      |l AS (SELECT * FROM c WHERE c_custkey <= 500),
-      |r AS (SELECT * FROM c
-      |  WHERE c_custkey > 500 AND c_custkey <= 1000),
-      |u1 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-      |    / (SUM(cnt) * SUM(cnt)) AS u
-      |  FROM (SELECT COUNT(*) AS cnt FROM r
-      |        WHERE seg IS NOT NULL GROUP BY seg)),
-      |u2 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-      |    / (SUM(cnt) * SUM(cnt)) AS u
-      |  FROM (SELECT COUNT(*) AS cnt FROM r
-      |        WHERE bal_k IS NOT NULL GROUP BY bal_k)),
-      |u3 AS (SELECT CAST(SUM(cnt * cnt) AS DOUBLE)
-      |    / (SUM(cnt) * SUM(cnt)) AS u
-      |  FROM (SELECT COUNT(*) AS cnt FROM r
-      |        WHERE nd IS NOT NULL GROUP BY nd))""".stripMargin
 
   /** Unrolled DuckDB replay of [[graft.ops.Linkage.linkageEm]] on the
     * q196 register pair: the blocked pairs collapse to the ordered

@@ -29,8 +29,8 @@ class OracleSqlSpec extends AnyFunSuite {
         "vanished" -> (pinned.keySet -- now.keySet))
       .collect { case (what, ks) if ks.nonEmpty =>
         s"$what (${ks.size}): ${ks.toSeq.sorted.mkString(", ")}" }
-    assert(diffs.isEmpty, diffs.mkString("oracle text differs from " +
-      "golden/oracle_sql.sha256; ", "; ", ""))
+    if (diffs.nonEmpty) fail(diffs.mkString(
+      "oracle text differs from golden/oracle_sql.sha256: ", "; ", ""))
   }
 }
 
