@@ -164,7 +164,8 @@ object TrainingOps {
     */
   private def probesSql(nprobe: Int, materialized: Boolean = false,
       withDot: Boolean = false) = {
-    val dot = if (withDot) s"\n      ${dot64.format("q", "c")} AS qdotc," else ""
+    val dot =
+      if (withDot) s"\n      ${dot64.format("q", "c")} AS qdotc," else ""
     s"""probes AS${if (materialized) " MATERIALIZED" else ""} (
       |  SELECT query_id, cid${if (withDot) ", qdotc" else ""} FROM (
       |    SELECT q.vec_id AS query_id, c.cid,$dot
@@ -249,7 +250,8 @@ object TrainingOps {
   private def pqPivot(v: String, as: String) = (0 until pqM)
     .map(j => s"MIN(CASE WHEN co.j = $j THEN $v END) AS $as$j").mkString(", ")
   private def pqLutCols = s"${pqPivot("pd", "pd")}, ${pqPivot("c2", "c2")}"
-  private def pqSum(as: String) = (0 until pqM).map(j => s"$as$j").mkString(" + ")
+  private def pqSum(as: String) =
+    (0 until pqM).map(j => s"$as$j").mkString(" + ")
 
   /** The grid both skipping oracles cut `lineitem` on: `b` (the key
     * ranges), `n` (l_partkey and l_suppkey scaled to `bits`-bit cells
